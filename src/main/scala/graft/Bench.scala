@@ -763,7 +763,7 @@ object Bench {
         spark.conf.set("spark.sql.shuffle.partitions",
           sys.env.getOrElse("SPARK_GRAFT_SF10_SHUFFLE", "256"))
         // frontier pair-states go DISK_ONLY at this scale (see
-        // GraphAnalytics.stateLevel — MEMORY_AND_DISK starves the
+        // GraphAnalytics.forcedDisk — MEMORY_AND_DISK starves the
         // unified pool at 100x even under an 80 GB heap)
         System.setProperty("graft.state.disk", "1")
         try {

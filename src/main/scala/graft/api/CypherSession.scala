@@ -17,7 +17,7 @@ final class CypherSession(
 
   // the jsonb_* / jsonb_path_* function family is part of the session
   // surface (callable from hybrid SQL and from Cypher expressions via
-  // the pg_proc-interop door) — register up front, idempotently
+  // the pg_proc-interop door) — register up front, once per SparkSession
   GraftExtensions.register(spark)
 
   def setGraphPath(g: String): Unit = {

@@ -245,20 +245,26 @@ object GraftExtensions {
       graft.expr.VectorExpressions.FloatVecDot(args(0), args(1)) }))
 
   /** Register into an already-built session (tests, REPLs): the
-    * extensions path only applies at session construction.
+    * extensions path only applies at session construction. Once per
+    * session: every CypherSession and correlated sql() lift calls this,
+    * and each re-registration would replace all entries and log a
+    * "replaced a previously registered function" warning per function.
+    * `jsonb_object_agg` is registered last, so its presence means the
+    * whole library is in.
     */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    functions.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.expr.ops", name),
-        builder)
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("jsonb_object_agg"))) {
+      functions.foreach { case (name, builder) =>
+        registry.registerFunction(FunctionIdentifier(name),
+          new ExpressionInfo("graft.expr.ops", name), builder)
+      }
+      // aggregates go through the UDAF door (the expression-injection
+      // path has no Aggregator surface): the reference's jsonb_agg /
+      // jsonb_object_agg, sharing the Cypher collect machinery
+      spark.udf.register("jsonb_agg", graft.cypher.JsonbAggregates.jsonbAggUdf)
+      spark.udf.register("jsonb_object_agg",
+        graft.cypher.JsonbAggregates.jsonbObjectAggUdf)
     }
-    // aggregates go through the UDAF door (the expression-injection
-    // path has no Aggregator surface): the reference's jsonb_agg /
-    // jsonb_object_agg, sharing the Cypher collect machinery
-    spark.udf.register("jsonb_agg", graft.cypher.JsonbAggregates.jsonbAggUdf)
-    spark.udf.register("jsonb_object_agg",
-      graft.cypher.JsonbAggregates.jsonbObjectAggUdf)
   }
 }

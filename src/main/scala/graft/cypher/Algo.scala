@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.expr.J
+import graft.graph.GraphCatalog
 import Ast._
 import Kind._
 
@@ -65,10 +66,10 @@ object Algo {
     private lazy val hubs: Option[DataFrame] =
       if (salt <= 1) None
       else {
-        val h = E.groupBy(col(edgeKey).as("__hub")).count()
-          .where(col("count") >= hubDegree).select("__hub")
-          .localCheckpoint(true)
-        if (h.isEmpty) None else Some(h)
+        val (h, n) = GraphCatalog.checkpointCounted(
+          E.groupBy(col(edgeKey).as("__hub")).count()
+            .where(col("count") >= hubDegree).select("__hub"))
+        if (n == 0L) None else Some(h)
       }
     /** Adjacency with hub rows fanned across `salt` sub-keys. */
     private[cypher] lazy val salted: DataFrame = hubs match {
@@ -93,6 +94,46 @@ object Algo {
             fKey === col(edgeKey) && col("__fsalt") === col("__esalt") && extra)
             .drop("__fsalt", "__esalt")
       }
+  }
+
+  /** Every vertex as (`__v` struct, `__vid`) — the scan that attaches
+    * vertex structs to path arrays.
+    */
+  private def vertexStructs(b: Builder): DataFrame =
+    b.vertexScan(None, only = false)
+      .select(struct(col("id"), col("properties")).as("__v"), col("id").as("__vid"))
+
+  /** One hop's path-array columns over a (path ⋈ `__edge`) row: the
+    * edge appended to `__edges`/`__ids`, and `vert` (a vertex id or
+    * struct) appended to the `verts` column, which is kept as is when
+    * `vert` is None.
+    */
+  private def extendPath(verts: String, vert: Option[Column]): Seq[Column] =
+    Seq(concat(col("__edges"), array(col("__edge"))).as("__edges"),
+      concat(col("__ids"), array(col("__edge").getField("id"))).as("__ids"),
+      vert.fold(col(verts))(v => concat(col(verts), array(v))).as(verts))
+
+  /** Zero-length paths, origin to itself with empty arrays
+    * (isZeroLengthVLE parse_graph.c:198,2388-2404); `verts` names the
+    * vertex column: `__verts` (structs) or `__vids` (ids).
+    */
+  private def zeroPaths(b: Builder, origins: DataFrame, verts: String): DataFrame =
+    origins.select(col("__origin").as("__start"), col("__origin").as("__cur"),
+      b.emptyEdgeArray.as("__edges"), b.emptyLongArray.as("__ids"),
+      (if (verts == "__verts") b.emptyVertexArray else b.emptyLongArray).as(verts))
+
+  /** A property-map constraint on `elem`'s properties as jsonb
+    * equality per key, or containment for a parameter object.
+    */
+  private def propsQual(comp: Compiler, elem: Column, pe: Expr): Column = {
+    val propsCol = elem.getField("properties")
+    pe match {
+      case MapExpr(fields) =>
+        fields.map { case (k, v) =>
+          J.eq(J.getKey(propsCol, k), comp.toJ(comp.compile(v)))
+        }.reduceOption(_ && _).getOrElse(lit(true))
+      case other => J.contains(propsCol, comp.toJ(comp.compile(other)))
+    }
   }
 
   // ================================================================ VLE
@@ -120,27 +161,14 @@ object Algo {
       // keep the loop frames narrow: drop shred sidecar passthroughs
       val base = b.edgeScan(rel.types, rel.direction, rel.only)
         .select(col("__edge"), col("__s"), col("__e"))
-      rel.props match {
-        case Some(pe) =>
-          // constant prop constraint on every traversed edge
-          val comp = b.compiler(State(base, Vector.empty))
-          val propsCol = col("__edge").getField("properties")
-          val qual = pe match {
-            case MapExpr(fields) =>
-              fields.map { case (k, v) =>
-                J.eq(J.getKey(propsCol, k), comp.toJ(comp.compile(v)))
-              }.reduceOption(_ && _).getOrElse(lit(true))
-            case other => J.contains(propsCol, comp.toJ(comp.compile(other)))
-          }
-          base.where(qual)
-        case None => base
-      }
+      // constant prop constraint on every traversed edge
+      rel.props.fold(base)(pe => base.where(
+        propsQual(b.compiler(State(base, Vector.empty)), col("__edge"), pe)))
     }
 
     val ex = new Expander(spark, E, "__s")
 
-    val V = b.vertexScan(None, only = false)
-      .select(struct(col("id"), col("properties")).as("__v"), col("id").as("__vid"))
+    val V = vertexStructs(b)
 
     // seed the expansion from the frame's bound start vertices only
     // (semi-join on the snapshotted origin set) — a selective outer
@@ -185,12 +213,8 @@ object Algo {
         val withV =
           if (needVerts) step.join(V, col("__e") === col("__vid"))
           else step
-        val next = withV
-          .select(col("__start"), col("__e").as("__cur"),
-            concat(col("__edges"), array(col("__edge"))).as("__edges"),
-            concat(col("__ids"), array(col("__edge").getField("id"))).as("__ids"),
-            (if (needVerts) concat(col("__verts"), array(col("__v")))
-             else col("__verts")).as("__verts"))
+        val next = withV.select(Seq(col("__start"), col("__e").as("__cur")) ++
+          extendPath("__verts", if (needVerts) Some(col("__v")) else None): _*)
         k += 1
         frontier = if (k % CheckpointEvery == 0) next.localCheckpoint(true) else next
         accumulate(k, frontier)
@@ -213,25 +237,11 @@ object Algo {
           "pattern (reference default is unbounded, execGraphVle.c:33)")
     }
 
-    var vle = if (results == null)
-      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        StructType(Seq(
-          StructField("__start", LongType), StructField("__cur", LongType),
-          StructField("__edges", ArrayType(b.edgeStructType)),
-          StructField("__ids", ArrayType(LongType)),
-          StructField("__verts", ArrayType(b.vertexStructType)))))
-      else results
+    var vle = if (results == null) emptyPaths(b, "__verts") else results
 
-    if (lo == 0L) {
-      // zero-length path: every origin vertex joins to itself with
-      // empty arrays (isZeroLengthVLE parse_graph.c:198,2388-2404);
-      // origins come from bound vertex scans, so no existence re-check
-      val zero = origins
-        .select(col("__origin").as("__start"), col("__origin").as("__cur"),
-          b.emptyEdgeArray.as("__edges"), b.emptyLongArray.as("__ids"),
-          b.emptyVertexArray.as("__verts"))
-      vle = zero.unionAll(vle)
-    }
+    // zero-length paths: origins come from bound vertex scans, so no
+    // existence re-check
+    if (lo == 0L) vle = zeroPaths(b, origins, "__verts").unionAll(vle)
 
     joinExpansion(b, st0, prevName, node, relName, vle)
   }
@@ -272,16 +282,8 @@ object Algo {
       st = State(df, st.vars :+ (nodeName -> KV))
     }
     node.props.foreach { pe =>
-      val comp = b.compiler(st)
-      val propsCol = col(Compiler.q(nodeName)).getField("properties")
-      val qual = pe match {
-        case MapExpr(fields) =>
-          fields.map { case (k, v) =>
-            J.eq(J.getKey(propsCol, k), comp.toJ(comp.compile(v)))
-          }.reduceOption(_ && _).getOrElse(lit(true))
-        case other => J.contains(propsCol, comp.toJ(comp.compile(other)))
-      }
-      st = State(st.df.where(qual), st.vars)
+      st = State(st.df.where(
+        propsQual(b.compiler(st), col(Compiler.q(nodeName)), pe)), st.vars)
     }
     st = State(st.df.drop(s"__vs0_$relName", s"__ve_$relName"), st.vars)
     (st, nodeName)
@@ -454,26 +456,24 @@ object Algo {
   private def bfs(b: Builder, rel: RelPattern, lo: Long, hi: Long,
       keepAll: Boolean, origins: DataFrame, targets: => DataFrame,
       capMsg: Option[String]): DataFrame = {
-    val E0 = b.edgeScan(rel.types, rel.direction, rel.only)
-    val E = E0.select(col("__edge"), col("__s"), col("__e"))
+    val E = b.edgeScan(rel.types, rel.direction, rel.only)
+      .select(col("__edge"), col("__s"), col("__e"))
     val ex = new Expander(b.spark, E, "__s")
-    val V = b.vertexScan(None, only = false)
-      .select(struct(col("id"), col("properties")).as("__v"), col("id").as("__vid"))
 
     // The search carries vertex IDS only (__vids); vertex structs are
     // re-attached once at the end for the surviving minimal paths —
     // the per-level vertex join (the widest scan in the loop) happens
     // once instead of once per level.
-    var frontier = E.join(origins, col("__s") === col("__origin"), "left_semi")
+    val first = E.join(origins, col("__s") === col("__origin"), "left_semi")
       .select(col("__s").as("__start"), col("__e").as("__cur"),
         array(col("__edge")).as("__edges"),
         array(col("__edge").getField("id")).as("__ids"),
         array(col("__e")).as("__vids"))
-    if (!keepAll) frontier = firstArrival(frontier)
-    // every level is probed for emptiness AND consumed by the final
-    // plan: materialize each exactly once (the probe then reads the
-    // cached partitions and the result union re-reads them for free)
-    frontier = frontier.localCheckpoint(true)
+    // every level is counted for termination AND consumed by the final
+    // plan: materialize each exactly once, the count riding the same
+    // job (the result union re-reads the cached partitions for free)
+    var (frontier, rows) = GraphCatalog.checkpointCounted(
+      if (keepAll) first else firstArrival(first))
     // note: the origin itself is NOT pre-marked visited — a cycle back
     // to the origin is a valid shortest path (shortestpath((a)-[*]->(a)))
     var visited = frontier
@@ -488,14 +488,12 @@ object Algo {
     accumulate(1L, frontier)
 
     var k = 1L
-    var exhausted = frontier.isEmpty
+    var exhausted = rows == 0L
     while (k < hi && !exhausted) {
       var next = ex.join(frontier, col("__cur"),
           !array_contains(col("__ids"), col("__edge").getField("id")))
-        .select(col("__start"), col("__e").as("__newcur"),
-          concat(col("__edges"), array(col("__edge"))).as("__edges"),
-          concat(col("__ids"), array(col("__edge").getField("id"))).as("__ids"),
-          concat(col("__vids"), array(col("__e"))).as("__vids"))
+        .select(Seq(col("__start"), col("__e").as("__newcur")) ++
+          extendPath("__vids", Some(col("__e"))): _*)
         .withColumnRenamed("__newcur", "__cur")
       // prune: only first arrivals per (origin, vertex)
       next = next.join(visited,
@@ -503,8 +501,9 @@ object Algo {
         "left_anti")
       if (!keepAll) next = firstArrival(next)
       k += 1
-      frontier = next.localCheckpoint(true)
-      exhausted = frontier.isEmpty
+      val (cp, n) = GraphCatalog.checkpointCounted(next)
+      frontier = cp
+      exhausted = n == 0L
       if (!exhausted) {
         accumulate(k, frontier)
         // no distinct/materialize: duplicates are harmless on the
@@ -524,6 +523,7 @@ object Algo {
     // (origin, target) pair already has its shortest path (then deeper
     // frontiers cannot change the answer). The check runs only in the
     // rare cap-hit case.
+    val found = if (results == null) emptyPaths(b, "__vids") else results
     if (capMsg.isDefined && !exhausted) {
       // every matched (start, cur) pair has start IN origins by
       // construction; restricting cur to the target set makes the
@@ -531,8 +531,7 @@ object Algo {
       // completeness is a count comparison — no |V|^2 cross-product
       // probe just to decide whether to throw (r10 ADVICE; bfs2 keeps
       // the same invariant via its metCount counter)
-      var matched = (if (results == null) emptyIdPaths(b) else results)
-        .select(col("__start").as("__mo"), col("__cur").as("__mt"))
+      var matched = found.select(col("__start").as("__mo"), col("__cur").as("__mt"))
         .join(targets, col("__mt") === col("__target"), "left_semi")
       if (lo == 0L)
         matched = matched.unionAll(origins
@@ -543,31 +542,34 @@ object Algo {
         throw new IllegalStateException(capMsg.get)
     }
 
-    var out = if (results == null) emptyIdPaths(b) else results
-    if (lo == 0L) {
-      val zero = origins
-        .select(col("__origin").as("__start"), col("__origin").as("__cur"),
-          b.emptyEdgeArray.as("__edges"), b.emptyLongArray.as("__ids"),
-          b.emptyLongArray.as("__vids"))
-      out = zero.unionAll(out)
-    }
-    // keep only minimal depth per pair (visited pruning already ensures
-    // min-depth-only arrivals; zero-length needs the same guard)
+    // visited pruning already ensures min-depth-only arrivals;
+    // zero-length needs the same guard
+    minimalPaths(b,
+      if (lo == 0L) zeroPaths(b, origins, "__vids").unionAll(found) else found,
+      keepAll)
+  }
+
+  /** The finish of both BFS forms: keep only the minimal depth per
+    * (origin, vertex) pair — every such path, or with !keepAll the one
+    * with the least edge-id array — then re-attach vertex structs.
+    */
+  private def minimalPaths(b: Builder, paths: DataFrame,
+      keepAll: Boolean): DataFrame = {
     val kept =
       if (keepAll)
-        out.withColumn("__minlen",
+        paths.withColumn("__minlen",
           min(size(col("__ids"))).over(Window.partitionBy("__start", "__cur")))
           .where(size(col("__ids")) === col("__minlen")).drop("__minlen")
       else
         // single-path case: min over (depth, ids) in ONE map-side-
         // combinable aggregation instead of a min-window + rank-window
-        out.groupBy("__start", "__cur")
+        paths.groupBy("__start", "__cur")
           .agg(min_by(struct(col("__edges"), col("__ids"), col("__vids")),
             struct(size(col("__ids")), col("__ids"))).as("__p"))
           .select(col("__start"), col("__cur"),
             col("__p.__edges").as("__edges"), col("__p.__ids").as("__ids"),
             col("__p.__vids").as("__vids"))
-    attachVerts(b, kept, V)
+    attachVerts(b, kept)
   }
 
   /** Two-sided (meet-in-middle) BFS — the set-based analog of the
@@ -589,22 +591,17 @@ object Algo {
   private def bfs2(b: Builder, rel: RelPattern, lo: Long, hi: Long,
       keepAll: Boolean, origins: DataFrame, targets: DataFrame,
       capMsg: Option[String]): DataFrame = {
-    val E0 = b.edgeScan(rel.types, rel.direction, rel.only)
-    val E = E0.select(col("__edge"), col("__s"), col("__e"))
+    val E = b.edgeScan(rel.types, rel.direction, rel.only)
+      .select(col("__edge"), col("__s"), col("__e"))
     // forward expands out of __s (out-adjacency), backward into __e
     // (in-adjacency) — hub degrees differ per direction
     val exF = new Expander(b.spark, E, "__s")
     val exB = new Expander(b.spark, E, "__e")
-    val V = b.vertexScan(None, only = false)
-      .select(struct(col("id"), col("properties")).as("__v"), col("id").as("__vid"))
 
     // depth-0 states: the endpoints themselves, empty arrays (cheap
     // projections of the already-snapshotted endpoint sets — no
     // checkpoint needed)
-    var fwd = origins.select(col("__origin").as("__start"),
-      col("__origin").as("__cur"),
-      b.emptyEdgeArray.as("__edges"), b.emptyLongArray.as("__ids"),
-      b.emptyLongArray.as("__vids"))
+    var fwd = zeroPaths(b, origins, "__vids")
     var bwd = targets.select(col("__target").as("__tgt"),
       col("__target").as("__bcur"),
       b.emptyEdgeArray.as("__bedges"), b.emptyLongArray.as("__bids"),
@@ -645,17 +642,18 @@ object Algo {
     }
 
     def absorb(newMeets: DataFrame, len: Long): Unit = {
-      val materialized = newMeets.localCheckpoint(true)
-      if (!materialized.isEmpty) {
+      val (materialized, n) = GraphCatalog.checkpointCounted(newMeets)
+      if (n > 0L) {
         if (len >= lo && len <= hi) {
           results = if (results == null) materialized
             else results.unionAll(materialized)
         }
         val pairs = materialized
           .select(col("__start").as("__ms"), col("__cur").as("__mt")).distinct()
-        met = (if (met == null) pairs else met.unionAll(pairs).distinct())
-          .localCheckpoint(true)
-        metCount = met.count()
+        val (m, mn) = GraphCatalog.checkpointCounted(
+          if (met == null) pairs else met.unionAll(pairs).distinct())
+        met = m
+        metCount = mn
       }
     }
 
@@ -669,10 +667,8 @@ object Algo {
       if (expandForward) {
         var next = exF.join(fwd, col("__cur"),
             !array_contains(col("__ids"), col("__edge").getField("id")))
-          .select(col("__start"), col("__e").as("__newcur"),
-            concat(col("__edges"), array(col("__edge"))).as("__edges"),
-            concat(col("__ids"), array(col("__edge").getField("id"))).as("__ids"),
-            concat(col("__vids"), array(col("__e"))).as("__vids"))
+          .select(Seq(col("__start"), col("__e").as("__newcur")) ++
+            extendPath("__vids", Some(col("__e"))): _*)
           .withColumnRenamed("__newcur", "__cur")
         next = next.join(visitedF,
           next("__start") === visitedF("__o") && next("__cur") === visitedF("__at"),
@@ -682,9 +678,10 @@ object Algo {
         // a representative could leave only edge-overlapping pairs and
         // lose a valid shortest path); the single-path pick happens at
         // the final per-pair window
-        fwd = next.localCheckpoint(true)
+        val (cp, n) = GraphCatalog.checkpointCounted(next)
+        fwd = cp
         fdepth += 1
-        exhausted = fwd.isEmpty
+        exhausted = n == 0L
         if (!exhausted) {
           // duplicates are harmless on the anti-join probe side;
           // frontiers are checkpointed so the union stays shallow
@@ -703,9 +700,10 @@ object Algo {
         next = next.join(visitedB,
           next("__tgt") === visitedB("__o") && next("__bcur") === visitedB("__at"),
           "left_anti")
-        bwd = next.localCheckpoint(true)
+        val (cp, n) = GraphCatalog.checkpointCounted(next)
+        bwd = cp
         bdepth += 1
-        exhausted = bwd.isEmpty
+        exhausted = n == 0L
         if (!exhausted) {
           visitedB = visitedB.unionAll(
             bwd.select(col("__tgt").as("__o"), col("__bcur").as("__at")))
@@ -738,43 +736,26 @@ object Algo {
       if (stillMissing) throw new IllegalStateException(capMsg.get)
     }
 
-    var out = if (results == null) emptyIdPaths(b) else results
-    if (lo == 0L) {
-      // zero-length: origin == target pairs (isZeroLengthVLE analog)
-      val zero = origins
-        .join(targets, col("__origin") === col("__target"), "left_semi")
-        .select(col("__origin").as("__start"), col("__origin").as("__cur"),
-          b.emptyEdgeArray.as("__edges"), b.emptyLongArray.as("__ids"),
-          b.emptyLongArray.as("__vids"))
-      out = zero.unionAll(out)
-    }
-    // minimal length per pair (first-meet scanning already guarantees
-    // it for the search; the zero-length branch needs the same guard)
-    val kept =
-      if (keepAll)
-        out.withColumn("__minlen",
-          min(size(col("__ids"))).over(Window.partitionBy("__start", "__cur")))
-          .where(size(col("__ids")) === col("__minlen")).drop("__minlen")
-      else
-        out.groupBy("__start", "__cur")
-          .agg(min_by(struct(col("__edges"), col("__ids"), col("__vids")),
-            struct(size(col("__ids")), col("__ids"))).as("__p"))
-          .select(col("__start"), col("__cur"),
-            col("__p.__edges").as("__edges"), col("__p.__ids").as("__ids"),
-            col("__p.__vids").as("__vids"))
-    attachVerts(b, kept, V)
+    var out = if (results == null) emptyPaths(b, "__vids") else results
+    // zero-length: origin == target pairs (isZeroLengthVLE analog)
+    if (lo == 0L) out = zeroPaths(b,
+      origins.join(targets, col("__origin") === col("__target"), "left_semi"),
+      "__vids").unionAll(out)
+    // first-meet scanning already guarantees minimal length for the
+    // search; the zero-length branch needs the same guard
+    minimalPaths(b, out, keepAll)
   }
 
   /** Re-attach vertex structs for surviving paths: posexplode the
     * visited-vertex id array, one join against the vertex scan, rebuild
     * the array in path order. Zero-length paths keep empty arrays.
     */
-  private def attachVerts(b: Builder, paths: DataFrame, V: DataFrame): DataFrame = {
+  private def attachVerts(b: Builder, paths: DataFrame): DataFrame = {
     val keyed = paths.withColumn("__pk", monotonically_increasing_id())
       .localCheckpoint(true)
     val exploded = keyed
       .select(col("__pk"), posexplode(col("__vids")).as(Seq("__pos", "__vx")))
-      .join(V, col("__vx") === col("__vid"))
+      .join(vertexStructs(b), col("__vx") === col("__vid"))
       .groupBy("__pk")
       .agg(collect_list(struct(col("__pos"), col("__v"))).as("__pv"))
       .select(col("__pk").as("__pk2"),
@@ -813,9 +794,6 @@ object Algo {
         .withColumn("__w",
           coalesce(J.toDouble(comp.toJ(comp.compile(weight))), lit(1.0)))
         .drop(relName)
-
-    val V = b.vertexScan(None, only = false)
-      .select(struct(col("id"), col("properties")).as("__v"), col("id").as("__vid"))
 
     def topK(df: DataFrame): DataFrame =
       if (limitK == 1L) {
@@ -909,11 +887,9 @@ object Algo {
       val expanded = withWeight(
         ex.join(frontier, col("__cur"),
           !array_contains(col("__ids"), col("__edge").getField("id"))))
-        .select(col("__start"), col("__e").as("__cur2"),
-          concat(col("__edges"), array(col("__edge"))).as("__edges"),
-          concat(col("__ids"), array(col("__edge").getField("id"))).as("__ids"),
-          concat(col("__vids"), array(col("__e"))).as("__vids"),
-          (col("__dist") + col("__w")).as("__dist"))
+        .select(Seq(col("__start"), col("__e").as("__cur2")) ++
+          extendPath("__vids", Some(col("__e"))) :+
+          (col("__dist") + col("__w")).as("__dist"): _*)
         .withColumnRenamed("__cur2", "__cur")
         .withColumn("__new", lit(1))
       best = topK(best.withColumn("__new", lit(0)).unionAll(expanded))
@@ -931,7 +907,7 @@ object Algo {
       s"dijkstra did not converge within the depth cap $MaxDepth (paths " +
         "still relaxing); raise spark.graft.maxDepth or restrict the " +
         "pattern (the reference searches to convergence, nodeDijkstra.c)")
-    attachVerts(b, best.drop("__w", "__dist", "__new"), V)
+    attachVerts(b, best.drop("__w", "__dist", "__new"))
   }
 
   /** Test-observability hook: round count of the most recent dijkstra
@@ -954,11 +930,13 @@ object Algo {
   def lastPathSearchChoiceValue: Option[String] =
     Option(lastPathSearchChoice.get())
 
-  private def emptyIdPaths(b: Builder): DataFrame =
+  /** No paths, in the path-frame schema; `verts` as in [[zeroPaths]]. */
+  private def emptyPaths(b: Builder, verts: String): DataFrame =
     b.spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       StructType(Seq(
         StructField("__start", LongType), StructField("__cur", LongType),
         StructField("__edges", ArrayType(b.edgeStructType)),
         StructField("__ids", ArrayType(LongType)),
-        StructField("__vids", ArrayType(LongType)))))
+        StructField(verts, ArrayType(
+          if (verts == "__verts") b.vertexStructType else LongType)))))
 }

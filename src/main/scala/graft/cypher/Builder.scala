@@ -1607,22 +1607,26 @@ final class Builder(
     * full decode+encode pass of the batch on every write statement.
     * Same determinism contract as zipWithIndex: both passes evaluate
     * the same deterministic plan, so each row keeps its partition and
-    * position; callers snapshot (localCheckpoint) right after.
+    * position; callers snapshot (localCheckpoint) right after. The
+    * offsets are a dense array indexed by partition id (empty
+    * partitions, absent from the counts, fill in), so the per-row
+    * lookup is O(1).
     */
   private[cypher] def withRowIndexCounted(df: DataFrame,
       name: String): (DataFrame, Long) = {
     import org.apache.spark.sql.functions._
     val counts = df.groupBy(spark_partition_id().as("__pid")).count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val n = counts.map(_._2).sum
-    val offsets: Map[Int, Long] =
-      counts.map(_._1).zip(counts.scanLeft(0L)(_ + _._2)).toMap
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val sizes = Array.tabulate(
+      if (counts.isEmpty) 0 else counts.keys.max + 1)(counts.getOrElse(_, 0L))
+    // offsets(p) = rows in partitions before p
+    val offsets = sizes.scanLeft(0L)(_ + _).init
     val out = df.withColumn("__rix_mid", monotonically_increasing_id())
       .withColumn(name,
-        element_at(typedLit(offsets),
+        typedLit(offsets).getItem(
           shiftrightunsigned(col("__rix_mid"), 33).cast("int")) +
           col("__rix_mid").bitwiseAND(lit((1L << 33) - 1)))
       .drop("__rix_mid")
-    (out, n)
+    (out, sizes.sum)
   }
 }

@@ -3,7 +3,7 @@ package graft.cypher
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.expr.{J, JsonbNormalize}
-import graft.graph.GraphId
+import graft.graph.{GraphCatalog, GraphId}
 import Ast._
 import Kind._
 
@@ -13,23 +13,13 @@ import Kind._
   * (assign_query_eager parse_graph.c:5641) by construction.
   *
   * Scale notes: id assignment reserves a contiguous locid range on the
-  * driver then assigns per-row via a distributed zipWithIndex (no
-  * single-partition window); deletes/updates rewrite only the affected
-  * label tables via anti-/left-joins on id.
+  * driver then assigns per-row as a per-partition offset plus the
+  * row's position in its partition (`Builder.withRowIndexCounted`: one
+  * count-per-partition collect, no single-partition window);
+  * deletes/updates rewrite only the affected label tables via
+  * anti-/left-joins on id.
   */
 object WriteOps {
-
-  /** Materialize a frame (localCheckpoint) and return its row count
-    * from the SAME action: the count rides the checkpoint job as an
-    * observed metric instead of a second pass over the cached blocks —
-    * every write statement pays this pair, and at scale the saved pass
-    * is O(batch), not just driver overhead.
-    */
-  private def checkpointWithCount(df: DataFrame): (DataFrame, Long) = {
-    val obs = org.apache.spark.sql.Observation()
-    val cp = df.observe(obs, count(lit(1)).as("__n")).localCheckpoint(true)
-    (cp, obs.get("__n").asInstanceOf[Long])
-  }
 
   // ============================================================= CREATE
 
@@ -509,7 +499,7 @@ object WriteOps {
       // elements (bounded sample — the count is the aggregate signal).
       val multiOk = b.spark.conf
         .get("spark.graft.enableMultipleUpdate", "true") != "false"
-      val (updates, nUpd) = checkpointWithCount(newDf.where(cond)
+      val (updates, nUpd) = GraphCatalog.checkpointCounted(newDf.where(cond)
         .select(col(Compiler.q(v)).getField("id").as("id"),
           newProps.as("__np"), col("__setord"))
         .groupBy("id").agg(
@@ -839,7 +829,7 @@ object WriteOps {
           org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("id",
               org.apache.spark.sql.types.LongType, false)))), 0L)
-      else checkpointWithCount(createdIdsHolder.reduce(_ unionAll _).distinct())
+      else GraphCatalog.checkpointCounted(createdIdsHolder.reduce(_ unionAll _).distinct())
 
     // 3. re-match. A row that matched in step 1 keeps exactly its
     //    original matches: every element created in step 2 carries some

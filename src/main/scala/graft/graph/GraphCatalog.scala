@@ -5,6 +5,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Label metadata — one vertex/edge class. Labels form an inheritance
   * DAG (multiple parents), mirroring ag_label + PG table inheritance
@@ -68,6 +69,22 @@ object GraphCatalog {
     ThreadLocal.withInitial(() => mutable.Set.empty[String])
   private[graph] val labelLocks = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.locks.ReentrantReadWriteLock]()
+
+  /** localCheckpoint at `level` with the frame's row count riding the
+    * SAME materialization as an observed metric: the frontier loops and
+    * write statements need both, and a separate count() would pay one
+    * more driver round-trip and, at scale, one more pass over the
+    * cached blocks. The default level is the one plain
+    * localCheckpoint(true) uses.
+    */
+  def checkpointCounted(df: DataFrame,
+      level: StorageLevel = StorageLevel.MEMORY_AND_DISK): (DataFrame, Long) = {
+    import org.apache.spark.sql.functions.{count, lit}
+    val obs = org.apache.spark.sql.Observation()
+    val cp = df.observe(obs, count(lit(1)).as("__n"))
+      .localCheckpoint(true, level)
+    (cp, obs.get("__n").asInstanceOf[Long])
+  }
 }
 
 final class GraphCatalog(val spark: SparkSession, val root: String) {
@@ -1056,15 +1073,10 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
     val base = if (lm.kind == 'v') vertexSchema else edgeSchema
     val touchedDf = spark.read.schema(schema).parquet(touched: _*)
     // snapshot BEFORE deleting the source files (the patch plan reads
-    // the files being replaced); rowsAfter rides the checkpoint's own
-    // materialization as an observed metric instead of a second pass
-    // over the cached batch
-    val obs = org.apache.spark.sql.Observation()
-    val patched = patch(touchedDf.select(base.fields.map(f => col(f.name)): _*))
-      .select(base.fields.map(f => col(f.name)): _*)
-      .observe(obs, count(lit(1)).as("__n"))
-      .localCheckpoint(true)
-    val rowsAfter = obs.get("__n").asInstanceOf[Long]
+    // the files being replaced); rowsAfter rides the checkpoint
+    val (patched, rowsAfter) = GraphCatalog.checkpointCounted(
+      patch(touchedDf.select(base.fields.map(f => col(f.name)): _*))
+        .select(base.fields.map(f => col(f.name)): _*))
     // shred sidecars for the rewritten batch follow append's merge
     // rule (untouched files keep their layout; readers treat absent
     // columns as absent keys)

@@ -188,8 +188,7 @@ object Dedup {
     * below `maxDriverPairs` a single-pass driver union-find replaces
     * the multi-round distributed loop (each round = a shuffle + an
     * action; at 100 TB the pairs may still be millions of rows — then
-    * the min-label-propagation loop, or GraphAnalytics' Pregel CC, is
-    * the path).
+    * the distributed min-label-propagation loop is the path).
     */
   def clusters(pairs: DataFrame, maxDriverPairs: Long = 1000000L): DataFrame = {
     // snapshot the pair relation FIRST: every consumer branch reads it

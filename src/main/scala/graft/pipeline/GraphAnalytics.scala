@@ -3,17 +3,15 @@ package graft.pipeline
 import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.graph.GraphCatalog
 
-/** GraphX-backed whole-graph analytics (the "GraphX for analytics"
-  * leg of the north star): Pregel-scheduled algorithms over the same
-  * packed-long ids the Cypher engine uses, interoperating with the
-  * DataFrame operators through plain (id, ...) frames.
-  *
-  * `connectedComponents` is the scale path for dedup clustering —
-  * Pregel's delta iteration converges without re-shuffling the whole
-  * label set each round; `Dedup.clusters` (min-label DataFrame loop)
-  * remains the pure-SQL fallback and the two are cross-checked in
-  * PipelineSpec.
+/** Whole-graph analytics over the same packed-long ids the Cypher
+  * engine uses, interoperating with the other DataFrame operators
+  * through plain (id, ...) frames. Everything is a DataFrame plan or a
+  * driver-side DataFrame loop; the multi-source distance, reachability
+  * and shortest-path-count closures share one frontier loop
+  * ([[frontierClosure]]). `pageRank` alone runs on GraphX, because the
+  * p24 oracle encodes GraphX's rank normalization.
   */
 object GraphAnalytics {
 
@@ -37,24 +35,6 @@ object GraphAnalytics {
     sys.props.get("graft.state.disk").contains("1") ||
       sys.env.get("SPARK_GRAFT_STATE_DISK").contains("1")
 
-  private def stateLevel: org.apache.spark.storage.StorageLevel =
-    if (forcedDisk) org.apache.spark.storage.StorageLevel.DISK_ONLY
-    else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
-  /** localCheckpoint at `level` with the frame's row count riding the
-    * SAME materialization as an observed metric — the frontier loops
-    * previously paid a separate count() action per round on top of the
-    * checkpoint (one extra driver round-trip per level, and at scale
-    * one extra pass over the cached frontier).
-    */
-  private def checkpointCounted(df: DataFrame,
-      level: org.apache.spark.storage.StorageLevel): (DataFrame, Long) = {
-    val obs = org.apache.spark.sql.Observation()
-    val cp = df.observe(obs, count(lit(1)).as("__n"))
-      .localCheckpoint(true, level)
-    (cp, obs.get("__n").asInstanceOf[Long])
-  }
-
   /** Auto-selected pair-state level: DISK_ONLY once the projected pair
     * state would occupy more than a quarter of the unified pool —
     * cached MEMORY_AND_DISK blocks pin the pool's protected region and
@@ -72,28 +52,99 @@ object GraphAnalytics {
       org.apache.spark.storage.StorageLevel.DISK_ONLY
     else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-  /** Connected components over an undirected pair relation (da, db):
-    * returns (id, comp) with comp = min member id — the same contract
-    * as Dedup.clusters.
+  /** Canonical undirected edges of a pair relation (u, v): (a, b) =
+    * (min, max), self-loops dropped. Not deduplicated.
     */
-  def connectedComponents(pairs: DataFrame): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    val edges = pairs.select(col("da").cast("long"), col("db").cast("long"))
-      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    val graph = Graph.fromEdges(edges, defaultValue = ())
-    // GraphX CC labels with the min vertex id per component
-    val cc = graph.connectedComponents()
-    val out = cc.vertices
-      .map { case (id, comp) => (id, comp) }
-      .toDF("id", "comp")
+  private def canonEdges(pairs: DataFrame): DataFrame =
+    pairs.select(least(col("u"), col("v")).as("a"),
+        greatest(col("u"), col("v")).as("b"))
+      .where(col("a") =!= col("b"))
+
+  /** The distinct undirected edges in both orientations, (a, b) and
+    * (b, a), checkpointed: the adjacency every undirected loop re-reads
+    * each round.
+    */
+  private def bothWays(pairs: DataFrame): DataFrame = {
+    val edges = canonEdges(pairs).distinct()
+    edges.unionAll(edges.select(col("b").as("a"), col("a").as("b")))
       .localCheckpoint(true)
-    // GraphX caches the input and result graphs and never unpersists
-    // them — after materializing the output, release both so repeated
-    // analytics in one long-lived session don't accumulate storage
-    cc.unpersist(blocking = false)
-    graph.unpersist(blocking = false)
-    out
+  }
+
+  /** Sample modulus that leaves ~k sources: max(1, V/k), with V the
+    * number of distinct vertices on a non-loop edge — one aggregate.
+    */
+  private def sampleMod(pairs: DataFrame, k: Long): Long = {
+    val v = canonEdges(pairs)
+      .select(explode(array(col("a"), col("b"))).as("x"))
+      .agg(countDistinct(col("x"))).first().getLong(0)
+    math.max(1L, v / k)
+  }
+
+  /** The depth-0 state of a multi-source BFS: (s, s) for every vertex
+    * of `dir` passing `sourceFilter` (a predicate over column "s").
+    */
+  private def sources(dir: DataFrame, sourceFilter: Column): DataFrame =
+    dir.select(col("a").as("s"), col("a").as("v")).distinct()
+      .where(sourceFilter)
+
+  /** The (source, vertex) pair-state closure behind the distance,
+    * reachability and shortest-path-count analytics: a MULTI-SOURCE
+    * frontier loop in which one (frontier ⋈ dir) join per round expands
+    * every source's frontier at once. Each round:
+    *  - pre-flights the join with the ScaleGuard round guard (free
+    *    frontierRows·maxDeg bound, the exact degree-aware projection
+    *    only past a threshold), so an oversized state fails loud in
+    *    seconds instead of exhausting memory mid-join, naming
+    *    `what(round)` and the scale twin `twin`;
+    *  - picks the pair-state storage level from that estimate;
+    *  - runs `step` over (frontier ⋈ dir on v = a) — it must yield
+    *    (s, v, payload...) with the new vertex `b` as v — and anti-joins
+    *    the visited pairs, so each (s, v) enters at its minimal depth;
+    *  - checkpoints the level with its row count riding the same job,
+    *    which is also the termination test.
+    * `seed` is the depth-0 state, (s, v, payload...). Stops at
+    * `maxDepth` rounds or an empty level. Returns (visited, levels):
+    * every reached (s, v) pair including the seed, and the pairs first
+    * reached at depth ≥ 1 with their payload and `dist`.
+    */
+  private def frontierClosure(dir: DataFrame, seed: DataFrame,
+      maxDepth: Int, what: Int => String, twin: String)(
+      step: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+    val spark = dir.sparkSession
+    val deg = ScaleGuard.degreeTable(dir)
+    val maxDeg = ScaleGuard.maxDegree(deg)
+    var pending = seed
+    var level = pickLevel(spark, 0L) // the seed: memory unless forced
+    var depth = 0
+    var visited: DataFrame = null
+    var visitedRows = 0L
+    var levels: DataFrame = null
+    var live = true
+    while (live) {
+      val (frontier, rows) = GraphCatalog.checkpointCounted(pending, level)
+      if (depth > 0) {
+        val lvl = frontier.withColumn("dist", lit(depth.toLong))
+        levels = if (levels == null) lvl else levels.unionAll(lvl)
+      }
+      // visited = union of ALREADY-checkpointed levels: re-materializing
+      // the whole set each round copied O(|visited|) rows per round for
+      // no lineage benefit (each leg is its own checkpoint; the union
+      // plan depth is the depth cap, a handful)
+      val pairs = frontier.select("s", "v")
+      visited = if (visited == null) pairs else visited.unionAll(pairs)
+      visitedRows += rows
+      live = depth < maxDepth && rows > 0
+      if (live) {
+        depth += 1
+        val est = ScaleGuard.guardRound(spark, frontier, deg, maxDeg,
+          visitedRows, rows, what(depth), twin)
+        level = pickLevel(spark, est)
+        pending = step(frontier.join(dir, frontier("v") === dir("a")))
+          .join(visited, Seq("s", "v"), "left_anti")
+      }
+    }
+    (visited, if (levels != null) levels
+      else seed.withColumn("dist", lit(0L)).where(lit(false)))
   }
 
   /** Static PageRank over an edge list (start, end) with packed ids;
@@ -116,37 +167,6 @@ object GraphAnalytics {
     out
   }
 
-  /** Weighted single-source shortest distances via Pregel — the GraphX
-    * twin of Algo.dijkstra's set-based relaxation (SURVEY §2.3
-    * Dijkstra; nodeDijkstra.c). The DataFrame loop wins for selective
-    * source/target pairs (it prunes by the bound endpoint sets); the
-    * Pregel form wins for whole-graph distance fields where every
-    * vertex is a target. Input: (start, end, weight); returns
-    * (id, dist) for vertices reachable from `sourceId`.
-    */
-  def sssp(edgesDf: DataFrame, sourceId: Long): DataFrame = {
-    val spark = edgesDf.sparkSession
-    import spark.implicits._
-    val edges = edgesDf.select(col("start").cast("long"), col("end").cast("long"),
-      col("weight").cast("double"))
-      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val graph = Graph.fromEdges(edges, Double.PositiveInfinity)
-      .mapVertices((id, _) => if (id == sourceId) 0.0 else Double.PositiveInfinity)
-    val result = graph.pregel(Double.PositiveInfinity)(
-      (_, dist, msg) => math.min(dist, msg),
-      t => if (t.srcAttr + t.attr < t.dstAttr)
-        Iterator((t.dstId, t.srcAttr + t.attr)) else Iterator.empty,
-      (a, b) => math.min(a, b))
-    val out = result.vertices
-      .filter(_._2 < Double.PositiveInfinity)
-      .map { case (id, dist) => (id, dist) }
-      .toDF("id", "dist")
-      .localCheckpoint(true)
-    result.unpersist(blocking = false)
-    graph.unpersist(blocking = false)
-    out
-  }
-
   /** Per-vertex triangle counts over an undirected pair relation
     * (u, v) — a pure DataFrame plan, no Pregel. Edges dedup to
     * canonical (min, max) form, then orient low→high by (degree, id)
@@ -161,10 +181,7 @@ object GraphAnalytics {
     * (id, n_tri); vertices in no triangle are absent.
     */
   def triangleCount(pairs: DataFrame): DataFrame = {
-    val canon = pairs
-      .select(least(col("u"), col("v")).as("a"),
-        greatest(col("u"), col("v")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
+    val canon = canonEdges(pairs).distinct()
     val deg = canon.select(explode(array(col("a"), col("b"))).as("id"))
       .groupBy("id").count().withColumnRenamed("count", "deg")
     val oriented = canon
@@ -198,12 +215,7 @@ object GraphAnalytics {
     * (id, deg) with deg = degree inside the core.
     */
   def kCore(pairs: DataFrame, k: Int): DataFrame = {
-    val spark = pairs.sparkSession
-    var edges = pairs
-      .select(least(col("u"), col("v")).as("a"),
-        greatest(col("u"), col("v")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true)
+    var edges = canonEdges(pairs).distinct().localCheckpoint(true)
     var done = false
     var rounds = 0
     var deg: DataFrame = null
@@ -252,12 +264,7 @@ object GraphAnalytics {
     * returns (id, label).
     */
   def labelPropagation(pairs: DataFrame, iters: Int): DataFrame = {
-    val edges = pairs
-      .select(least(col("u"), col("v")).as("a"),
-        greatest(col("u"), col("v")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-    val dir = edges.unionAll(edges.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint(true)
+    val dir = bothWays(pairs)
     var labels = dir.select(col("a").as("id")).distinct()
       .withColumn("label", col("id"))
       .localCheckpoint(true)
@@ -342,58 +349,15 @@ object GraphAnalytics {
     */
   def multiSourceDistances(pairs: DataFrame, maxDepth: Int,
       sourceFilter: Column): DataFrame = {
-    val spark = pairs.sparkSession
-    val edges = pairs
-      .select(least(col("u"), col("v")).as("a"),
-        greatest(col("u"), col("v")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-    val dir = edges.unionAll(edges.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint(true)
-    // degree table for the per-round pre-flight projection (see loop)
-    val deg = ScaleGuard.degreeTable(dir)
-    val maxDeg = ScaleGuard.maxDegree(deg)
-    var (visited, visitedRows) = checkpointCounted(
-      dir.select(col("a").as("s"), col("a").as("v")).distinct()
-        .where(sourceFilter), stateLevel)
-    var frontier = visited
-    var frontierRows = visitedRows
-    var out: DataFrame = null
-    var depth = 0
-    while (depth < maxDepth && frontierRows > 0) {
-      depth += 1
-      // pre-flight BEFORE the round's join (ScaleGuard.guardRound: free
-      // frontierRows·maxDeg bound, exact degree-aware projection only
-      // past a threshold) so the guard fails loud in seconds instead of
-      // exhausting memory mid-join, and costs nothing in benign rounds
-      val est = ScaleGuard.guardRound(spark, frontier, deg, maxDeg,
-        visitedRows, frontierRows,
-        s"the exact multi-source distance closure (round $depth)",
-        "the fixed-source-count form — GraphAnalytics.closenessSampledK " +
-        "(p118 shape, the 100-TB default: work " + "∝" + " k·E, " +
-        "three-decade-measured), the rate-sampled contrast twin " +
-        "closenessSampled (p117 shape), or a sourceFilter restricting " +
-        "BFS sources")
-      val level = pickLevel(spark, est)
-      val (next, nRows) = checkpointCounted(
-        frontier.join(dir, frontier("v") === dir("a"))
-          .select(col("s"), col("b").as("v")).distinct()
-          .join(visited, Seq("s", "v"), "left_anti"), level)
-      frontierRows = nRows
-      val lvl = next.withColumn("dist", lit(depth.toLong))
-      out = if (out == null) lvl else out.unionAll(lvl)
-      // visited = union of ALREADY-checkpointed levels: re-materializing
-      // the whole set each round copied O(|visited|) rows per round for
-      // no lineage benefit (each leg is its own checkpoint; the union
-      // plan depth is the depth cap, a handful)
-      visited = visited.unionAll(next)
-      visitedRows += frontierRows
-      frontier = next
-    }
-    if (out == null)
-      pairs.sparkSession.emptyDataFrame
-        .select(lit(0L).as("s"), lit(0L).as("v"), lit(0L).as("dist"))
-        .limit(0)
-    else out
+    val dir = bothWays(pairs)
+    frontierClosure(dir, sources(dir, sourceFilter), maxDepth,
+      depth => s"the exact multi-source distance closure (round $depth)",
+      "the fixed-source-count form — GraphAnalytics.closenessSampledK " +
+      "(p118 shape, the 100-TB default: work " + "∝" + " k·E, " +
+      "three-decade-measured), the rate-sampled contrast twin " +
+      "closenessSampled (p117 shape), or a sourceFilter restricting " +
+      "BFS sources")(
+      _.select(col("s"), col("b").as("v")).distinct())._2
   }
 
   /** Closeness centrality (unnormalized, component-safe): per vertex
@@ -434,15 +398,8 @@ object GraphAnalytics {
     * thing that changes with scale (Eppstein-Wang: error bounds
     * depend on sample COUNT, which is exactly what is held fixed).
     */
-  def closenessSampledK(pairs: DataFrame, maxDepth: Int, k: Long): DataFrame = {
-    val verts = pairs
-      .select(least(col("u"), col("v")).as("a"),
-        greatest(col("u"), col("v")).as("b"))
-      .where(col("a") =!= col("b"))
-    val v = verts.select(explode(array(col("a"), col("b"))).as("x"))
-      .agg(countDistinct(col("x"))).first().getLong(0)
-    closenessSampled(pairs, maxDepth, math.max(1L, v / k))
-  }
+  def closenessSampledK(pairs: DataFrame, maxDepth: Int, k: Long): DataFrame =
+    closenessSampled(pairs, maxDepth, sampleMod(pairs, k))
 
   /** Strongly connected components by mutual reachability: one
     * multi-source DIRECTED reachability closure (the allPairsDistances
@@ -457,39 +414,17 @@ object GraphAnalytics {
     * component's minimum vertex id.
     */
   def stronglyConnected(edges: DataFrame, maxDepth: Int): DataFrame = {
-    // same pair-state checkpoint discipline as multiSourceDistances —
-    // the reachability closure is the quadratic structure here, so it
-    // gets the same per-round pre-flight guard + auto disk level
-    val spark = edges.sparkSession
     val dir = edges.select(col("u").as("a"), col("v").as("b"))
       .where(col("a") =!= col("b")).distinct().localCheckpoint(true)
-    val deg = ScaleGuard.degreeTable(dir)
-    val maxDeg = ScaleGuard.maxDegree(deg)
     val verts = dir.select(col("a").as("x"))
       .unionAll(dir.select(col("b").as("x"))).distinct()
-    var (visited, visitedRows) = checkpointCounted(
-      verts.select(col("x").as("s"), col("x").as("v")), stateLevel)
-    var frontier = visited
-    var frontierRows = visitedRows
-    var depth = 0
-    while (depth < maxDepth && frontierRows > 0) {
-      depth += 1
-      val est = ScaleGuard.guardRound(spark, frontier, deg, maxDeg,
-        visitedRows, frontierRows,
-        s"the exact mutual-reachability closure (stronglyConnected, round $depth)",
-        "a lower maxDepth cap, or pre-collapsing dense regions " +
-        "(label propagation / connected components) before the closure")
-      val level = pickLevel(spark, est)
-      val (next, nRows) = checkpointCounted(
-        frontier.join(dir, frontier("v") === dir("a"))
-          .select(col("s"), col("b").as("v")).distinct()
-          .join(visited, Seq("s", "v"), "left_anti"), level)
-      frontierRows = nRows
-      // union of already-checkpointed levels (see multiSourceDistances)
-      visited = visited.unionAll(next)
-      visitedRows += frontierRows
-      frontier = next
-    }
+    // the reachability closure is the quadratic structure here
+    val (visited, _) = frontierClosure(dir,
+      verts.select(col("x").as("s"), col("x").as("v")), maxDepth,
+      depth => s"the exact mutual-reachability closure (stronglyConnected, round $depth)",
+      "a lower maxDepth cap, or pre-collapsing dense regions " +
+      "(label propagation / connected components) before the closure")(
+      _.select(col("s"), col("b").as("v")).distinct())
     val swap = visited.select(col("v").as("s2"), col("s").as("v2"))
     visited.join(swap,
         visited("s") === col("s2") && visited("v") === col("v2"))
@@ -517,49 +452,15 @@ object GraphAnalytics {
     */
   def shortestPathCounts(pairs: DataFrame, maxDepth: Int,
       sourceFilter: Column): DataFrame = {
-    val spark = pairs.sparkSession
-    val edges = pairs
-      .select(least(col("u"), col("v")).as("a"),
-        greatest(col("u"), col("v")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-    val dir = edges.unionAll(edges.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint(true)
-    val deg = ScaleGuard.degreeTable(dir)
-    val maxDeg = ScaleGuard.maxDegree(deg)
-    var (visited, visitedRows) = checkpointCounted(
-      dir.select(col("a").as("s"), col("a").as("v")).distinct()
-        .where(sourceFilter), stateLevel)
-    var frontier = visited.withColumn("sigma", lit(1L))
-    var frontierRows = visitedRows
-    var out: DataFrame = null
-    var depth = 0
-    while (depth < maxDepth && frontierRows > 0) {
-      depth += 1
-      val est = ScaleGuard.guardRound(spark, frontier, deg, maxDeg,
-        visitedRows, frontierRows,
-        s"the exact shortest-path-count closure (Brandes sigma, round $depth)",
-        "the sampled-source form — shortestPathCounts(pairs, depth, " +
-        "sourceFilter) / GraphAnalytics.stressCentralitySampled " +
-        "(p119 shape) — or a lower maxDepth")
-      val level = pickLevel(spark, est)
-      val (next, nRows) = checkpointCounted(
-        frontier.join(dir, frontier("v") === dir("a"))
-          .groupBy(col("s"), col("b").as("v"))
-          .agg(sum("sigma").as("sigma"))
-          .join(visited, Seq("s", "v"), "left_anti"), level)
-      frontierRows = nRows
-      val lvl = next.withColumn("dist", lit(depth.toLong))
-      out = if (out == null) lvl else out.unionAll(lvl)
-      // union of already-checkpointed levels (see multiSourceDistances)
-      visited = visited.unionAll(next.select("s", "v"))
-      visitedRows += frontierRows
-      frontier = next
-    }
-    if (out == null)
-      pairs.sparkSession.emptyDataFrame
-        .select(lit(0L).as("s"), lit(0L).as("v"), lit(0L).as("sigma"),
-          lit(0L).as("dist")).limit(0)
-    else out.select("s", "v", "dist", "sigma")
+    val dir = bothWays(pairs)
+    frontierClosure(dir, sources(dir, sourceFilter).withColumn("sigma", lit(1L)),
+      maxDepth,
+      depth => s"the exact shortest-path-count closure (Brandes sigma, round $depth)",
+      "the sampled-source form — shortestPathCounts(pairs, depth, " +
+      "sourceFilter) / GraphAnalytics.stressCentralitySampled " +
+      "(p119 shape) — or a lower maxDepth")(
+      _.groupBy(col("s"), col("b").as("v")).agg(sum("sigma").as("sigma")))
+      ._2.select("s", "v", "dist", "sigma")
   }
 
   /** Stress centrality: for every vertex v the number of shortest
@@ -571,72 +472,54 @@ object GraphAnalytics {
     * Ordered (s, t) pairs — undirected callers halve. At scale the
     * sigma table is the expensive artifact (exact APSP is O(V·E));
     * the standard sampled-source variant is this same plan with the
-    * source set restricted, which the `pairs` input already expresses.
+    * source set restricted ([[stressCentralitySampled]]).
     */
-  def stressCentrality(pairs: DataFrame, maxDepth: Int): DataFrame = {
-    val sp = shortestPathCounts(pairs, maxDepth).localCheckpoint(true)
-    // the sigma-table self-join on the middle vertex is the same
-    // quadratic family as the wedge joins: its exact pre-prune output
-    // is Σ_x (pairs ending at x)·(pairs starting at x) — guard it with
-    // the same pre-flight before committing to the join
-    val byV = sp.groupBy(col("v").as("_x")).agg(count(lit(1)).as("_nv"))
-    val byS = sp.groupBy(col("s").as("_x")).agg(count(lit(1)).as("_ns"))
-    val est = byV.join(byS, "_x")
-      .agg(coalesce(sum(col("_nv") * col("_ns")), lit(0L)).as("_e"))
-      .first().getLong(0)
-    ScaleGuard.check(sp.sparkSession, est,
+  def stressCentrality(pairs: DataFrame, maxDepth: Int): DataFrame =
+    sigmaStress(pairs, maxDepth, lit(true),
       "the stress-centrality sigma self-join",
       "the sampled-pair form — GraphAnalytics.stressCentralitySampled " +
       "(p119 shape) — or a lower maxDepth")
-    val sv = sp.select(col("s"), col("v"), col("dist").as("d1"),
-      col("sigma").as("g1"))
-    val sp2 = sp.select(col("s").as("v_mid"), col("v").as("t"),
-      col("dist").as("d2"), col("sigma").as("g2"))
-    val st = sp.select(col("s").as("s3"), col("v").as("t3"),
-      col("dist").as("d3"))
-    sv.join(sp2, sv("v") === sp2("v_mid"))
-      .where(col("s") =!= col("t"))
-      .join(st, col("s") === col("s3") && col("t") === col("t3") &&
-        (col("d1") + col("d2")) === col("d3"))
-      .groupBy(col("v").as("id"))
-      .agg(sum(col("g1") * col("g2")).as("stress"))
-  }
 
   /** Sampled-pair stress centrality — the scale twin the exact form's
     * guard names. Sources are restricted to `s % mod == 0`
     * (deterministic, so the oracle reproduces it bit-for-bit), and the
-    * (s, t) pairs counted are the SAMPLED×SAMPLED ordered pairs: on the
-    * undirected graph sigma is symmetric (sigma_vt = sigma_tv), so the
-    * second join leg reads the same sampled sigma table flipped —
-    * no full-source closure anywhere. stress_sampled(v) counts the
-    * shortest paths through v between sampled pairs; the unbiased
-    * scale-up to the exact value is ·(V/|S|)² (Brandes-style pair
-    * sampling: each ordered pair is included with probability
-    * (|S|/V)²). mod = 1 degenerates to exactly [[stressCentrality]]
-    * (the flipped second leg is the same relation by symmetry), which
-    * the spec pins. Work and state are O((V/mod)·E) for the closure
-    * and the self-join shrinks by ~mod² — strictly sub-quadratic for
-    * mod ∝ √V, linear for mod ∝ V.
+    * (s, t) pairs counted are the SAMPLED×SAMPLED ordered pairs.
+    * stress_sampled(v) counts the shortest paths through v between
+    * sampled pairs; the unbiased scale-up to the exact value is
+    * ·(V/|S|)² (Brandes-style pair sampling: each ordered pair is
+    * included with probability (|S|/V)²). mod = 1 degenerates to
+    * exactly [[stressCentrality]], which the spec pins. Work and state
+    * are O((V/mod)·E) for the closure and the self-join shrinks by
+    * ~mod² — strictly sub-quadratic for mod ∝ √V, linear for mod ∝ V.
     */
   def stressCentralitySampled(pairs: DataFrame, maxDepth: Int,
-      mod: Long): DataFrame = {
-    val sp = shortestPathCounts(pairs, maxDepth, col("s") % mod === 0)
+      mod: Long): DataFrame =
+    sigmaStress(pairs, maxDepth, col("s") % mod === 0,
+      s"the sampled stress-centrality sigma self-join (mod=$mod)",
+      "a larger mod (fewer sampled sources)")
+
+  /** Stress over the sources passing `sourceFilter`, counting the
+    * (s, t) pairs with both ends among them: one self-join of the sigma
+    * table on the middle vertex. On the undirected graph sigma is
+    * symmetric (sigma_vt = sigma_tv), so the second leg reads the same
+    * table flipped — no closure from the other end. With every vertex
+    * a source the flipped leg is exactly the direct one.
+    *
+    * The self-join is the same quadratic family as the wedge joins;
+    * with both legs the same table its exact pre-prune output is
+    * Σ_x nv(x)², which `ScaleGuard.check` gates (naming `what` and
+    * `twin`) before committing to the join.
+    */
+  private def sigmaStress(pairs: DataFrame, maxDepth: Int,
+      sourceFilter: Column, what: String, twin: String): DataFrame = {
+    val sp = shortestPathCounts(pairs, maxDepth, sourceFilter)
       .localCheckpoint(true)
-    // same self-join pre-flight as the exact form — with sampled
-    // sources the estimate shrinks ~mod^2, but a too-small mod on a
-    // huge graph should still fail loud rather than die mid-join
-    // both legs are the same sampled table (one of them flipped), so
-    // the exact pre-prune join output is Σ_x nv(x)²
     val est = sp.groupBy(col("v")).agg(count(lit(1)).as("_nv"))
       .agg(coalesce(sum(col("_nv") * col("_nv")), lit(0L)).as("_e"))
       .first().getLong(0)
-    ScaleGuard.check(sp.sparkSession, est,
-      s"the sampled stress-centrality sigma self-join (mod=$mod)",
-      "a larger mod (fewer sampled sources)")
+    ScaleGuard.check(sp.sparkSession, est, what, twin)
     val sv = sp.select(col("s"), col("v"), col("dist").as("d1"),
       col("sigma").as("g1"))
-    // sigma_{v,t} for t in the sample = sigma_{t,v} (undirected): the
-    // sampled table's own rows, flipped
     val vt = sp.select(col("v").as("v_mid"), col("s").as("t"),
       col("dist").as("d2"), col("sigma").as("g2"))
     val st = sp.select(col("s").as("s3"), col("v").as("t3"),
@@ -660,15 +543,8 @@ object GraphAnalytics {
     * sampled-pair COUNT, which is exactly what is held fixed.
     */
   def stressCentralitySampledK(pairs: DataFrame, maxDepth: Int,
-      k: Long): DataFrame = {
-    val verts = pairs
-      .select(least(col("u"), col("v")).as("a"),
-        greatest(col("u"), col("v")).as("b"))
-      .where(col("a") =!= col("b"))
-    val v = verts.select(explode(array(col("a"), col("b"))).as("x"))
-      .agg(countDistinct(col("x"))).first().getLong(0)
-    stressCentralitySampled(pairs, maxDepth, math.max(1L, v / k))
-  }
+      k: Long): DataFrame =
+    stressCentralitySampled(pairs, maxDepth, sampleMod(pairs, k))
 
   /** Local clustering coefficient, integer-exact: per vertex the
     * closed-triangle count and the wedge count deg·(deg−1)/2 — the
@@ -679,11 +555,7 @@ object GraphAnalytics {
     * surface with n_tri = 0 via the left join.
     */
   def clusteringCoefficient(pairs: DataFrame): DataFrame = {
-    val canon = pairs
-      .select(least(col("u"), col("v")).as("a"),
-        greatest(col("u"), col("v")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true)
+    val canon = canonEdges(pairs).distinct().localCheckpoint(true)
     val deg = canon.select(explode(array(col("a"), col("b"))).as("id"))
       .groupBy("id").count().withColumnRenamed("count", "deg")
     val tri = triangleCount(
@@ -707,12 +579,7 @@ object GraphAnalytics {
     */
   def deterministicWalks(pairs: DataFrame, sources: DataFrame,
       steps: Int): DataFrame = {
-    val edges = pairs
-      .select(least(col("u"), col("v")).as("a"),
-        greatest(col("u"), col("v")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-    val dir = edges.unionAll(edges.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint(true)
+    val dir = bothWays(pairs)
     var cur = sources.select(col("s").cast("long").as("s"))
       .distinct().withColumn("v", col("s"))
     var out = cur.withColumn("step", lit(0L))
@@ -728,15 +595,5 @@ object GraphAnalytics {
       out = out.unionAll(cur.withColumn("step", lit(t.toLong)))
     }
     out.select("s", "step", "v")
-  }
-
-  /** Keep one representative (min id) per duplicate cluster — the
-    * GraphX twin of Dedup.keepRepresentatives.
-    */
-  def keepRepresentatives(docs: DataFrame, idCol: String,
-      pairs: DataFrame): DataFrame = {
-    val cl = connectedComponents(pairs)
-    val victims = cl.where(col("id") =!= col("comp")).select("id")
-    docs.join(victims, docs(idCol) === victims("id"), "left_anti")
   }
 }

@@ -49,12 +49,13 @@ object StreamQueries {
   }
 
   /** State-partition count derived from the SOURCE DATA VOLUME, not
-    * the core count: one shuffle partition — i.e. one state-store
-    * instance per stateful operator — per ~64 MB of input, floor 2,
-    * cap 200. A RocksDB store instance has a fixed open/commit/
-    * changelog-upload cost that dominates tiny states (bench scale:
-    * events is ~2 MB, so 8 fixed stores were pure overhead), while at
-    * 100 TB the same rule yields hundreds of parallel stores.
+    * the core count: ⌊input bytes / 64 MB⌋ + 2 shuffle partitions —
+    * i.e. state-store instances per stateful operator — capped at 200
+    * (so 2 below 64 MB, 12 at 640 MB). A RocksDB store instance has a
+    * fixed open/commit/changelog-upload cost that dominates tiny states
+    * (bench scale: events is ~2 MB, so 8 fixed stores were pure
+    * overhead), while at 100 TB the same rule yields hundreds of
+    * parallel stores.
     *
     * No discount for operators that keep several stores per partition
     * (stream-stream joins hold four): an earlier r15 form divided the
@@ -76,8 +77,7 @@ object StreamQueries {
         finally st.close()
       } catch { case _: Throwable => 0L }
     })
-    val target = (bytes / (64L << 20) + 1L).toInt
-    math.max(2, math.min(200, target + 1))
+    math.min(200L, bytes / (64L << 20) + 2L).toInt
   }
 
   /** Run a streaming DataFrame to completion (AvailableNow) into a

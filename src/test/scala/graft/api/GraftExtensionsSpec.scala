@@ -197,6 +197,21 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(ord == Seq("null", "\"a\"", "\"b\"", "2", "10"))
   }
 
+  test("the library registers once per SparkSession, not per CypherSession") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val registry = spark.sessionState.functionRegistry
+    def info(name: String) = registry.lookupFunction(FunctionIdentifier(name)).get
+    val root = java.nio.file.Files.createTempDirectory("graft_register").toString
+    val first = new CypherSession(spark, new graft.graph.GraphCatalog(spark, root))
+    val (add, agg) = (info("jsonb_add"), info("jsonb_agg"))
+    val second = new CypherSession(spark, new graft.graph.GraphCatalog(spark, root))
+    // a re-registration would install a fresh ExpressionInfo
+    assert(info("jsonb_add") eq add)
+    assert(info("jsonb_agg") eq agg)
+    for (cs <- Seq(first, second))
+      assert(cs.sql("SELECT jsonb_add('1', '2') AS r").collect()(0).getString(0) == "3")
+  }
+
   test("wrong-arity calls error with the function name, not an index error") {
     graft.api.GraftExtensions.register(spark)
     def err(sql: String): String =

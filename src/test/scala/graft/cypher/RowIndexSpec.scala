@@ -24,11 +24,18 @@ class RowIndexSpec extends AnyFunSuite {
     "g", Map.empty, _ => null)
 
   test("index is a bijection onto 0..n-1 across uneven partitions") {
-    // 3 partitions with deliberately skewed sizes: 1, 0, and 499 rows
-    val df = spark.range(0, 500).toDF()
-      .repartitionByRange(3, col("id"))
-      .where(col("id") =!= 1) // poke a hole so positions != values
+    import spark.implicits._
+    // partitions with deliberately skewed sizes, empty ones at the
+    // start, middle and end: 0, 1, 0, 499 and 0 rows; ids p*1000 + i,
+    // so positions != values
+    val sizes = Seq(0, 1, 0, 499, 0)
+    val df = spark.sparkContext.parallelize(sizes.indices, sizes.size)
+      .flatMap(p => (0 until sizes(p)).map(i => p * 1000L + i))
+      .toDF("id")
       .localCheckpoint(true)
+    val perPartition = df.groupBy(spark_partition_id().as("p")).count()
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(sizes.indices.map(perPartition.getOrElse(_, 0L)) == sizes.map(_.toLong))
     val n = df.count()
     val (indexed, counted) = builder.withRowIndexCounted(df, "__ix")
     assert(counted == n)

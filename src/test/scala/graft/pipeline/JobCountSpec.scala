@@ -1,0 +1,96 @@
+package graft.pipeline
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import graft.SparkTestBase
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Spark-job pins for the frontier-loop analytics on a small fixed
+  * graph. Each round of a closure is meant to cost one checkpoint
+  * (the row count rides it), so a change that adds an action per round
+  * shows up here as a higher count. The pins may only go down: lower
+  * them when a change saves jobs, never raise them to make a change
+  * pass. Under adaptive execution each shuffle stage of an action is
+  * its own job, so one checkpoint costs several jobs.
+  */
+class JobCountSpec extends AnyFunSuite {
+  lazy val spark = SparkTestBase.spark
+
+  // two diamonds joined by a bridge (3-4) plus a tail (7-8): path
+  // counts above 1 (sigma(0,7) = 4) and a diameter of 6 (0 to 8)
+  private lazy val undirected = {
+    import spark.implicits._
+    Seq((0L, 1L), (0L, 2L), (1L, 3L), (2L, 3L), (3L, 4L),
+      (4L, 5L), (4L, 6L), (5L, 7L), (6L, 7L), (7L, 8L)).toDF("u", "v")
+  }
+
+  // a 3-cycle and a 2-cycle joined by a one-way chain
+  private lazy val directed = {
+    import spark.implicits._
+    Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L), (3L, 4L), (4L, 5L),
+      (5L, 4L)).toDF("u", "v")
+  }
+
+  /** (jobs run while building the frame, jobs run while collecting it),
+    * counted by a listener that only sees this call's job group.
+    */
+  private def jobsOf(build: => DataFrame): (Int, Int) = {
+    val sc = spark.sparkContext
+    val group = s"job-count-${System.nanoTime()}"
+    val sentinel = group + "-sentinel"
+    val seen = Map("build" -> new AtomicInteger, "collect" -> new AtomicInteger,
+      "sentinel" -> new AtomicInteger)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+          .foreach {
+            case g if g == s"$group-build" => seen("build").incrementAndGet()
+            case g if g == s"$group-collect" => seen("collect").incrementAndGet()
+            case g if g == sentinel => seen("sentinel").incrementAndGet()
+            case _ =>
+          }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(s"$group-build", "job-count pin: build")
+      val df = build
+      sc.setJobGroup(s"$group-collect", "job-count pin: collect")
+      df.collect()
+      // listener events arrive in order on one queue: once the
+      // sentinel job is seen, every earlier job start has been counted
+      sc.setJobGroup(sentinel, "job-count pin: sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.currentTimeMillis() + 30000L
+      while (seen("sentinel").get == 0 && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(seen("sentinel").get == 1, "listener bus did not drain")
+      (seen("build").get, seen("collect").get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("allPairsDistances: job count pinned") {
+    val (build, collect) = jobsOf(
+      GraphAnalytics.allPairsDistances(undirected, maxDepth = 8))
+    info(s"build $build, collect $collect")
+    assert((build, collect) == (41, 1))
+  }
+
+  test("stronglyConnected: job count pinned") {
+    val (build, collect) = jobsOf(
+      GraphAnalytics.stronglyConnected(directed, maxDepth = 8))
+    info(s"build $build, collect $collect")
+    assert((build, collect) == (35, 5))
+  }
+
+  test("stressCentrality: job count pinned") {
+    val (build, collect) = jobsOf(
+      GraphAnalytics.stressCentrality(undirected, maxDepth = 4))
+    info(s"build $build, collect $collect")
+    assert((build, collect) == (30, 6))
+  }
+}

@@ -340,24 +340,17 @@ class PipelineSpec extends AnyFunSuite {
     assert(dist == want)
   }
 
-  test("GraphX connected components agree with the DataFrame min-label loop") {
-    import spark.implicits._
-    val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L), (7L, 8L), (8L, 9L), (9L, 7L))
-      .toDF("da", "db")
-    val sqlCc = Dedup.clusters(pairs).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val gxCc = GraphAnalytics.connectedComponents(pairs).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(sqlCc == gxCc)
-    // and on real near-dup pairs from the documents table
+  test("dedup clusters: union-find equals the min-label loop on real pairs") {
     val docs = graft.relational.Tables.load(spark, sf, "documents")
       .where(col("doc_id") < 100)
     val realPairs = Dedup.jaccardPairs(docs, "doc_id", "text", 0.9)
-    val a = Dedup.clusters(realPairs).collect()
+      .localCheckpoint(true)
+    assert(!realPairs.isEmpty, "the planted corpus has near-dup pairs")
+    val driver = Dedup.clusters(realPairs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val b = GraphAnalytics.connectedComponents(realPairs).collect()
+    val distributed = Dedup.clusters(realPairs, maxDriverPairs = 0L).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(a == b)
+    assert(driver == distributed)
   }
 
   test("editDistancePairs edge cases: short strings, duplicates, empties") {
@@ -455,37 +448,6 @@ class PipelineSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getDouble(1))).toMap
     assert(pr(1L) > pr(2L))
     assert(pr(2L) > pr(10L))
-  }
-
-  test("GraphX Pregel SSSP matches a reference Dijkstra on a random weighted digraph") {
-    import spark.implicits._
-    // deterministic pseudo-random digraph: 40 vertices, ~160 edges
-    val rnd = new scala.util.Random(42)
-    val edges = (1 to 160).map { _ =>
-      val s = rnd.nextInt(40).toLong; var e = rnd.nextInt(40).toLong
-      if (e == s) e = (e + 1) % 40
-      (s, e, 1.0 + rnd.nextInt(9))
-    }.distinct
-    val got = GraphAnalytics.sssp(edges.toDF("start", "end", "weight"), 0L)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-    // reference: driver-side Dijkstra
-    val adj = edges.groupBy(_._1).map { case (s, es) =>
-      s -> es.map(e => (e._2, e._3))
-    }
-    val dist = scala.collection.mutable.Map(0L -> 0.0)
-    val pq = scala.collection.mutable.PriorityQueue((0.0, 0L))(
-      Ordering.by[(Double, Long), Double](-_._1))
-    while (pq.nonEmpty) {
-      val (d, v) = pq.dequeue()
-      if (d <= dist.getOrElse(v, Double.PositiveInfinity)) {
-        adj.getOrElse(v, Nil).foreach { case (to, w) =>
-          if (d + w < dist.getOrElse(to, Double.PositiveInfinity)) {
-            dist(to) = d + w; pq.enqueue((d + w, to))
-          }
-        }
-      }
-    }
-    assert(got == dist.toMap)
   }
 
   test("IVF ANN recalls most brute-force top-k neighbors") {

@@ -3,8 +3,8 @@ package graft.streaming
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The r15 scale-adaptive state-partition rule: one state-store
-  * instance per ~64 MB of source input, floor 2, cap 200. The rule
+/** The r15 scale-adaptive state-partition rule: ⌊source bytes /
+  * 64 MB⌋ + 2 state-store instances, cap 200. The rule
   * must be monotone in input size and never collapse below the floor —
   * it replaces a fixed count of 8 that over-paid store open/commit at
   * bench scale and under-parallelized at 100 TB. There is deliberately
@@ -33,7 +33,7 @@ class StatePartitionsSpec extends AnyFunSuite {
 
   test("~64 MB per store, monotone in size") {
     val p640mb = StreamQueries.statePartitions(dirWithBytes(640L << 20), "t")
-    assert(p640mb >= 10 && p640mb <= 12, s"640MB -> ~10 stores, got $p640mb")
+    assert(p640mb == 12, s"640MB -> 640/64 + 2 = 12 stores, got $p640mb")
     val p64mb = StreamQueries.statePartitions(dirWithBytes(64L << 20), "t")
     assert(p64mb < p640mb)
   }
