@@ -2,12 +2,34 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-// temporary profiling scratch — not part of the library surface
+/** Profiling entry point at sf0.1 — not part of the library surface.
+  * `runMain graft.Dev <mode or query> ...`:
+  *  - `<query> [explain]`: warm run, then steady min of 3 (+ plan);
+  *  - `cypher <statement> [explain]`: the same for one Cypher statement;
+  *  - `jobs <query>`: per-job wall-time attribution and a driver stack
+  *    histogram;
+  *  - `confab <confA> <confB> <queries>`: interleaved conf A/B in one JVM;
+  *  - `sf10 <queries> [explain]`: isolated reruns on a reusable 100x
+  *    replica.
+  * Cores follow `SPARK_GRAFT_CPUS` (default: available processors, at
+  * most 16), as in Verify.
+  */
 object Dev {
+  /** `k=v;k=v` conf pairs (keys and values trimmed; `-` = none) —
+    * `;` because values such as extraJavaOptions lists contain commas.
+    */
+  private def confPairs(spec: String): Seq[(String, String)] =
+    if (spec == "-") Nil
+    else spec.split(";").toSeq.filter(_.contains("=")).map { kv =>
+      val Array(k, v) = kv.split("=", 2); (k.trim, v.trim)
+    }
+
   def main(args: Array[String]): Unit = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      math.min(Runtime.getRuntime.availableProcessors, 16).toString)
     val spark = api.GraftSession.configure(SparkSession.builder())
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -49,144 +71,6 @@ object Dev {
       relaid
     }
     val name = args(0)
-    if (name == "obsspike") {
-      // does Observation fire on localCheckpoint(true) and on a parquet
-      // write? (decides whether count() actions can fold into existing
-      // materializations on the write path)
-      import org.apache.spark.sql.functions._
-      val df = spark.range(1000).selectExpr("id", "id % 7 AS k")
-      def tryGet(o: org.apache.spark.sql.Observation, lbl: String): Unit = {
-        val t = new Thread(() => println(s"$lbl = " + o.get))
-        t.setDaemon(true); t.start(); t.join(3000)
-        if (t.isAlive) println(s"$lbl = TIMED OUT (metrics did not fire)")
-      }
-      val obs1 = org.apache.spark.sql.Observation("cp")
-      val cp = df.observe(obs1, count(lit(1)).as("n")).localCheckpoint(true)
-      println("checkpoint done")
-      tryGet(obs1, "obs1")
-      val obs2 = org.apache.spark.sql.Observation("wr")
-      val out = java.nio.file.Files.createTempDirectory("obsspike").toString
-      cp.observe(obs2, count(lit(1)).as("n"), max(col("k")).as("mk"))
-        .sortWithinPartitions("k")
-        .write.mode("overwrite").parquet(s"$out/t.parquet")
-      tryGet(obs2, "obs2")
-      spark.stop(); return
-    }
-    if (name == "g18parts") {
-      val s = pipeline.GraphQueries.session(spark, d)
-      s.createVLabel("scr", ifNotExists = true)
-      def t[A](lbl: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"  $lbl: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-      }
-      for (round <- 1 to 2) {
-        println(s"round $round")
-        t("merge")(s.cypher(
-          """MATCH (c:customer)-[:in]->(n:nation)
-            |WHERE c.acctbal > 9000
-            |MERGE (v:scr {name: c.name, nation: n.name, bal: c.acctbal})""".stripMargin))
-        t("delete")(s.cypher("MATCH (v:scr) WHERE v.bal < 9500 DELETE v"))
-        t("read")(s.cypher(
-          "MATCH (v:scr) RETURN v.nation AS nation, count(*) AS n").count())
-      }
-      spark.stop(); return
-    }
-    if (name == "g29parts") {
-      def t[A](lbl: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"  $lbl: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-      }
-      val s = t("fixture build")(pipeline.GraphQueries.session(spark, d))
-      t("registerAll")(relational.Tables.registerAll(spark, d))
-      val sqlText =
-        """SELECT count(*) AS n_orders FROM
-          |  (SELECT CAST(floor(o_totalprice / 50) AS BIGINT) AS thr
-          |   FROM orders WHERE o_totalprice > 400000) t
-          |WHERE EXISTS (MATCH (c:customer)
-          |  WHERE c.acctbal > t.thr AND c.mktsegment = 'BUILDING' RETURN c)""".stripMargin
-      for (round <- 1 to 3) {
-        println(s"round $round")
-        val df = t("sql() compile")(s.sql(sqlText))
-        t("execute")(df.collect())
-      }
-      spark.stop(); return
-    }
-    if (name == "p45parts") {
-      import org.apache.spark.sql.functions._
-      val vecs = relational.Tables.load(spark, d, "embeddings")
-      val cb = pipeline.Similarity.pqCodebook(64, 8, 16)
-      def t[A](lbl: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"  $lbl: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-      }
-      println("corpus rows: " + vecs.count())
-      for (_ <- 1 to 2) {
-        t("encode only")(pipeline.Similarity.pqEncode(vecs, cb).count())
-        t("full")(pipeline.Similarity.pqTopK(
-          vecs.where(col("vec_id") < 50), vecs, cb, 3).count())
-      }
-      spark.stop(); return
-    }
-    if (name == "pollute") {
-      // isolate the steady2 inflation: run victim queries, then the
-      // suspected polluter family once or twice, then the victims again
-      def t[A](lbl: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"  $lbl: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-      }
-      def rss(): Long = {
-        val s = java.nio.file.Files.readAllLines(
-          java.nio.file.Paths.get("/proc/self/status"))
-        s.stream.filter(_.startsWith("VmRSS")).findFirst.get
-          .split("\\s+")(1).toLong / 1024
-      }
-      val victims = args(1).split(",").toSeq
-      val polluters = args(2).split(",").toSeq
-      println(s"RSS ${rss()} MB")
-      for (r <- 1 to 3; v <- victims)
-        t(s"$v pre-$r")(SparkEntry.queries(v)(spark, d).count())
-      println(s"RSS ${rss()} MB")
-      for (rep <- 1 to 2; p <- polluters)
-        t(s"$p pollute-$rep")(SparkEntry.queries(p)(spark, d).count())
-      println(s"RSS ${rss()} MB")
-      System.gc(); Thread.sleep(200)
-      for (r <- 1 to 3; v <- victims)
-        t(s"$v post-$r")(SparkEntry.queries(v)(spark, d).count())
-      println(s"RSS ${rss()} MB")
-      spark.stop(); return
-    }
-    if (name == "sf1") {
-      // reproduce the bench's sf1 probe for a set of queries, in
-      // isolation: args(1) = comma-separated query names
-      def t[A](lbl: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"  $lbl: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-      }
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_sf1_probe").toString
-      try {
-        t("replica build")(Bench.makeSf1Replica(spark, d, dir))
-        t("graph fixture")(pipeline.GraphQueries.session(spark, dir))
-        val names = args(1).split(",").toSeq
-        for (round <- 1 to 3; n <- names) {
-          t(s"$n (round $round)")(SparkEntry.queries(n)(spark, dir).count())
-        }
-        if (args.length > 2 && args(2) == "explain") names.foreach { n =>
-          println(s"=== $n ===")
-          SparkEntry.queries(n)(spark, dir).explain("formatted")
-        }
-      } finally {
-        def del(p: java.nio.file.Path): Unit = {
-          if (java.nio.file.Files.isDirectory(p)) {
-            val s = java.nio.file.Files.list(p)
-            try s.forEach(del(_)) finally s.close()
-          }
-          java.nio.file.Files.deleteIfExists(p)
-        }
-        del(java.nio.file.Paths.get(dir))
-      }
-      spark.stop(); return
-    }
     if (name == "sf10") {
       // isolated sf10 probe: args(1) = comma-separated query names;
       // builds (or reuses) a FIXED-path 100x replica so iterating on
@@ -208,11 +92,9 @@ object Dev {
       spark.conf.set("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_SF10_SHUFFLE", "256"))
       // measurement-only conf overrides for this probe window, e.g.
-      // SPARK_GRAFT_DEV_CONF="spark.graft.changelog=false"
-      sys.env.get("SPARK_GRAFT_DEV_CONF").foreach(_.split(",")
-        .filter(_.contains("=")).foreach { kv =>
-          val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
-        })
+      // SPARK_GRAFT_DEV_CONF="spark.sql.adaptive.enabled=false; ..."
+      sys.env.get("SPARK_GRAFT_DEV_CONF").foreach(confPairs(_).foreach {
+        case (k, v) => spark.conf.set(k, v) })
       System.setProperty("graft.state.disk", "1")
       for (round <- 1 to 2; n <- names) {
         // Bench.runQuery's hygiene: drop the run's own checkpoint
@@ -234,208 +116,6 @@ object Dev {
       }
       spark.stop(); return
     }
-    if (name == "variantspike") {
-      // SURVEY §1.3 deferred decision: would a Spark 4 VariantType-
-      // backed properties column beat the canonical-JSON string the
-      // engine stores today? Measure the ACCESS tax head-to-head on a
-      // 10x replica of the richest table (lineitem -> a 16-key props
-      // document), same parquet layout, three access shapes per path:
-      //   A numeric single-key extract + aggregate (the q28/q31 shape)
-      //   B string-key filter + count (the g05-family predicate shape)
-      //   C multi-key extract + group-by (the jsonb-agg render shape)
-      // The decision bar (SURVEY §1.3): jsonb equality/containment
-      // semantics must stay EXACT — variant has no containment or
-      // jsonb btree order, so those ops would still need the string
-      // round-trip regardless of what this measures.
-      import org.apache.spark.sql.functions._
-      def t3(lbl: String)(f: => Long): Unit = {
-        f // warm (codegen + page cache)
-        val ts = (1 to 3).map { _ =>
-          val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-        }
-        println(f"  $lbl: min ${ts.min}%.3f s  runs ${ts.map(x => f"$x%.3f").mkString(" ")}")
-      }
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_variant_spike").toString
-      try {
-        val li = relational.Tables.load(spark, d, "lineitem")
-        val props = to_json(struct(li.columns.map(col): _*))
-        val base = (0 until 10).map(i =>
-            li.withColumn("props", props)
-              .withColumn("id", col("l_orderkey") * 100 + i)
-              .select("id", "props"))
-          .reduce(_ unionAll _)
-        base.repartitionByRange(16, col("id")).sortWithinPartitions("id")
-          .write.mode("overwrite").parquet(s"$dir/props_str.parquet")
-        base.select(col("id"), parse_json(col("props")).as("props"))
-          .repartitionByRange(16, col("id")).sortWithinPartitions("id")
-          .write.mode("overwrite").parquet(s"$dir/props_var.parquet")
-        val str = spark.read.parquet(s"$dir/props_str.parquet")
-        val vnt = spark.read.parquet(s"$dir/props_var.parquet")
-        println(s"rows: ${str.count()}  (string vs variant parquet)")
-        import graft.expr.J
-        t3("A string: J.getKey numeric agg")(
-          str.select(J.toLong(J.getKey(col("props"), "l_quantity")).as("q"))
-            .groupBy("q").count().count())
-        t3("A variant: variant_get numeric agg")(
-          vnt.select(expr("variant_get(props, '$.l_quantity', 'long')").as("q"))
-            .groupBy("q").count().count())
-        t3("B string: J.getKey string filter")(
-          str.where(J.asText(J.getKey(col("props"), "l_returnflag")) === "R")
-            .count())
-        t3("B variant: variant_get string filter")(
-          vnt.where(expr("variant_get(props, '$.l_returnflag', 'string')") === "R")
-            .count())
-        t3("C string: 3-key extract group-by")(
-          str.select(
-              J.asText(J.getKey(col("props"), "l_returnflag")).as("rf"),
-              J.asText(J.getKey(col("props"), "l_linestatus")).as("ls"),
-              J.toLong(J.getKey(col("props"), "l_quantity")).as("q"))
-            .groupBy("rf", "ls").agg(sum("q")).count())
-        t3("C variant: 3-key extract group-by")(
-          vnt.select(
-              expr("variant_get(props, '$.l_returnflag', 'string')").as("rf"),
-              expr("variant_get(props, '$.l_linestatus', 'string')").as("ls"),
-              expr("variant_get(props, '$.l_quantity', 'long')").as("q"))
-            .groupBy("rf", "ls").agg(sum("q")).count())
-        // the engine's own sidecar answer to the same tax, for context:
-        // a shredded typed column reads with NO parse on either path
-        val shred = base
-          .withColumn("__pn_l_quantity",
-            get_json_object(col("props"), "$.l_quantity").cast("decimal(38,18)"))
-        shred.repartitionByRange(16, col("id")).sortWithinPartitions("id")
-          .write.mode("overwrite").parquet(s"$dir/props_shred.parquet")
-        val sh = spark.read.parquet(s"$dir/props_shred.parquet")
-        t3("A shred: typed sidecar agg")(
-          sh.select(col("__pn_l_quantity").cast("long").as("q"))
-            .groupBy("q").count().count())
-        println("sizes on disk (MB):")
-        for (n <- Seq("props_str", "props_var", "props_shred")) {
-          val p = java.nio.file.Paths.get(s"$dir/$n.parquet")
-          val sz = java.nio.file.Files.walk(p).filter(
-            java.nio.file.Files.isRegularFile(_))
-            .mapToLong(java.nio.file.Files.size(_)).sum / (1024 * 1024)
-          println(s"  $n: $sz")
-        }
-      } finally {
-        def del(p: java.nio.file.Path): Unit = {
-          if (java.nio.file.Files.isDirectory(p)) {
-            val s = java.nio.file.Files.list(p)
-            try s.forEach(del(_)) finally s.close()
-          }
-          java.nio.file.Files.deleteIfExists(p)
-        }
-        del(java.nio.file.Paths.get(dir))
-      }
-      spark.stop(); return
-    }
-    if (name == "plansweep") {
-      // dump every query's formatted plan to a dir + print smell
-      // counters (cartesian products, exchange counts, unpushed scans)
-      val outDir = if (args.length > 1) args(1) else "/tmp/graft_plans"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-      val only = if (args.length > 2) args(2).split(",").toSet else Set.empty[String]
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (n, fn) =>
-        if (only.isEmpty || only.exists(n.startsWith)) {
-          try {
-            val df = fn(spark, d)
-            val plan = df.queryExecution.explainString(
-              org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-            java.nio.file.Files.writeString(
-              java.nio.file.Paths.get(s"$outDir/$n.txt"), plan)
-            def c(p: String) = p.r.findAllIn(plan).length
-            val cart = c("CartesianProduct")
-            val exch = c("Exchange") - c("ReusedExchange") - c("BroadcastExchange")
-            val smj = c("SortMergeJoin")
-            val gen = c("Generate")
-            val nopush = "PushedFilters: \\[\\]".r.findAllIn(plan).length
-            println(f"$n%-32s exch=$exch%2d smj=$smj%2d cart=$cart%2d " +
-              f"gen=$gen%2d scans_nofilter=$nopush%2d")
-          } catch { case e: Throwable =>
-            println(s"$n FAILED: ${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(80)}")
-          }
-        }
-      }
-      spark.stop(); return
-    }
-    if (name == "bm25ab") {
-      // old (3-corpus-scan) vs new (tf-checkpointed) bm25, interleaved
-      import org.apache.spark.sql.DataFrame
-      import org.apache.spark.sql.functions._
-      val sp2 = spark
-      import sp2.implicits._
-      val queries = Seq((0L, "spark join window"),
-        (1L, "slow fast table value")).toDF("qid", "qtext")
-      def oldBm25(): Long = {
-        val docs = relational.Tables.load(spark, d, "documents")
-        val (idCol, textCol, qidCol, qtextCol, k, k1, b) =
-          ("doc_id", "text", "qid", "qtext", 10, 1.2, 0.75)
-        val toks = docs.select(col(idCol),
-            explode(split(lower(col(textCol)), "\\s+")).as("term"))
-          .where(length(col("term")) > 0)
-        val dl = toks.groupBy(idCol).agg(count(lit(1)).as("dl"))
-        val stats = dl.agg(count(lit(1)).as("n_docs"),
-          avg(col("dl").cast("double")).as("avgdl"))
-        val qterms = queries.select(col(qidCol),
-            explode(split(lower(col(qtextCol)), "\\s+")).as("term"))
-          .where(length(col("term")) > 0).distinct()
-        val qvocab = qterms.select("term").distinct()
-        val toksQ = toks.join(broadcast(qvocab), Seq("term"))
-        val tf = toksQ.groupBy(idCol, "term").agg(count(lit(1)).as("n_t"))
-        val dfreq = toksQ.select(col(idCol), col("term")).distinct()
-          .groupBy("term").agg(count(lit(1)).as("df_t"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(qidCol).orderBy(col("score").desc, col(idCol))
-        tf.join(broadcast(qterms), Seq("term"))
-          .join(dl, idCol)
-          .join(broadcast(dfreq), Seq("term"))
-          .crossJoin(broadcast(stats))
-          .withColumn("idf", log(
-            (col("n_docs").cast("double") - col("df_t") + 0.5) /
-              (col("df_t") + 0.5) + 1.0))
-          .withColumn("contrib",
-            col("idf") * col("n_t") * (k1 + 1.0) /
-              (col("n_t") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
-          .groupBy(qidCol, idCol)
-          .agg(round(sum("contrib"), 6).as("score"))
-          .withColumn("rank", row_number().over(w))
-          .where(col("rank") <= k)
-          .count()
-      }
-      def newBm25(): Long = pipeline.TextOps.bm25TopK(
-        relational.Tables.load(spark, d, "documents"), "doc_id", "text",
-        queries, "qid", "qtext", k = 10).count()
-      oldBm25(); newBm25()
-      val ta = scala.collection.mutable.ArrayBuffer[Double]()
-      val tb = scala.collection.mutable.ArrayBuffer[Double]()
-      for (_ <- 1 to 5) {
-        var t0 = System.nanoTime(); oldBm25()
-        ta += (System.nanoTime() - t0) / 1e9
-        t0 = System.nanoTime(); newBm25()
-        tb += (System.nanoTime() - t0) / 1e9
-      }
-      println(f"OLD bm25: min ${ta.min}%.2f  runs ${ta.map(t => f"$t%.2f").mkString(" ")}")
-      println(f"NEW bm25: min ${tb.min}%.2f  runs ${tb.map(t => f"$t%.2f").mkString(" ")}")
-      spark.stop(); return
-    }
-    if (name == "ab") {
-      // interleaved A/B of two query names in ONE JVM (min-of-5 each,
-      // alternating) — the only protocol that survives +-40% host noise
-      val a = args(1); val bq = args(2)
-      val fa = SparkEntry.queries(a); val fb = SparkEntry.queries(bq)
-      fa(spark, d).count(); fb(spark, d).count() // warm both
-      val ta = scala.collection.mutable.ArrayBuffer[Double]()
-      val tb = scala.collection.mutable.ArrayBuffer[Double]()
-      for (_ <- 1 to 5) {
-        var t0 = System.nanoTime(); fa(spark, d).count()
-        ta += (System.nanoTime() - t0) / 1e9
-        t0 = System.nanoTime(); fb(spark, d).count()
-        tb += (System.nanoTime() - t0) / 1e9
-      }
-      println(f"A $a: min ${ta.min}%.2f  runs ${ta.map(t => f"$t%.2f").mkString(" ")}")
-      println(f"B $bq: min ${tb.min}%.2f  runs ${tb.map(t => f"$t%.2f").mkString(" ")}")
-      spark.stop(); return
-    }
     if (name == "cypher") {
       // time one Cypher statement (steady min-of-3) + optional explain
       val s = pipeline.GraphQueries.session(spark, d)
@@ -452,13 +132,13 @@ object Dev {
     }
     if (name == "confab") {
       // interleaved conf A/B in ONE JVM (the only protocol that
-      // survives +-40% host noise): args(1)=confA "k=v,..." ("-"=none),
-      // args(2)=confB, args(3)=queries. min-of-5 each, alternating.
-      def applyConf(spec: String): Unit = if (spec != "-")
-        spec.split(",").foreach { kv =>
-          val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) }
-      def clearConf(spec: String): Unit = if (spec != "-")
-        spec.split(",").foreach { kv => spark.conf.unset(kv.split("=", 2)(0)) }
+      // survives +-40% host noise): args(1)=confA "k=v;..." ("-"=none),
+      // args(2)=confB, args(3)=comma-separated queries. min-of-5 each,
+      // alternating.
+      def applyConf(spec: String): Unit =
+        confPairs(spec).foreach { case (k, v) => spark.conf.set(k, v) }
+      def clearConf(spec: String): Unit =
+        confPairs(spec).foreach { case (k, _) => spark.conf.unset(k) }
       val (ca, cb) = (args(1), args(2))
       val names = args(3).split(",").toSeq
       names.foreach { n =>
@@ -478,24 +158,6 @@ object Dev {
         }
         println(f"  $n A[$ca] min ${ta.min}%.2f runs ${ta.map(t => f"$t%.2f").mkString(" ")}")
         println(f"  $n B[$cb] min ${tb.min}%.2f runs ${tb.map(t => f"$t%.2f").mkString(" ")}")
-      }
-      spark.stop(); return
-    }
-    if (name == "conf") {
-      // diagnostic: min-of-3 steady timing for args(2..) queries under
-      // a conf override "k=v,k=v" in args(1) ("-" = none)
-      if (args(1) != "-") args(1).split(",").foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
-      }
-      val names = args(2).split(",").toSeq
-      names.foreach(n => SparkEntry.queries(n)(spark, d).count()) // warm
-      names.foreach { n =>
-        val ts = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          SparkEntry.queries(n)(spark, d).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"  $n: min ${ts.min}%.2f s  runs ${ts.map(t => f"$t%.2f").mkString(" ")}")
       }
       spark.stop(); return
     }

@@ -103,15 +103,34 @@ object Algo {
     b.vertexScan(None, only = false)
       .select(struct(col("id"), col("properties")).as("__v"), col("id").as("__vid"))
 
-  /** One hop's path-array columns over a (path ⋈ `__edge`) row: the
-    * edge appended to `__edges`/`__ids`, and `vert` (a vertex id or
-    * struct) appended to the `verts` column, which is kept as is when
-    * `vert` is None.
+  /** One hop of a path frame (`__start`/`__cur`/`__edges`/`__ids`/
+    * `verts`): each path extends by every adjacent edge it does not
+    * hold yet (per-path edge uniqueness, execGraphVle.c), `__cur` moves
+    * to the edge's far end, and `vert` (a column of the joined row) is
+    * appended to `verts`, which is kept as is when `vert` is None.
+    * `joined` adds caller columns to the joined rows (VLE's vertex
+    * struct, dijkstra's weight) for `vert` and `extra` to read.
     */
-  private def extendPath(verts: String, vert: Option[Column]): Seq[Column] =
-    Seq(concat(col("__edges"), array(col("__edge"))).as("__edges"),
-      concat(col("__ids"), array(col("__edge").getField("id"))).as("__ids"),
-      vert.fold(col(verts))(v => concat(col(verts), array(v))).as(verts))
+  private def hop(ex: Expander, paths: DataFrame, verts: String,
+      vert: Option[Column], joined: DataFrame => DataFrame = identity,
+      extra: Seq[Column] = Nil): DataFrame =
+    joined(ex.join(paths, col("__cur"),
+      !array_contains(col("__ids"), col("__edge").getField("id"))))
+      .select(Seq(col("__start"), col("__e").as("__cur"),
+        concat(col("__edges"), array(col("__edge"))).as("__edges"),
+        concat(col("__ids"), array(col("__edge").getField("id"))).as("__ids"),
+        vert.fold(col(verts))(v => concat(col(verts), array(v))).as(verts)) ++
+        extra: _*)
+
+  /** The union of the path levels whose length lies in [lo, hi]. */
+  private final class Levels(lo: Long, hi: Long) {
+    private var acc: Option[DataFrame] = None
+    def add(len: Long, level: DataFrame): Unit =
+      if (len >= lo && len <= hi)
+        acc = Some(acc.fold(level)(_.unionAll(level)))
+    def paths(b: Builder, verts: String): DataFrame =
+      acc.getOrElse(emptyPaths(b, verts))
+  }
 
   /** Zero-length paths, origin to itself with empty arrays
     * (isZeroLengthVLE parse_graph.c:198,2388-2404); `verts` names the
@@ -171,53 +190,36 @@ object Algo {
     val V = vertexStructs(b)
 
     // seed the expansion from the frame's bound start vertices only
-    // (semi-join on the snapshotted origin set) — a selective outer
-    // pattern must not pay a whole-graph expansion
+    // (the zero-length paths of the snapshotted origin set) — a
+    // selective outer pattern must not pay a whole-graph expansion
     val origins = st0.df
       .select(col(Compiler.q(prevName)).getField("id").as("__origin"))
       .distinct().localCheckpoint(true)
+    val zero = zeroPaths(b, origins, "__verts")
 
-    // depth-1 frontier
-    def firstFrontier: DataFrame = {
-      val seeded = E.join(origins, col("__s") === col("__origin"), "left_semi")
-      val withV =
-        if (needVerts) seeded.join(V, col("__e") === col("__vid"))
-        else seeded
-      withV.select(col("__s").as("__start"), col("__e").as("__cur"),
-        array(col("__edge")).as("__edges"),
-        array(col("__edge").getField("id")).as("__ids"),
-        (if (needVerts) array(col("__v")) else b.emptyVertexArray)
-          .as("__verts"))
-    }
-
-    var frontier = firstFrontier
-    var results: DataFrame = null
-    def accumulate(k: Long, df: DataFrame): Unit =
-      if (k >= math.max(lo, 1L) && k <= hi) {
-        results = if (results == null) df else results.unionAll(df)
-      }
-    accumulate(1L, frontier)
+    val withV: DataFrame => DataFrame =
+      if (needVerts) _.join(V, col("__e") === col("__vid")) else identity
+    // zero-length paths: origins come from bound vertex scans, so no
+    // existence re-check
+    val levels = new Levels(lo, hi)
+    levels.add(0L, zero)
 
     // Emptiness probes cost a full materialization of the frontier
     // plan, so only pay them when the remaining depth is unbounded in
     // practice (short bounded ranges like *2..3 just run their <=2
     // extra joins lazily inside the final plan).
     val probeEmptiness = hi - 1L > CheckpointEvery
-    var k = 1L
+    var frontier = zero
+    var k = 0L
     var exhausted = false
     while (k < hi && !exhausted) {
-      if (probeEmptiness) exhausted = frontier.isEmpty
+      if (probeEmptiness && k > 0L) exhausted = frontier.isEmpty
       if (!exhausted) {
-        val step = ex.join(frontier, col("__cur"),
-          !array_contains(col("__ids"), col("__edge").getField("id")))
-        val withV =
-          if (needVerts) step.join(V, col("__e") === col("__vid"))
-          else step
-        val next = withV.select(Seq(col("__start"), col("__e").as("__cur")) ++
-          extendPath("__verts", if (needVerts) Some(col("__v")) else None): _*)
+        val next = hop(ex, frontier, "__verts",
+          if (needVerts) Some(col("__v")) else None, withV)
         k += 1
         frontier = if (k % CheckpointEvery == 0) next.localCheckpoint(true) else next
-        accumulate(k, frontier)
+        levels.add(k, frontier)
       }
     }
 
@@ -228,22 +230,14 @@ object Algo {
     // of silently dropping the deeper paths — the user raises
     // spark.graft.maxDepth (checkpoint cadence keeps lineage bounded)
     // or writes an explicit upper bound.
-    if (hiOpt.forall(_ > MaxDepth.toLong) && !exhausted) {
-      val more = ex.join(frontier, col("__cur"),
-        !array_contains(col("__ids"), col("__edge").getField("id")))
-      if (more.head(1).nonEmpty) throw new IllegalStateException(
+    if (hiOpt.forall(_ > MaxDepth.toLong) && !exhausted &&
+        hop(ex, frontier, "__verts", None).head(1).nonEmpty)
+      throw new IllegalStateException(
         s"variable-length expansion exceeded the depth cap $MaxDepth with " +
           "paths still extending; raise spark.graft.maxDepth or bound the " +
           "pattern (reference default is unbounded, execGraphVle.c:33)")
-    }
 
-    var vle = if (results == null) emptyPaths(b, "__verts") else results
-
-    // zero-length paths: origins come from bound vertex scans, so no
-    // existence re-check
-    if (lo == 0L) vle = zeroPaths(b, origins, "__verts").unionAll(vle)
-
-    joinExpansion(b, st0, prevName, node, relName, vle)
+    joinExpansion(b, st0, prevName, node, relName, levels.paths(b, "__verts"))
   }
 
   /** Join an expansion relation (cols __start/__cur/__edges/__verts)
@@ -437,93 +431,96 @@ object Algo {
     (State(df, st.vars ++ newVars), Vector(relName -> KEL))
   }
 
-  /** Level-synchronous BFS from every vertex (origins resolve at join
-    * time); visited-set pruning keeps one/all minimal-depth paths.
+  /** One path per (origin, current) — deterministic min by (length,
+    * edge-id array); within one BFS level every path has the same
+    * length, so there it is the min by the edge-id array. An
+    * aggregation (min_by) rather than a row_number window: partial
+    * aggregation combines map-side, so the exchange carries one row per
+    * pair instead of sorting the whole frontier through it.
     */
-  /** One representative path per (origin, current) — deterministic min
-    * by the edge-id array. An aggregation (min_by) rather than a
-    * row_number window: partial aggregation combines map-side, so the
-    * exchange carries one row per pair instead of sorting the whole
-    * frontier through it.
-    */
-  private def firstArrival(frontier: DataFrame): DataFrame =
-    frontier.groupBy("__start", "__cur")
+  private def minPath(paths: DataFrame): DataFrame =
+    paths.groupBy("__start", "__cur")
       .agg(min_by(struct(col("__edges"), col("__ids"), col("__vids")),
-        col("__ids")).as("__p"))
+        struct(size(col("__ids")), col("__ids"))).as("__p"))
       .select(col("__start"), col("__cur"), col("__p.__edges").as("__edges"),
         col("__p.__ids").as("__ids"), col("__p.__vids").as("__vids"))
 
+  /** One side of a level-synchronous BFS over vertex ids: the frontier
+    * of paths at `depth` and the (origin, vertex) pairs visited so far.
+    * `step` expands one level — hop, anti-join the visited set, keep
+    * one path per pair unless `keepAll`, counted checkpoint, union the
+    * new arrivals into visited — and returns the level's row count.
+    * `vert` is the vertex the hop appends to `__vids`.
+    *
+    * The seed is NOT pre-marked visited — a cycle back to the origin is
+    * a valid shortest path (shortestpath((a)-[*]->(a))), and for the
+    * two-sided search pre-seeding the depth-0 states pruned the only
+    * split of a length-1 self-loop when origin == target (r12 review;
+    * PathFinderCrossCheckSpec pins it). First re-arrival at an origin
+    * lands in visited like any other vertex, so later (longer)
+    * re-arrivals still prune.
+    */
+  private final class BfsSide(ex: Expander, seed: DataFrame, vert: Column,
+      keepAll: Boolean) {
+    var frontier: DataFrame = seed
+    var depth = 0L
+    private var visited: Option[DataFrame] = None
+    def step(): Long = {
+      val arrived = hop(ex, frontier, "__vids", Some(vert))
+      // prune: only first arrivals per (origin, vertex); nothing is
+      // visited before the first level, which stays a single join
+      val next = visited.fold(arrived)(v => arrived.join(v,
+        col("__start") === col("__o") && col("__cur") === col("__at"),
+        "left_anti"))
+      // every level is counted for termination AND consumed by the
+      // final plan: materialize each exactly once, the count riding
+      // the same job
+      val (cp, n) = GraphCatalog.checkpointCounted(
+        if (keepAll) next else minPath(next))
+      frontier = cp
+      depth += 1
+      if (n > 0L) {
+        // no distinct: duplicates are harmless on the anti-join probe
+        // side, and each frontier is checkpointed so the union stays
+        // shallow — one less job per level
+        val at = cp.select(col("__start").as("__o"), col("__cur").as("__at"))
+        visited = Some(visited.fold(at)(_.unionAll(at)))
+      }
+      n
+    }
+  }
+
+  /** Level-synchronous BFS from the bound origins; visited-set pruning
+    * keeps one/all minimal-depth paths. The search carries vertex IDS
+    * only (__vids); vertex structs are re-attached once at the end for
+    * the surviving minimal paths — the per-level vertex join (the
+    * widest scan in the loop) happens once instead of once per level.
+    */
   private def bfs(b: Builder, rel: RelPattern, lo: Long, hi: Long,
       keepAll: Boolean, origins: DataFrame, targets: => DataFrame,
       capMsg: Option[String]): DataFrame = {
     val E = b.edgeScan(rel.types, rel.direction, rel.only)
       .select(col("__edge"), col("__s"), col("__e"))
-    val ex = new Expander(b.spark, E, "__s")
-
-    // The search carries vertex IDS only (__vids); vertex structs are
-    // re-attached once at the end for the surviving minimal paths —
-    // the per-level vertex join (the widest scan in the loop) happens
-    // once instead of once per level.
-    val first = E.join(origins, col("__s") === col("__origin"), "left_semi")
-      .select(col("__s").as("__start"), col("__e").as("__cur"),
-        array(col("__edge")).as("__edges"),
-        array(col("__edge").getField("id")).as("__ids"),
-        array(col("__e")).as("__vids"))
-    // every level is counted for termination AND consumed by the final
-    // plan: materialize each exactly once, the count riding the same
-    // job (the result union re-reads the cached partitions for free)
-    var (frontier, rows) = GraphCatalog.checkpointCounted(
-      if (keepAll) first else firstArrival(first))
-    // note: the origin itself is NOT pre-marked visited — a cycle back
-    // to the origin is a valid shortest path (shortestpath((a)-[*]->(a)))
-    var visited = frontier
-      .select(col("__start").as("__o"), col("__cur").as("__at"))
-      .distinct()
-
-    var results: DataFrame = null
-    def accumulate(k: Long, df: DataFrame): Unit =
-      if (k >= math.max(lo, 1L) && k <= hi) {
-        results = if (results == null) df else results.unionAll(df)
-      }
-    accumulate(1L, frontier)
-
-    var k = 1L
-    var exhausted = rows == 0L
-    while (k < hi && !exhausted) {
-      var next = ex.join(frontier, col("__cur"),
-          !array_contains(col("__ids"), col("__edge").getField("id")))
-        .select(Seq(col("__start"), col("__e").as("__newcur")) ++
-          extendPath("__vids", Some(col("__e"))): _*)
-        .withColumnRenamed("__newcur", "__cur")
-      // prune: only first arrivals per (origin, vertex)
-      next = next.join(visited,
-        next("__start") === visited("__o") && next("__cur") === visited("__at"),
-        "left_anti")
-      if (!keepAll) next = firstArrival(next)
-      k += 1
-      val (cp, n) = GraphCatalog.checkpointCounted(next)
-      frontier = cp
-      exhausted = n == 0L
-      if (!exhausted) {
-        accumulate(k, frontier)
-        // no distinct/materialize: duplicates are harmless on the
-        // anti-join probe side, and each frontier is already
-        // checkpointed so the union stays shallow — one less job per
-        // level
-        visited = visited.unionAll(
-          frontier.select(col("__start").as("__o"), col("__cur").as("__at")))
-      }
+    val zero = zeroPaths(b, origins, "__vids")
+    val side = new BfsSide(new Expander(b.spark, E, "__s"), zero, col("__e"),
+      keepAll)
+    val levels = new Levels(lo, hi)
+    levels.add(0L, zero)
+    var exhausted = false
+    while (side.depth < hi && !exhausted) {
+      exhausted = side.step() == 0L
+      if (!exhausted) levels.add(side.depth, side.frontier)
     }
 
-    // Loud cap, target-aware (same philosophy as the VLE cap at line
-    // ~201; the reference searches to LONG_MAX for an unbounded
-    // pattern, parse_shortestpath.c:458): when the bound came from the
-    // ENGINE cap and the frontier is still live, results may be missing
-    // pairs that first connect deeper — error UNLESS every requested
+    // Loud cap, target-aware (same philosophy as the VLE cap; the
+    // reference searches to LONG_MAX for an unbounded pattern,
+    // parse_shortestpath.c:458): when the bound came from the ENGINE
+    // cap and the frontier is still live, results may be missing pairs
+    // that first connect deeper — error UNLESS every requested
     // (origin, target) pair already has its shortest path (then deeper
     // frontiers cannot change the answer). The check runs only in the
     // rare cap-hit case.
-    val found = if (results == null) emptyPaths(b, "__vids") else results
+    val found = levels.paths(b, "__vids")
     if (capMsg.isDefined && !exhausted) {
       // every matched (start, cur) pair has start IN origins by
       // construction; restricting cur to the target set makes the
@@ -531,12 +528,8 @@ object Algo {
       // completeness is a count comparison — no |V|^2 cross-product
       // probe just to decide whether to throw (r10 ADVICE; bfs2 keeps
       // the same invariant via its metCount counter)
-      var matched = found.select(col("__start").as("__mo"), col("__cur").as("__mt"))
+      val matched = found.select(col("__start").as("__mo"), col("__cur").as("__mt"))
         .join(targets, col("__mt") === col("__target"), "left_semi")
-      if (lo == 0L)
-        matched = matched.unionAll(origins
-          .join(targets, col("__origin") === col("__target"), "left_semi")
-          .select(col("__origin").as("__mo"), col("__origin").as("__mt")))
       val allPairs = origins.count() * targets.count()
       if (matched.distinct().count() < allPairs)
         throw new IllegalStateException(capMsg.get)
@@ -544,9 +537,7 @@ object Algo {
 
     // visited pruning already ensures min-depth-only arrivals;
     // zero-length needs the same guard
-    minimalPaths(b,
-      if (lo == 0L) zeroPaths(b, origins, "__vids").unionAll(found) else found,
-      keepAll)
+    minimalPaths(b, found, keepAll)
   }
 
   /** The finish of both BFS forms: keep only the minimal depth per
@@ -554,32 +545,23 @@ object Algo {
     * with the least edge-id array — then re-attach vertex structs.
     */
   private def minimalPaths(b: Builder, paths: DataFrame,
-      keepAll: Boolean): DataFrame = {
-    val kept =
+      keepAll: Boolean): DataFrame =
+    attachVerts(b,
       if (keepAll)
         paths.withColumn("__minlen",
           min(size(col("__ids"))).over(Window.partitionBy("__start", "__cur")))
           .where(size(col("__ids")) === col("__minlen")).drop("__minlen")
-      else
-        // single-path case: min over (depth, ids) in ONE map-side-
-        // combinable aggregation instead of a min-window + rank-window
-        paths.groupBy("__start", "__cur")
-          .agg(min_by(struct(col("__edges"), col("__ids"), col("__vids")),
-            struct(size(col("__ids")), col("__ids"))).as("__p"))
-          .select(col("__start"), col("__cur"),
-            col("__p.__edges").as("__edges"), col("__p.__ids").as("__ids"),
-            col("__p.__vids").as("__vids"))
-    attachVerts(b, kept)
-  }
+      else minPath(paths))
 
   /** Two-sided (meet-in-middle) BFS — the set-based analog of the
     * reference's Hash2Side executor (nodeShortestpath.c /
     * nodeHash2Side.c): frontiers expand alternately from the bound
-    * sources (forward) and targets (backward), so each side explores
-    * only half the path depth. Lengths are scanned in increasing order
-    * (a meet after expansions (f, b) has length exactly f+b), so the
-    * first meet per (source, target) pair is its shortest; met pairs
-    * are anti-joined out of later meets.
+    * sources (forward) and targets (backward, the same hop over the
+    * reversed adjacency), so each side explores only half the path
+    * depth. Lengths are scanned in increasing order (a meet after
+    * expansions (f, b) has length exactly f+b), so the first meet per
+    * (source, target) pair is its shortest; met pairs are anti-joined
+    * out of later meets.
     *
     * Pruning invariant: every vertex on a shortest path sits at its
     * minimal forward depth from the source AND minimal backward depth
@@ -594,30 +576,24 @@ object Algo {
     val E = b.edgeScan(rel.types, rel.direction, rel.only)
       .select(col("__edge"), col("__s"), col("__e"))
     // forward expands out of __s (out-adjacency), backward into __e
-    // (in-adjacency) — hub degrees differ per direction
-    val exF = new Expander(b.spark, E, "__s")
-    val exB = new Expander(b.spark, E, "__e")
-
-    // depth-0 states: the endpoints themselves, empty arrays (cheap
-    // projections of the already-snapshotted endpoint sets — no
-    // checkpoint needed)
-    var fwd = zeroPaths(b, origins, "__vids")
-    var bwd = targets.select(col("__target").as("__tgt"),
-      col("__target").as("__bcur"),
-      b.emptyEdgeArray.as("__bedges"), b.emptyLongArray.as("__bids"),
-      b.emptyLongArray.as("__bvids"))
-
-    // the endpoints are NOT pre-marked visited — the same invariant the
-    // one-sided search documents: a cycle back to the endpoint is a
-    // valid shortest path, and pre-seeding the depth-0 states pruned
-    // the only split of a length-1 self-loop when origin == target
-    // (r12 review; PathFinderCrossCheckSpec pins it). First re-arrival
-    // at an endpoint lands in visited like any other vertex, so later
-    // (longer) re-arrivals still prune.
-    var visitedF = fwd.select(col("__start").as("__o"), col("__cur").as("__at"))
-      .where(lit(false))
-    var visitedB = bwd.select(col("__tgt").as("__o"), col("__bcur").as("__at"))
-      .where(lit(false))
+    // (in-adjacency, each edge's ends swapped) — hub degrees differ per
+    // direction. Backward paths grow from the target, so their arrays
+    // run target-first, and the vertex appended per hop is the one the
+    // hop leaves (the vertex AFTER the edge in forward order); the meet
+    // reverses all three once. ALL minimal-depth arrivals stay on both
+    // sides (unlike the one-sided growing path, the two halves are
+    // combined later — pruning one side to a representative could leave
+    // only edge-overlapping pairs and lose a valid shortest path); the
+    // single-path pick happens at the final per-pair aggregation.
+    // The depth-0 states are cheap projections of the already-
+    // snapshotted endpoint sets — no checkpoint needed.
+    val fwd = new BfsSide(new Expander(b.spark, E, "__s"),
+      zeroPaths(b, origins, "__vids"), col("__e"), keepAll = true)
+    val bwd = new BfsSide(
+      new Expander(b.spark, E.select(col("__edge"), col("__e").as("__s"),
+        col("__s").as("__e")), "__s"),
+      zeroPaths(b, targets.select(col("__target").as("__origin")), "__vids"),
+      col("__cur"), keepAll = true)
 
     // met (source, target) pairs: later meets for them are longer
     // paths. When every pair has met, the search is done — the classic
@@ -625,16 +601,23 @@ object Algo {
     val allPairs = origins.count() * targets.count()
     var metCount = 0L
     var met: DataFrame = null
-    var results: DataFrame = null
+    val levels = new Levels(lo, hi)
+    // zero-length: origin == target pairs (isZeroLengthVLE analog)
+    levels.add(0L, zeroPaths(b,
+      origins.join(targets, col("__origin") === col("__target"), "left_semi"),
+      "__vids"))
 
     def meets(): DataFrame = {
-      var m = fwd.join(bwd, col("__cur") === col("__bcur") &&
+      val back = bwd.frontier.select(col("__start").as("__tgt"),
+        col("__cur").as("__bcur"), col("__edges").as("__bedges"),
+        col("__ids").as("__bids"), col("__vids").as("__bvids"))
+      var m = fwd.frontier.join(back, col("__cur") === col("__bcur") &&
           !arrays_overlap(col("__ids"), col("__bids")))
         .select(col("__start"),
           col("__tgt").as("__cur"),
-          concat(col("__edges"), col("__bedges")).as("__edges"),
-          concat(col("__ids"), col("__bids")).as("__ids"),
-          concat(col("__vids"), col("__bvids")).as("__vids"))
+          concat(col("__edges"), reverse(col("__bedges"))).as("__edges"),
+          concat(col("__ids"), reverse(col("__bids"))).as("__ids"),
+          concat(col("__vids"), reverse(col("__bvids"))).as("__vids"))
       if (met != null)
         m = m.join(met, m("__start") === met("__ms") && m("__cur") === met("__mt"),
           "left_anti")
@@ -644,10 +627,7 @@ object Algo {
     def absorb(newMeets: DataFrame, len: Long): Unit = {
       val (materialized, n) = GraphCatalog.checkpointCounted(newMeets)
       if (n > 0L) {
-        if (len >= lo && len <= hi) {
-          results = if (results == null) materialized
-            else results.unionAll(materialized)
-        }
+        levels.add(len, materialized)
         val pairs = materialized
           .select(col("__start").as("__ms"), col("__cur").as("__mt")).distinct()
         val (m, mn) = GraphCatalog.checkpointCounted(
@@ -657,64 +637,17 @@ object Algo {
       }
     }
 
-    // L = 0 would be the zero-length case — excluded here (the lo == 0
-    // branch below mirrors the one-sided zero-length semantics)
-    var fdepth = 0L
-    var bdepth = 0L
+    // meets start at length 1; the zero-length level is the one added
+    // to `levels` above (mirroring the one-sided zero-length semantics)
     var exhausted = false
-    while (fdepth + bdepth < hi && !exhausted && metCount < allPairs) {
-      val expandForward = fdepth <= bdepth
-      if (expandForward) {
-        var next = exF.join(fwd, col("__cur"),
-            !array_contains(col("__ids"), col("__edge").getField("id")))
-          .select(Seq(col("__start"), col("__e").as("__newcur")) ++
-            extendPath("__vids", Some(col("__e"))): _*)
-          .withColumnRenamed("__newcur", "__cur")
-        next = next.join(visitedF,
-          next("__start") === visitedF("__o") && next("__cur") === visitedF("__at"),
-          "left_anti")
-        // ALL minimal-depth arrivals stay (unlike the one-sided growing
-        // path, the two halves are combined later — pruning one side to
-        // a representative could leave only edge-overlapping pairs and
-        // lose a valid shortest path); the single-path pick happens at
-        // the final per-pair window
-        val (cp, n) = GraphCatalog.checkpointCounted(next)
-        fwd = cp
-        fdepth += 1
-        exhausted = n == 0L
-        if (!exhausted) {
-          // duplicates are harmless on the anti-join probe side;
-          // frontiers are checkpointed so the union stays shallow
-          visitedF = visitedF.unionAll(
-            fwd.select(col("__start").as("__o"), col("__cur").as("__at")))
-          absorb(meets(), fdepth + bdepth)
-        }
-      } else {
-        var next = exB.join(bwd, col("__bcur"),
-            !array_contains(col("__bids"), col("__edge").getField("id")))
-          .select(col("__tgt"), col("__s").as("__newbcur"),
-            concat(array(col("__edge")), col("__bedges")).as("__bedges"),
-            concat(array(col("__edge").getField("id")), col("__bids")).as("__bids"),
-            concat(array(col("__bcur")), col("__bvids")).as("__bvids"))
-          .withColumnRenamed("__newbcur", "__bcur")
-        next = next.join(visitedB,
-          next("__tgt") === visitedB("__o") && next("__bcur") === visitedB("__at"),
-          "left_anti")
-        val (cp, n) = GraphCatalog.checkpointCounted(next)
-        bwd = cp
-        bdepth += 1
-        exhausted = n == 0L
-        if (!exhausted) {
-          visitedB = visitedB.unionAll(
-            bwd.select(col("__tgt").as("__o"), col("__bcur").as("__at")))
-          absorb(meets(), fdepth + bdepth)
-        }
-      }
+    while (fwd.depth + bwd.depth < hi && !exhausted && metCount < allPairs) {
+      exhausted = (if (fwd.depth <= bwd.depth) fwd else bwd).step() == 0L
+      if (!exhausted) absorb(meets(), fwd.depth + bwd.depth)
     }
 
     // Loud cap, target-aware (see bfs): the two-sided search already
     // tracks met pairs, so the unmatched test is the counter it keeps
-    // (zero-length pairs join the met set below, so count them first)
+    // (zero-length pairs are not in the met set, so count them here)
     if (capMsg.isDefined && !exhausted && metCount < allPairs) {
       val zeroPairs = if (lo == 0L)
         origins.join(targets, col("__origin") === col("__target"),
@@ -736,14 +669,9 @@ object Algo {
       if (stillMissing) throw new IllegalStateException(capMsg.get)
     }
 
-    var out = if (results == null) emptyPaths(b, "__vids") else results
-    // zero-length: origin == target pairs (isZeroLengthVLE analog)
-    if (lo == 0L) out = zeroPaths(b,
-      origins.join(targets, col("__origin") === col("__target"), "left_semi"),
-      "__vids").unionAll(out)
     // first-meet scanning already guarantees minimal length for the
-    // search; the zero-length branch needs the same guard
-    minimalPaths(b, out, keepAll)
+    // search; the zero-length level needs the same guard
+    minimalPaths(b, levels.paths(b, "__vids"), keepAll)
   }
 
   /** Re-attach vertex structs for surviving paths: posexplode the
@@ -783,9 +711,9 @@ object Algo {
     val comp = b.compilerFor(kinds)
     val E1 = E0.withColumn(relName, col("__edge"))
     // the qual prunes which edges are traversable — evaluate on the
-    // scan; the WEIGHT is deferred to traversed edges only (the seed
-    // semi-join and each expansion join shrink the edge set first, so
-    // the jsonb weight expression never runs over the whole label)
+    // scan; the WEIGHT is deferred to traversed edges only (each
+    // relaxation's join shrinks the edge set first, so the jsonb
+    // weight expression never runs over the whole label)
     val E2 = qual.map(q => E1.where(comp.toBool(comp.compile(q)))).getOrElse(E1)
     val E = E2.select(col("__edge"), col("__s"), col("__e"))
     val ex = new Expander(b.spark, E, "__s")
@@ -821,15 +749,15 @@ object Algo {
     // round costs one join + one window — no aggregate-diff pass.
     // An expanded path can never be row-identical to an existing one
     // (it is strictly longer than its source path), so "__new survived
-    // the top-k window" exactly means "the best-set changed".
-    var best = topK(withWeight(
-      E.join(origins, col("__s") === col("__origin"), "left_semi"))
-      .select(col("__s").as("__start"), col("__e").as("__cur"),
-        array(col("__edge")).as("__edges"),
-        array(col("__edge").getField("id")).as("__ids"),
-        array(col("__e")).as("__vids"),
-        col("__w").as("__dist")))
-      .withColumn("__new", lit(1))
+    // the top-k window" exactly means "the best-set changed". The seed
+    // relaxes the zero-length origin paths to depth 1; that relaxation
+    // is not a round.
+    def relax(paths: DataFrame): DataFrame =
+      hop(ex, paths, "__vids", Some(col("__e")), withWeight,
+        Seq((col("__dist") + col("__w")).as("__dist")))
+        .withColumn("__new", lit(1))
+    var best = topK(relax(zeroPaths(b, origins, "__vids")
+      .withColumn("__dist", lit(0.0))))
       .localCheckpoint(true)
 
     // Target-side termination (the set-based form of the reference's
@@ -884,15 +812,7 @@ object Algo {
     val MaxDepth = maxDepthOf(b.spark)
     var live = frontier.head(1).nonEmpty
     while (rounds < MaxDepth && live) {
-      val expanded = withWeight(
-        ex.join(frontier, col("__cur"),
-          !array_contains(col("__ids"), col("__edge").getField("id"))))
-        .select(Seq(col("__start"), col("__e").as("__cur2")) ++
-          extendPath("__vids", Some(col("__e"))) :+
-          (col("__dist") + col("__w")).as("__dist"): _*)
-        .withColumnRenamed("__cur2", "__cur")
-        .withColumn("__new", lit(1))
-      best = topK(best.withColumn("__new", lit(0)).unionAll(expanded))
+      best = topK(best.withColumn("__new", lit(0)).unionAll(relax(frontier)))
         .localCheckpoint(true)
       rounds += 1
       frontier = pruneFrontier(best.where(col("__new") === 1), rounds)

@@ -23,10 +23,6 @@ object WriteOps {
 
   // ============================================================= CREATE
 
-  /** CREATE pattern per input row (ExecCreateGraph execCypherCreate.c:30).
-    * New vertices/edges get ids packed from a driver-reserved range
-    * (SURVEY §7.3 hard part 4).
-    */
   /** CREATE/MERGE property maps must evaluate to a jsonb OBJECT (or
     * NULL, which the reference folds to {}) — "jsonb object is
     * expected for property map" otherwise (cypher_dml.out). Canonical
@@ -39,7 +35,17 @@ object WriteOps {
       .otherwise(raise_error(
         lit("jsonb object is expected for property map")).cast("string"))
 
-  def create(b: Builder, st0: State, paths: Seq[PathPattern]): State = {
+  /** CREATE pattern per input row (ExecCreateGraph execCypherCreate.c:30).
+    * New vertices/edges get ids packed from a driver-reserved range
+    * (SURVEY §7.3 hard part 4).
+    *
+    * @param validated whether the caller already ran
+    *   [[validateCreatePaths]] on `paths` (MERGE does, before its
+    *   match/create fork)
+    */
+  def create(b: Builder, st0: State, paths: Seq[PathPattern],
+      validated: Boolean = false): State = {
+    if (!validated) validateCreatePaths(st0.vars, paths)
     var st = st0
     // snapshot the input FIRST (the write makes the frame's lineage
     // side-effecting; localCheckpoint isolates it), then index over the
@@ -51,7 +57,6 @@ object WriteOps {
     var df = indexed
     var vars = st.vars
 
-    val pathVarsSeen = scala.collection.mutable.Set.empty[String]
     // appends DEFER until the whole statement has validated and every
     // element column has evaluated (forced below): a guard or runtime
     // error in a later path/property map must not leave earlier paths
@@ -71,62 +76,6 @@ object WriteOps {
     val deferredAppends = scala.collection.mutable.ArrayBuffer
       .empty[DataFrame => Unit]
     paths.foreach { p =>
-      // CREATE variable rules (transformCreatePattern parse_graph.c;
-      // cypher_dml.out): a path variable must be fresh; an edge
-      // variable must be fresh; a vertex may RE-reference an earlier
-      // binding only bare (no label/props — the connect-to-existing
-      // form), and a path that is just such a re-reference creates
-      // nothing and needs a relationship
-      p.variable.foreach { pv =>
-        if (vars.exists(_._1 == pv) || pathVarsSeen(pv))
-          throw new IllegalArgumentException(s"""duplicate variable "$pv"""")
-        pathVarsSeen += pv
-      }
-      val nodeVarsInPath =
-        (p.head.variable ++ p.tail.flatMap(_._2.variable)).toSeq
-      val edgeVarsInPath = p.tail.flatMap(_._1.variable)
-      // node vars already traversed earlier in THIS path: a labeled or
-      // propertied re-occurrence is "duplicate variable" exactly like a
-      // cross-path re-reference (transformCreateNode's findTarget scans
-      // the whole statement targetList — parse_graph.c isNodeForRef);
-      // only the bare connect-to-existing form may repeat
-      val seenNodesInPath = scala.collection.mutable.Set.empty[String]
-      def vertexRef(nv: String, labeled: Boolean): Unit = {
-        if (pathVarsSeen(nv) || edgeVarsInPath.contains(nv))
-          throw new IllegalArgumentException(s"""duplicate variable "$nv"""")
-        val bound = vars.find(_._1 == nv)
-        if (bound.exists(_._2 != KV)) throw new IllegalArgumentException(
-          s"""duplicate variable "$nv"""")
-        if ((bound.isDefined || seenNodesInPath(nv)) && labeled)
-          throw new IllegalArgumentException(s"""duplicate variable "$nv"""")
-        seenNodesInPath += nv
-      }
-      p.head.variable.foreach { hv =>
-        vertexRef(hv, p.head.label.nonEmpty || p.head.props.nonEmpty)
-        if (vars.exists(_._1 == hv) && p.tail.isEmpty)
-          throw new IllegalArgumentException(
-            "there must be at least one relationship")
-      }
-      p.tail.foreach { case (r, nd) =>
-        r.variable.foreach { rv =>
-          if (vars.exists(_._1 == rv) || pathVarsSeen(rv) ||
-              nodeVarsInPath.contains(rv) ||
-              edgeVarsInPath.count(_ == rv) > 1)
-            throw new IllegalArgumentException(s"""duplicate variable "$rv"""")
-        }
-        nd.variable.foreach(nv =>
-          vertexRef(nv, nd.label.nonEmpty || nd.props.nonEmpty))
-        if (r.direction == 0) throw new IllegalArgumentException(
-          "only directed relationships are allowed in CREATE")
-        if (r.types.size != 1) throw new IllegalArgumentException(
-          "only one relationship type is allowed for CREATE")
-      }
-      if (p.head.label.contains("ag_vertex") ||
-          p.tail.exists(_._2.label.contains("ag_vertex")))
-        throw new IllegalArgumentException(
-          "specifying default label is not allowed")
-      if (p.tail.exists(_._1.types.contains("ag_edge")))
-        throw new IllegalArgumentException("cannot create edge on default label")
       // vertices first, then edges (edges need endpoint ids)
       var prevName: String = null
       val elems: Seq[(Option[RelPattern], NodePattern)] =
@@ -161,7 +110,6 @@ object WriteOps {
           }
         }
         relOpt.foreach { rel =>
-          require(rel.direction != 0, "CREATE requires a directed relationship")
           require(rel.varLength.isEmpty, "CREATE cannot use variable-length relationships")
           val relName = rel.variable.getOrElse(s"__ce_${vars.length}_${boundNames.length}")
           val tpe = rel.types.headOption.getOrElse(
@@ -228,12 +176,8 @@ object WriteOps {
     * CreateConstraintCommand graphcmds.c:550; CHECK/UNIQUE tests
     * cypher_ddl.sql:240-362). Bare identifiers in constraint bodies
     * refer to properties of the inserted element.
-    */
-  private def checkConstraints(b: Builder, label: String,
-      newRows: DataFrame): Unit =
-    checkConstraints(b, Seq(label -> newRows))
-
-  /** Statement-level form: each constraint validates the UNION of
+    *
+    * Statement-level: each constraint validates the UNION of
     * every pending element whose label it governs, so cross-element
     * and cross-subtree duplicates within one statement are caught
     * BEFORE anything appends (the reference sees them because each
@@ -571,12 +515,21 @@ object WriteOps {
     * loop — the reference is row-at-a-time here too and the shape is
     * inherently sequential); everything else uses the set-based path.
     */
-  /** Pattern-validity rules of transformCreatePattern as a PURE pass —
-    * the same duplicate-variable / structure guards create() applies
-    * inline while building. MERGE must run them UNCONDITIONALLY at
-    * statement start: its create() branch only executes when rows
-    * miss, and the reference rejects an invalid pattern at parse time
-    * regardless of whether anything would be created.
+  /** Pattern-validity rules of transformCreatePattern as a PURE pass,
+    * run by create() before it builds anything. MERGE must run them
+    * UNCONDITIONALLY at statement start: its create() branch only
+    * executes when rows miss, and the reference rejects an invalid
+    * pattern at parse time regardless of whether anything would be
+    * created.
+    *
+    * The rules (parse_graph.c; cypher_dml.out): a path variable must be
+    * fresh; an edge variable must be fresh; a vertex may RE-reference
+    * an earlier binding only bare (no label/props — the connect-to-
+    * existing form), and a path that is just such a re-reference
+    * creates nothing and needs a relationship. A labeled or propertied
+    * re-occurrence of a node var earlier in the SAME path is a
+    * duplicate too (transformCreateNode's findTarget scans the whole
+    * statement targetList — parse_graph.c isNodeForRef).
     */
   private[cypher] def validateCreatePaths(vars0: Seq[(String, Kind)],
       paths: Seq[PathPattern], cmd: String = "CREATE"): Unit = {
@@ -800,7 +753,8 @@ object WriteOps {
         if (keyCols.isEmpty) missingKeyed.limit(1)
         else missingKeyed.dropDuplicates(
           keyCols.indices.map(i => s"__mk_$i").toSeq)
-      val created = create(b, State(dedup, st0.vars), Seq(m.path))
+      val created = create(b, State(dedup, st0.vars), Seq(m.path),
+        validated = true)
       // collect created ids for ON CREATE routing
       val createdNewVars = created.vars.drop(st0.vars.length)
       createdSideVarsForError = createdNewVars.map(_._1)

@@ -912,47 +912,60 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
       throw new IllegalStateException(s"label \"$label\" does not exist"))
     val base = if (lm.kind == 'v') vertexSchema else edgeSchema
     val clean = df.select(base.fields.map(f => org.apache.spark.sql.functions.col(f.name)): _*)
-    val (out, lm2) =
-      if (lm.shredOff) (clean, lm)
-      else {
-        val batchTypes = knownTypes
-          .map(t => scala.collection.immutable.TreeMap[String, String]() ++ t)
-          .getOrElse(batchKeyTypes(clean))
-        if ((lm.shred.keySet ++ batchTypes.keySet).size > ShredMaxKeys)
-          (clean, lm.copy(shredOff = true))
-        else {
-          val merged = mergeShred(lm.shred, batchTypes)
-          // write typed cols per the MERGED view so this file agrees
-          // with the read schema even when it degrades older types
-          val writeTypes = batchTypes.map { case (k, _) => k -> merged(k) }
-          (withShredCols(clean, writeTypes), lm.copy(shred = merged))
-        }
-      }
+    val (out, lm2) = shredBatch(lm, clean, knownTypes
+      .map(t => scala.collection.immutable.TreeMap[String, String]() ++ t)
+      .getOrElse(batchKeyTypes(clean)))
     // cluster within files: vertices by id, edges by start — parquet
     // row-group min/max stats then prune id lookups and VLE seed scans
     // (the layout role the reference's btree/GIN indexes played)
     clusterSorted(out, lm2)
       .write.mode("append").parquet(labelDir(graph, label).toString)
-    // meta update under the meta lock, against a FRESH read:
-    // concurrent appends to DIFFERENT labels (bulk ingest fans out one
-    // future per label) must not lose each other's shred-meta updates
-    // through a stale read-modify-write of the shared _graph.json —
-    // in this driver or another one (the lock is an OS file lock).
     // Same-label appends hold this label's exclusive lock for the
-    // whole method (committer staging + this merge are per-label RMW).
+    // whole method (committer staging + the meta merge are per-label
+    // RMW)
+    commitShred(graph, label, lm, lm2)
+  }
+
+  /** A batch's shred sidecars and the label meta after it: the batch's
+    * keys merge into the label's layout, or shredding turns off past
+    * ShredMaxKeys. Typed columns follow the MERGED view so the batch's
+    * files agree with the read schema even when it degrades older
+    * types. `batchTypes` is only evaluated when shredding is on.
+    */
+  private def shredBatch(lm: LabelMeta, batch: DataFrame,
+      batchTypes: => scala.collection.immutable.TreeMap[String, String])
+      : (DataFrame, LabelMeta) =
+    if (lm.shredOff) (batch, lm)
+    else {
+      val types = batchTypes
+      if ((lm.shred.keySet ++ types.keySet).size > ShredMaxKeys)
+        (batch, lm.copy(shredOff = true))
+      else {
+        val merged = mergeShred(lm.shred, types)
+        val writeTypes = types.map { case (k, _) => k -> merged(k) }
+        (withShredCols(batch, writeTypes), lm.copy(shred = merged))
+      }
+    }
+
+  /** Record a batch's shred layout (`lm2`, from [[shredBatch]] over the
+    * pre-write read `lm`) in the label meta. Under the meta lock,
+    * against a FRESH read: concurrent writes to DIFFERENT labels (bulk
+    * ingest fans out one future per label) must not lose each other's
+    * shred-meta updates through a stale read-modify-write of the
+    * shared _graph.json — in this driver or another one (the lock is an
+    * OS file lock) — and even serialized writes interleave with other
+    * commits and concurrent DDL on it.
+    */
+  private def commitShred(graph: String, label: String, lm: LabelMeta,
+      lm2: LabelMeta): Unit =
     if (lm2 != lm) withMetaLock(graph) {
       val fresh = readMeta(graph)
-      // merge against the FRESH label meta, not the stale pre-append
-      // read: even serialized appends interleave with patch/overwrite
-      // commits on the shared _graph.json
       val flm = fresh.labels(label)
-      val merged =
+      fresh.labels(label) =
         if (lm2.shredOff || flm.shredOff) flm.copy(shredOff = true)
         else flm.copy(shred = mergeShred(flm.shred, lm2.shred))
-      fresh.labels(label) = merged
       writeMeta(graph, fresh)
     }
-  }
 
   /** In-file clustering order. Default: vertices by id, edges by start
     * (id lookups and VLE seed scans prune on row-group min/max). A
@@ -1080,18 +1093,7 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
     // shred sidecars for the rewritten batch follow append's merge
     // rule (untouched files keep their layout; readers treat absent
     // columns as absent keys)
-    val (out, lm2) =
-      if (lm.shredOff) (patched, lm)
-      else {
-        val batchTypes = batchKeyTypes(patched)
-        if ((lm.shred.keySet ++ batchTypes.keySet).size > ShredMaxKeys)
-          (patched, lm.copy(shredOff = true))
-        else {
-          val merged = mergeShred(lm.shred, batchTypes)
-          val writeTypes = batchTypes.map { case (k, _) => k -> merged(k) }
-          (withShredCols(patched, writeTypes), lm.copy(shred = merged))
-        }
-      }
+    val (out, lm2) = shredBatch(lm, patched, batchKeyTypes(patched))
     val staging = graphDir(graph).resolve(s"_staging_$label")
     rmTree(staging)
     clusterSorted(out, lm2)
@@ -1103,16 +1105,7 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
     }
     rmTree(dir)
     Files.move(staging, dir, StandardCopyOption.ATOMIC_MOVE)
-    if (lm2 != lm) withMetaLock(graph) {
-      val fresh = readMeta(graph)
-      // merge the batch's shred layout into the FRESH meta (same rule
-      // as append) — never clobber concurrent DDL with the stale copy
-      val flm = fresh.labels(label)
-      fresh.labels(label) =
-        if (lm2.shredOff || flm.shredOff) flm.copy(shredOff = true)
-        else flm.copy(shred = mergeShred(flm.shred, lm2.shred))
-      writeMeta(graph, fresh)
-    }
+    commitShred(graph, label, lm, lm2)
     (rowsBefore, rowsAfter)
   }
 

@@ -29,7 +29,7 @@ object GraphAnalytics {
     * ("unable to acquire ..., got 0") even at 80 GB, while DISK_ONLY
     * completes (each round streams the previous round's pairs once,
     * the access pattern disk is good at). The bench's sf10 phase and
-    * Dev's sf10 mode set the property around their probes.
+    * `graft.Dev sf10` set the property around their probes.
     */
   private def forcedDisk: Boolean =
     sys.props.get("graft.state.disk").contains("1") ||

@@ -107,6 +107,16 @@ object Sketches {
     if (raw <= 2.5 * m && zeros > 0) m * math.log(m / zeros) else raw
   }
 
+  /** Test-observability hook: the bucket width the most recent
+    * exactQuantiles on THIS thread used. The previous session-conf form
+    * (`spark.graft.quantiles.lastBucketWidth`) mutated user-visible
+    * conf as a planning side effect and let concurrent queries clobber
+    * each other's value (the same fix as Algo.lastDijkstraRoundCount).
+    */
+  private val lastBucketWidth = new ThreadLocal[java.lang.Long]
+  def lastBucketWidthValue: Option[Long] =
+    Option(lastBucketWidth.get()).map(_.longValue)
+
   /** EXACT quantiles of a long column by two-pass distributed
     * selection — no global sort, no approximation: pass 1 is one
     * map-side-combinable histogram over value/bucketWidth buckets
@@ -135,7 +145,7 @@ object Sketches {
     // estimated bucket count fits `spark.graft.quantileMaxBuckets`
     // (results stay EXACT — wider buckets only shift work to the
     // bounded pass-2 re-scan). The chosen width is surfaced for
-    // observability.
+    // observability by lastBucketWidthValue.
     val maxBuckets = spark.conf
       .get("spark.graft.quantileMaxBuckets", "1000000").toLong
     val mm = vals.agg(min(col("x")), max(col("x"))).head
@@ -144,7 +154,7 @@ object Sketches {
     val bw =
       if (range / bucketWidth + 1 <= maxBuckets) bucketWidth
       else ((range + maxBuckets - 1) / maxBuckets).toLong.max(bucketWidth)
-    spark.conf.set("spark.graft.quantiles.lastBucketWidth", bw.toString)
+    lastBucketWidth.set(bw)
     val hist = vals
       .groupBy((col("x") - pmod(col("x"), lit(bw))).as("b"))
       .agg(count(lit(1)).as("c"))

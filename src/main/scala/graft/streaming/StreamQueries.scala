@@ -99,22 +99,15 @@ object StreamQueries {
     // of a full state snapshot — measured 0.5-1.4 s per stateful query
     // at bench cardinality (s10 3.5 -> 2.1 s) and the win grows with
     // state size; snapshots still happen in the background for replay.
-    // spark.graft.changelog=false is a MEASUREMENT override (Dev A/Bs
-    // at the 100x probe, where the AvailableNow replay is one batch and
-    // the changelog is the whole state) — the default stays on.
     s.conf.set("spark.sql.streaming.stateStore.rocksdb" +
-      ".changelogCheckpointing.enabled",
-      s.conf.getOption("spark.graft.changelog").getOrElse("true"))
+      ".changelogCheckpointing.enabled", "true")
     // a state store instance exists per shuffle partition: callers
     // derive the count from SOURCE DATA VOLUME via statePartitions()
     // (each run uses a fresh temp checkpoint, so the pinned partition
     // count does not leak between runs).
-    // measurement override for the adaptive count (Dev confab A/Bs)
-    val effParts = s.conf.getOption("spark.graft.streamParts")
-      .flatMap(_.toIntOption).getOrElse(partitions)
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     val q = try {
-      s.conf.set("spark.sql.shuffle.partitions", effParts.toString)
+      s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
       streamed.writeStream
         .format("memory").queryName(sink)
         .outputMode(mode)

@@ -2,7 +2,11 @@ package graft.pipeline
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import java.nio.file.Files
+
 import graft.SparkTestBase
+import graft.api.CypherSession
+import graft.graph.GraphCatalog
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
@@ -31,6 +35,23 @@ class JobCountSpec extends AnyFunSuite {
     import spark.implicits._
     Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L), (3L, 4L), (4L, 5L),
       (5L, 4L)).toDF("u", "v")
+  }
+
+  // the undirected graph's edges directed low to high, weighted, plus a
+  // back edge 8 -> 0 that closes a cycle through every vertex
+  private lazy val paths = {
+    val root = Files.createTempDirectory("graft_job_count").toString
+    val s = new CypherSession(spark, new GraphCatalog(spark, root))
+    s.createGraph("jc")
+    s.createVLabel("v"); s.createELabel("e")
+    (0 to 8).foreach(i => s.cypher(s"CREATE (:v {n: $i})"))
+    Seq((0, 1, 1), (0, 2, 2), (1, 3, 2), (2, 3, 1), (3, 4, 1), (4, 5, 3),
+      (4, 6, 1), (5, 7, 1), (6, 7, 2), (7, 8, 1), (8, 0, 1)).foreach {
+      case (a, bb, w) => s.cypher(s"MATCH (x:v {n: $a}), (y:v {n: $bb}) " +
+        s"CREATE (x)-[:e {w: $w}]->(y)")
+    }
+    s.cypher("MATCH (a:v)-[:e]->(b:v) RETURN count(*) AS c").collect()
+    s
   }
 
   /** (jobs run while building the frame, jobs run while collecting it),
@@ -92,5 +113,36 @@ class JobCountSpec extends AnyFunSuite {
       GraphAnalytics.stressCentrality(undirected, maxDepth = 4))
     info(s"build $build, collect $collect")
     assert((build, collect) == (30, 6))
+  }
+
+  for (mode <- Seq("onesided", "twosided"))
+    test(s"shortestpath $mode: job count pinned") {
+      spark.conf.set("spark.graft.pathSearch", mode)
+      try {
+        val s = paths
+        val (build, collect) = jobsOf(s.cypher(
+          """MATCH p = shortestpath((a:v {n: 0})-[:e*]->(b:v {n: 8}))
+            |RETURN length(p) AS len""".stripMargin))
+        info(s"build $build, collect $collect")
+        assert((build, collect) ==
+          (if (mode == "onesided") (42, 3) else (57, 3)))
+      } finally spark.conf.unset("spark.graft.pathSearch")
+    }
+
+  test("VLE *1..6 (emptiness-probed): job count pinned") {
+    val s = paths
+    val (build, collect) = jobsOf(s.cypher(
+      "MATCH (a:v {n: 0})-[:e*1..6]->(b:v) RETURN b.n AS n"))
+    info(s"build $build, collect $collect")
+    assert((build, collect) == (18, 5))
+  }
+
+  test("dijkstra LIMIT 2: job count pinned") {
+    val s = paths
+    val (build, collect) = jobsOf(s.cypher(
+      """MATCH p = dijkstra((a:v {n: 0})-[e:e]->(b:v {n: 8}), e.w LIMIT 2)
+        |RETURN length(p) AS len""".stripMargin))
+    info(s"build $build, collect $collect")
+    assert((build, collect) == (69, 3))
   }
 }

@@ -139,7 +139,7 @@ class PipelineSpec extends AnyFunSuite {
         s"p${(q * 100).round}" ->
           sorted((math.ceil(q * xs.length).toLong.max(1L) - 1).toInt)).toMap
       assert(got == want)
-      val bw = spark.conf.get("spark.graft.quantiles.lastBucketWidth").toLong
+      val bw = Sketches.lastBucketWidthValue.get
       assert(bw > 1L && BigInt(2) * BigInt("1000000000000") / bw <= 1000)
       intercept[IllegalArgumentException] {
         Sketches.exactQuantiles(xs.toDF("v"), "v", Seq(0.5), bucketWidth = 0)
