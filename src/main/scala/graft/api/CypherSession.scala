@@ -1,7 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.cypher.{Builder, Parser}
+import graft.cypher.{Builder, Compiler, Parser}
 import graft.graph.GraphCatalog
 import graft.jsonb._
 
@@ -533,17 +533,10 @@ final class CypherSession(
     }
 
     val bound = scala.collection.mutable.Set[String]()
-    def pathVars(p: PathPattern): Unit = {
-      p.variable.foreach(bound += _)
-      p.head.variable.foreach(bound += _)
-      p.tail.foreach { case (r, nd) =>
-        r.variable.foreach(bound += _); nd.variable.foreach(bound += _)
-      }
-    }
     clauses.foreach {
-      case m: Match => m.paths.foreach(pathVars)
-      case mg: MergeClause => pathVars(mg.path)
-      case c: CreateClause => c.paths.foreach(pathVars)
+      case m: Match => m.paths.foreach(bound ++= _.varNames)
+      case mg: MergeClause => bound ++= mg.path.varNames
+      case c: CreateClause => c.paths.foreach(bound ++= _.varNames)
       case u: Unwind => bound += u.as
       case l: LoadClause => bound += l.as
       case _ => ()
@@ -551,45 +544,16 @@ final class CypherSession(
 
     def freeVars(e: Expr): Set[String] = e match {
       case Vbl(n) => Set(n)
-      case Prop(b, _) => freeVars(b)
-      case Index(b, i) => freeVars(b) ++ freeVars(i)
-      case Slice(b, f, t) =>
-        freeVars(b) ++ f.toSeq.flatMap(freeVars) ++ t.toSeq.flatMap(freeVars)
-      case ListExpr(xs) => xs.flatMap(freeVars).toSet
-      case MapExpr(fs) => fs.flatMap(f => freeVars(f._2)).toSet
-      case BinOp(_, l, r) => freeVars(l) ++ freeVars(r)
-      case UnaryOp(_, x) => freeVars(x)
-      case Cmp(_, l, r) => freeVars(l) ++ freeVars(r)
-      case And(l, r) => freeVars(l) ++ freeVars(r)
-      case Or(l, r) => freeVars(l) ++ freeVars(r)
-      case Not(x) => freeVars(x)
-      case IsNull(x, _) => freeVars(x)
-      case StrPred(_, l, r) => freeVars(l) ++ freeVars(r)
-      case InList(x, l, _) => freeVars(x) ++ freeVars(l)
-      case FnCall(_, args, _) => args.flatMap(freeVars).toSet
-      case CaseExpr(op, ws, el) =>
-        op.toSeq.flatMap(freeVars).toSet ++
-          ws.flatMap(w => freeVars(w._1) ++ freeVars(w._2)) ++
-          el.toSeq.flatMap(freeVars)
       case ListPred(_, v, l, w) => freeVars(l) ++ (freeVars(w) - v)
       case ListComp(v, l, w, pj) =>
-        freeVars(l) ++ (w.toSeq.flatMap(freeVars).toSet ++
-          pj.toSeq.flatMap(freeVars).toSet - v)
-      case _ => Set.empty
+        freeVars(l) ++ ((w.toSeq ++ pj).flatMap(freeVars).toSet - v)
+      case x => children(x).flatMap(freeVars).toSet
     }
     // an outer (SQL-side) reference renderable as SQL text
     def renderOuter(e: Expr): Option[String] = e match {
       case Vbl(n) => Some(n)
       case Prop(b, k) => renderOuter(b).map(s => s"$s.$k")
       case _ => None
-    }
-    def conjuncts(e: Expr): Seq[Expr] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
-    }
-    def flip(op: String): String = op match {
-      case "<" => ">"; case "<=" => ">="; case ">" => "<"; case ">=" => "<="
-      case other => other
     }
 
     val lifted = scala.collection.mutable.Buffer[(String, Expr, String)]()
@@ -605,7 +569,7 @@ final class CypherSession(
               lifted += ((op, l, renderOuter(r).get))
             case Cmp(op, l, r) if freeVars(r).subsetOf(bound) &&
                 renderOuter(l).isDefined =>
-              lifted += ((flip(op), r, renderOuter(l).get))
+              lifted += ((Compiler.flipOp(op), r, renderOuter(l).get))
             case _ => unsupported = true
           }
         }

@@ -53,6 +53,95 @@ object Ast {
     */
   final case class SqlSubquery(sql: String) extends Expr
 
+  /** Direct sub-expressions in field order — the one place that knows
+    * each constructor's shape (the reference's expression_tree_walker,
+    * nodeFuncs.c). No wildcard: a new constructor must be added here.
+    * Pattern-carrying leaves have no children; a walker that looks
+    * into their patterns matches them itself.
+    */
+  def children(e: Expr): Seq[Expr] = e match {
+    case Lit(_) | Param(_) | Vbl(_) | CountStar => Nil
+    case ShortestPathExpr(_, _) | ExistsPattern(_) | SizePattern(_) | SqlSubquery(_) => Nil
+    case Prop(b, _) => Seq(b)
+    case Index(b, i) => Seq(b, i)
+    case Slice(b, f, t) => b +: (f.toSeq ++ t)
+    case ListExpr(items) => items
+    case MapExpr(fields) => fields.map(_._2)
+    case BinOp(_, l, r) => Seq(l, r)
+    case UnaryOp(_, x) => Seq(x)
+    case Cmp(_, l, r) => Seq(l, r)
+    case And(l, r) => Seq(l, r)
+    case Or(l, r) => Seq(l, r)
+    case Not(x) => Seq(x)
+    case IsNull(x, _) => Seq(x)
+    case StrPred(_, l, r) => Seq(l, r)
+    case InList(x, l, _) => Seq(x, l)
+    case FnCall(_, args, _) => args
+    case CaseExpr(o, ws, el) => o.toSeq ++ ws.flatMap { case (w, t) => Seq(w, t) } ++ el
+    case ListPred(_, _, l, w) => Seq(l, w)
+    case ListComp(_, l, w, p) => l +: (w.toSeq ++ p)
+  }
+
+  /** `e` with `f` applied to each direct sub-expression, left to right
+    * in field order (callers that bind state per node rely on it) —
+    * the expression_tree_mutator counterpart of [[children]].
+    */
+  def mapChildren(e: Expr)(f: Expr => Expr): Expr = e match {
+    case Lit(_) | Param(_) | Vbl(_) | CountStar => e
+    case ShortestPathExpr(_, _) | ExistsPattern(_) | SizePattern(_) | SqlSubquery(_) => e
+    case Prop(b, k) => Prop(f(b), k)
+    case Index(b, i) => Index(f(b), f(i))
+    case Slice(b, fr, t) => Slice(f(b), fr.map(f), t.map(f))
+    case ListExpr(items) => ListExpr(items.map(f))
+    case MapExpr(fields) => MapExpr(fields.map { case (k, v) => (k, f(v)) })
+    case BinOp(op, l, r) => BinOp(op, f(l), f(r))
+    case UnaryOp(op, x) => UnaryOp(op, f(x))
+    case Cmp(op, l, r) => Cmp(op, f(l), f(r))
+    case And(l, r) => And(f(l), f(r))
+    case Or(l, r) => Or(f(l), f(r))
+    case Not(x) => Not(f(x))
+    case IsNull(x, n) => IsNull(f(x), n)
+    case StrPred(op, l, r) => StrPred(op, f(l), f(r))
+    case InList(x, l, n) => InList(f(x), f(l), n)
+    case FnCall(n, args, d) => FnCall(n, args.map(f), d)
+    case CaseExpr(o, ws, el) =>
+      CaseExpr(o.map(f), ws.map { case (w, t) => (f(w), f(t)) }, el.map(f))
+    case ListPred(op, v, l, w) => ListPred(op, v, f(l), f(w))
+    case ListComp(v, l, w, p) => ListComp(v, f(l), w.map(f), p.map(f))
+  }
+
+  /** Every name an expression could reference, in first-occurrence
+    * order: each `Vbl`, plus what [[patternRefNames]] finds in the
+    * patterns of exists()/size()/shortestpath(). Lambda variables are
+    * included — callers treat over-collection as the safe direction.
+    */
+  def refNames(e: Expr): Seq[String] = (e match {
+    case Vbl(n) => Seq(n)
+    case ShortestPathExpr(_, p) => patternRefNames(p)
+    case ExistsPattern(p) => patternRefNames(p)
+    case SizePattern(p) => patternRefNames(p)
+    case x => children(x).flatMap(refNames)
+  }).distinct
+
+  /** A pattern's variables and the names its property maps and
+    * dijkstra weight/qual reference, in pattern order. */
+  def patternRefNames(p: PathPattern): Seq[String] = {
+    val elems = (p.head.variable, p.head.props) +: p.tail.flatMap { case (r, n) =>
+      Seq((r.variable, r.props), (n.variable, n.props)) }
+    val finder = p.finder match {
+      case PathFinder.Dijkstra(w, q, _) => w +: q.toSeq
+      case _ => Nil
+    }
+    (p.variable.toSeq ++ elems.flatMap { case (v, props) =>
+      v.toSeq ++ props.toSeq.flatMap(refNames) } ++ finder.flatMap(refNames)).distinct
+  }
+
+  /** The operands of a top-level AND chain, left to right. */
+  def conjuncts(e: Expr): Seq[Expr] = e match {
+    case And(l, r) => conjuncts(l) ++ conjuncts(r)
+    case x => Seq(x)
+  }
+
   // ---------------------------------------------------------- patterns
   /** direction: -1 = <-, 0 = undirected, 1 = -> */
   final case class NodePattern(variable: Option[String], label: Option[String],
@@ -62,7 +151,12 @@ object Ast {
       props: Option[Expr], only: Boolean = false)
   final case class PathPattern(variable: Option[String],
       head: NodePattern, tail: Seq[(RelPattern, NodePattern)],
-      finder: PathFinder = PathFinder.None)
+      finder: PathFinder = PathFinder.None) {
+    /** Path variable, head, then each relationship and node, in
+      * pattern order. */
+    def varNames: Seq[String] = variable.toSeq ++ head.variable ++
+      tail.flatMap { case (r, n) => r.variable ++ n.variable }
+  }
 
   sealed trait PathFinder
   object PathFinder {

@@ -287,27 +287,9 @@ final class Builder(
     val aV = aN.variable.getOrElse(return None)
     val bV = bN.variable.getOrElse(return None)
     if (aV == bV || nN.variable.exists(v => v == aV || v == bV)) return None
-    // every name an expression could reach (vars + pattern vars inside
-    // exists()/size()/shortestpath sub-patterns)
-    def refNames(x: Any): Set[String] = {
-      val acc = scala.collection.mutable.Set.empty[String]
-      def walk(y: Any): Unit = y match {
-        case Vbl(nm) => acc += nm
-        case np: NodePattern => np.variable.foreach(acc += _); np.props.foreach(walk)
-        case rp: RelPattern => rp.variable.foreach(acc += _); rp.props.foreach(walk)
-        case q: Product => q.productIterator.foreach(walk)
-        case s: Iterable[_] => s.foreach(walk)
-        case _ => ()
-      }
-      walk(x); acc.toSet
-    }
     if (nN.props.exists(pe => refNames(pe).exists(v => v == aV || v == bV)))
       return None
     // WHERE: at least one id(a) < id(b) half-pair conjunct
-    def conjuncts(e: Expr): Seq[Expr] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
-    }
     val cs = m.where.map(conjuncts).getOrElse(Seq.empty)
     def idOf(v: String) = FnCall("id", Seq(Vbl(v)))
     val isHalf: Expr => Boolean = {
@@ -468,30 +450,6 @@ final class Builder(
     if (wide) tagged.localCheckpoint(true) else tagged
   }
 
-  /** Every bound-variable reference a match could make: pattern var
-    * names (node/edge/path reuse binds by NAME) plus every `Vbl` in
-    * any expression position (property-map constraints, WHERE,
-    * dijkstra weight/qual). Over-collection is safe (an extra probe
-    * column); under-collection would unbind a correlated reference.
-    */
-  private def matchRefNames(m: Match): Seq[String] = {
-    val acc = scala.collection.mutable.LinkedHashSet.empty[String]
-    def walk(x: Any): Unit = x match {
-      case Vbl(n) => acc += n
-      case np: NodePattern => np.variable.foreach(acc += _); np.props.foreach(walk)
-      case rp: RelPattern => rp.variable.foreach(acc += _); rp.props.foreach(walk)
-      case pp: PathPattern =>
-        pp.variable.foreach(acc += _)
-        walk(pp.head); pp.tail.foreach { case (r, n) => walk(r); walk(n) }
-        walk(pp.finder)
-      case p: Product => p.productIterator.foreach(walk)
-      case s: Iterable[_] => s.foreach(walk)
-      case _ => ()
-    }
-    m.paths.foreach(walk); m.where.foreach(walk)
-    acc.toSeq
-  }
-
   /** The match's bound references IF every one is id-identified
     * (vertex/edge) — then correlation can key on ids; None forces
     * per-row rid correlation.
@@ -502,7 +460,12 @@ final class Builder(
     if (spark.conf.get("spark.graft.keyedCorrelation", "true") == "false")
       return None
     val bound = st.vars.toMap
-    val shared = matchRefNames(m).filter(bound.contains)
+    // every bound-variable reference the match could make: pattern var
+    // names (reuse binds by NAME) plus every `Vbl` in property maps,
+    // WHERE and dijkstra weight/qual. Over-collection is safe (an extra
+    // probe column); under-collection would unbind a correlated reference.
+    val shared = (m.paths.flatMap(patternRefNames) ++ m.where.toSeq.flatMap(refNames))
+      .distinct.filter(bound.contains)
     if (shared.forall(v => bound(v) == KV || bound(v) == KE))
       Some(shared.map(v => v -> bound(v)))
     else None
@@ -768,26 +731,7 @@ final class Builder(
       case ExistsPattern(p) => bind(p)
       case SizePattern(p) => bindCount(p)
       case ShortestPathExpr(all, p) => bindShortestExpr(all, p)
-      case And(l, r) => And(go(l), go(r))
-      case Or(l, r) => Or(go(l), go(r))
-      case Not(v) => Not(go(v))
-      case Cmp(op, l, r) => Cmp(op, go(l), go(r))
-      case IsNull(v, n) => IsNull(go(v), n)
-      case FnCall(n, args, d) => FnCall(n, args.map(go), d)
-      case BinOp(op, l, r) => BinOp(op, go(l), go(r))
-      case CaseExpr(o, w, el) =>
-        CaseExpr(o.map(go), w.map { case (a, b) => (go(a), go(b)) }, el.map(go))
-      case Prop(b, k) => Prop(go(b), k)
-      case Index(b, i) => Index(go(b), go(i))
-      case Slice(b, f, t) => Slice(go(b), f.map(go), t.map(go))
-      case ListExpr(items) => ListExpr(items.map(go))
-      case MapExpr(fields) => MapExpr(fields.map { case (k, v) => (k, go(v)) })
-      case UnaryOp(op, v) => UnaryOp(op, go(v))
-      case StrPred(op, l, r) => StrPred(op, go(l), go(r))
-      case InList(v, l, n) => InList(go(v), go(l), n)
-      case ListPred(op, v, l, w) => ListPred(op, v, go(l), go(w))
-      case ListComp(v, l, w, pj) => ListComp(v, go(l), w.map(go), pj.map(go))
-      case other => other
+      case other => mapChildren(other)(go)
     }
     val e2 = go(e) // mutates st per bound pattern — evaluate first
     (st, e2)
@@ -827,8 +771,7 @@ final class Builder(
   private def chainReplannable(st0: State, p: PathPattern): Boolean = {
     if (p.variable.nonEmpty || p.finder != PathFinder.None) return false
     if (p.tail.length < 2 || p.tail.exists(_._1.varLength.nonEmpty)) return false
-    if ((p.head.variable ++ p.tail.flatMap(t =>
-      t._1.variable ++ t._2.variable)).exists(st0.has)) return false
+    if (p.varNames.exists(st0.has)) return false
     if (spark.conf.get("spark.graft.graphmetaPlanning", "true") == "false")
       return false
     metaCounts.nonEmpty
@@ -1380,11 +1323,11 @@ final class Builder(
             Vbl(hidden)
           case _ => FnCall(fn, Seq(argR))
         }
-      case FnCall(n, args, d) => FnCall(n, args.map(rewriteExpr), d)
-      case BinOp(op, l, r) => BinOp(op, rewriteExpr(l), rewriteExpr(r))
-      case Cmp(op, l, r) => Cmp(op, rewriteExpr(l), rewriteExpr(r))
-      case Prop(b2, k) => Prop(rewriteExpr(b2), k)
-      case other => other
+      // a lambda variable shadowing a bound name is not that binding:
+      // its body is left to the compiler
+      case lc: ListComp if st.has(lc.variable) => lc
+      case lp: ListPred if st.has(lp.variable) => lp
+      case other => mapChildren(other)(rewriteExpr)
     }
     val items = p.items.map { case (e, as) => (rewriteExpr(e), as) }
     val order = p.orderBy.map { case (e, asc) => (rewriteExpr(e), asc) }

@@ -120,11 +120,6 @@ final class Compiler(
     case _ => None
   }
 
-  private def flipOp(op: String): String = op match {
-    case "<" => ">"; case ">" => "<"; case "<=" => ">="; case ">=" => "<="
-    case other => other
-  }
-
   final case class CE(col: Column, kind: Kind)
 
   /** jsonb view of any compiled value (elements render via their
@@ -248,8 +243,8 @@ final class Compiler(
 
     case Cmp(op, l, r) if shredCmp(op, l, r).isDefined =>
       CE(shredCmp(op, l, r).get, KB)
-    case Cmp(op, l, r) if shredCmp(flipOp(op), r, l).isDefined =>
-      CE(shredCmp(flipOp(op), r, l).get, KB)
+    case Cmp(op, l, r) if shredCmp(Compiler.flipOp(op), r, l).isDefined =>
+      CE(shredCmp(Compiler.flipOp(op), r, l).get, KB)
     case Cmp(op, l, r) =>
       val lc = compile(l); val rc = compile(r)
       // element comparisons go by id (graphid equality), jsonb by btree order
@@ -802,6 +797,13 @@ object Compiler {
 
   def q(name: String): String = s"`$name`"
 
+  /** The comparison operator with its operands swapped (`a < b` is
+    * `b > a`). */
+  def flipOp(op: String): String = op match {
+    case "<" => ">"; case ">" => "<"; case "<=" => ">="; case ">=" => "<="
+    case other => other
+  }
+
   /** Frame column carrying a shredded property of a bound variable.
     * \u0001 delimits so var names and keys containing underscores can
     * never collide.
@@ -828,52 +830,15 @@ object Compiler {
       else x match {
         case f @ FnCall(n, _, _) if aggFns(n) => aggRef(f)
         case CountStar => cStar()
-        case FnCall(n, args, d) => FnCall(n, args.map(go), d)
-        case BinOp(op, l, r) => BinOp(op, go(l), go(r))
-        case UnaryOp(op, v) => UnaryOp(op, go(v))
-        case Cmp(op, l, r) => Cmp(op, go(l), go(r))
-        case And(l, r) => And(go(l), go(r))
-        case Or(l, r) => Or(go(l), go(r))
-        case Not(v) => Not(go(v))
-        case IsNull(v, n2) => IsNull(go(v), n2)
-        case StrPred(op, l, r) => StrPred(op, go(l), go(r))
-        case InList(v, l, n2) => InList(go(v), go(l), n2)
-        case Prop(b, k) => Prop(go(b), k)
-        case Index(b, i) => Index(go(b), go(i))
-        case Slice(b, f, t) => Slice(go(b), f.map(go), t.map(go))
-        case ListExpr(items) => ListExpr(items.map(go))
-        case MapExpr(fields) => MapExpr(fields.map { case (k, v) => (k, go(v)) })
-        case CaseExpr(o, w, el) =>
-          CaseExpr(o.map(go), w.map { case (a, b) => (go(a), go(b)) }, el.map(go))
-        case ListComp(v, l, w, p) => ListComp(v, go(l), w.map(go), p.map(go))
-        case ListPred(op, v, l, w) => ListPred(op, v, go(l), go(w))
-        case other => other
+        case other => mapChildren(other)(go)
       }
     go(e)
   }
 
   def hasAgg(e: Expr): Boolean = e match {
     case CountStar => true
-    case FnCall(n, args, _) => aggFns(n) || args.exists(hasAgg)
-    case BinOp(_, l, r) => hasAgg(l) || hasAgg(r)
-    case UnaryOp(_, x) => hasAgg(x)
-    case Cmp(_, l, r) => hasAgg(l) || hasAgg(r)
-    case And(l, r) => hasAgg(l) || hasAgg(r)
-    case Or(l, r) => hasAgg(l) || hasAgg(r)
-    case Not(x) => hasAgg(x)
-    case IsNull(x, _) => hasAgg(x)
-    case StrPred(_, l, r) => hasAgg(l) || hasAgg(r)
-    case InList(x, l, _) => hasAgg(x) || hasAgg(l)
-    case Prop(b, _) => hasAgg(b)
-    case Index(b, i) => hasAgg(b) || hasAgg(i)
-    case Slice(b, f, t) => hasAgg(b) || f.exists(hasAgg) || t.exists(hasAgg)
-    case ListExpr(items) => items.exists(hasAgg)
-    case MapExpr(fields) => fields.exists(f => hasAgg(f._2))
-    case CaseExpr(o, w, e2) =>
-      o.exists(hasAgg) || w.exists(p => hasAgg(p._1) || hasAgg(p._2)) || e2.exists(hasAgg)
-    case ListComp(_, l, w, p) => hasAgg(l) || w.exists(hasAgg) || p.exists(hasAgg)
-    case ListPred(_, _, l, w) => hasAgg(l) || hasAgg(w)
-    case _ => false
+    case FnCall(n, _, _) if aggFns(n) => true
+    case x => children(x).exists(hasAgg)
   }
 
   /** Broadcast-able labid -> string literal map column. */

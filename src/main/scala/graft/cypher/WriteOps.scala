@@ -203,34 +203,15 @@ object WriteOps {
       val mc = rewriteTo(shadow) _
       e match {
         case Vbl(n) => if (shadow(n)) e else Prop(Vbl("__self"), n)
-        case BinOp(op, l, r) => BinOp(op, mc(l), mc(r))
-        case UnaryOp(op, x) => UnaryOp(op, mc(x))
-        case Cmp(op, l, r) => Cmp(op, mc(l), mc(r))
-        case And(l, r) => And(mc(l), mc(r))
-        case Or(l, r) => Or(mc(l), mc(r))
-        case Not(x) => Not(mc(x))
-        case IsNull(x, neg) => IsNull(mc(x), neg)
-        case StrPred(op, l, r) => StrPred(op, mc(l), mc(r))
-        case InList(x, l, neg) => InList(mc(x), mc(l), neg)
-        case Prop(bse, k) => Prop(mc(bse), k)
-        case Index(bse, i) => Index(mc(bse), mc(i))
-        case FnCall(nm, args, d) => FnCall(nm, args.map(mc), d)
-        case Slice(bse, f, t) => Slice(mc(bse), f.map(mc), t.map(mc))
-        case ListExpr(items) => ListExpr(items.map(mc))
-        case MapExpr(fields) =>
-          MapExpr(fields.map { case (k, v) => k -> mc(v) })
-        case CaseExpr(operand, whens, els) =>
-          CaseExpr(operand.map(mc),
-            whens.map { case (w, t) => mc(w) -> mc(t) }, els.map(mc))
         case ListPred(op, v, list, where) =>
           ListPred(op, v, mc(list), rewriteTo(shadow + v)(where))
         case ListComp(v, list, where, proj) =>
           val inner = rewriteTo(shadow + v) _
           ListComp(v, mc(list), where.map(inner), proj.map(inner))
-        case other => other
+        case other => mapChildren(other)(mc)
       }
     }
-    val mapChildren = rewriteTo(Set.empty) _
+    val toSelf = rewriteTo(Set.empty) _
     val comp = new Compiler(selfVars.toMap, Map.empty, Map.empty, Map.empty)
     applicable.foreach { case (c, newRows) =>
       val frame = newRows.select(struct(lit(0L).as("id"),
@@ -241,7 +222,7 @@ object WriteOps {
           // PG CHECK 3VL: only FALSE violates — a NULL check result
           // passes (cypher_ddl.out:729 {a:'agens', d:'graph'} passes
           // `a != b` with b absent)
-          val cond = comp.toBool(comp.compile(mapChildren(body)))
+          val cond = comp.toBool(comp.compile(toSelf(body)))
           if (!frame.where(!coalesce(cond, lit(true))).isEmpty)
             throw new IllegalStateException(
               s"""new row for label "${c.label}" violates check constraint "${c.name}"""")
@@ -251,7 +232,7 @@ object WriteOps {
           // VALUES, where 1 and 1.0 are one key (renderNum preserves
           // display scale, so a string identity would let {id: 1.0}
           // slip past an existing {id: 1})
-          val keyCol = J.sortKey(comp.toJ(comp.compile(mapChildren(body))))
+          val keyCol = J.sortKey(comp.toJ(comp.compile(toSelf(body))))
           val newKeys = frame.select(keyCol.as("__k")).where(col("__k").isNotNull)
           // within-batch duplicates
           if (!newKeys.groupBy("__k").count().where(col("count") > 1).isEmpty)
@@ -505,16 +486,6 @@ object WriteOps {
 
   // ============================================================== MERGE
 
-  /** MERGE: per input row match-or-create with batch dedup
-    * (ExecMergeGraph execCypherMerge.c:35; JOIN_CYPHER_MERGE).
-    *
-    * When an ON CREATE/ON MATCH expression reads the merged variable's
-    * own properties (e.g. `ON MATCH SET a.cnt = a.cnt + 1`), rows are
-    * order-dependent: each input row must observe earlier rows'
-    * updates. That shape takes the row-sequential path (bounded driver
-    * loop — the reference is row-at-a-time here too and the shape is
-    * inherently sequential); everything else uses the set-based path.
-    */
   /** Pattern-validity rules of transformCreatePattern as a PURE pass,
     * run by create() before it builds anything. MERGE must run them
     * UNCONDITIONALLY at statement start: its create() branch only
@@ -585,29 +556,25 @@ object WriteOps {
     }
   }
 
+  /** MERGE: per input row match-or-create with batch dedup
+    * (ExecMergeGraph execCypherMerge.c:35; JOIN_CYPHER_MERGE).
+    *
+    * When an ON CREATE/ON MATCH expression reads the merged variable's
+    * own properties (e.g. `ON MATCH SET a.cnt = a.cnt + 1`), rows are
+    * order-dependent: each input row must observe earlier rows'
+    * updates. That shape takes the row-sequential path (bounded driver
+    * loop — the reference is row-at-a-time here too and the shape is
+    * inherently sequential); everything else uses the set-based path.
+    */
   def merge(b: Builder, st0: State, m: MergeClause): State = {
     // pattern rules apply whether or not anything misses (see
     // validateCreatePaths) — run them before the match/create fork
     // (reference: transformMergeRel, parse_graph.c:4693-4700)
     validateCreatePaths(st0.vars, Seq(m.path), cmd = "MERGE")
-    val mergeVars: Set[String] =
-      (m.path.head.variable.toSeq ++
-        m.path.tail.flatMap { case (r, nd2) => r.variable.toSeq ++ nd2.variable.toSeq }).toSet
+    val mergeVars = m.path.varNames.toSet
     def readsMergeVar(e: Expr): Boolean = e match {
       case Vbl(n) => mergeVars.contains(n)
-      case Prop(x, _) => readsMergeVar(x)
-      case Index(x, i) => readsMergeVar(x) || readsMergeVar(i)
-      case BinOp(_, l, r) => readsMergeVar(l) || readsMergeVar(r)
-      case UnaryOp(_, x) => readsMergeVar(x)
-      case Cmp(_, l, r) => readsMergeVar(l) || readsMergeVar(r)
-      case And(l, r) => readsMergeVar(l) || readsMergeVar(r)
-      case Or(l, r) => readsMergeVar(l) || readsMergeVar(r)
-      case Not(x) => readsMergeVar(x)
-      case FnCall(_, args, _) => args.exists(readsMergeVar)
-      case CaseExpr(o, w, el) => o.exists(readsMergeVar) ||
-        w.exists(p => readsMergeVar(p._1) || readsMergeVar(p._2)) ||
-        el.exists(readsMergeVar)
-      case _ => false
+      case x => children(x).exists(readsMergeVar)
     }
     val selfRef = (m.onCreate ++ m.onMatch).exists {
       // the TARGET can read the merged var too: SET n[n.slot] = 1 is
@@ -641,14 +608,6 @@ object WriteOps {
     } else mergeBatch(b, st0, m)
   }
 
-  /** MERGE join-back precondition: the created build's new vars must
-   *  align positionally with the match build's — same count, same kind
-   *  sequence, and named vars equal (anonymous elements get fresh "__"
-   *  names per build; only those may differ). Both builds emit vars in
-   *  pattern order, so this holds for every reachable plan; it is the
-   *  guard that licenses replacing the second full pattern match with
-   *  the key-join-back (execCypherMerge.c:35). Package-private so the
-   *  spec can pin the predicate and the failure behavior. */
   /** Pair the created build's new vars with the match build's, kind by
     * kind: both builds bind the SAME pattern, and within each kind they
     * bind in pattern order, but the interleaving differs (create()
@@ -677,6 +636,14 @@ object WriteOps {
     if (ok) Some(pairs) else None
   }
 
+  /** MERGE join-back precondition: the created build's new vars must
+   *  align positionally with the match build's — same count, same kind
+   *  sequence, and named vars equal (anonymous elements get fresh "__"
+   *  names per build; only those may differ). Both builds emit vars in
+   *  pattern order, so this holds for every reachable plan; it is the
+   *  guard that licenses replacing the second full pattern match with
+   *  the key-join-back (execCypherMerge.c:35). Package-private so the
+   *  spec can pin the predicate and the failure behavior. */
   private[cypher] def mergeVarsAligned(
       created: Seq[(String, Kind)], matched: Seq[(String, Kind)]): Boolean =
     mergeVarPairs(created, matched).isDefined

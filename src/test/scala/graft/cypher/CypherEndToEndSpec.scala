@@ -827,6 +827,15 @@ class CypherEndToEndSpec extends AnyFunSuite {
     assert(rows(df) == Seq(Seq("\"agens-graph\"", "\"agens-graph-jdbc\"")))
   }
 
+  test("startnode()/endnode() inside a list literal, IS NULL and CASE") {
+    val df = agens.cypher(
+      """MATCH ()-[l:lib]->()
+        |RETURN [startnode(l).name, endnode(l).year] AS xs,
+        |       endnode(l).name IS NULL AS missing,
+        |       CASE l.lang WHEN 'java' THEN startnode(l).year ELSE 0 END AS y""".stripMargin)
+    assert(rows(df) == Seq(Seq("[\"agens-graph\", 2016]", false, "2016")))
+  }
+
   test("ORDER BY follows jsonb btree type ranks across mixed types") {
     val df = agens.cypher(
       """UNWIND [{a: 1}, [1], true, 1, 'x', null] AS v

@@ -142,6 +142,18 @@ class EagerSemanticSpec extends AnyFunSuite {
     assert(out.collect().map(_.getBoolean(0)).toSeq == Seq(true, true, true))
   }
 
+  test("MERGE - SET: merged var read inside a list or comprehension is row-sequential") {
+    // each row's ON MATCH SET must observe the previous row's update,
+    // whatever expression shape the read of `a` sits in
+    val s = fresh()
+    s.cypher("CREATE (:v2 {no: 1, cnt: 0, tags: []})")
+    s.cypher("MATCH (:v1) MERGE (a:v2 {no: 1}) ON MATCH SET a.cnt = [a.cnt + 1][0]")
+    s.cypher("MATCH (:v1) MERGE (a:v2 {no: 1}) ON MATCH SET a.tags = [t IN a.tags + ['x'] | t]")
+    val out = s.cypher("MATCH (a:v2) RETURN a.cnt AS cnt, a.tags AS tags").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(out == Seq("3" -> """["x", "x", "x"]"""))
+  }
+
   test("MERGE - DELETE: deleted vertices invisible to later scans") {
     val s = fresh()
     s.cypher("MATCH (a:v1) CREATE (:v2 =properties(a))")
