@@ -263,10 +263,7 @@ object Algo {
       // the unknown-label / wrong-kind diagnostics
       node.label.foreach { l =>
         b.labelOfKind(l, 'v')
-        val labids = b.labidsOf(l, node.only).toSeq
-        st = State(st.df.where(
-          shiftrightunsigned(col(Compiler.q(nodeName)).getField("id"), 48)
-            .cast("int").isin(labids: _*)), st.vars)
+        st = State(b.inLabel(st.df, nodeName, l, node.only), st.vars)
       }
     } else {
       val scan = b.vertexScan(node.label, node.only)

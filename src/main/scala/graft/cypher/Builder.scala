@@ -564,7 +564,8 @@ final class Builder(
       val df2 = quals.foldLeft(cur.df)((d, q) => d.where(q))
       var res = State(df2, cur.vars)
       m.where.foreach { w =>
-        val (st2, w2) = rewriteExistsPatterns(res, w)
+        val (st1, w1) = rewriteEndpointFns(res, w)
+        val (st2, w2) = rewriteExistsPatterns(st1, w1)
         res = st2
         val comp = compiler(res)
         res = State(res.df.where(comp.toBool(comp.compile(w2))), res.vars)
@@ -1007,9 +1008,7 @@ final class Builder(
       var df = st.df
       n.label.foreach { l =>
         labelOfKind(l, 'v')
-        val labids = labidsOf(l, n.only).toSeq
-        df = df.where(shiftrightunsigned(col(Compiler.q(name)).getField("id"), 48)
-          .cast("int").isin(labids: _*))
+        df = inLabel(df, name, l, n.only)
       }
       n.props.foreach { pe =>
         df = df.where(propQual(State(df, st.vars), name, pe))
@@ -1095,10 +1094,19 @@ final class Builder(
     try catalog.graphmetaCounts(graph) catch { case _: Throwable => Map.empty }
   private val labidsMemo =
     scala.collection.mutable.Map.empty[(String, Boolean), Set[Int]]
-  private[cypher] def labidsOf(l: String, only: Boolean): Set[Int] =
+  private def labidsOf(l: String, only: Boolean): Set[Int] =
     labidsMemo.getOrElseUpdate((l, only),
       if (only) catalog.label(graph, l).map(_.labid).toSet
       else catalog.subtree(graph, l).map(_.labid).toSet)
+
+  /** Keep the rows whose bound vertex `name` carries label `l` (ONLY:
+    * exactly `l`, else its subtree): the filter a re-bound vertex gets
+    * where a fresh bind would scan the label.
+    */
+  private[cypher] def inLabel(df: DataFrame, name: String, l: String,
+      only: Boolean): DataFrame =
+    df.where(GraphId.labidOf(col(Compiler.q(name)).getField("id"))
+      .isin(labidsOf(l, only).toSeq: _*))
 
   private def graphmetaHopEstimate(rel: RelPattern, prevPat: Option[NodePattern],
       node: NodePattern): Option[(Long, Option[Set[Int]], Option[Set[Int]])] = {
@@ -1195,9 +1203,7 @@ final class Builder(
         // honor ONLY like the fresh-bind scan does (exact label, no
         // inheritance subtree) — the re-bound form must filter the
         // same rows the scan form would have produced
-        val labids = labidsOf(l, node.only).toSeq
-        st = State(st.df.where(shiftrightunsigned(col(Compiler.q(nodeName)).getField("id"), 48)
-          .cast("int").isin(labids: _*)), st.vars)
+        st = State(inLabel(st.df, nodeName, l, node.only), st.vars)
       }
     } else {
       val raw = vertexScan(node.label, node.only)
@@ -1259,14 +1265,18 @@ final class Builder(
         case _ => ()
       }
     // startnode()/endnode() re-fetch vertices by the edge's endpoint id
-    // (graph.c edge_start_vertex): rewrite to hidden joined vars first
-    val (st1, p2) = rewriteEndpointFns(st0, p)
+    // (graph.c edge_start_vertex): rewrite to hidden joined vars first;
     // exists(pattern) in RETURN/WITH items binds hidden bool columns
-    var st = st1
-    val items1 = p2.items.map { case (e, as) =>
-      val (st2, e2) = rewriteExistsPatterns(st, e); st = st2; (e2, as)
+    var st = st0
+    def endpoints(e: Expr): Expr = {
+      val (st2, e2) = rewriteEndpointFns(st, e); st = st2; e2
     }
-    val p2b = p2.copy(items = items1)
+    val items1 = p.items.map { case (e, as) =>
+      val e1 = endpoints(e)
+      val (st2, e2) = rewriteExistsPatterns(st, e1); st = st2; (e2, as)
+    }
+    val order = p.orderBy.map { case (e, asc) => (endpoints(e), asc) }
+    val p2b = p.copy(items = items1, orderBy = order)
     val items0: Seq[(Expr, String)] =
       if (p2b.star) st.vars.filterNot(_._1.startsWith("__")).map { case (n, _) => (Vbl(n), n) }
       else p2b.items.map { case (e, as) => (e, as.getOrElse(Compiler.itemName(e))) }
@@ -1280,7 +1290,7 @@ final class Builder(
   // (collision-proof memoization; see rewriteEndpointFns)
   private val endpointVarArgs = scala.collection.mutable.Map[String, Expr]()
 
-  private def rewriteEndpointFns(st0: State, p: Projection): (State, Projection) = {
+  private def rewriteEndpointFns(st0: State, e0: Expr): (State, Expr) = {
     var st = st0
     def rewriteExpr(e: Expr): Expr = e match {
       case FnCall(fn @ ("startnode" | "endnode"), Seq(arg), _) =>
@@ -1329,9 +1339,8 @@ final class Builder(
       case lp: ListPred if st.has(lp.variable) => lp
       case other => mapChildren(other)(rewriteExpr)
     }
-    val items = p.items.map { case (e, as) => (rewriteExpr(e), as) }
-    val order = p.orderBy.map { case (e, asc) => (rewriteExpr(e), asc) }
-    (st, p.copy(items = items, orderBy = order))
+    val e1 = rewriteExpr(e0)
+    (st, e1)
   }
 
   private def buildProjectionImpl(st: State, p: Projection,
@@ -1445,8 +1454,12 @@ final class Builder(
     p.limit.foreach { e => df = df.limit(constLong(e).toInt) }
     var res = State(df, out.vars)
     p.where.foreach { w =>
-      val c2 = compiler(res)
-      res = State(res.df.where(c2.toBool(c2.compile(w))), res.vars)
+      // endpoint vertices join in as hidden columns for the filter only:
+      // the projection's own columns are what the clause binds
+      val (st2, w2) = rewriteEndpointFns(res, w)
+      val c2 = compiler(st2)
+      res = State(st2.df.where(c2.toBool(c2.compile(w2)))
+        .select(df.columns.map(c => col(Compiler.q(c))): _*), res.vars)
     }
     res
   }

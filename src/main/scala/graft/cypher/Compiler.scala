@@ -3,6 +3,7 @@ package graft.cypher
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.expr.J
+import graft.graph.GraphId
 import graft.jsonb._
 import Ast._
 
@@ -425,15 +426,13 @@ final class Compiler(
       case "id" => CE(J.fromLong(a0.col.getField("id")), KJ)
       case "properties" => CE(a0.col.getField("properties"), KJ)
       case "label" | "type" =>
-        val labid = shiftrightunsigned(a0.col.getField("id"), 48).cast("int")
         val m = Compiler.labidMapCol(labidToName)
-        CE(J.fromText(element_at(m, labid)), KJ)
+        CE(J.fromText(element_at(m, GraphId.labidOf(a0.col.getField("id")))), KJ)
       case "labels" =>
         // labid -> pre-rendered ancestor-closure json array (diamond-safe
         // closure computed by the catalog; broadcast literal map)
-        val labid = shiftrightunsigned(a0.col.getField("id"), 48).cast("int")
         val m = Compiler.labidMapCol(labidToLabelsJson)
-        CE(element_at(m, labid), KJ)
+        CE(element_at(m, GraphId.labidOf(a0.col.getField("id"))), KJ)
       case "startid" => CE(J.fromLong(a0.col.getField("start")), KJ)
       case "endid" => CE(J.fromLong(a0.col.getField("end")), KJ)
       case "idtext" =>
@@ -442,8 +441,8 @@ final class Compiler(
         // numeric like the reference's graphid comparisons
         val gid = a0.col.getField("id")
         CE(J.fromText(concat_ws(".",
-          shiftrightunsigned(gid, 48).cast("string"),
-          gid.bitwiseAND(lit((1L << 48) - 1)).cast("string"))), KJ)
+          GraphId.labidOf(gid).cast("string"),
+          gid.bitwiseAND(lit(GraphId.LocidMax)).cast("string"))), KJ)
       case "length" =>
         a0.kind match {
           case Kind.KP  => CE(J.fromLong(size(a0.col.getField("edges")).cast("long")), KJ)

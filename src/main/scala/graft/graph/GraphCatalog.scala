@@ -124,7 +124,7 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
   }
 
   /** Per-label exclusive lock (in-driver): every mutation of one
-    * label's FILES — append, overwrite/reindex, patchFiles' swap,
+    * label's FILES — append, the reindex and patchFiles swap,
     * drop, rename — serializes on it, so a re-cluster can never delete
     * files an in-flight append just wrote. Same-label appends
     * serialize too: Spark's file committer stages every job of a
@@ -138,7 +138,7 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
     * source and target names' locks (canonical order).
     *
     * READERS take no lock (documented deviation, r12 review finding 4):
-    * a query overlapping overwrite/patchFiles' rm+swap window can see
+    * a query overlapping [[swapLabel]]'s rm+move window can see
     * an empty table or fail on deleted part files — the lakehouse
     * answer is snapshot isolation (Delta/Iceberg manifests), which this
     * parquet-directory catalog deliberately does not reimplement; the
@@ -230,8 +230,7 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
     val Seq(l1, l2) = Seq(from, to).sorted
     withLabelWrite(graph, l1) { withLabelWrite(graph, l2) { withMetaLock(graph) {
     val m = readMeta(graph)
-    if (!m.labels.contains(from))
-      throw new IllegalStateException(s"label \"$from\" does not exist")
+    labelMeta(m, from)
     require(!m.labels.contains(to), s"label \"$to\" already exists")
     // rebuild preserving declaration order; rewrite parent references
     val renamed = m.labels.map { case (n, meta) =>
@@ -294,16 +293,14 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
     */
   def setLabelPersistence(graph: String, name: String, p: Char): Unit = withMetaLock(graph) {
     val m = readMeta(graph)
-    val lm = m.labels.getOrElse(name,
-      throw new IllegalStateException(s"label \"$name\" does not exist"))
+    val lm = labelMeta(m, name)
     m.labels(name) = lm.copy(persistence = p)
     writeMeta(graph, m)
   }
 
   def setLabelIndexDisabled(graph: String, name: String): Unit = withMetaLock(graph) {
     val m = readMeta(graph)
-    val lm = m.labels.getOrElse(name,
-      throw new IllegalStateException(s"label \"$name\" does not exist"))
+    val lm = labelMeta(m, name)
     m.labels(name) = lm.copy(indexDisabled = true)
     writeMeta(graph, m)
   }
@@ -326,8 +323,7 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
     // serialize against the reindex through the per-label write lock)
     require(keys.nonEmpty, "property index needs at least one key")
     val m0 = readMeta(graph)
-    val lm = m0.labels.getOrElse(label,
-      throw new IllegalStateException(s"""label "$label" does not exist"""))
+    val lm = labelMeta(m0, label)
     val autoKey = keys.head.takeWhile(c => c.isLetterOrDigit || c == '_')
     val nm = idxName.getOrElse(
       s"${label}_${if (autoKey.nonEmpty) autoKey else "expr"}_idx")
@@ -472,18 +468,13 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
       withLabelWrite(graph, label) {
     // the whole read-then-swap runs under the label WRITE lock: the
     // file listing captured by the scan below must still be the
-    // complete table when overwrite's rm+swap runs — an append landing
-    // between listing and swap would otherwise be deleted without
-    // being in the snapshot (the write lock is reentrant, so the
-    // nested overwrite's own acquisition is free)
+    // complete table when the swap runs — an append landing between
+    // listing and swap would otherwise be deleted without being in the
+    // snapshot
     import org.apache.spark.sql.functions._
     val lm = readMeta(graph).labels(label)
     val dir = labelDir(graph, label)
-    if (!Files.exists(dir)) return
-    val any = { val s = Files.list(dir)
-      try s.iterator().asScala.exists(_.toString.endsWith(".parquet"))
-      finally s.close() }
-    if (!any) return
+    if (!hasParquet(dir)) return
     val keyOpt = lm.indexes.iterator.flatMap(_.keys.headOption)
       .find(k => ShredKeyRe.findFirstIn(k).isDefined && lm.shred.contains(k))
     val base = if (lm.kind == 'v') vertexSchema else edgeSchema
@@ -502,7 +493,26 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
         cur.repartitionByRange(files, typed)
       case None => cur
     }
-    overwrite(graph, label, df)
+    // the plan reads the files being replaced: snapshot it before the
+    // swap deletes them
+    val clean = df.localCheckpoint(true)
+    // the new contents are the whole table: the shred layout is
+    // recomputed from scratch, not merged into the old one
+    val types = batchKeyTypes(clean)
+    val lm2 =
+      if (types.size > ShredMaxKeys) lm.copy(shred = Map.empty, shredOff = true)
+      else lm.copy(shred = types, shredOff = false)
+    swapLabel(graph, lm2, if (lm2.shredOff) clean else withShredCols(clean, types), Nil)
+    withMetaLock(graph) {
+      val fresh = readMeta(graph)
+      // only the shred layout comes from this rewrite; every other
+      // field — indexes, persistence, parents — must come from the
+      // FRESH meta, or a concurrent DDL committed mid-rewrite would be
+      // resurrected
+      fresh.labels(label) = fresh.labels(label)
+        .copy(shred = lm2.shred, shredOff = lm2.shredOff)
+      writeMeta(graph, fresh)
+    }
   }
 
   /** DROP VLABEL leaves edges that referenced the dropped vertices in
@@ -561,8 +571,7 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
     if (parent == "ag_vertex" || parent == "ag_edge")
       throw new IllegalStateException("cannot ALTER inheritance with base label")
     val m = readMeta(graph)
-    val lm = m.labels.getOrElse(name,
-      throw new IllegalStateException(s"label \"$name\" does not exist"))
+    val lm = labelMeta(m, name)
     if (add) {
       val pm = m.labels.getOrElse(parent,
         throw new IllegalStateException(s"parent label \"$parent\" does not exist"))
@@ -802,8 +811,7 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
     * appeared simply read as null = key absent).
     */
   def scanOnly(graph: String, name: String): DataFrame = {
-    val lm = readMeta(graph).labels.getOrElse(name,
-      throw new IllegalStateException(s"label \"$name\" does not exist"))
+    val lm = labelMeta(readMeta(graph), name)
     scanOnly(graph, lm)
   }
 
@@ -866,7 +874,7 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
     else alignedUnion(graph, ls)
   }
 
-  /** Recursive directory delete (shared by drop/overwrite/patch —
+  /** Recursive directory delete (shared by drop and the swap —
     * one definition, r12 review reuse finding). */
   private def rmTree(p: Path): Unit = {
     if (Files.isDirectory(p)) { val s = Files.list(p)
@@ -907,9 +915,7 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
   def append(graph: String, label: String, df: DataFrame,
       knownTypes: Option[Map[String, String]]): Unit =
       withLabelWrite(graph, label) {
-    val m = readMeta(graph)
-    val lm = m.labels.getOrElse(label,
-      throw new IllegalStateException(s"label \"$label\" does not exist"))
+    val lm = labelMeta(readMeta(graph), label)
     val base = if (lm.kind == 'v') vertexSchema else edgeSchema
     val clean = df.select(base.fields.map(f => org.apache.spark.sql.functions.col(f.name)): _*)
     val (out, lm2) = shredBatch(lm, clean, knownTypes
@@ -992,41 +998,29 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
     }
   }
 
-  /** Replace a label table's contents (copy-on-write rewrite: write to
-    * a staging dir, then swap — keeps the statement-level snapshot
-    * semantics of the reference's MVCC heap). Shred meta is recomputed
-    * from scratch (the new contents are the whole table).
+  /** The copy-on-write swap every label rewrite ends in (keeps the
+    * statement-level snapshot semantics of the reference's MVCC heap):
+    * write `rows`, clustered for `lm`, into the label's staging
+    * directory (clearing any leftover first), move the `kept` files of
+    * the live directory in by rename (`k-` prefix on a name
+    * collision), then replace the live directory with the staging one. A crash between
+    * the delete and the move leaves the label without a directory; the
+    * staging directory then holds its whole contents. The caller holds
+    * the label's write lock and commits the meta.
     */
-  def overwrite(graph: String, label: String, df: DataFrame): Unit =
-      withLabelWrite(graph, label) {
-    val m = readMeta(graph)
-    val lm = m.labels.getOrElse(label,
-      throw new IllegalStateException(s"label \"$label\" does not exist"))
-    val base = if (lm.kind == 'v') vertexSchema else edgeSchema
-    val clean0 = df.select(base.fields.map(f => org.apache.spark.sql.functions.col(f.name)): _*)
-    // the input plan typically reads the table being replaced: snapshot
-    // it before deleting the source files
-    val clean = clean0.localCheckpoint(true)
-    val types = batchKeyTypes(clean)
-    val (out, lm2) =
-      if (types.size > ShredMaxKeys) (clean, lm.copy(shred = Map.empty, shredOff = true))
-      else (withShredCols(clean, types), lm.copy(shred = types, shredOff = false))
-    val dir = labelDir(graph, label)
-    val staging = graphDir(graph).resolve(s"_staging_$label")
-    clusterSorted(out, lm2)
-      .write.mode("overwrite").parquet(staging.toString)
+  private def swapLabel(graph: String, lm: LabelMeta, rows: DataFrame,
+      kept: Seq[Path]): Unit = {
+    val dir = labelDir(graph, lm.name)
+    val staging = graphDir(graph).resolve(s"_staging_${lm.name}")
+    rmTree(staging)
+    clusterSorted(rows, lm).write.mode("overwrite").parquet(staging.toString)
+    kept.foreach { p =>
+      var target = staging.resolve(p.getFileName)
+      if (Files.exists(target)) target = staging.resolve(s"k-${p.getFileName}")
+      Files.move(p, target)
+    }
     rmTree(dir)
     Files.move(staging, dir, StandardCopyOption.ATOMIC_MOVE)
-    withMetaLock(graph) {
-      val fresh = readMeta(graph)
-      // only the shred layout comes from this rewrite (the new
-      // contents ARE the whole table); every other field — indexes,
-      // persistence, parents — must come from the FRESH meta, or a
-      // concurrent DDL committed mid-rewrite would be resurrected
-      fresh.labels(label) = fresh.labels(label)
-        .copy(shred = lm2.shred, shredOff = lm2.shredOff)
-      writeMeta(graph, fresh)
-    }
   }
 
   /** File-pruned copy-on-write patch for point writes: rewrite ONLY
@@ -1052,9 +1046,7 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
       (patch: DataFrame => DataFrame): (Long, Long) =
       withLabelWrite(graph, label) {
     import org.apache.spark.sql.functions._
-    val m = readMeta(graph)
-    val lm = m.labels.getOrElse(label,
-      throw new IllegalStateException(s"label \"$label\" does not exist"))
+    val lm = labelMeta(readMeta(graph), label)
     val dir = labelDir(graph, label)
     if (!hasParquet(dir)) return (0L, 0L)
     val schema = labelSchema(lm)
@@ -1094,17 +1086,7 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
     // rule (untouched files keep their layout; readers treat absent
     // columns as absent keys)
     val (out, lm2) = shredBatch(lm, patched, batchKeyTypes(patched))
-    val staging = graphDir(graph).resolve(s"_staging_$label")
-    rmTree(staging)
-    clusterSorted(out, lm2)
-      .write.mode("overwrite").parquet(staging.toString)
-    untouched.foreach { p =>
-      var target = staging.resolve(p.getFileName)
-      if (Files.exists(target)) target = staging.resolve(s"k-${p.getFileName}")
-      Files.move(p, target)
-    }
-    rmTree(dir)
-    Files.move(staging, dir, StandardCopyOption.ATOMIC_MOVE)
+    swapLabel(graph, lm2, out, untouched)
     commitShred(graph, label, lm, lm2)
     (rowsBefore, rowsAfter)
   }
@@ -1124,12 +1106,7 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
       val m = names.toSeq.flatMap { case (k, v) => Seq(lit(k), lit(v)) }
       if (m.isEmpty) map() else map(m: _*)
     }
-    scanAll(graph, 'e')
-      .select(shiftrightunsigned(col("id"), 48).cast("int").as("edge_labid"),
-        shiftrightunsigned(col("start"), 48).cast("int").as("start_labid"),
-        shiftrightunsigned(col("end"), 48).cast("int").as("end_labid"))
-      .groupBy("start_labid", "edge_labid", "end_labid")
-      .agg(count(lit(1)).as("edgecount"))
+    labidTriples(graph)
       .select(element_at(nameCol, col("start_labid")).as("start"),
         element_at(nameCol, col("edge_labid")).as("edge"),
         element_at(nameCol, col("end_labid")).as("end"),
@@ -1139,6 +1116,20 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
       // ag_graphmeta drops them on label drop (graphmeta.sql:44-50)
       .where(col("start").isNotNull && col("edge").isNotNull &&
         col("end").isNotNull)
+  }
+
+  /** (start_labid, edge_labid, end_labid, edgecount) over every edge
+    * table: the one aggregation behind [[graphmeta]] and
+    * [[graphmetaCounts]].
+    */
+  private def labidTriples(graph: String): DataFrame = {
+    import org.apache.spark.sql.functions._
+    scanAll(graph, 'e')
+      .select(GraphId.labidOf(col("start")).as("start_labid"),
+        GraphId.labidOf(col("id")).as("edge_labid"),
+        GraphId.labidOf(col("end")).as("end_labid"))
+      .groupBy("start_labid", "edge_labid", "end_labid")
+      .agg(count(lit(1)).as("edgecount"))
   }
 
   /** ag_graphmeta as a planning input: the (start labid, edge labid,
@@ -1183,13 +1174,7 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
       case Some((_, m, at)) if (System.nanoTime() - at).toDouble < ttlNanos =>
         m
       case _ =>
-        import org.apache.spark.sql.functions._
-        val m = scanAll(graph, 'e')
-          .select(shiftrightunsigned(col("start"), 48).cast("int").as("s"),
-            shiftrightunsigned(col("id"), 48).cast("int").as("e"),
-            shiftrightunsigned(col("end"), 48).cast("int").as("t"))
-          .groupBy("s", "e", "t").agg(count(lit(1)).as("c"))
-          .collect()
+        val m = labidTriples(graph).collect()
           .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getLong(3))
           .toMap
         metaCountsCache.synchronized {
@@ -1299,6 +1284,10 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
     Files.move(tmp, metaPath(g), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
+
+  private def labelMeta(m: GraphMeta, name: String): LabelMeta =
+    m.labels.getOrElse(name,
+      throw new IllegalStateException(s"label \"$name\" does not exist"))
 
   private def readMeta(g: String): GraphMeta = {
     import graft.jsonb._

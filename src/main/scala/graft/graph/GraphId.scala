@@ -1,5 +1,8 @@
 package graft.graph
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.shiftrightunsigned
+
 /** 64-bit graph element id with the reference's bit packing:
   * labid:16 << 48 | locid:48 (reference: src/include/utils/graph.h:18-39
   * GraphidGetLabid / GraphidGetLocid / GRAPHID_LOCID_MAX).
@@ -20,6 +23,10 @@ object GraphId {
 
   def labid(id: Long): Int = ((id >>> LocidBits) & 0xffff).toInt
   def locid(id: Long): Long = id & LocidMax
+
+  /** [[labid]] over a graphid column: the int label id. */
+  def labidOf(c: Column): Column =
+    shiftrightunsigned(c, LocidBits).cast("int")
 
   /** Render as the reference's graphid text form "labid.locid"
     * (graphid_out, src/backend/utils/adt/graph.c).

@@ -836,6 +836,23 @@ class CypherEndToEndSpec extends AnyFunSuite {
     assert(rows(df) == Seq(Seq("[\"agens-graph\", 2016]", false, "2016")))
   }
 
+  test("startnode()/endnode() under WITH ... WHERE and MATCH ... WHERE") {
+    val q1 = agens.cypher(
+      """MATCH ()-[l:lib]->() WITH l WHERE startnode(l).name = 'agens-graph'
+        |RETURN l.lang AS lang""".stripMargin)
+    assert(rows(q1) == Seq(Seq("\"java\"")))
+    val q2 = agens.cypher(
+      """MATCH ()-[l]->() WHERE endnode(l).year = 2017
+        |RETURN l.lang AS lang""".stripMargin)
+    assert(rows(q2) == Seq(Seq("\"en\"")))
+    // the endpoint vertex joins in for the filter only: the WITH still
+    // binds just its own items
+    val q3 = agens.cypher(
+      """MATCH ()-[l]->() WITH l.lang AS lang, l WHERE endnode(l).year = 2016
+        |RETURN *""".stripMargin)
+    assert(q3.columns.toSeq == Seq("lang", "l") && q3.count() == 1)
+  }
+
   test("ORDER BY follows jsonb btree type ranks across mixed types") {
     val df = agens.cypher(
       """UNWIND [{a: 1}, [1], true, 1, 'x', null] AS v

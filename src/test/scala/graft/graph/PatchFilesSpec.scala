@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import java.security.MessageDigest
 import scala.jdk.CollectionConverters._
 import graft.SparkTestBase
+import graft.api.CypherSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -92,5 +93,45 @@ class PatchFilesSpec extends AnyFunSuite {
     val (nBefore, nAfter) = cat.patchFiles("pg", "big", victims)(cur => cur)
     assert(nBefore == 0L && nAfter == 0L)
     assert(md5s(dir) == before)
+  }
+
+  private def session(graph: String): (CypherSession, Path) = {
+    val root = Files.createTempDirectory("graft_patch_cypher")
+    val s = new CypherSession(spark, new GraphCatalog(spark, root.toString))
+    s.createGraph(graph)
+    (s, root.resolve(graph))
+  }
+
+  test("reindex records a fresh shred layout and leaves no staging directory") {
+    val (s, gdir) = session("pr")
+    s.createVLabel("t")
+    s.cypher("UNWIND [1, 2, 3] AS i CREATE (:t {x: i})")
+    s.cypher("CREATE (:t {x: 4, k: 'gone'})")
+    // a patch merges its batch into the layout: k outlives its rows
+    s.cypher("MATCH (n:t) WHERE n.k IS NOT NULL DELETE n")
+    assert(s.catalog.label("pr", "t").get.shred.contains("k"))
+    // the reindex rewrites the whole table: its layout starts over
+    s.cypher("CREATE PROPERTY INDEX ON t (x)")
+    assert(s.catalog.label("pr", "t").get.shred.keySet == Set("x"))
+    assert(s.catalog.scanOnly("pr", "t").count() == 3)
+    val left = { val st = Files.list(gdir)
+      try st.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("_staging_")).toVector
+      finally st.close() }
+    assert(left.isEmpty, s"staging directories left behind: $left")
+  }
+
+  test("a SET whose targets span two labels patches both and counts every update") {
+    val (s, _) = session("ps")
+    s.createVLabel("p"); s.createVLabel("q")
+    s.cypher("UNWIND [1, 2, 3] AS i CREATE (:p {i: i}), (:q {i: i})")
+    s.cypher("MATCH (n) WHERE n.i >= 2 SET n.y = 'set'")
+    assert(s.lastWriteStats("updatedproperties") == 4)
+    for (l <- Seq("p", "q")) {
+      val props = s.catalog.scanOnly("ps", l).select("properties")
+        .collect().map(_.getString(0)).toSeq
+      assert(props.count(_.contains("\"y\": \"set\"")) == 2, s"$l: $props")
+      assert(props.size == 3, s"$l: $props")
+    }
   }
 }

@@ -11,10 +11,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Spark-job pins for the frontier-loop analytics on a small fixed
-  * graph. Each round of a closure is meant to cost one checkpoint
-  * (the row count rides it), so a change that adds an action per round
-  * shows up here as a higher count. The pins may only go down: lower
+/** Spark-job pins for the frontier-loop analytics and the graph writes
+  * on small fixed graphs. Each round of a closure is meant to cost one
+  * checkpoint (the row count rides it), so a change that adds an
+  * action per round or per written label shows up here as a higher
+  * count. The pins may only go down: lower
   * them when a change saves jobs, never raise them to make a change
   * pass. Under adaptive execution each shuffle stage of an action is
   * its own job, so one checkpoint costs several jobs.
@@ -136,6 +137,37 @@ class JobCountSpec extends AnyFunSuite {
     info(s"build $build, collect $collect")
     assert((build, collect) == (18, 5))
   }
+
+  /** A fresh graph per write pin: vertex labels a and b (n = 0..3
+    * each) and an r edge from every a to the b with the same n.
+    */
+  private def writeGraph(): CypherSession = {
+    val root = Files.createTempDirectory("graft_job_count_w").toString
+    val s = new CypherSession(spark, new GraphCatalog(spark, root))
+    s.createGraph("jw")
+    s.createVLabel("a"); s.createVLabel("b"); s.createELabel("r")
+    s.cypher("UNWIND [0, 1, 2, 3] AS i CREATE (:a {n: i})-[:r {w: i}]->(:b {n: i})")
+    s
+  }
+
+  for ((name, stmt, pin) <- Seq(
+      ("CREATE of a vertex and an edge",
+        "MATCH (x:a {n: 0}) CREATE (x)-[:r {w: 9}]->(:b {n: 9})", (10, 1)),
+      ("SET over two labels",
+        "MATCH (x) WHERE x.n < 2 SET x.m = 1", (25, 2)),
+      ("MERGE with ON CREATE/ON MATCH SET",
+        "UNWIND [0, 7] AS k MERGE (x:a {n: k}) ON CREATE SET x.c = 1 ON MATCH SET x.c = 2",
+        (58, 4)),
+      ("DETACH DELETE of a vertex and its edges",
+        "MATCH (x:a {n: 0}) DETACH DELETE x", (28, 1)),
+      ("CREATE PROPERTY INDEX (reindex)",
+        "CREATE PROPERTY INDEX ON a (n)", (8, 0))))
+    test(s"$name: job count pinned") {
+      val s = writeGraph()
+      val (build, collect) = jobsOf(s.cypher(stmt))
+      info(s"build $build, collect $collect")
+      assert((build, collect) == pin)
+    }
 
   test("dijkstra LIMIT 2: job count pinned") {
     val s = paths
