@@ -61,8 +61,8 @@ object Algo {
     private val hubDegree =
       spark.conf.get("spark.graft.skew.hubDegree", "100000").toLong
     // lazy: the degree aggregation only runs when a join actually
-    // happens with salting on (bfs2 builds one Expander per direction
-    // but a run may never expand one of them)
+    // happens with salting on (a search bounded at depth 0 never
+    // expands)
     private lazy val hubs: Option[DataFrame] =
       if (salt <= 1) None
       else {
@@ -261,10 +261,8 @@ object Algo {
       // it must filter here exactly like the fresh-bind scan would
       // (ONLY = exact label, otherwise inheritance subtree), including
       // the unknown-label / wrong-kind diagnostics
-      node.label.foreach { l =>
-        b.labelOfKind(l, 'v')
-        st = State(b.inLabel(st.df, nodeName, l, node.only), st.vars)
-      }
+      node.label.foreach(l =>
+        st = State(b.inLabel(st.df, nodeName, l, node.only), st.vars))
     } else {
       val scan = b.vertexScan(node.label, node.only)
         .select(struct(col("id"), col("properties")).as(nodeName))
@@ -304,8 +302,9 @@ object Algo {
     val (st2, tgtName) = b.bindNode(st, targetNode)
     st = st2
     val tgtId0 = col(Compiler.q(tgtName)).getField("id")
-    // target snapshot is only consumed by the two-sided strategy — the
-    // (default) one-sided search must not pay the extra materialization
+    // target snapshot is only consumed by the BFS cap check and the
+    // dijkstra prune — a search that needs neither must not pay the
+    // extra materialization
     lazy val targets = st.df.select(tgtId0.as("__target")).distinct()
       .localCheckpoint(true)
 
@@ -355,61 +354,16 @@ object Algo {
 
     // Source-constrained search: expand only from the bound source
     // vertices instead of every vertex (the set-based analog of the
-    // reference seeding its two-sided hash expansion from the outer
-    // tuple's endpoints, nodeShortestpath.c SP_GET_PARAMETER).
-    // Search strategy (spark.graft.pathSearch): "onesided" (default) =
-    // forward frontier expansion with visited pruning — wins when
-    // forward exploration dead-ends early (typical for selective
-    // sources over DAG-ish topologies); "twosided" = meet-in-middle
-    // from both endpoint sets (the Hash2Side analog) — wins on deep
-    // paths between small endpoint sets over high-branching graphs.
-    // Both are cross-validated against the VLE path universe
-    // (PathFinderCrossCheckSpec).
-    val twoSided = b.spark.conf
-      .get("spark.graft.pathSearch", "onesided") match {
-      case "twosided" => true
-      case "auto" =>
-        // Cost-based strategy choice from catalog-level stats (the
-        // lakehouse stand-in for the reference's auto-gathered
-        // ag_graphmeta): meet-in-middle halves the depth exponent, so
-        // it wins whenever the graph EXPANDS — avg out-degree d > 1
-        // makes one-sided cost |S|·d^L vs two-sided (|S|+|T|)·d^(L/2).
-        // On contracting/DAG-ish topologies (d ≤ ~1.5) forward
-        // frontiers die out fast and one-sided avoids the second
-        // frontier's bookkeeping. Both counts are footer-cheap row
-        // counts of the label parquet, negligible next to the search.
-        // undirected patterns union both orientations in edgeScan —
-        // halve the count or the effective out-degree doubles and the
-        // choice flips to twosided too eagerly (r12 review). The /2 is
-        // an APPROXIMATION in the presence of self-loops (a self-loop
-        // contributes two identical rows to the union, so eCnt slightly
-        // undercounts a true undirected edge count) — acceptable here
-        // because this feeds only the d > 1.5 cost heuristic, never a
-        // result (r12 advice; count distinct edge ids if exactness
-        // ever matters)
-        val eRaw = b.edgeScan(rel.types, rel.direction, rel.only).count()
-        val eCnt = if (rel.direction == 0) eRaw / 2 else eRaw
-        val vCnt = b.vertexScan(None, only = false).count()
-        val choice = vCnt > 0 && eCnt * 2 > vCnt * 3 // d > 1.5
-        // thread-local probe, NOT session conf: two concurrent queries
-        // on one session must not clobber each other's value (same fix
-        // as lastDijkstraRounds)
-        lastPathSearchChoice.set(if (choice) "twosided" else "onesided")
-        choice
-      case _ => false
-    }
+    // reference seeding its hash expansion from the outer tuple's
+    // endpoints, nodeShortestpath.c SP_GET_PARAMETER); cross-validated
+    // against the VLE path universe (PathFinderCrossCheckSpec).
     val paths = finder match {
       case PathFinder.Dijkstra(weight, qual, limitK) =>
         dijkstra(b, rel, relName, weight, qual, limitK.getOrElse(1L), origins,
           targets)
-      case PathFinder.AllShortest =>
-        if (twoSided)
-          bfs2(b, rel, loV, hiV, keepAll = true, origins, targets, capMsg)
-        else bfs(b, rel, loV, hiV, keepAll = true, origins, targets, capMsg)
-      case _ =>
-        if (twoSided)
-          bfs2(b, rel, loV, hiV, keepAll = false, origins, targets, capMsg)
-        else bfs(b, rel, loV, hiV, keepAll = false, origins, targets, capMsg)
+      case f =>
+        bfs(b, rel, loV, hiV, keepAll = f == PathFinder.AllShortest, origins,
+          targets, capMsg)
     }
 
     // join on both endpoints
@@ -442,28 +396,35 @@ object Algo {
       .select(col("__start"), col("__cur"), col("__p.__edges").as("__edges"),
         col("__p.__ids").as("__ids"), col("__p.__vids").as("__vids"))
 
-  /** One side of a level-synchronous BFS over vertex ids: the frontier
-    * of paths at `depth` and the (origin, vertex) pairs visited so far.
-    * `step` expands one level — hop, anti-join the visited set, keep
-    * one path per pair unless `keepAll`, counted checkpoint, union the
-    * new arrivals into visited — and returns the level's row count.
-    * `vert` is the vertex the hop appends to `__vids`.
+  /** Level-synchronous BFS from the bound origins; visited-set pruning
+    * keeps one/all minimal-depth paths. The search carries vertex IDS
+    * only (__vids); vertex structs are re-attached once at the end for
+    * the surviving minimal paths — the per-level vertex join (the
+    * widest scan in the loop) happens once instead of once per level.
     *
     * The seed is NOT pre-marked visited — a cycle back to the origin is
-    * a valid shortest path (shortestpath((a)-[*]->(a))), and for the
-    * two-sided search pre-seeding the depth-0 states pruned the only
-    * split of a length-1 self-loop when origin == target (r12 review;
-    * PathFinderCrossCheckSpec pins it). First re-arrival at an origin
+    * a valid shortest path (shortestpath((a)-[*]->(a))), and pre-marking
+    * the origin would prune the only path of a length-1 self-loop
+    * (PathFinderCrossCheckSpec pins it). First re-arrival at an origin
     * lands in visited like any other vertex, so later (longer)
     * re-arrivals still prune.
     */
-  private final class BfsSide(ex: Expander, seed: DataFrame, vert: Column,
-      keepAll: Boolean) {
-    var frontier: DataFrame = seed
+  private def bfs(b: Builder, rel: RelPattern, lo: Long, hi: Long,
+      keepAll: Boolean, origins: DataFrame, targets: => DataFrame,
+      capMsg: Option[String]): DataFrame = {
+    val E = b.edgeScan(rel.types, rel.direction, rel.only)
+      .select(col("__edge"), col("__s"), col("__e"))
+    val ex = new Expander(b.spark, E, "__s")
+    val zero = zeroPaths(b, origins, "__vids")
+    val levels = new Levels(lo, hi)
+    levels.add(0L, zero)
+    var frontier = zero
+    // the (origin, vertex) pairs reached so far, as (__o, __at)
+    var visited: Option[DataFrame] = None
     var depth = 0L
-    private var visited: Option[DataFrame] = None
-    def step(): Long = {
-      val arrived = hop(ex, frontier, "__vids", Some(vert))
+    var exhausted = false
+    while (depth < hi && !exhausted) {
+      val arrived = hop(ex, frontier, "__vids", Some(col("__e")))
       // prune: only first arrivals per (origin, vertex); nothing is
       // visited before the first level, which stays a single join
       val next = visited.fold(arrived)(v => arrived.join(v,
@@ -476,37 +437,15 @@ object Algo {
         if (keepAll) next else minPath(next))
       frontier = cp
       depth += 1
-      if (n > 0L) {
+      exhausted = n == 0L
+      if (!exhausted) {
+        levels.add(depth, frontier)
         // no distinct: duplicates are harmless on the anti-join probe
         // side, and each frontier is checkpointed so the union stays
         // shallow — one less job per level
         val at = cp.select(col("__start").as("__o"), col("__cur").as("__at"))
         visited = Some(visited.fold(at)(_.unionAll(at)))
       }
-      n
-    }
-  }
-
-  /** Level-synchronous BFS from the bound origins; visited-set pruning
-    * keeps one/all minimal-depth paths. The search carries vertex IDS
-    * only (__vids); vertex structs are re-attached once at the end for
-    * the surviving minimal paths — the per-level vertex join (the
-    * widest scan in the loop) happens once instead of once per level.
-    */
-  private def bfs(b: Builder, rel: RelPattern, lo: Long, hi: Long,
-      keepAll: Boolean, origins: DataFrame, targets: => DataFrame,
-      capMsg: Option[String]): DataFrame = {
-    val E = b.edgeScan(rel.types, rel.direction, rel.only)
-      .select(col("__edge"), col("__s"), col("__e"))
-    val zero = zeroPaths(b, origins, "__vids")
-    val side = new BfsSide(new Expander(b.spark, E, "__s"), zero, col("__e"),
-      keepAll)
-    val levels = new Levels(lo, hi)
-    levels.add(0L, zero)
-    var exhausted = false
-    while (side.depth < hi && !exhausted) {
-      exhausted = side.step() == 0L
-      if (!exhausted) levels.add(side.depth, side.frontier)
     }
 
     // Loud cap, target-aware (same philosophy as the VLE cap; the
@@ -523,8 +462,7 @@ object Algo {
       // construction; restricting cur to the target set makes the
       // distinct matched-pair set a SUBSET of origins x targets, so
       // completeness is a count comparison — no |V|^2 cross-product
-      // probe just to decide whether to throw (r10 ADVICE; bfs2 keeps
-      // the same invariant via its metCount counter)
+      // probe just to decide whether to throw (r10 ADVICE)
       val matched = found.select(col("__start").as("__mo"), col("__cur").as("__mt"))
         .join(targets, col("__mt") === col("__target"), "left_semi")
       val allPairs = origins.count() * targets.count()
@@ -537,7 +475,7 @@ object Algo {
     minimalPaths(b, found, keepAll)
   }
 
-  /** The finish of both BFS forms: keep only the minimal depth per
+  /** The BFS finish: keep only the minimal depth per
     * (origin, vertex) pair — every such path, or with !keepAll the one
     * with the least edge-id array — then re-attach vertex structs.
     */
@@ -549,127 +487,6 @@ object Algo {
           min(size(col("__ids"))).over(Window.partitionBy("__start", "__cur")))
           .where(size(col("__ids")) === col("__minlen")).drop("__minlen")
       else minPath(paths))
-
-  /** Two-sided (meet-in-middle) BFS — the set-based analog of the
-    * reference's Hash2Side executor (nodeShortestpath.c /
-    * nodeHash2Side.c): frontiers expand alternately from the bound
-    * sources (forward) and targets (backward, the same hop over the
-    * reversed adjacency), so each side explores only half the path
-    * depth. Lengths are scanned in increasing order (a meet after
-    * expansions (f, b) has length exactly f+b), so the first meet per
-    * (source, target) pair is its shortest; met pairs are anti-joined
-    * out of later meets.
-    *
-    * Pruning invariant: every vertex on a shortest path sits at its
-    * minimal forward depth from the source AND minimal backward depth
-    * from the target (otherwise splicing a shorter prefix/suffix
-    * contradicts minimality), so the per-side visited sets preserve
-    * every shortest path. Searches carry vertex ids only; structs
-    * re-attach once at the end.
-    */
-  private def bfs2(b: Builder, rel: RelPattern, lo: Long, hi: Long,
-      keepAll: Boolean, origins: DataFrame, targets: DataFrame,
-      capMsg: Option[String]): DataFrame = {
-    val E = b.edgeScan(rel.types, rel.direction, rel.only)
-      .select(col("__edge"), col("__s"), col("__e"))
-    // forward expands out of __s (out-adjacency), backward into __e
-    // (in-adjacency, each edge's ends swapped) — hub degrees differ per
-    // direction. Backward paths grow from the target, so their arrays
-    // run target-first, and the vertex appended per hop is the one the
-    // hop leaves (the vertex AFTER the edge in forward order); the meet
-    // reverses all three once. ALL minimal-depth arrivals stay on both
-    // sides (unlike the one-sided growing path, the two halves are
-    // combined later — pruning one side to a representative could leave
-    // only edge-overlapping pairs and lose a valid shortest path); the
-    // single-path pick happens at the final per-pair aggregation.
-    // The depth-0 states are cheap projections of the already-
-    // snapshotted endpoint sets — no checkpoint needed.
-    val fwd = new BfsSide(new Expander(b.spark, E, "__s"),
-      zeroPaths(b, origins, "__vids"), col("__e"), keepAll = true)
-    val bwd = new BfsSide(
-      new Expander(b.spark, E.select(col("__edge"), col("__e").as("__s"),
-        col("__s").as("__e")), "__s"),
-      zeroPaths(b, targets.select(col("__target").as("__origin")), "__vids"),
-      col("__cur"), keepAll = true)
-
-    // met (source, target) pairs: later meets for them are longer
-    // paths. When every pair has met, the search is done — the classic
-    // two-sided early exit (both endpoint sets are known up front).
-    val allPairs = origins.count() * targets.count()
-    var metCount = 0L
-    var met: DataFrame = null
-    val levels = new Levels(lo, hi)
-    // zero-length: origin == target pairs (isZeroLengthVLE analog)
-    levels.add(0L, zeroPaths(b,
-      origins.join(targets, col("__origin") === col("__target"), "left_semi"),
-      "__vids"))
-
-    def meets(): DataFrame = {
-      val back = bwd.frontier.select(col("__start").as("__tgt"),
-        col("__cur").as("__bcur"), col("__edges").as("__bedges"),
-        col("__ids").as("__bids"), col("__vids").as("__bvids"))
-      var m = fwd.frontier.join(back, col("__cur") === col("__bcur") &&
-          !arrays_overlap(col("__ids"), col("__bids")))
-        .select(col("__start"),
-          col("__tgt").as("__cur"),
-          concat(col("__edges"), reverse(col("__bedges"))).as("__edges"),
-          concat(col("__ids"), reverse(col("__bids"))).as("__ids"),
-          concat(col("__vids"), reverse(col("__bvids"))).as("__vids"))
-      if (met != null)
-        m = m.join(met, m("__start") === met("__ms") && m("__cur") === met("__mt"),
-          "left_anti")
-      m
-    }
-
-    def absorb(newMeets: DataFrame, len: Long): Unit = {
-      val (materialized, n) = GraphCatalog.checkpointCounted(newMeets)
-      if (n > 0L) {
-        levels.add(len, materialized)
-        val pairs = materialized
-          .select(col("__start").as("__ms"), col("__cur").as("__mt")).distinct()
-        val (m, mn) = GraphCatalog.checkpointCounted(
-          if (met == null) pairs else met.unionAll(pairs).distinct())
-        met = m
-        metCount = mn
-      }
-    }
-
-    // meets start at length 1; the zero-length level is the one added
-    // to `levels` above (mirroring the one-sided zero-length semantics)
-    var exhausted = false
-    while (fwd.depth + bwd.depth < hi && !exhausted && metCount < allPairs) {
-      exhausted = (if (fwd.depth <= bwd.depth) fwd else bwd).step() == 0L
-      if (!exhausted) absorb(meets(), fwd.depth + bwd.depth)
-    }
-
-    // Loud cap, target-aware (see bfs): the two-sided search already
-    // tracks met pairs, so the unmatched test is the counter it keeps
-    // (zero-length pairs are not in the met set, so count them here)
-    if (capMsg.isDefined && !exhausted && metCount < allPairs) {
-      val zeroPairs = if (lo == 0L)
-        origins.join(targets, col("__origin") === col("__target"),
-          "left_semi").count()
-      else 0L
-      val stillMissing =
-        if (met == null) allPairs > zeroPairs
-        else {
-          var m = met
-          if (lo == 0L)
-            m = m.unionAll(origins
-              .join(targets, col("__origin") === col("__target"), "left_semi")
-              .select(col("__origin").as("__ms"), col("__origin").as("__mt")))
-          origins.crossJoin(targets)
-            .join(m, col("__origin") === col("__ms") &&
-              col("__target") === col("__mt"), "left_anti")
-            .head(1).nonEmpty
-        }
-      if (stillMissing) throw new IllegalStateException(capMsg.get)
-    }
-
-    // first-meet scanning already guarantees minimal length for the
-    // search; the zero-length level needs the same guard
-    minimalPaths(b, levels.paths(b, "__vids"), keepAll)
-  }
 
   /** Re-attach vertex structs for surviving paths: posexplode the
     * visited-vertex id array, one join against the vertex scan, rebuild
@@ -714,11 +531,17 @@ object Algo {
     val E2 = qual.map(q => E1.where(comp.toBool(comp.compile(q)))).getOrElse(E1)
     val E = E2.select(col("__edge"), col("__s"), col("__e"))
     val ex = new Expander(b.spark, E, "__s")
+    // the target prune below (like the reference's Dijkstra) is only
+    // sound for non-negative weights: a negative one fails the query
+    // instead of risking a wrong cheapest path
     def withWeight(df: DataFrame): DataFrame =
       df.withColumn(relName, col("__edge"))
         .withColumn("__w",
           coalesce(J.toDouble(comp.toJ(comp.compile(weight))), lit(1.0)))
         .drop(relName)
+        .withColumn("__w", when(col("__w") < 0.0, raise_error(concat(
+          lit("dijkstra requires non-negative edge weights, got "),
+          col("__w").cast("string")))).otherwise(col("__w")))
 
     def topK(df: DataFrame): DataFrame =
       if (limitK == 1L) {
@@ -766,22 +589,16 @@ object Algo {
     // settled target distance can neither displace a target entry nor
     // lead anywhere that could. Pruning is strict (> bound): an
     // equal-cost path may still win the (dist, length, ids) tiebreak
-    // through zero-weight edges. Negative weights break the bound —
-    // the conf restores the plain fixpoint (the reference's Dijkstra
-    // assumes non-negative weights too).
-    val prune = b.spark.conf
-      .get("spark.graft.dijkstraTargetPrune", "true") != "false"
-    // arming is LAZY (the target snapshot materializes only if a third
+    // through zero-weight edges.
+    // Arming is LAZY (the target snapshot materializes only if a third
     // round happens) and bounded: with an unselective target set (a
     // bare (b) pattern = every vertex) the "all (origin,target) k-sets
     // full" condition essentially never fires, so the per-round bounds
     // aggregation would be pure overhead — past the cap the search
     // just runs the plain fixpoint
-    val pruneMaxTargets = b.spark.conf
-      .get("spark.graft.dijkstraPruneMaxTargets", "65536").toLong
     lazy val nTargets = {
       val n = targets.count()
-      if (n > pruneMaxTargets) 0L else n
+      if (n > DijkstraPruneMaxTargets) 0L else n
     }
     // the bounds aggregation (2 shuffles/round + the frontier join) is
     // pure overhead on shallow searches that finish before any prune
@@ -789,7 +606,7 @@ object Algo {
     // from the third round on; deep searches (where it is the
     // asymptotic win) keep the early exit
     def pruneFrontier(f: DataFrame, round: Int): DataFrame = {
-      if (!prune || round < 2 || nTargets == 0L) return f
+      if (round < 2 || nTargets == 0L) return f
       val bounds = best
         .join(targets, col("__cur") === col("__target"), "left_semi")
         .groupBy("__start", "__cur")
@@ -827,6 +644,9 @@ object Algo {
     attachVerts(b, best.drop("__w", "__dist", "__new"))
   }
 
+  /** Target-set size past which dijkstra skips the target prune. */
+  private val DijkstraPruneMaxTargets = 65536L
+
   /** Test-observability hook: round count of the most recent dijkstra
     * on THIS thread. The previous session-conf form
     * (`spark.graft.dijkstra.lastRounds`) leaked a test probe into
@@ -836,16 +656,6 @@ object Algo {
   private val lastDijkstraRounds = new ThreadLocal[Integer]
   def lastDijkstraRoundCount: Option[Int] =
     Option(lastDijkstraRounds.get()).map(_.intValue)
-
-  /** Test-observability hook: the auto path-search strategy decision of
-    * the most recent findPaths on THIS thread (same rationale as
-    * [[lastDijkstraRoundCount]] — a session-conf probe would let
-    * concurrent queries clobber each other and mutates user-visible
-    * conf as a planning side effect).
-    */
-  private val lastPathSearchChoice = new ThreadLocal[String]
-  def lastPathSearchChoiceValue: Option[String] =
-    Option(lastPathSearchChoice.get())
 
   /** No paths, in the path-frame schema; `verts` as in [[zeroPaths]]. */
   private def emptyPaths(b: Builder, verts: String): DataFrame =

@@ -562,16 +562,20 @@ final class Builder(
         jj <- (i + 1) until edgeVars.length
       } yield uniqueQual(edgeVars(i), edgeVars(jj))
       val df2 = quals.foldLeft(cur.df)((d, q) => d.where(q))
-      var res = State(df2, cur.vars)
-      m.where.foreach { w =>
-        val (st1, w1) = rewriteEndpointFns(res, w)
-        val (st2, w2) = rewriteExistsPatterns(st1, w1)
-        res = st2
-        val comp = compiler(res)
-        res = State(res.df.where(comp.toBool(comp.compile(w2))), res.vars)
-      }
-      res
+      val res = State(df2, cur.vars)
+      m.where.fold(res)(filterWhere(res, _))
     }
+  }
+
+  /** `st` filtered by a WHERE predicate (MATCH's and a projection's):
+    * endpoint functions and pattern predicates first bind as hidden
+    * columns, then the predicate compiles against them.
+    */
+  private def filterWhere(st0: State, w: Expr): State = {
+    val (st1, w1) = rewriteEndpointFns(st0, w)
+    val (st2, w2) = rewriteExistsPatterns(st1, w1)
+    val comp = compiler(st2)
+    State(st2.df.where(comp.toBool(comp.compile(w2))), st2.vars)
   }
 
   /** Bind exists((a)-[:t]->(b)) / size((a)-[:t]->(b)) pattern
@@ -1006,10 +1010,7 @@ final class Builder(
       // must match it (subtree-always here would widen the re-bound
       // form relative to the scanned form)
       var df = st.df
-      n.label.foreach { l =>
-        labelOfKind(l, 'v')
-        df = inLabel(df, name, l, n.only)
-      }
+      n.label.foreach(l => df = inLabel(df, name, l, n.only))
       n.props.foreach { pe =>
         df = df.where(propQual(State(df, st.vars), name, pe))
       }
@@ -1101,12 +1102,15 @@ final class Builder(
 
   /** Keep the rows whose bound vertex `name` carries label `l` (ONLY:
     * exactly `l`, else its subtree): the filter a re-bound vertex gets
-    * where a fresh bind would scan the label.
+    * where a fresh bind would scan the label, with the scan's
+    * unknown-label and wrong-kind diagnostics.
     */
   private[cypher] def inLabel(df: DataFrame, name: String, l: String,
-      only: Boolean): DataFrame =
+      only: Boolean): DataFrame = {
+    labelOfKind(l, 'v')
     df.where(GraphId.labidOf(col(Compiler.q(name)).getField("id"))
       .isin(labidsOf(l, only).toSeq: _*))
+  }
 
   private def graphmetaHopEstimate(rel: RelPattern, prevPat: Option[NodePattern],
       node: NodePattern): Option[(Long, Option[Set[Int]], Option[Set[Int]])] = {
@@ -1454,11 +1458,9 @@ final class Builder(
     p.limit.foreach { e => df = df.limit(constLong(e).toInt) }
     var res = State(df, out.vars)
     p.where.foreach { w =>
-      // endpoint vertices join in as hidden columns for the filter only:
-      // the projection's own columns are what the clause binds
-      val (st2, w2) = rewriteEndpointFns(res, w)
-      val c2 = compiler(st2)
-      res = State(st2.df.where(c2.toBool(c2.compile(w2)))
+      // the hidden columns serve the filter only: the projection's own
+      // columns are what the clause binds
+      res = State(filterWhere(res, w).df
         .select(df.columns.map(c => col(Compiler.q(c))): _*), res.vars)
     }
     res

@@ -402,7 +402,7 @@ final class Compiler(
       // (Builder.rewriteExistsPatterns); reaching here means the
       // expression sits in an unsupported position
       throw new IllegalArgumentException(
-        "pattern predicates (exists/size over a pattern) are supported in MATCH WHERE and RETURN/WITH items only")
+        "pattern predicates (exists/size over a pattern) are supported in WHERE and RETURN/WITH items only")
   }
 
   private implicit final class ColExt(private val c: Column) {

@@ -853,6 +853,46 @@ class CypherEndToEndSpec extends AnyFunSuite {
     assert(q3.columns.toSeq == Seq("lang", "l") && q3.count() == 1)
   }
 
+  /** Two v vertices, n = 1 and n = 2, and one e edge from 1 to 2. */
+  private def oneEdgeGraph(name: String): CypherSession = {
+    val s = freshSession()
+    s.createGraph(name)
+    s.createVLabel("v"); s.createELabel("e")
+    s.cypher("CREATE (:v {n: 1})-[:e]->(:v {n: 2})")
+    s
+  }
+
+  test("a hop's re-bound target label raises the scan's label diagnostics") {
+    val s = oneEdgeGraph("rebind")
+    assert(rows(s.cypher(
+      "MATCH (a:v)-[:e]->(b) MATCH (a)-[:e]->(b:v) RETURN b.n AS n")) ==
+      Seq(Seq("2")))
+    val unknown = intercept[IllegalArgumentException](s.cypher(
+      "MATCH (a:v)-[:e]->(b) MATCH (a)-[:e]->(b:nosuch) RETURN b.n AS n")
+      .collect())
+    assert(unknown.getMessage.contains("label \"nosuch\" does not exist"),
+      unknown.getMessage)
+    val edge = intercept[IllegalArgumentException](s.cypher(
+      "MATCH (a:v)-[:e]->(b) MATCH (a)-[:e]->(b:e) RETURN b.n AS n").collect())
+    assert(edge.getMessage.contains("label \"e\" is edge label"), edge.getMessage)
+  }
+
+  test("pattern predicates under WITH ... WHERE match the MATCH WHERE form") {
+    val s = oneEdgeGraph("wexists")
+    val viaMatch = rows(s.cypher(
+      "MATCH (a:v) WHERE exists((a)-[:e]->()) RETURN a.n AS n"))
+    assert(viaMatch == Seq(Seq("1")))
+    assert(rows(s.cypher(
+      "MATCH (a:v) WITH a WHERE exists((a)-[:e]->()) RETURN a.n AS n")) ==
+      viaMatch)
+    // size() over a pattern too, and the WITH still binds only `a`
+    assert(rows(s.cypher(
+      "MATCH (a:v) WITH a WHERE size((a)-[:e]->()) = 0 RETURN a.n AS n")) ==
+      Seq(Seq("2")))
+    assert(s.cypher("MATCH (a:v) WITH a WHERE size((a)-[:e]->()) = 0 RETURN *")
+      .columns.toSeq == Seq("a"))
+  }
+
   test("ORDER BY follows jsonb btree type ranks across mixed types") {
     val df = agens.cypher(
       """UNWIND [{a: 1}, [1], true, 1, 'x', null] AS v

@@ -6,10 +6,11 @@ import graft.api.CypherSession
 import graft.graph.GraphCatalog
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Cross-validates the two-sided (meet-in-middle) shortest-path search
-  * against the VLE operator on random graphs: both enumerate the same
-  * simple-edge path universe, so per-pair minimal lengths and the
-  * number of minimal paths must agree exactly.
+/** Cross-validates the shortest-path search (the one-sided BFS from the
+  * bound sources with visited-set pruning) against the VLE operator on
+  * random graphs: both enumerate the same simple-edge path universe, so
+  * per-pair minimal lengths and the number of minimal paths must agree
+  * exactly.
   */
 class PathFinderCrossCheckSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -46,38 +47,15 @@ class PathFinderCrossCheckSpec extends AnyFunSuite {
     }
   }
 
-  for (seed <- Seq(11, 23, 47); mode <- Seq("onesided", "twosided")) {
-    test(s"$mode shortestpath/allshortestpaths agree with VLE minima (seed $seed)") {
-      spark.conf.set("spark.graft.pathSearch", mode)
-      try runCase(seed) finally spark.conf.unset("spark.graft.pathSearch")
+  for (seed <- Seq(11, 23, 47))
+    test(s"onesided shortestpath/allshortestpaths agree with VLE minima (seed $seed)") {
+      runCase(seed)
     }
-  }
-
-  test("auto mode: results agree and the stats-based choice tracks density") {
-    spark.conf.set("spark.graft.pathSearch", "auto")
-    try {
-      // dense random graph (90 edges / 20 vertices → d ≫ 1.5):
-      // auto must pick the meet-in-middle search AND agree with VLE
-      runCase(11)
-      assert(Algo.lastPathSearchChoiceValue.contains("twosided"))
-      // sparse chain (d ≈ 1): auto stays one-sided, same answers
-      val chain = buildRandomGraph(99, 12, 0)
-      (0 until 11).foreach(i => chain.cypher(
-        s"MATCH (x:v {n: $i}), (y:v {n: ${i + 1}}) CREATE (x)-[:e]->(y)"))
-      val d = chain.cypher(
-        """MATCH p = shortestpath((a:v {n: 0})-[:e*..11]->(b:v {n: 5}))
-          |RETURN length(p) AS l""".stripMargin).collect()
-      assert(d.map(_.getString(0)) sameElements Array("5"))
-      assert(Algo.lastPathSearchChoiceValue.contains("onesided"))
-    } finally spark.conf.unset("spark.graft.pathSearch")
-  }
 
   test("self-loop shortest path: origin == target, length 1 (both modes) — r12 review") {
-    // buildRandomGraph filters self-loops out, so this shape was never
-    // cross-checked: the two-sided search pre-seeded visitedF/visitedB
-    // with the depth-0 endpoint states, pruning the only split of a
-    // length-1 self-loop — one-sided found it, two-sided lost it (or
-    // returned a longer cycle as "shortest")
+    // buildRandomGraph filters self-loops out, so this shape is not
+    // cross-checked there: a search that pre-marks the origin visited
+    // loses the length-1 self-loop
     val root = Files.createTempDirectory("graft_selfloop").toString
     val s = new CypherSession(spark, new GraphCatalog(spark, root))
     s.createGraph("sl")
@@ -87,16 +65,10 @@ class PathFinderCrossCheckSpec extends AnyFunSuite {
     s.cypher("MATCH (x:v {n: 0}) CREATE (x)-[:e]->(x)") // self-loop
     // a 2-cycle through n=1 — the WRONG answer if the loop is lost
     s.cypher("MATCH (x:v {n: 0}), (y:v {n: 1}) CREATE (x)-[:e]->(y), (y)-[:e]->(x)")
-    for (mode <- Seq("onesided", "twosided")) {
-      spark.conf.set("spark.graft.pathSearch", mode)
-      try {
-        val out = s.cypher(
-          """MATCH p = shortestpath((a:v {n: 0})-[:e*1..4]->(b:v {n: 0}))
-            |RETURN length(p) AS l""".stripMargin).collect()
-        assert(out.map(_.getString(0)).toSeq == Seq("1"),
-          s"mode=$mode: ${out.mkString(",")}")
-      } finally spark.conf.unset("spark.graft.pathSearch")
-    }
+    val out = s.cypher(
+      """MATCH p = shortestpath((a:v {n: 0})-[:e*1..4]->(b:v {n: 0}))
+        |RETURN length(p) AS l""".stripMargin).collect()
+    assert(out.map(_.getString(0)).toSeq == Seq("1"), out.mkString(","))
   }
 
   private def runCase(seed: Int): Unit = {

@@ -53,34 +53,29 @@ class PathFinderGuardSpec extends AnyFunSuite {
   test("unbounded shortestpath past the cap: loud when pairs unmatched, " +
       "silent when all pairs answered") {
     val s = chainSession(70) // 69 edges end to end; default cap 64
-    for (mode <- Seq("onesided", "twosided")) {
-      spark.conf.set("spark.graft.pathSearch", mode)
-      try {
-        // target at hop 69 > cap 64 with a live frontier: the former
-        // behavior was a silent zero-row answer (the reference searches
-        // to LONG_MAX, parse_shortestpath.c:458)
-        val e = intercept[IllegalStateException] {
-          s.cypher(
-            """MATCH p = shortestpath((a:v {n: 0})-[:e*]->(b:v {n: 69}))
-              |RETURN length(p) AS l""".stripMargin).count()
-        }
-        assert(e.getMessage.contains("maxDepth"), s"$mode: ${e.getMessage}")
-        // raised cap serves it
-        spark.conf.set("spark.graft.maxDepth", "80")
-        try assert(s.cypher(
-          """MATCH p = shortestpath((a:v {n: 0})-[:e*]->(b:v {n: 69}))
-            |RETURN length(p) AS l""".stripMargin)
-          .collect().map(_.getString(0)).toSeq == Seq("69"))
-        finally spark.conf.unset("spark.graft.maxDepth")
-        // target WITHIN the cap: the pair is answered at depth 5, so
-        // the cap-hit is harmless and must stay silent even though the
-        // chain keeps extending past 64
-        assert(s.cypher(
-          """MATCH p = shortestpath((a:v {n: 0})-[:e*]->(b:v {n: 5}))
-            |RETURN length(p) AS l""".stripMargin)
-          .collect().map(_.getString(0)).toSeq == Seq("5"))
-      } finally spark.conf.unset("spark.graft.pathSearch")
+    // target at hop 69 > cap 64 with a live frontier: the former
+    // behavior was a silent zero-row answer (the reference searches
+    // to LONG_MAX, parse_shortestpath.c:458)
+    val e = intercept[IllegalStateException] {
+      s.cypher(
+        """MATCH p = shortestpath((a:v {n: 0})-[:e*]->(b:v {n: 69}))
+          |RETURN length(p) AS l""".stripMargin).count()
     }
+    assert(e.getMessage.contains("maxDepth"), e.getMessage)
+    // raised cap serves it
+    spark.conf.set("spark.graft.maxDepth", "80")
+    try assert(s.cypher(
+      """MATCH p = shortestpath((a:v {n: 0})-[:e*]->(b:v {n: 69}))
+        |RETURN length(p) AS l""".stripMargin)
+      .collect().map(_.getString(0)).toSeq == Seq("69"))
+    finally spark.conf.unset("spark.graft.maxDepth")
+    // target WITHIN the cap: the pair is answered at depth 5, so
+    // the cap-hit is harmless and must stay silent even though the
+    // chain keeps extending past 64
+    assert(s.cypher(
+      """MATCH p = shortestpath((a:v {n: 0})-[:e*]->(b:v {n: 5}))
+        |RETURN length(p) AS l""".stripMargin)
+      .collect().map(_.getString(0)).toSeq == Seq("5"))
   }
 
   test("dijkstra that cannot converge within the cap errors loudly") {

@@ -116,19 +116,14 @@ class JobCountSpec extends AnyFunSuite {
     assert((build, collect) == (30, 6))
   }
 
-  for (mode <- Seq("onesided", "twosided"))
-    test(s"shortestpath $mode: job count pinned") {
-      spark.conf.set("spark.graft.pathSearch", mode)
-      try {
-        val s = paths
-        val (build, collect) = jobsOf(s.cypher(
-          """MATCH p = shortestpath((a:v {n: 0})-[:e*]->(b:v {n: 8}))
-            |RETURN length(p) AS len""".stripMargin))
-        info(s"build $build, collect $collect")
-        assert((build, collect) ==
-          (if (mode == "onesided") (42, 3) else (57, 3)))
-      } finally spark.conf.unset("spark.graft.pathSearch")
-    }
+  test("shortestpath onesided: job count pinned") {
+    val s = paths
+    val (build, collect) = jobsOf(s.cypher(
+      """MATCH p = shortestpath((a:v {n: 0})-[:e*]->(b:v {n: 8}))
+        |RETURN length(p) AS len""".stripMargin))
+    info(s"build $build, collect $collect")
+    assert((build, collect) == (42, 3))
+  }
 
   test("VLE *1..6 (emptiness-probed): job count pinned") {
     val s = paths
@@ -169,12 +164,13 @@ class JobCountSpec extends AnyFunSuite {
       assert((build, collect) == pin)
     }
 
-  test("dijkstra LIMIT 2: job count pinned") {
-    val s = paths
-    val (build, collect) = jobsOf(s.cypher(
-      """MATCH p = dijkstra((a:v {n: 0})-[e:e]->(b:v {n: 8}), e.w LIMIT 2)
-        |RETURN length(p) AS len""".stripMargin))
-    info(s"build $build, collect $collect")
-    assert((build, collect) == (69, 3))
-  }
+  for ((name, limit) <- Seq(("dijkstra", ""), ("dijkstra LIMIT 2", " LIMIT 2")))
+    test(s"$name: job count pinned") {
+      val s = paths
+      val (build, collect) = jobsOf(s.cypher(
+        s"""MATCH p = dijkstra((a:v {n: 0})-[e:e]->(b:v {n: 8}), e.w$limit)
+          |RETURN length(p) AS len""".stripMargin))
+      info(s"build $build, collect $collect")
+      assert((build, collect) == (69, 3))
+    }
 }
