@@ -38,23 +38,28 @@ object WriteOps {
   /** CREATE pattern per input row (ExecCreateGraph execCypherCreate.c:30).
     * New vertices/edges get ids packed from a driver-reserved range
     * (SURVEY §7.3 hard part 4).
-    *
-    * @param validated whether the caller already ran
-    *   [[validateCreatePaths]] on `paths` (MERGE does, before its
-    *   match/create fork)
     */
-  def create(b: Builder, st0: State, paths: Seq[PathPattern],
-      validated: Boolean = false): State = {
-    if (!validated) validateCreatePaths(st0.vars, paths)
-    var st = st0
+  def create(b: Builder, st: State, paths: Seq[PathPattern]): State = {
+    validateCreatePaths(st.vars, paths)
     // snapshot the input FIRST (the write makes the frame's lineage
     // side-effecting; localCheckpoint isolates it), then index over the
     // cached blocks: the partition-counts pass and every __cidx
     // consumer are cheap cached projections, and the input plan
     // executes exactly once. The row count rides the counts collect.
-    val (indexed, n) = b.withRowIndexCounted(
-      st.df.localCheckpoint(true), "__cidx")
-    var df = indexed
+    val (indexed, n) = b.withRowIndexCounted(st.df.localCheckpoint(true), "__cidx")
+    createIndexed(b, State(indexed, st.vars), n, paths, Nil)
+  }
+
+  /** [[create]] over input rows already snapshotted and indexed in
+    * `__cidx` (`n` rows), for paths already validated. `onCreate` holds
+    * MERGE's ON CREATE SET items on the new elements: they apply to the
+    * new elements' property maps before the append, so a created
+    * element is written once (ExecMergeGraph applies ON CREATE SET to
+    * the tuple it has just built, execCypherMerge.c:35).
+    */
+  private def createIndexed(b: Builder, st: State, n: Long,
+      paths: Seq[PathPattern], onCreate: Seq[SetItem]): State = {
+    var df = st.df
     var vars = st.vars
 
     // appends DEFER until the whole statement has validated and every
@@ -71,10 +76,8 @@ object WriteOps {
     // still violates a unique constraint even though no single
     // element's batch repeats the key and nothing has been appended
     // yet.
-    val pendingChecks = scala.collection.mutable.ArrayBuffer
-      .empty[(String, DataFrame => DataFrame)]
-    val deferredAppends = scala.collection.mutable.ArrayBuffer
-      .empty[DataFrame => Unit]
+    val pendingChecks = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    val deferredAppends = scala.collection.mutable.ArrayBuffer.empty[DataFrame => Unit]
     // one new element per input row: resolve its label of `kind`,
     // reserve ids, bind the struct (id, the `ends` fields, properties)
     // and register its statement-level check and deferred append
@@ -93,9 +96,7 @@ object WriteOps {
       df = df.withColumn(name, struct(fields.map { case (f, c) => c.as(f) }: _*))
       vars = vars :+ (name -> kind)
       val elem = col(Compiler.q(name))
-      pendingChecks += (label -> { fdf: DataFrame =>
-        fdf.select(elem.getField("properties").as("properties"))
-      })
+      pendingChecks += (label -> name)
       deferredAppends += { fdf =>
         b.catalog.append(b.graph, label,
           fdf.select(fields.map { case (f, _) => elem.getField(f).as(f) }: _*))
@@ -144,14 +145,28 @@ object WriteOps {
         vars = vars :+ (pv -> KP)
       }
     }
+    // ON CREATE SET composes over the complete new bindings (a value
+    // may read any pattern variable, as it reads the created row after
+    // the append in the reference). The constraint checks keep seeing
+    // the pattern's map (a plain SET runs no check either), so it is
+    // kept aside in __pre_<var>.
+    val assigned = setProps(b.compiler(State(df, vars)), onCreate)
+    assigned.foreach { case (v, np) =>
+      df = df.withColumn(s"__pre_$v", propsOf(v))
+        .withColumn(v, col(Compiler.q(v)).withField("properties", np))
+    }
     // force every element column (ids + property maps incl. the
     // object-shape raise_error) BEFORE the first append; then ALL
     // constraint checks, then all appends
     val finalDf = df.localCheckpoint(true)
-    checkConstraints(b, pendingChecks.toSeq.map { case (l, fx) =>
-      (l, fx(finalDf)) })
+    checkConstraints(b, pendingChecks.toSeq.map { case (l, name) =>
+      (l, finalDf.select((if (assigned.contains(name)) col(s"__pre_$name")
+        else propsOf(name)).as("properties")))
+    })
     deferredAppends.foreach(_(finalDf))
-    State(finalDf.drop("__cidx"), vars)
+    // like SET: each assigned variable counts its elements once
+    b.updatedProperties += n * assigned.size
+    State(finalDf.drop("__cidx" +: assigned.keys.map("__pre_" + _).toSeq: _*), vars)
   }
 
   /** Write-time constraint validation (reference:
@@ -239,12 +254,10 @@ object WriteOps {
   def delete(b: Builder, st: State, d: DeleteClause): State = {
     val comp = b.compiler(st)
     val frame = st.df.localCheckpoint(true)
-    var vertexIds: DataFrame = null
-    var edgeIds: DataFrame = null
-    def addV(df: DataFrame): Unit =
-      vertexIds = if (vertexIds == null) df else vertexIds.unionAll(df)
-    def addE(df: DataFrame): Unit =
-      edgeIds = if (edgeIds == null) df else edgeIds.unionAll(df)
+    val vertexIds, edgeIds = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    def ids(id: Column): DataFrame = frame.select(id.as("id"))
+    def elemIds(elems: Column): DataFrame =
+      frame.select(explode(elems).as("__x")).select(col("__x").getField("id").as("id"))
 
     d.exprs.foreach {
       // DELETE startnode(e)/endnode(e) (edge_start_vertex graph.c:986;
@@ -254,29 +267,25 @@ object WriteOps {
       case FnCall(fn @ ("startnode" | "endnode"), Seq(arg), _)
           if comp.compile(arg).kind == KE =>
         val f = if (fn == "startnode") "start" else "end"
-        addV(frame.select(comp.compile(arg).col.getField(f).as("id")))
+        vertexIds += ids(comp.compile(arg).col.getField(f))
       case e =>
       val ce = comp.compile(e)
       ce.kind match {
-        case KV => addV(frame.select(ce.col.getField("id").as("id")))
-        case KE => addE(frame.select(ce.col.getField("id").as("id")))
-        case KEL => addE(frame.select(explode(ce.col).as("__x"))
-          .select(col("__x").getField("id").as("id")))
-        case KVL => addV(frame.select(explode(ce.col).as("__x"))
-          .select(col("__x").getField("id").as("id")))
+        case KV => vertexIds += ids(ce.col.getField("id"))
+        case KE => edgeIds += ids(ce.col.getField("id"))
+        case KEL => edgeIds += elemIds(ce.col)
+        case KVL => vertexIds += elemIds(ce.col)
         case KP =>
-          addV(frame.select(explode(ce.col.getField("vertices")).as("__x"))
-            .select(col("__x").getField("id").as("id")))
-          addE(frame.select(explode(ce.col.getField("edges")).as("__x"))
-            .select(col("__x").getField("id").as("id")))
+          vertexIds += elemIds(ce.col.getField("vertices"))
+          edgeIds += elemIds(ce.col.getField("edges"))
         case _ => throw new IllegalArgumentException(s"cannot DELETE expression $e")
       }
     }
 
-    val vIds = if (vertexIds == null) null else vertexIds.distinct().localCheckpoint(true)
-    var eIds = if (edgeIds == null) null else edgeIds.distinct()
+    val vSnap = vertexIds.reduceOption(_ unionAll _).map(v => snapshotIds(v.distinct()))
+    var eIds = edgeIds.reduceOption(_ unionAll _).map(_.distinct())
 
-    if (vIds != null) {
+    vSnap.map(_.ids).foreach { vIds =>
       // incident edges: DETACH deletes them; plain DELETE errors if any
       // remain (execCypherDelete.c vertex-has-edges check)
       // two equi semi-joins (hash, broadcastable), NOT one OR-condition
@@ -288,20 +297,14 @@ object WriteOps {
         .unionAll(
           allEdges.join(vIds, allEdges("end") === vIds("id"), "left_semi")
             .select(col("id")))
-      if (d.detach) {
-        eIds = if (eIds == null) incident else eIds.unionAll(incident)
-      } else {
-        val pending = if (eIds == null) incident
-          else incident.join(eIds, Seq("id"), "left_anti")
-        if (!pending.isEmpty)
-          throw new IllegalStateException("vertices with edges can not be removed")
-      }
+      if (d.detach) eIds = Some(eIds.fold(incident)(_.unionAll(incident)))
+      else if (!eIds.fold(incident)(incident.join(_, Seq("id"), "left_anti")).isEmpty)
+        throw new IllegalStateException("vertices with edges can not be removed")
     }
-    val eIdsF = if (eIds == null) null else eIds.distinct().localCheckpoint(true)
+    val eSnap = eIds.map(e => snapshotIds(e.distinct()))
 
     // both victim-id sets are snapshotted before any file changes
-    val removed = patchLabels(b,
-      Seq(eIdsF -> 'e', vIds -> 'v').filter(_._1 != null)) {
+    val removed = patchLabels(b, eSnap.map(_ -> 'e').toSeq ++ vSnap.map(_ -> 'v')) {
       (cur, ids) => cur.join(ids, Seq("id"), "left_anti")
     }
     b.deletedEdges += removed.getOrElse('e', 0L)
@@ -309,15 +312,27 @@ object WriteOps {
     State(frame, st.vars)
   }
 
+  /** An "id"-column frame snapshotted for [[patchLabels]]: its row
+    * count and the labids it holds ride the checkpoint as observed
+    * metrics, so finding the labels to patch costs no job of its own.
+    */
+  private final case class IdSnapshot(ids: DataFrame, n: Long, labids: Seq[Int])
+
+  private def snapshotIds(ids: DataFrame): IdSnapshot = {
+    val seen = org.apache.spark.sql.Observation()
+    val (cp, n) = GraphCatalog.checkpointCounted(
+      ids.observe(seen, collect_set(GraphId.labidOf(col("id"))).as("labids")))
+    IdSnapshot(cp, n, seen.get("labids").asInstanceOf[scala.collection.Seq[Int]].toSeq)
+  }
+
   /** Rewrite the label tables that hold the ids of each `(ids, kind)`
-    * set (an "id"-column frame the caller snapshotted): one labid
-    * collect per set, then `patch(rows, ids)` over the touched files of
-    * each hit label (GraphCatalog.patchFiles: files whose id range holds
-    * no victim keep their bytes, so a point write against a huge label
-    * does not rewrite the label). Labels resolve within the set's kind
-    * rather than trusting labid-global uniqueness: if labid allocation
-    * ever became per-kind, a vertex write must not patch an edge table
-    * whose labid collides.
+    * snapshot: `patch(rows, ids)` runs over the touched files of each
+    * label the snapshot's labids name (GraphCatalog.patchFiles: files
+    * whose id range holds no victim keep their bytes, so a point write
+    * against a huge label does not rewrite the label). Labels resolve
+    * within the set's kind rather than trusting labid-global
+    * uniqueness: if labid allocation ever became per-kind, a vertex
+    * write must not patch an edge table whose labid collides.
     *
     * Each label's patch touches only its own directory under its own
     * label lock with an atomic meta merge, so the patches are
@@ -329,13 +344,12 @@ object WriteOps {
     * DETACH DELETE's traced builder time at 1.71 s vs 2.37 s median).
     * Returns the rows removed per kind.
     */
-  private def patchLabels(b: Builder, sets: Seq[(DataFrame, Char)])
+  private def patchLabels(b: Builder, sets: Seq[(IdSnapshot, Char)])
       (patch: (DataFrame, DataFrame) => DataFrame): Map[Char, Long] = {
     val labels = b.catalog.labels(b.graph)
-    val tasks = sets.flatMap { case (ids, kind) =>
+    val tasks = sets.flatMap { case (snap, kind) =>
       val byLabid = labels.filter(_.kind == kind).map(l => l.labid -> l.name).toMap
-      ids.select(GraphId.labidOf(col("id"))).distinct().collect().toSeq
-        .flatMap(r => byLabid.get(r.getInt(0)).map(n => (kind, n, ids)))
+      snap.labids.sorted.flatMap(l => byLabid.get(l).map(n => (kind, n, snap.ids)))
     }
     def run(t: (Char, String, DataFrame)): (Char, Long) = {
       val (kind, lname, ids) = t
@@ -360,26 +374,19 @@ object WriteOps {
 
   // ================================================================ SET
 
-  /** SET / REMOVE / += (ExecSetGraph execCypherSet.c:141).
-    * `cond` restricts affected rows (used by MERGE's ON CREATE/ON MATCH).
-    */
-  def set(b: Builder, st: State, items: Seq[SetItem], cond: Column): State = {
-    // __setord gives last-write-wins ordering for multiple updates of
-    // one element within a statement (enable_multiple_update analog).
-    // Key = bound element ids in binding order — the deterministic
-    // analog of PG's ascending nested-loop iteration order.
-    val ordCols = st.vars.collect {
-      case (w, KV | KE) => format_string("%020d", col(Compiler.q(w)).getField("id"))
-    }
-    val frame = st.df.withColumn("__setord",
-        if (ordCols.isEmpty) lit("0") else concat(ordCols: _*))
-      .localCheckpoint(true)
-    // group items per target variable, compose property transforms
-    val byVar = scala.collection.mutable.LinkedHashMap[String, Column]()
-    val comp = b.compiler(State(frame, st.vars))
-    def currentProps(v: String): Column =
-      byVar.getOrElse(v, col(Compiler.q(v)).getField("properties"))
+  private def propsOf(v: String): Column = col(Compiler.q(v)).getField("properties")
 
+  /** The property map each target variable ends with after `items`,
+    * in item order (ExecSetGraph execCypherSet.c:141 — SET / REMOVE /
+    * +=): an item sees `v`'s map updated by the earlier items on `v`,
+    * while every value reads the frame `comp` compiles against. [[set]]
+    * applies them to bound elements and [[createIndexed]] to the new
+    * elements' pattern maps (MERGE's ON CREATE SET).
+    */
+  private def setProps(comp: Compiler,
+      items: Seq[SetItem]): scala.collection.mutable.LinkedHashMap[String, Column] = {
+    val byVar = scala.collection.mutable.LinkedHashMap[String, Column]()
+    def currentProps(v: String): Column = byVar.getOrElse(v, propsOf(v))
     items.foreach {
       case SetProp(Prop(Vbl(v), k), value) =>
         val newVal = comp.toJ(comp.compile(value))
@@ -402,63 +409,99 @@ object WriteOps {
         byVar(v) = if (add) J.concat(currentProps(v), m) else m
       case other => throw new IllegalArgumentException(s"unsupported SET item $other")
     }
+    byVar
+  }
 
+  /** The variable a SET item assigns (None for an unsupported shape,
+    * which [[setProps]] rejects).
+    */
+  private def setTarget(item: SetItem): Option[String] = item match {
+    case SetProp(Prop(Vbl(v), _), _) => Some(v)
+    case SetProp(Index(Vbl(v), _), _) => Some(v)
+    case RemoveProp(Prop(Vbl(v), _)) => Some(v)
+    case SetMap(v, _, _) => Some(v)
+    case _ => None
+  }
+
+  /** Last-write-wins order of a statement's rows for multiple updates
+    * of one element (enable_multiple_update analog): the bound element
+    * ids in binding order — the deterministic analog of PG's ascending
+    * nested-loop iteration order.
+    */
+  private def setOrder(vars: Seq[(String, Kind)]): Column = {
+    val ordCols = vars.collect {
+      case (w, KV | KE) => format_string("%020d", col(Compiler.q(w)).getField("id"))
+    }
+    if (ordCols.isEmpty) lit("0") else concat(ordCols: _*)
+  }
+
+  /** Whether the row with the LAST [[setOrder]] wins when several rows
+    * update one element. With enable_multiple_update off the reference
+    * WARNS and keeps the FIRST update instead (execCypherSet.c:316-324
+    * HASH_FIND skip).
+    */
+  private def multipleUpdate(b: Builder): Boolean =
+    b.spark.conf.get("spark.graft.enableMultipleUpdate", "true") != "false"
+
+  /** The off-mode report of elements updated by several rows (bounded
+    * sample — the count is the aggregate signal): `updates` has one
+    * "id" row per element with its row count in `__nupd`.
+    */
+  private def warnRepeated(updates: DataFrame): Unit = {
+    val repeated = updates.where(col("__nupd") > 1)
+    val total = repeated.count()
+    repeated.select("id").limit(5).collect().foreach { r =>
+      val gid = r.getLong(0)
+      System.err.println(
+        s"WARNING:  graph element(${GraphId.labid(gid)},${GraphId.locid(gid)}) " +
+          "has been SET multiple times")
+    }
+    if (total > 5) System.err.println(
+      s"WARNING:  ... and ${total - 5} more elements SET multiple times")
+  }
+
+  /** SET / REMOVE / += (ExecSetGraph execCypherSet.c:141).
+    * `cond` restricts affected rows (MERGE's matched or created rows).
+    */
+  def set(b: Builder, st: State, items: Seq[SetItem], cond: Column): State = {
+    val frame = st.df.withColumn("__setord", setOrder(st.vars))
+      .localCheckpoint(true)
+    val comp = b.compiler(State(frame, st.vars))
+    val multiOk = multipleUpdate(b)
     var newDf = frame
-    byVar.foreach { case (v, newProps) =>
+    setProps(comp, items).foreach { case (v, newProps) =>
       val kind = st.kinds.getOrElse(v,
         throw new IllegalArgumentException(s"variable `$v` not defined"))
       require(kind == KV || kind == KE, s"SET target `$v` must be a graph element")
-      // updates table: id -> new properties; last write (statement row
-      // order) wins when several rows update one element. With
-      // enable_multiple_update off the reference WARNS and keeps the
-      // FIRST update instead (execCypherSet.c:316-324 HASH_FIND skip),
-      // so the off-mode flips to min_by and reports the repeated
-      // elements (bounded sample — the count is the aggregate signal).
-      val multiOk = b.spark.conf
-        .get("spark.graft.enableMultipleUpdate", "true") != "false"
-      val (updates, nUpd) = GraphCatalog.checkpointCounted(newDf.where(cond)
+      // updates table: id -> new properties; the row [[setOrder]] picks
+      // (see [[multipleUpdate]]) wins when several rows update one element
+      val upd = snapshotIds(newDf.where(cond)
         .select(col(Compiler.q(v)).getField("id").as("id"),
           newProps.as("__np"), col("__setord"))
         .groupBy("id").agg(
           (if (multiOk) max_by(col("__np"), col("__setord"))
            else min_by(col("__np"), col("__setord"))).as("__np"),
           count(lit(1)).as("__nupd")))
-      if (!multiOk) {
-        val repeated = updates.where(col("__nupd") > 1)
-        val total = repeated.count()
-        repeated.select("id").limit(5).collect().foreach { r =>
-          val gid = r.getLong(0)
-          System.err.println(
-            s"WARNING:  graph element(${GraphId.labid(gid)},${GraphId.locid(gid)}) " +
-              "has been SET multiple times")
-        }
-        if (total > 5) System.err.println(
-          s"WARNING:  ... and ${total - 5} more elements SET multiple times")
-      }
-      b.updatedProperties += nUpd
-      patchLabels(b, Seq(updates -> (if (kind == KV) 'v' else 'e'))) {
-        (cur, upd) => cur.join(upd.select(col("id"), col("__np")), Seq("id"), "left")
+      if (!multiOk) warnRepeated(upd.ids)
+      b.updatedProperties += upd.n
+      patchLabels(b, Seq(upd -> (if (kind == KV) 'v' else 'e'))) {
+        (cur, u) => cur.join(u.select(col("id"), col("__np")), Seq("id"), "left")
           .withColumn("properties", coalesce(col("__np"), col("properties")))
           .drop("__np")
       }
       // refresh EVERY in-flight element var by id (heap semantics:
       // aliases of the same element observe the update; PG rereads the
       // heap with a new CommandId between clauses)
+      val upd2 = upd.ids.select(col("id").as("__uid"), col("__np").as("__unp"))
       st.vars.foreach { case (w, wk) =>
         if (wk == KV || wk == KE) {
-          val upd = updates.select(col("id").as("__uid"), col("__np").as("__unp"))
           val wId = col(Compiler.q(w)).getField("id")
-          val props2 = coalesce(col("__unp"), col(Compiler.q(w)).getField("properties"))
-          newDf = newDf.join(upd, wId === col("__uid"), "left")
-          newDf =
-            if (wk == KV)
-              newDf.withColumn(w, struct(wId.as("id"), props2.as("properties")))
-            else
-              newDf.withColumn(w, struct(wId.as("id"),
-                col(Compiler.q(w)).getField("start").as("start"),
-                col(Compiler.q(w)).getField("end").as("end"),
-                props2.as("properties")))
-          newDf = newDf.drop("__uid", "__unp")
+          val ends = if (wk == KV) Nil
+            else Seq("start", "end").map(f => col(Compiler.q(w)).getField(f).as(f))
+          newDf = newDf.join(upd2, wId === col("__uid"), "left")
+            .withColumn(w, struct(wId.as("id") +: ends :+
+              coalesce(col("__unp"), propsOf(w)).as("properties"): _*))
+            .drop("__uid", "__unp")
         }
       }
     }
@@ -546,6 +589,10 @@ object WriteOps {
     * updates. That shape takes the row-sequential path (bounded driver
     * loop — the reference is row-at-a-time here too and the shape is
     * inherently sequential); everything else uses the set-based path.
+    *
+    * Either way a batch writes each created element once, with its ON
+    * CREATE SET already applied, and patches only the rows it matched
+    * with ON MATCH SET (see mergeBatch).
     */
   def merge(b: Builder, st0: State, m: MergeClause): State = {
     // pattern rules apply whether or not anything misses (see
@@ -649,86 +696,54 @@ object WriteOps {
       .localCheckpoint(true)
     val base = State(tagged, st0.vars)
 
-    def matchOnce(s: State): State =
-      b.buildMatch(s, Match(Seq(m.path), optional = false, where = None))
-
     // 1. try to match the whole pattern. Deliberately NOT materialized:
-    //    each consumer (missing-rows anti-join, create() via `missing`,
-    //    the final union, ON SET routing) prunes the match subtree to
-    //    the columns it needs — the isEmpty probe computes only __mrow.
-    //    A localCheckpoint here forces the full wide match (every var's
-    //    jsonb struct) and measured 25-60% SLOWER across the MERGE
-    //    family at bench scale.
-    val firstTry = matchOnce(base)
+    //    each consumer (missing-rows anti-join, the final union) prunes
+    //    the match subtree to the columns it needs. A localCheckpoint
+    //    here forces the full wide match (every var's jsonb struct) and
+    //    measured 25-60% SLOWER across the MERGE family at bench scale.
+    val firstTry = b.buildMatch(base, Match(Seq(m.path), optional = false, where = None))
+    val matchNewVars = firstTry.vars.drop(base.vars.length)
     val matchedRows = firstTry.df.select(col("__mrow")).distinct()
     val missing = tagged.join(matchedRows, Seq("__mrow"), "left_anti")
 
-    // 2. create the full pattern for DISTINCT missing bindings
-    //    (MERGE uniqueness: identical bindings create one instance)
-    val createdIdsHolder = new scala.collection.mutable.ArrayBuffer[DataFrame]()
-    val anyMissing = !missing.isEmpty
-    // the created bindings keyed by pattern identity, for step 3's
-    // join-back (None when the optimized re-match can't apply)
-    var createdSide: Option[(DataFrame, Int)] = None
-    var createdSideVarsForError: Seq[String] = Nil
-    var missingKeyed: DataFrame = missing
-    val matchNewVars = firstTry.vars.drop(base.vars.length)
-    if (anyMissing) {
-      // distinct by the pattern's evaluated identity: rendered prop maps
-      // + ids of any pre-bound endpoint vars
-      val comp = b.compiler(State(missing, st0.vars))
-      val keyCols = scala.collection.mutable.ArrayBuffer[Column]()
-      // prop-map identity is the memcomparable SORT KEY, not the
-      // rendered string: MERGE matches by jsonb equality, where {x: 1}
-      // and {x: 1.0} are ONE identity (the reference's row-at-a-time
-      // MERGE has the second row match the first row's node) — a
-      // rendered-string key would dedup them into two created elements
-      (m.path.head +: m.path.tail.map(_._2)).foreach { nd =>
-        nd.props.foreach(pe =>
-          keyCols += J.sortKey(comp.toJ(comp.compile(pe))))
-        nd.variable.foreach { v =>
-          if (st0.kinds.contains(v)) keyCols += col(Compiler.q(v)).getField("id")
-        }
-      }
-      m.path.tail.map(_._1).foreach { rl =>
-        rl.props.foreach(pe =>
-          keyCols += J.sortKey(comp.toJ(comp.compile(pe))))
-      }
-      missingKeyed = keyCols.toSeq.zipWithIndex.foldLeft(missing) {
-        case (d, (c, i)) => d.withColumn(s"__mk_$i", c)
-      }
-      val dedup =
-        if (keyCols.isEmpty) missingKeyed.limit(1)
-        else missingKeyed.dropDuplicates(
-          keyCols.indices.map(i => s"__mk_$i").toSeq)
-      val created = create(b, State(dedup, st0.vars), Seq(m.path),
-        validated = true)
-      // collect created ids for ON CREATE routing
-      val createdNewVars = created.vars.drop(st0.vars.length)
-      createdSideVarsForError = createdNewVars.map(_._1)
-      createdNewVars.foreach { case (v, k) =>
-        if (k == KV || k == KE)
-          createdIdsHolder += created.df.select(
-            col(Compiler.q(v)).getField("id").as("id"))
-      }
-      // created bindings keyed by identity, aligned per-kind to the
-      // match side's variable names (anonymous elements get fresh names
-      // per build; within each kind both builds bind in pattern order,
-      // but the node/edge interleaving differs — see mergeVarPairs)
-      mergeVarPairs(createdNewVars, matchNewVars).foreach { pairs =>
-        val sel = keyCols.indices.map(i => col(s"__mk_$i").as(s"__ck_$i")) ++
-          pairs.map { case ((cn, _), (mn, _)) =>
-            col(Compiler.q(cn)).as(mn) }
-        // materialized: the created bindings are already on disk, and
-        // checkpointing breaks the self-lineage with missingKeyed
-        createdSide = Some((created.df.select(sel: _*).localCheckpoint(true),
-          keyCols.length))
-      }
-    }
-    val (createdIds, createdCnt) =
-      if (createdIdsHolder.isEmpty)
-        (b.spark.createDataFrame(Seq.empty[Tuple1[Long]]).toDF("id"), 0L)
-      else GraphCatalog.checkpointCounted(createdIdsHolder.reduce(_ unionAll _).distinct())
+    // 2. create the full pattern once per DISTINCT missing binding
+    //    (MERGE uniqueness: identical bindings create one instance),
+    //    keyed by the pattern's evaluated identity: prop maps + ids of
+    //    any pre-bound endpoint vars. Prop-map identity is the
+    //    memcomparable SORT KEY, not the rendered string: MERGE matches
+    //    by jsonb equality, where {x: 1} and {x: 1.0} are ONE identity
+    //    (the reference's row-at-a-time MERGE has the second row match
+    //    the first row's node). A pattern with no identity parts is one
+    //    identity.
+    val comp = b.compiler(State(missing, st0.vars))
+    def propKey(pe: Expr): Column = J.sortKey(comp.toJ(comp.compile(pe)))
+    val keyCols = (m.path.head +: m.path.tail.map(_._2)).flatMap { nd =>
+      nd.props.map(propKey) ++
+        nd.variable.filter(st0.kinds.contains).map(v => col(Compiler.q(v)).getField("id"))
+    } ++ m.path.tail.flatMap(_._1.props.map(propKey))
+    val keyed = (if (keyCols.isEmpty) Seq(lit(0)) else keyCols)
+      .zipWithIndex.map { case (c, i) => s"__mk_$i" -> c }
+    val keys = keyed.map(_._1)
+    val missingKeyed = missing.withColumns(keyed.toMap)
+    // ON CREATE items on the elements the MERGE creates fold into the
+    // create; the rest (a pre-bound endpoint, say) stay a SET over the
+    // created rows below
+    val newElems = m.path.varNames.toSet -- m.path.variable -- st0.kinds.keySet
+    val (foldItems, restItems) =
+      m.onCreate.partition(i => setTarget(i).exists(newElems))
+    // Each key's instance is built from the row that SET's order would
+    // let win (see setOrder/multipleUpdate), so an ON CREATE value read
+    // from the input is the one the SET over all the key's rows kept.
+    val multiOk = multipleUpdate(b)
+    val ord = setOrder(st0.vars)
+    val dedup = missingKeyed.groupBy(keys.map(col): _*)
+      .agg((if (multiOk) max_by(struct(col("*")), ord)
+        else min_by(struct(col("*")), ord)).as("__row"),
+        count(lit(1)).as("__nupd"))
+      .select("__row.*", "__nupd")
+    // the snapshot create indexes over counts the distinct missing
+    // bindings: no rows means nothing to create (no separate probe)
+    val (indexed, nCreate) = b.withRowIndexCounted(dedup.localCheckpoint(true), "__cidx")
 
     // 3. re-match. A row that matched in step 1 keeps exactly its
     //    original matches: every element created in step 2 carries some
@@ -738,69 +753,49 @@ object WriteOps {
     //    set. A missing row's post-create matches are exactly the
     //    instance created for its own identity key. Both facts together
     //    replace the second full pattern match (and its label scans)
-    //    with a key-join of the missing rows onto the created bindings.
-    //    When nothing was missing the first match already bound every
-    //    row — reuse it outright.
-    val finalMatch =
-      if (!anyMissing) firstTry
-      else createdSide match {
-        case Some((cs, nKeys)) =>
-          val rematched =
-            if (nKeys == 0) missingKeyed.crossJoin(broadcast(cs))
-            else {
-              val cond = (0 until nKeys).map(i =>
-                col(s"__mk_$i") <=> col(s"__ck_$i")).reduce(_ && _)
-              missingKeyed.join(cs, cond)
-            }
-          val dropCols = (0 until nKeys)
-            .flatMap(i => Seq(s"__mk_$i", s"__ck_$i"))
-          // the match side carries shredded sidecar columns from the
-          // label scans that the created side has no counterpart for:
-          // project BOTH sides to the shared frame (input columns +
-          // pattern vars) — downstream prop access falls back to the
-          // properties document, same as the row-sequential path
-          val shared = tagged.columns.toSeq ++ matchNewVars.map(_._1)
-          val sharedCols = shared.map(c => col(Compiler.q(c)))
-          State(firstTry.df.select(sharedCols: _*)
-            .unionByName(rematched.drop(dropCols: _*).select(sharedCols: _*)),
-            firstTry.vars)
-        // Alignment failed (shape drift between the two builds). Both
-        // builds emit pattern-order vars, so this is unreachable; a
-        // full re-match fallback would silently diverge from the
-        // reference on self-symmetric patterns (it finds all
-        // post-create bindings where the reference binds only the
-        // created instance — execCypherMerge.c:35), so a reached
-        // misalignment must FAIL, never proceed with different
-        // semantics.
-        case None => mergeMisalignmentError(
-          createdSideVarsForError, matchNewVars.map(_._1))
+    //    with a key-join of the missing rows onto the created bindings:
+    //    the step-1 rows are the matched rows and the key-joined rows
+    //    the created ones.
+    val matched = firstTry.df.withColumn("__created", lit(false))
+    val rows =
+      if (nCreate == 0L) matched
+      else {
+        val created = createIndexed(b, State(indexed, st0.vars), nCreate,
+          Seq(m.path), foldItems)
+        val createdNewVars = created.vars.drop(st0.vars.length)
+        if (!multiOk) foldItems.flatMap(setTarget).distinct.foreach { v =>
+          warnRepeated(created.df.select(
+            col(Compiler.q(v)).getField("id").as("id"), col("__nupd")))
+        }
+        // created bindings keyed by identity, aligned per-kind to the
+        // match side's variable names (anonymous elements get fresh
+        // names per build — see mergeVarPairs; a misalignment is
+        // unreachable and fails, see mergeMisalignmentError)
+        val pairs = mergeVarPairs(createdNewVars, matchNewVars).getOrElse(
+          mergeMisalignmentError(createdNewVars.map(_._1), matchNewVars.map(_._1)))
+        // created.df is create's forced snapshot: the join reads it back
+        val cs = created.df.select(keys.map(k => col(k).as(s"__c$k")) ++
+          pairs.map { case ((cn, _), (mn, _)) => col(Compiler.q(cn)).as(mn) }: _*)
+        val rematched = missingKeyed
+          .join(cs, keys.map(k => col(k) <=> col(s"__c$k")).reduce(_ && _))
+        // the match side carries shredded sidecar columns from the
+        // label scans that the created side has no counterpart for:
+        // project BOTH sides to the shared frame (input columns +
+        // pattern vars) — downstream prop access falls back to the
+        // properties document, same as the row-sequential path
+        val shared = (tagged.columns.toSeq ++ matchNewVars.map(_._1) :+ "__created")
+          .map(c => col(Compiler.q(c)))
+        matched.select(shared: _*).unionByName(
+          rematched.withColumn("__created", lit(true)).select(shared: _*))
       }
-    var out = State(finalMatch.df.drop("__mrow"), finalMatch.vars)
+    var out = State(rows.drop("__mrow"), firstTry.vars)
 
-    // 4. ON CREATE / ON MATCH SET branches routed by created-ness of the
-    //    pattern's first element. The created-id set stays DISTRIBUTED:
-    //    a bulk MERGE can create millions of elements, so collecting
-    //    ids to the driver (and building a giant isin literal) would
-    //    OOM — instead a __created tag is joined on (broadcast when the
-    //    created set is small, shuffle join otherwise) and the SET
-    //    branches route on the tag.
-    val firstVar = finalMatch.vars.drop(base.vars.length).headOption
-    if ((m.onCreate.nonEmpty || m.onMatch.nonEmpty) && firstVar.isDefined) {
-      val (fv, _) = firstVar.get
-      // createdCnt rode the createdIds checkpoint as an observed metric
-      val small = createdIdsHolder.isEmpty || createdCnt < 1000000L
-      val tagSrc0 = createdIds.select(col("id").as("__cre_id"),
-        lit(true).as("__cre_tag"))
-      val tagSrc = if (small) broadcast(tagSrc0) else tagSrc0
-      val taggedOut = out.df
-        .join(tagSrc, col(Compiler.q(fv)).getField("id") === col("__cre_id"), "left")
-        .withColumn("__created", coalesce(col("__cre_tag"), lit(false)))
-        .drop("__cre_id", "__cre_tag")
-      out = State(taggedOut, out.vars)
-      if (m.onCreate.nonEmpty) out = set(b, out, m.onCreate, col("__created"))
-      if (m.onMatch.nonEmpty) out = set(b, out, m.onMatch, !col("__created"))
-      out = State(out.df.drop("__created"), out.vars)
-    }
-    out
+    // 4. the remaining ON CREATE items patch the created rows, then ON
+    //    MATCH SET the matched ones; each refreshes every row's
+    //    elements, so a pre-bound element shared by a created and a
+    //    matched row shows both arms' updates
+    if (restItems.nonEmpty) out = set(b, out, restItems, col("__created"))
+    if (m.onMatch.nonEmpty) out = set(b, out, m.onMatch, !col("__created"))
+    State(out.df.drop("__created"), out.vars)
   }
 }

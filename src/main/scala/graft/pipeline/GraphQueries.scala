@@ -746,8 +746,9 @@ object GraphQueries {
     },
 
     // MERGE ... ON CREATE SET / ON MATCH SET (execCypherMerge.c:35,
-    // gram.y:19130-19152): branch routing by created-ness via the
-    // distributed __created tag join (no driver-side id collect). Two
+    // gram.y:19130-19152): ON CREATE SET applies to the created
+    // elements before their append, ON MATCH SET patches the matched
+    // rows only (the branch each row came from routes it). Two
     // passes make both branches deterministic regardless of re-runs:
     // pass 1 creates (first run) or resets (re-runs) so the post-pass-1
     // state is identical either way; pass 2 always matches. Final

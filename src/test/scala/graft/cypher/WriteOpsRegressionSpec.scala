@@ -78,4 +78,81 @@ class WriteOpsRegressionSpec extends AnyFunSuite {
     assert(s.cypher("MATCH (n:l) RETURN count(*) AS c")
       .collect().head.getString(0) == "1")
   }
+
+  // ---- MERGE ON CREATE / ON MATCH routing: which arm reaches which row
+
+  private def props(s: CypherSession, label: String, order: String): Seq[String] =
+    s.cypher(s"MATCH (x:$label) RETURN properties(x) AS p ORDER BY $order")
+      .collect().toSeq.map(_.getString(0))
+
+  test("MERGE routing: input rows sharing an identity key create once, ON CREATE only") {
+    val s = fresh()
+    s.cypher("UNWIND [1, 1] AS k MERGE (x:l {n: k}) ON CREATE SET x.c = 1 ON MATCH SET x.h = true")
+    assert(s.lastWriteStats("insertedvertices") == 1)
+    assert(s.lastWriteStats("updatedproperties") == 1)
+    assert(props(s, "l", "x.n") == Seq("""{"c": 1, "n": 1}"""))
+    // a second batch: key 1 matches (both rows, ON MATCH only), key 2
+    // is created once from its two rows (ON CREATE only)
+    val r = s.cypher(
+      """UNWIND [1, 2, 2, 1] AS k MERGE (x:l {n: k})
+        |ON CREATE SET x.c = 2 ON MATCH SET x.h = true
+        |RETURN x.n AS n, x.c AS c, x.h AS h ORDER BY n""".stripMargin)
+      .collect().toSeq.map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    assert(r == Seq(("1", "1", "true"), ("1", "1", "true"),
+      ("2", "2", null), ("2", "2", null)))
+    assert(s.lastWriteStats("insertedvertices") == 1)
+    assert(s.lastWriteStats("updatedproperties") == 2)
+    assert(props(s, "l", "x.n") == Seq(
+      """{"c": 1, "h": true, "n": 1}""", """{"c": 2, "n": 2}"""))
+  }
+
+  test("MERGE routing: ON CREATE SET reading a non-key input property takes the SET winner") {
+    // two input rows per key: with multiple updates on the row with the
+    // highest input element id wins (last write), off the lowest (first)
+    for ((multi, want) <- Seq(("true", Seq("3", "4")), ("false", Seq("1", "2")))) {
+      val s = fresh()
+      s.cypher("CREATE (:m {g: 0, no: 1}), (:m {g: 1, no: 2}), (:m {g: 0, no: 3}), (:m {g: 1, no: 4})")
+      spark.conf.set("spark.graft.enableMultipleUpdate", multi)
+      try s.cypher("MATCH (a:m) MERGE (x:l {g: a.g}) ON CREATE SET x.from = a.no")
+      finally spark.conf.set("spark.graft.enableMultipleUpdate", "true")
+      assert(s.lastWriteStats("insertedvertices") == 2)
+      assert(s.lastWriteStats("updatedproperties") == 2)
+      val got = s.cypher("MATCH (x:l) RETURN x.from AS f ORDER BY x.g")
+        .collect().toSeq.map(_.getString(0))
+      assert(got == want, s"enableMultipleUpdate=$multi")
+    }
+  }
+
+  test("MERGE routing: ON CREATE SET on the pre-bound endpoint of an edge MERGE") {
+    val s = fresh()
+    s.cypher("CREATE (:l {x: 1})-[:t]->(:m {y: 1})")
+    s.cypher("CREATE (:l {x: 2})")
+    // (l1, m1) matches the existing edge; (l2, m1) creates one. ON
+    // CREATE reaches only the created row's a, ON MATCH only the
+    // matched row's b, and both rows observe the update of the shared b
+    val r = s.cypher(
+      """MATCH (a:l), (b:m) MERGE (a)-[:t]->(b)
+        |ON CREATE SET a.linked = true ON MATCH SET b.again = true
+        |RETURN a.x AS x, a.linked AS linked, b.again AS again ORDER BY x""".stripMargin)
+      .collect().toSeq.map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    assert(r == Seq(("1", null, "true"), ("2", "true", "true")))
+    assert(s.lastWriteStats("insertededges") == 1)
+    assert(s.lastWriteStats("updatedproperties") == 2)
+    assert(props(s, "l", "x.x") == Seq("""{"x": 1}""", """{"x": 2, "linked": true}"""))
+    assert(props(s, "m", "x.y") == Seq("""{"y": 1, "again": true}"""))
+  }
+
+  test("MERGE routing: a CHECK constraint sees the pattern's properties, not ON CREATE SET's") {
+    val s = fresh()
+    s.catalog.addConstraint("g", "l", "l_chk", "check", "c IS NULL AND n > 0")
+    // the SET result (c present) would fail the check; the pattern map passes
+    s.cypher("UNWIND [1, 2] AS k MERGE (x:l {n: k}) ON CREATE SET x.c = k")
+    assert(props(s, "l", "x.n") == Seq("""{"c": 1, "n": 1}""", """{"c": 2, "n": 2}"""))
+    // the pattern map fails the check even though the SET would pass it
+    val e = intercept[IllegalStateException] {
+      s.cypher("MERGE (x:l {n: -1}) ON CREATE SET x.n = 5")
+    }
+    assert(e.getMessage.contains("l_chk"), e.getMessage)
+    assert(props(s, "l", "x.n").length == 2)
+  }
 }

@@ -149,12 +149,16 @@ class JobCountSpec extends AnyFunSuite {
       ("CREATE of a vertex and an edge",
         "MATCH (x:a {n: 0}) CREATE (x)-[:r {w: 9}]->(:b {n: 9})", (10, 1)),
       ("SET over two labels",
-        "MATCH (x) WHERE x.n < 2 SET x.m = 1", (25, 2)),
+        "MATCH (x) WHERE x.n < 2 SET x.m = 1", (23, 2)),
       ("MERGE with ON CREATE/ON MATCH SET",
         "UNWIND [0, 7] AS k MERGE (x:a {n: k}) ON CREATE SET x.c = 1 ON MATCH SET x.c = 2",
-        (58, 4)),
+        (30, 2)),
+      ("bare vertex MERGE",
+        "UNWIND [0, 7] AS k MERGE (x:a {n: k})", (12, 6)),
+      ("edge MERGE between bound endpoints",
+        "MATCH (x:a), (y:b) WHERE y.n = x.n + 1 MERGE (x)-[:r]->(y)", (14, 6)),
       ("DETACH DELETE of a vertex and its edges",
-        "MATCH (x:a {n: 0}) DETACH DELETE x", (28, 1)),
+        "MATCH (x:a {n: 0}) DETACH DELETE x", (24, 1)),
       ("CREATE PROPERTY INDEX (reindex)",
         "CREATE PROPERTY INDEX ON a (n)", (8, 0))))
     test(s"$name: job count pinned") {
