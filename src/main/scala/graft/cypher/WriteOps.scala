@@ -46,16 +46,17 @@ object WriteOps {
     // cached blocks: the partition-counts pass and every __cidx
     // consumer are cheap cached projections, and the input plan
     // executes exactly once. The row count rides the counts collect.
-    val (indexed, n) = b.withRowIndexCounted(st.df.localCheckpoint(true), "__cidx")
+    val (indexed, n) = b.withRowIndexCounted(
+      st.df.localCheckpoint(true), "__cidx")
     createIndexed(b, State(indexed, st.vars), n, paths, Nil)
   }
 
   /** [[create]] over input rows already snapshotted and indexed in
     * `__cidx` (`n` rows), for paths already validated. `onCreate` holds
-    * MERGE's ON CREATE SET items on the new elements: they apply to the
-    * new elements' property maps before the append, so a created
-    * element is written once (ExecMergeGraph applies ON CREATE SET to
-    * the tuple it has just built, execCypherMerge.c:35).
+    * a MERGE's ON CREATE SET when all its items target new elements:
+    * they apply to the new elements' property maps before the append,
+    * so a created element is written once (ExecMergeGraph applies ON
+    * CREATE SET to the tuple it has just built, execCypherMerge.c:35).
     */
   private def createIndexed(b: Builder, st: State, n: Long,
       paths: Seq[PathPattern], onCreate: Seq[SetItem]): State = {
@@ -76,8 +77,10 @@ object WriteOps {
     // still violates a unique constraint even though no single
     // element's batch repeats the key and nothing has been appended
     // yet.
-    val pendingChecks = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    val deferredAppends = scala.collection.mutable.ArrayBuffer.empty[DataFrame => Unit]
+    val pendingChecks = scala.collection.mutable.ArrayBuffer
+      .empty[(String, String)]
+    val deferredAppends = scala.collection.mutable.ArrayBuffer
+      .empty[DataFrame => Unit]
     // one new element per input row: resolve its label of `kind`,
     // reserve ids, bind the struct (id, the `ends` fields, properties)
     // and register its statement-level check and deferred append
@@ -160,8 +163,9 @@ object WriteOps {
     // constraint checks, then all appends
     val finalDf = df.localCheckpoint(true)
     checkConstraints(b, pendingChecks.toSeq.map { case (l, name) =>
-      (l, finalDf.select((if (assigned.contains(name)) col(s"__pre_$name")
-        else propsOf(name)).as("properties")))
+      val props =
+        if (assigned.contains(name)) col(Compiler.q(s"__pre_$name")) else propsOf(name)
+      (l, finalDf.select(props.as("properties")))
     })
     deferredAppends.foreach(_(finalDf))
     // like SET: each assigned variable counts its elements once
@@ -254,10 +258,12 @@ object WriteOps {
   def delete(b: Builder, st: State, d: DeleteClause): State = {
     val comp = b.compiler(st)
     val frame = st.df.localCheckpoint(true)
-    val vertexIds, edgeIds = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def ids(id: Column): DataFrame = frame.select(id.as("id"))
-    def elemIds(elems: Column): DataFrame =
-      frame.select(explode(elems).as("__x")).select(col("__x").getField("id").as("id"))
+    var vertexIds: DataFrame = null
+    var edgeIds: DataFrame = null
+    def addV(df: DataFrame): Unit =
+      vertexIds = if (vertexIds == null) df else vertexIds.unionAll(df)
+    def addE(df: DataFrame): Unit =
+      edgeIds = if (edgeIds == null) df else edgeIds.unionAll(df)
 
     d.exprs.foreach {
       // DELETE startnode(e)/endnode(e) (edge_start_vertex graph.c:986;
@@ -267,25 +273,30 @@ object WriteOps {
       case FnCall(fn @ ("startnode" | "endnode"), Seq(arg), _)
           if comp.compile(arg).kind == KE =>
         val f = if (fn == "startnode") "start" else "end"
-        vertexIds += ids(comp.compile(arg).col.getField(f))
+        addV(frame.select(comp.compile(arg).col.getField(f).as("id")))
       case e =>
       val ce = comp.compile(e)
       ce.kind match {
-        case KV => vertexIds += ids(ce.col.getField("id"))
-        case KE => edgeIds += ids(ce.col.getField("id"))
-        case KEL => edgeIds += elemIds(ce.col)
-        case KVL => vertexIds += elemIds(ce.col)
+        case KV => addV(frame.select(ce.col.getField("id").as("id")))
+        case KE => addE(frame.select(ce.col.getField("id").as("id")))
+        case KEL => addE(frame.select(explode(ce.col).as("__x"))
+          .select(col("__x").getField("id").as("id")))
+        case KVL => addV(frame.select(explode(ce.col).as("__x"))
+          .select(col("__x").getField("id").as("id")))
         case KP =>
-          vertexIds += elemIds(ce.col.getField("vertices"))
-          edgeIds += elemIds(ce.col.getField("edges"))
+          addV(frame.select(explode(ce.col.getField("vertices")).as("__x"))
+            .select(col("__x").getField("id").as("id")))
+          addE(frame.select(explode(ce.col.getField("edges")).as("__x"))
+            .select(col("__x").getField("id").as("id")))
         case _ => throw new IllegalArgumentException(s"cannot DELETE expression $e")
       }
     }
 
-    val vSnap = vertexIds.reduceOption(_ unionAll _).map(v => snapshotIds(v.distinct()))
-    var eIds = edgeIds.reduceOption(_ unionAll _).map(_.distinct())
+    val vSnap = if (vertexIds == null) null else snapshotIds(vertexIds.distinct())
+    var eIds = if (edgeIds == null) null else edgeIds.distinct()
 
-    vSnap.map(_.ids).foreach { vIds =>
+    if (vSnap != null) {
+      val vIds = vSnap.ids
       // incident edges: DETACH deletes them; plain DELETE errors if any
       // remain (execCypherDelete.c vertex-has-edges check)
       // two equi semi-joins (hash, broadcastable), NOT one OR-condition
@@ -297,14 +308,20 @@ object WriteOps {
         .unionAll(
           allEdges.join(vIds, allEdges("end") === vIds("id"), "left_semi")
             .select(col("id")))
-      if (d.detach) eIds = Some(eIds.fold(incident)(_.unionAll(incident)))
-      else if (!eIds.fold(incident)(incident.join(_, Seq("id"), "left_anti")).isEmpty)
-        throw new IllegalStateException("vertices with edges can not be removed")
+      if (d.detach) {
+        eIds = if (eIds == null) incident else eIds.unionAll(incident)
+      } else {
+        val pending = if (eIds == null) incident
+          else incident.join(eIds, Seq("id"), "left_anti")
+        if (!pending.isEmpty)
+          throw new IllegalStateException("vertices with edges can not be removed")
+      }
     }
-    val eSnap = eIds.map(e => snapshotIds(e.distinct()))
+    val eSnap = if (eIds == null) null else snapshotIds(eIds.distinct())
 
     // both victim-id sets are snapshotted before any file changes
-    val removed = patchLabels(b, eSnap.map(_ -> 'e').toSeq ++ vSnap.map(_ -> 'v')) {
+    val removed = patchLabels(b,
+      Seq(eSnap -> 'e', vSnap -> 'v').filter(_._1 != null)) {
       (cur, ids) => cur.join(ids, Seq("id"), "left_anti")
     }
     b.deletedEdges += removed.getOrElse('e', 0L)
@@ -386,18 +403,28 @@ object WriteOps {
   private def setProps(comp: Compiler,
       items: Seq[SetItem]): scala.collection.mutable.LinkedHashMap[String, Column] = {
     val byVar = scala.collection.mutable.LinkedHashMap[String, Column]()
-    def currentProps(v: String): Column = byVar.getOrElse(v, propsOf(v))
-    items.foreach {
-      case SetProp(Prop(Vbl(v), k), value) =>
+    items.foreach { item =>
+      val (v, update) = setItem(item)
+      byVar(v) = update(comp, byVar.getOrElse(v, propsOf(v)))
+    }
+    byVar
+  }
+
+  /** A SET item as the variable it assigns and the update of that
+    * variable's current property map (compiled by the given compiler).
+    */
+  private def setItem(item: SetItem): (String, (Compiler, Column) => Column) = item match {
+    case SetProp(Prop(Vbl(v), k), value) =>
+      v -> ((comp, cur) => J.setKey(cur, lit(k), comp.toJ(comp.compile(value))))
+    case SetProp(Index(Vbl(v), idxE), value) =>
+      v -> { (comp, cur) =>
         val newVal = comp.toJ(comp.compile(value))
-        byVar(v) = J.setKey(currentProps(v), lit(k), newVal)
-      case SetProp(Index(Vbl(v), idxE), value) =>
-        val newVal = comp.toJ(comp.compile(value))
-        byVar(v) = J.setKey(currentProps(v),
-          J.asText(comp.toJ(comp.compile(idxE))), newVal)
-      case RemoveProp(Prop(Vbl(v), k)) =>
-        byVar(v) = J.setKey(currentProps(v), lit(k), lit(null).cast("string"))
-      case SetMap(v, value, add) =>
+        J.setKey(cur, J.asText(comp.toJ(comp.compile(idxE))), newVal)
+      }
+    case RemoveProp(Prop(Vbl(v), k)) =>
+      v -> ((_, cur) => J.setKey(cur, lit(k), lit(null).cast("string")))
+    case SetMap(v, value, add) =>
+      v -> { (comp, cur) =>
         value match {
           case graft.cypher.Ast.Lit(graft.jsonb.JNull) =>
             // cypher_dml.out:2334-2338, 2381-2385
@@ -406,21 +433,9 @@ object WriteOps {
           case _ => ()
         }
         val m = JsonbNormalize.normalize(comp.toJ(comp.compile(value)))
-        byVar(v) = if (add) J.concat(currentProps(v), m) else m
-      case other => throw new IllegalArgumentException(s"unsupported SET item $other")
-    }
-    byVar
-  }
-
-  /** The variable a SET item assigns (None for an unsupported shape,
-    * which [[setProps]] rejects).
-    */
-  private def setTarget(item: SetItem): Option[String] = item match {
-    case SetProp(Prop(Vbl(v), _), _) => Some(v)
-    case SetProp(Index(Vbl(v), _), _) => Some(v)
-    case RemoveProp(Prop(Vbl(v), _)) => Some(v)
-    case SetMap(v, _, _) => Some(v)
-    case _ => None
+        if (add) J.concat(cur, m) else m
+      }
+    case other => throw new IllegalArgumentException(s"unsupported SET item $other")
   }
 
   /** Last-write-wins order of a statement's rows for multiple updates
@@ -492,16 +507,21 @@ object WriteOps {
       // refresh EVERY in-flight element var by id (heap semantics:
       // aliases of the same element observe the update; PG rereads the
       // heap with a new CommandId between clauses)
-      val upd2 = upd.ids.select(col("id").as("__uid"), col("__np").as("__unp"))
       st.vars.foreach { case (w, wk) =>
         if (wk == KV || wk == KE) {
+          val upd2 = upd.ids.select(col("id").as("__uid"), col("__np").as("__unp"))
           val wId = col(Compiler.q(w)).getField("id")
-          val ends = if (wk == KV) Nil
-            else Seq("start", "end").map(f => col(Compiler.q(w)).getField(f).as(f))
+          val props2 = coalesce(col("__unp"), col(Compiler.q(w)).getField("properties"))
           newDf = newDf.join(upd2, wId === col("__uid"), "left")
-            .withColumn(w, struct(wId.as("id") +: ends :+
-              coalesce(col("__unp"), propsOf(w)).as("properties"): _*))
-            .drop("__uid", "__unp")
+          newDf =
+            if (wk == KV)
+              newDf.withColumn(w, struct(wId.as("id"), props2.as("properties")))
+            else
+              newDf.withColumn(w, struct(wId.as("id"),
+                col(Compiler.q(w)).getField("start").as("start"),
+                col(Compiler.q(w)).getField("end").as("end"),
+                props2.as("properties")))
+          newDf = newDf.drop("__uid", "__unp")
         }
       }
     }
@@ -725,12 +745,14 @@ object WriteOps {
       .zipWithIndex.map { case (c, i) => s"__mk_$i" -> c }
     val keys = keyed.map(_._1)
     val missingKeyed = missing.withColumns(keyed.toMap)
-    // ON CREATE items on the elements the MERGE creates fold into the
-    // create; the rest (a pre-bound endpoint, say) stay a SET over the
-    // created rows below
+    // ON CREATE SET folds into the create only when every item targets
+    // an element the MERGE creates. An item on a pre-bound element (an
+    // edge MERGE's endpoint, say) keeps the whole list one SET over the
+    // created rows (step 4): items apply in written order, each reading
+    // what the earlier ones wrote, which a partial fold would reorder.
     val newElems = m.path.varNames.toSet -- m.path.variable -- st0.kinds.keySet
-    val (foldItems, restItems) =
-      m.onCreate.partition(i => setTarget(i).exists(newElems))
+    val fold = m.onCreate.forall(i => newElems(setItem(i)._1))
+    val foldItems = if (fold) m.onCreate else Nil
     // Each key's instance is built from the row that SET's order would
     // let win (see setOrder/multipleUpdate), so an ON CREATE value read
     // from the input is the one the SET over all the key's rows kept.
@@ -763,7 +785,7 @@ object WriteOps {
         val created = createIndexed(b, State(indexed, st0.vars), nCreate,
           Seq(m.path), foldItems)
         val createdNewVars = created.vars.drop(st0.vars.length)
-        if (!multiOk) foldItems.flatMap(setTarget).distinct.foreach { v =>
+        if (!multiOk) foldItems.map(setItem(_)._1).distinct.foreach { v =>
           warnRepeated(created.df.select(
             col(Compiler.q(v)).getField("id").as("id"), col("__nupd")))
         }
@@ -790,11 +812,11 @@ object WriteOps {
       }
     var out = State(rows.drop("__mrow"), firstTry.vars)
 
-    // 4. the remaining ON CREATE items patch the created rows, then ON
-    //    MATCH SET the matched ones; each refreshes every row's
+    // 4. an ON CREATE SET that did not fold patches the created rows,
+    //    then ON MATCH SET the matched ones; each refreshes every row's
     //    elements, so a pre-bound element shared by a created and a
     //    matched row shows both arms' updates
-    if (restItems.nonEmpty) out = set(b, out, restItems, col("__created"))
+    if (!fold) out = set(b, out, m.onCreate, col("__created"))
     if (m.onMatch.nonEmpty) out = set(b, out, m.onMatch, !col("__created"))
     State(out.df.drop("__created"), out.vars)
   }

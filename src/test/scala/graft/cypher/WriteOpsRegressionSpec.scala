@@ -155,4 +155,35 @@ class WriteOpsRegressionSpec extends AnyFunSuite {
     assert(e.getMessage.contains("l_chk"), e.getMessage)
     assert(props(s, "l", "x.n").length == 2)
   }
+
+  test("MERGE routing: ON CREATE SET items read across a pre-bound and a created element in written order") {
+    // the items apply in the order they are written, each reading the
+    // elements as the earlier items left them: b.x reads the a.y just
+    // set, a.y reads b.x before it is set
+    for ((items, want) <- Seq(
+        ("a.y = 1, b.x = a.y", ("1", "1")),
+        ("a.y = b.x, b.x = 1", (null, "1")))) {
+      val s = fresh()
+      s.cypher("CREATE (:l {n: 1})")
+      val r = s.cypher(
+        s"""MATCH (a:l) MERGE (a)-[:t]->(b:m {k: 1}) ON CREATE SET $items
+           |RETURN a.y AS y, b.x AS x""".stripMargin)
+        .collect().toSeq.map(r => (r.getString(0), r.getString(1)))
+      assert(r == Seq(want), items)
+      assert(s.lastWriteStats("insertedvertices") == 1, items)
+      assert(s.lastWriteStats("insertededges") == 1, items)
+      assert(s.lastWriteStats("updatedproperties") == 2, items)
+      val stored = s.cypher("MATCH (a:l)-[:t]->(b:m) RETURN a.y AS y, b.x AS x")
+        .collect().toSeq.map(r => (r.getString(0), r.getString(1)))
+      assert(stored == Seq(want), items)
+    }
+  }
+
+  test("MERGE routing: ON CREATE SET on a created variable whose name holds a dot") {
+    val s = fresh()
+    s.cypher("MERGE (`x.y`:l {n: 1}) ON CREATE SET `x.y`.c = 1")
+    assert(s.lastWriteStats("insertedvertices") == 1)
+    assert(s.lastWriteStats("updatedproperties") == 1)
+    assert(props(s, "l", "x.n") == Seq("""{"c": 1, "n": 1}"""))
+  }
 }
