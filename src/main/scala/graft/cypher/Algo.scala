@@ -20,8 +20,6 @@ import Kind._
   */
 object Algo {
 
-  /** Checkpoint cadence for iterative loops (keeps lineage bounded). */
-  private val CheckpointEvery = 4
   // synthetic-name suffix for unnamed path/rel variables: a process
   // counter, NOT hashCode%1000 — two unnamed shortestpath patterns in
   // one query could collide mod 1000 and bind duplicate column names
@@ -204,23 +202,25 @@ object Algo {
     val levels = new Levels(lo, hi)
     levels.add(0L, zero)
 
-    // Emptiness probes cost a full materialization of the frontier
-    // plan, so only pay them when the remaining depth is unbounded in
-    // practice (short bounded ranges like *2..3 just run their <=2
-    // extra joins lazily inside the final plan).
-    val probeEmptiness = hi - 1L > CheckpointEvery
+    // A range longer than 5 takes one counted checkpoint per level and
+    // stops on an empty one (execGraphVle.c's DFS stops when its stack
+    // drains); each level is materialized once, for the stop test and
+    // the final plan alike. A shorter range runs its joins lazily
+    // inside the final plan.
+    val counted = hi > 5L
     var frontier = zero
     var k = 0L
     var exhausted = false
     while (k < hi && !exhausted) {
-      if (probeEmptiness && k > 0L) exhausted = frontier.isEmpty
-      if (!exhausted) {
-        val next = hop(ex, frontier, "__verts",
-          if (needVerts) Some(col("__v")) else None, withV)
-        k += 1
-        frontier = if (k % CheckpointEvery == 0) next.localCheckpoint(true) else next
-        levels.add(k, frontier)
-      }
+      val next = hop(ex, frontier, "__verts",
+        if (needVerts) Some(col("__v")) else None, withV)
+      k += 1
+      if (counted) {
+        val (cp, n) = GraphCatalog.checkpointCounted(next)
+        frontier = cp
+        exhausted = n == 0L
+      } else frontier = next
+      if (!exhausted) levels.add(k, frontier)
     }
 
     // Loud cap (the reference's default bound is INT_MAX,
@@ -228,7 +228,7 @@ object Algo {
     // when the pattern's upper bound came from the cap rather than the
     // query AND the expansion can still extend past it, error instead
     // of silently dropping the deeper paths — the user raises
-    // spark.graft.maxDepth (checkpoint cadence keeps lineage bounded)
+    // spark.graft.maxDepth (per-level checkpoints keep lineage bounded)
     // or writes an explicit upper bound.
     if (hiOpt.forall(_ > MaxDepth.toLong) && !exhausted &&
         hop(ex, frontier, "__verts", None).head(1).nonEmpty)
@@ -571,14 +571,16 @@ object Algo {
     // (it is strictly longer than its source path), so "__new survived
     // the top-k window" exactly means "the best-set changed". The seed
     // relaxes the zero-length origin paths to depth 1; that relaxation
-    // is not a round.
+    // is not a round. The count of survivors rides each checkpoint of
+    // the best set: that count is the round's stop test.
     def relax(paths: DataFrame): DataFrame =
       hop(ex, paths, "__vids", Some(col("__e")), withWeight,
         Seq((col("__dist") + col("__w")).as("__dist")))
         .withColumn("__new", lit(1))
-    var best = topK(relax(zeroPaths(b, origins, "__vids")
-      .withColumn("__dist", lit(0.0))))
-      .localCheckpoint(true)
+    val isNew = col("__new") === 1
+    var (best, fresh) = GraphCatalog.checkpointCounted(
+      topK(relax(zeroPaths(b, origins, "__vids").withColumn("__dist", lit(0.0)))),
+      where = isNew)
 
     // Target-side termination (the set-based form of the reference's
     // pairing-heap early exit, nodeDijkstra.c:37-50): the only rows
@@ -605,8 +607,7 @@ object Algo {
     // could fire — measured ~2x on 2-hop graphs — so pruning arms only
     // from the third round on; deep searches (where it is the
     // asymptotic win) keep the early exit
-    def pruneFrontier(f: DataFrame, round: Int): DataFrame = {
-      if (round < 2 || nTargets == 0L) return f
+    def pruneFrontier(f: DataFrame): DataFrame = {
       val bounds = best
         .join(targets, col("__cur") === col("__target"), "left_semi")
         .groupBy("__start", "__cur")
@@ -622,15 +623,22 @@ object Algo {
     }
 
     var rounds = 0
-    var frontier = pruneFrontier(best, rounds)
+    var frontier = best
+    var live = fresh > 0L
     val MaxDepth = maxDepthOf(b.spark)
-    var live = frontier.head(1).nonEmpty
     while (rounds < MaxDepth && live) {
-      best = topK(best.withColumn("__new", lit(0)).unionAll(relax(frontier)))
-        .localCheckpoint(true)
+      val (cp, n) = GraphCatalog.checkpointCounted(
+        topK(best.withColumn("__new", lit(0)).unionAll(relax(frontier))),
+        where = isNew)
+      best = cp
       rounds += 1
-      frontier = pruneFrontier(best.where(col("__new") === 1), rounds)
-      live = frontier.head(1).nonEmpty
+      frontier = best.where(isNew)
+      live = n > 0L
+      // only an armed prune can empty a non-empty frontier: probe it
+      if (live && rounds >= 2 && nTargets > 0L) {
+        frontier = pruneFrontier(frontier)
+        live = frontier.head(1).nonEmpty
+      }
     }
     lastDijkstraRounds.set(rounds)
     // the reference relaxes to convergence (nodeDijkstra's heap drains);

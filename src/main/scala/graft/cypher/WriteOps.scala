@@ -150,44 +150,48 @@ object WriteOps {
     }
     // ON CREATE SET composes over the complete new bindings (a value
     // may read any pattern variable, as it reads the created row after
-    // the append in the reference). The constraint checks keep seeing
-    // the pattern's map (a plain SET runs no check either), so it is
-    // kept aside in __pre_<var>.
+    // the append in the reference)
     val assigned = setProps(b.compiler(State(df, vars)), onCreate)
     assigned.foreach { case (v, np) =>
-      df = df.withColumn(s"__pre_$v", propsOf(v))
-        .withColumn(v, col(Compiler.q(v)).withField("properties", np))
+      df = df.withColumn(v, col(Compiler.q(v)).withField("properties", np))
     }
     // force every element column (ids + property maps incl. the
     // object-shape raise_error) BEFORE the first append; then ALL
-    // constraint checks, then all appends
+    // constraint checks over the maps the elements are written with,
+    // then all appends
     val finalDf = df.localCheckpoint(true)
     checkConstraints(b, pendingChecks.toSeq.map { case (l, name) =>
-      val props =
-        if (assigned.contains(name)) col(Compiler.q(s"__pre_$name")) else propsOf(name)
-      (l, finalDf.select(props.as("properties")))
+      (l, finalDf.select(col(Compiler.q(name)).getField("id").as("id"),
+        propsOf(name).as("properties")))
     })
     deferredAppends.foreach(_(finalDf))
     // like SET: each assigned variable counts its elements once
     b.updatedProperties += n * assigned.size
-    State(finalDf.drop("__cidx" +: assigned.keys.map("__pre_" + _).toSeq: _*), vars)
+    State(finalDf.drop("__cidx"), vars)
   }
 
   /** Write-time constraint validation (reference:
     * CreateConstraintCommand graphcmds.c:550; CHECK/UNIQUE tests
     * cypher_ddl.sql:240-362). Bare identifiers in constraint bodies
-    * refer to properties of the inserted element.
+    * refer to properties of the written element. `written` gives each
+    * written label's (id, properties) rows: new elements (CREATE,
+    * MERGE) or the new maps of updated ones (SET); a graph with no
+    * constraint never builds them.
     *
     * Statement-level: each constraint validates the UNION of
     * every pending element whose label it governs, so cross-element
     * and cross-subtree duplicates within one statement are caught
-    * BEFORE anything appends (the reference sees them because each
+    * BEFORE anything is written (the reference sees them because each
     * row's insert consults the index the previous row just updated).
+    * UNIQUE compares against the stored subtree minus the written ids,
+    * so an update that keeps its key does not collide with its own
+    * old row.
     */
   private def checkConstraints(b: Builder,
-      elems: Seq[(String, DataFrame)]): Unit = {
+      written: => Seq[(String, DataFrame)]): Unit = {
     val all = b.catalog.constraints(b.graph)
-    if (all.isEmpty || elems.isEmpty) return
+    if (all.isEmpty) return
+    val elems = written
     val applicable = all.flatMap { c =>
       val hit = elems.filter { case (l, _) =>
         b.catalog.ancestors(b.graph, l).contains(c.label) }
@@ -241,6 +245,7 @@ object WriteOps {
               s"""duplicate key value violates unique constraint "${c.name}"""")
           // against the existing subtree
           val existing = b.catalog.scan(b.graph, c.label)
+            .join(newRows.select("id"), Seq("id"), "left_anti")
             .select(struct(lit(0L).as("id"), col("properties")).as("__self"))
             .select(keyCol.as("__k"))
           if (!newKeys.join(existing, Seq("__k"), "left_semi").isEmpty)
@@ -342,14 +347,22 @@ object WriteOps {
     IdSnapshot(cp, n, seen.get("labids").asInstanceOf[scala.collection.Seq[Int]].toSeq)
   }
 
+  /** The labels of `kind` whose labids `snap` holds, as (labid, name)
+    * in labid order. Resolving within the kind keeps a vertex write off
+    * an edge table even if labids ever stopped being unique across kinds.
+    */
+  private def labelsOf(b: Builder, snap: IdSnapshot, kind: Char): Seq[(Int, String)] = {
+    val byLabid = b.catalog.labels(b.graph).filter(_.kind == kind)
+      .map(l => l.labid -> l.name).toMap
+    snap.labids.sorted.flatMap(l => byLabid.get(l).map(l -> _))
+  }
+
   /** Rewrite the label tables that hold the ids of each `(ids, kind)`
     * snapshot: `patch(rows, ids)` runs over the touched files of each
-    * label the snapshot's labids name (GraphCatalog.patchFiles: files
-    * whose id range holds no victim keep their bytes, so a point write
-    * against a huge label does not rewrite the label). Labels resolve
-    * within the set's kind rather than trusting labid-global
-    * uniqueness: if labid allocation ever became per-kind, a vertex
-    * write must not patch an edge table whose labid collides.
+    * label of the set's kind its labids name ([[labelsOf]];
+    * GraphCatalog.patchFiles: files whose id range holds no victim keep
+    * their bytes, so a point write against a huge label does not
+    * rewrite the label).
     *
     * Each label's patch touches only its own directory under its own
     * label lock with an atomic meta merge, so the patches are
@@ -363,10 +376,8 @@ object WriteOps {
     */
   private def patchLabels(b: Builder, sets: Seq[(IdSnapshot, Char)])
       (patch: (DataFrame, DataFrame) => DataFrame): Map[Char, Long] = {
-    val labels = b.catalog.labels(b.graph)
     val tasks = sets.flatMap { case (snap, kind) =>
-      val byLabid = labels.filter(_.kind == kind).map(l => l.labid -> l.name).toMap
-      snap.labids.sorted.flatMap(l => byLabid.get(l).map(n => (kind, n, snap.ids)))
+      labelsOf(b, snap, kind).map { case (_, n) => (kind, n, snap.ids) }
     }
     def run(t: (Char, String, DataFrame)): (Char, Long) = {
       val (kind, lname, ids) = t
@@ -499,7 +510,14 @@ object WriteOps {
           count(lit(1)).as("__nupd")))
       if (!multiOk) warnRepeated(upd.ids)
       b.updatedProperties += upd.n
-      patchLabels(b, Seq(upd -> (if (kind == KV) 'v' else 'e'))) {
+      val k = if (kind == KV) 'v' else 'e'
+      // the new maps must pass their labels' constraints before any
+      // file of this variable's labels changes
+      checkConstraints(b, labelsOf(b, upd, k).map { case (labid, l) =>
+        (l, upd.ids.where(GraphId.labidOf(col("id")) === labid)
+          .select(col("id"), col("__np").as("properties")))
+      })
+      patchLabels(b, Seq(upd -> k)) {
         (cur, u) => cur.join(u.select(col("id"), col("__np")), Seq("id"), "left")
           .withColumn("properties", coalesce(col("__np"), col("properties")))
           .drop("__np")

@@ -3,7 +3,7 @@ package graft.graph
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
@@ -70,18 +70,20 @@ object GraphCatalog {
   private[graph] val labelLocks = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.locks.ReentrantReadWriteLock]()
 
-  /** localCheckpoint at `level` with the frame's row count riding the
-    * SAME materialization as an observed metric: the frontier loops and
-    * write statements need both, and a separate count() would pay one
-    * more driver round-trip and, at scale, one more pass over the
-    * cached blocks. The default level is the one plain
-    * localCheckpoint(true) uses.
+  /** localCheckpoint at `level` with the count of the rows matching
+    * `where` (default: all) riding the SAME materialization as an
+    * observed metric: a separate count() or emptiness probe would pay
+    * one more driver round-trip and, at scale, one more pass over the
+    * cached blocks. Every iterative loop's stop test reads this count
+    * from the checkpoint its round takes anyway. The default level is
+    * the one plain localCheckpoint(true) uses.
     */
   def checkpointCounted(df: DataFrame,
-      level: StorageLevel = StorageLevel.MEMORY_AND_DISK): (DataFrame, Long) = {
-    import org.apache.spark.sql.functions.{count, lit}
+      level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
+      where: Column = org.apache.spark.sql.functions.lit(true)): (DataFrame, Long) = {
+    import org.apache.spark.sql.functions.{count, lit, when}
     val obs = org.apache.spark.sql.Observation()
-    val cp = df.observe(obs, count(lit(1)).as("__n"))
+    val cp = df.observe(obs, count(when(where, lit(1))).as("__n"))
       .localCheckpoint(true, level)
     (cp, obs.get("__n").asInstanceOf[Long])
   }

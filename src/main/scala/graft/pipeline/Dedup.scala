@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.graph.GraphCatalog
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -247,15 +248,16 @@ object Dedup {
         .select(col("id"), col("__cc").as("comp"), lit(1).as("__t"))
       // the self branch is tagged so the SAME aggregation yields both
       // the new label (min over all) and the old one (min over self) —
-      // convergence is a flag on the materialized rows, no extra join
-      val step = labels.select(col("id"), col("comp"), lit(0).as("__t"))
-        .unionAll(viaNeighbor).unionAll(viaLabel)
-        .groupBy("id")
-        .agg(min("comp").as("comp"),
-          min(when(col("__t") === 0, col("comp"))).as("__old"))
-        .withColumn("__chg", col("comp") =!= col("__old"))
-        .localCheckpoint(true)
-      changed = step.where(col("__chg")).head(1).nonEmpty
+      // convergence is the count of changed labels riding the step's
+      // checkpoint, no extra join or probe
+      val (step, nChanged) = GraphCatalog.checkpointCounted(
+        labels.select(col("id"), col("comp"), lit(0).as("__t"))
+          .unionAll(viaNeighbor).unionAll(viaLabel)
+          .groupBy("id")
+          .agg(min("comp").as("comp"),
+            min(when(col("__t") === 0, col("comp"))).as("__old")),
+        where = col("comp") =!= col("__old"))
+      changed = nChanged > 0L
       labels = step.select(col("id"), col("comp"))
       rounds += 1
     }

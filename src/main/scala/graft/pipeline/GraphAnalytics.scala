@@ -222,16 +222,15 @@ object GraphAnalytics {
     val maxRounds = 4096 // pathological chains peel O(V) rounds; fail
     // loudly rather than return a stale (non-core) degree set
     while (!done && rounds < maxRounds) {
-      // the victim count rides the degree checkpoint as an observed
-      // metric: the separate victims.isEmpty probe was a third action
-      // per peeling round (2 actions/round now, was 3)
-      val obs = org.apache.spark.sql.Observation()
-      deg = edges.select(explode(array(col("a"), col("b"))).as("id"))
-        .groupBy("id").count().withColumnRenamed("count", "deg")
-        .observe(obs, count(when(col("deg") < k, 1)).as("__nv"))
-        .localCheckpoint(true)
+      // the victim count rides the degree checkpoint: the round's stop
+      // test costs no action of its own
+      val (d, nVictims) = GraphCatalog.checkpointCounted(
+        edges.select(explode(array(col("a"), col("b"))).as("id"))
+          .groupBy("id").count().withColumnRenamed("count", "deg"),
+        where = col("deg") < k)
+      deg = d
       val victims = deg.where(col("deg") < k).select("id")
-      if (obs.get("__nv").asInstanceOf[Long] == 0L) done = true
+      if (nVictims == 0L) done = true
       else {
         // cadence settled by interleaved A/B (r15): skipping this
         // checkpoint on odd rounds measured a null result twice

@@ -185,9 +185,9 @@ object Similarity {
       .select(col("qid"), col("cid"), col("cos"))
   }
 
-  /** IVF (inverted-file) ANN: k-means coarse quantizer (MLlib, fixed
-    * seed), candidates = vectors in the query's nProbe nearest cells,
-    * exact cosine ranks within. The classic recall/cost dial for
+  /** IVF (inverted-file) ANN: k-means coarse quantizer ([[lloyd]]),
+    * candidates = vectors in the query's nProbe nearest cells, exact
+    * cosine ranks within. The classic recall/cost dial for
     * billion-vector scale: cells shard the corpus, probes bound the
     * scanned fraction.
     */
@@ -196,56 +196,16 @@ object Similarity {
     // sample (IVF quantizers are conventionally trained on a sample —
     // at billion-vector scale the training set stays O(centers*1000)
     // while assignment remains a single distributed pass).
-    val sample: Array[Array[Double]] = vectors
-      .select(col("vec_id"), col("embedding"))
-      .orderBy("vec_id").limit(2048)
-      .collect().map(_.getSeq[Float](1).map(_.toDouble).toArray)
-    var centers: Array[Array[Double]] =
-      sample.take(nList).map(_.clone())
-    val dim0 = if (sample.isEmpty) 0 else sample(0).length
-    def sqdist(a: Array[Double], b: Array[Double]): Double = {
-      var d = 0.0; var j = 0
-      while (j < a.length) { val t = a(j) - b(j); d += t * t; j += 1 }
-      d
-    }
-    def nearest(v: Array[Double]): Int = {
-      var bi = 0; var bd = Double.MaxValue; var i = 0
-      while (i < centers.length) {
-        val d = sqdist(v, centers(i)); if (d < bd) { bd = d; bi = i }; i += 1
-      }
-      bi
-    }
-    var iter = 0
-    while (iter < 10 && sample.nonEmpty) {
-      val sums = Array.fill(nList)(new Array[Double](dim0))
-      val counts = new Array[Long](nList)
-      sample.foreach { v =>
-        val c = nearest(v); counts(c) += 1
-        var j = 0; while (j < dim0) { sums(c)(j) += v(j); j += 1 }
-      }
-      centers = centers.zipWithIndex.map { case (old, i) =>
-        if (counts(i) == 0) old
-        else { val m = sums(i); var j = 0
-          while (j < dim0) { m(j) /= counts(i); j += 1 }; m }
-      }
-      iter += 1
-    }
+    val sample = trainingSample(vectors)
+    val centers: Array[Array[Double]] =
+      if (sample.isEmpty) Array.empty
+      else lloyd(sample, math.min(nList, sample.length), iters = 10)
     // Cell assignment / probe ordering as a codegen'd EXPRESSION tree
-    // (no UDF in the pass that touches every corpus vector):
-    // |v - c|^2 orders cells identically to |c|^2 - 2*v.c (the |v|^2
-    // term is constant per row), so each cell costs ONE codegen'd dot
-    // against a literal centroid; array_sort on (score, idx) structs
-    // gives the probe order with the same (distance, index) tiebreak
-    // the sequential argmin used.
-    val cc: Array[Double] = centers.map { c =>
-      var s = 0.0; var j = 0
-      while (j < c.length) { s += c(j) * c(j); j += 1 }
-      s
-    }
-    def cellOrder(v: Column): Column = array_sort(array(centers.indices.map { i =>
-      struct((lit(cc(i)) - lit(2.0) * dot(v, typedlit(centers(i).toSeq))).as("d"),
-        lit(i).as("idx"))
-    }: _*))
+    // (no UDF in the pass that touches every corpus vector): each cell
+    // costs ONE codegen'd dot against a literal centroid, and the
+    // probe order keeps the (distance, index) tiebreak the sequential
+    // argmin used.
+    def cellOrder(v: Column): Column = nearestFirst(centerDists(v, centers))
     val assigned = vectors.withColumn("__cell",
       element_at(cellOrder(col("embedding")), 1).getField("idx"))
     val q = assigned.select(col("vec_id").as("qid"), col("embedding").as("qv"),
@@ -344,14 +304,17 @@ object Similarity {
       k: Int): Array[Array[Array[Double]]] = {
     require(dim % numSub == 0, s"dim $dim not divisible into $numSub subspaces")
     val sub = dim / numSub
-    val sample: Array[Array[Double]] = vectors
-      .select(col("vec_id"), col("embedding"))
-      .orderBy("vec_id").limit(2048)
-      .collect().map(_.getSeq[Float](1).map(_.toDouble).toArray)
+    val sample = trainingSample(vectors)
     Array.tabulate(numSub) { m =>
       lloyd(sample.map(_.slice(m * sub, (m + 1) * sub)), k, iters = 10)
     }
   }
+
+  /** The quantizer training sample: the first 2048 vectors by vec_id. */
+  private def trainingSample(vectors: DataFrame): Array[Array[Double]] =
+    vectors.select(col("vec_id"), col("embedding"))
+      .orderBy("vec_id").limit(2048)
+      .collect().map(_.getSeq[Float](1).map(_.toDouble).toArray)
 
   /** Lloyd's iterations with first-k init (deterministic; empty cells
     * keep their previous center).
@@ -386,33 +349,38 @@ object Similarity {
     centers
   }
 
-  /** Sub-distances of subspace m against all k centroids:
-    * d_mj = |c_mj|² − 2·v_subₘ·c_mj — the |v_subₘ|² term is constant
-    * per (row, subspace), shifting encode-argmin and ADC ranking
-    * equally, so it's dropped. One codegen'd dot per (row, centroid)
-    * against a literal centroid; |c|² is a driver-computed literal
-    * (the oracle embeds the same printed double).
+  /** Distances of `v` to each center as d_j = |c_j|² − 2·v·c_j: the
+    * |v|² term is constant per row, shifting every argmin and ranking
+    * equally, so it is dropped. One codegen'd dot per (row, center)
+    * against a literal center; |c|² is a driver-computed literal (the
+    * oracle embeds the same printed double).
     */
+  private def centerDists(v: Column, centers: Array[Array[Double]]): Seq[Column] =
+    centers.toSeq.map { c =>
+      var cc = 0.0; var j = 0
+      while (j < c.length) { cc += c(j) * c(j); j += 1 }
+      lit(cc) - lit(2.0) * dot(v, typedlit(c.toSeq))
+    }
+
+  /** Sub-distances of subspace m against all k centroids. */
   private def pqSubDists(v: Column, cb: Array[Array[Array[Double]]],
       m: Int): Seq[Column] = {
     val sub = cb(m)(0).length
-    val vs = slice(v, m * sub + 1, sub)
-    cb(m).toSeq.map { c =>
-      var cc = 0.0; var j = 0
-      while (j < c.length) { cc += c(j) * c(j); j += 1 }
-      lit(cc) - lit(2.0) * dot(vs, typedlit(c.toSeq))
-    }
+    centerDists(slice(v, m * sub + 1, sub), cb(m))
   }
 
-  /** PQ code for subspace m: argmin sub-distance, lowest index on ties
-    * (array_sort over (d, idx) structs — the same tiebreak as
-    * [[ivfTopK]]'s cellOrder and the oracle's first-position list_min).
+  /** (d, idx) structs of `dists` sorted nearest first, lowest index on
+    * ties (the oracle's first-position list_min).
     */
+  private def nearestFirst(dists: Seq[Column]): Column =
+    array_sort(array(dists.zipWithIndex.map {
+      case (d, i) => struct(d.as("d"), lit(i).as("idx"))
+    }: _*))
+
+  /** PQ code for subspace m: the index of its nearest centroid. */
   private def pqCode(v: Column, cb: Array[Array[Array[Double]]],
       m: Int): Column =
-    element_at(array_sort(array(pqSubDists(v, cb, m).zipWithIndex.map {
-      case (dst, j) => struct(dst.as("d"), lit(j).as("idx"))
-    }: _*)), 1).getField("idx")
+    element_at(nearestFirst(pqSubDists(v, cb, m)), 1).getField("idx")
 
   /** Product-quantization ANN (asymmetric distance computation):
     * corpus vectors compress to numSub byte-sized codes (argmin

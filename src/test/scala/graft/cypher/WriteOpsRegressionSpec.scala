@@ -142,18 +142,64 @@ class WriteOpsRegressionSpec extends AnyFunSuite {
     assert(props(s, "m", "x.y") == Seq("""{"y": 1, "again": true}"""))
   }
 
-  test("MERGE routing: a CHECK constraint sees the pattern's properties, not ON CREATE SET's") {
+  test("MERGE routing: a CHECK constraint sees the properties ON CREATE SET leaves") {
     val s = fresh()
     s.catalog.addConstraint("g", "l", "l_chk", "check", "c IS NULL AND n > 0")
-    // the SET result (c present) would fail the check; the pattern map passes
-    s.cypher("UNWIND [1, 2] AS k MERGE (x:l {n: k}) ON CREATE SET x.c = k")
-    assert(props(s, "l", "x.n") == Seq("""{"c": 1, "n": 1}""", """{"c": 2, "n": 2}"""))
-    // the pattern map fails the check even though the SET would pass it
+    // the pattern map passes the check, the ON CREATE SET result does
+    // not: nothing is written
     val e = intercept[IllegalStateException] {
-      s.cypher("MERGE (x:l {n: -1}) ON CREATE SET x.n = 5")
+      s.cypher("UNWIND [1, 2] AS k MERGE (x:l {n: k}) ON CREATE SET x.c = k")
     }
     assert(e.getMessage.contains("l_chk"), e.getMessage)
-    assert(props(s, "l", "x.n").length == 2)
+    assert(props(s, "l", "x.n").isEmpty)
+    // the created element is written once, with the map ON CREATE SET
+    // leaves, and that map passes
+    s.cypher("MERGE (x:l {n: -1}) ON CREATE SET x.n = 5")
+    assert(props(s, "l", "x.n") == Seq("""{"n": 5}"""))
+    // an item on a pre-bound element routes ON CREATE SET through SET
+    // over the created rows, which checks the created element's new map
+    s.cypher("CREATE (:m {k: 0})")
+    val e2 = intercept[IllegalStateException] {
+      s.cypher("MATCH (a:m) MERGE (a)-[:t]->(x:l {n: 7}) ON CREATE SET a.k = 1, x.c = 1")
+    }
+    assert(e2.getMessage.contains("l_chk"), e2.getMessage)
+  }
+
+  // ---- SET checks the constraints of the labels it writes
+
+  test("SET: a value a CHECK constraint forbids fails and leaves the label unchanged") {
+    val s = fresh()
+    s.catalog.addConstraint("g", "l", "l_age", "check", "age > 0")
+    s.cypher("CREATE (:l {age: 5})")
+    val e = intercept[IllegalStateException] { s.cypher("MATCH (n:l) SET n.age = -1") }
+    assert(e.getMessage.contains("""violates check constraint "l_age""""), e.getMessage)
+    assert(props(s, "l", "x.age") == Seq("""{"age": 5}"""))
+  }
+
+  test("SET: a duplicate UNIQUE key fails and leaves the label unchanged") {
+    val s = fresh()
+    s.catalog.addConstraint("g", "l", "l_k", "unique", "k")
+    s.cypher("CREATE (:l {k: 1}), (:l {k: 2})")
+    val e = intercept[IllegalStateException] {
+      s.cypher("MATCH (n:l) WHERE n.k = 2 SET n.k = 1")
+    }
+    assert(e.getMessage.contains("""duplicate key value violates unique constraint "l_k""""),
+      e.getMessage)
+    // two updated elements taking one key collide with each other
+    val e2 = intercept[IllegalStateException] { s.cypher("MATCH (n:l) SET n.k = 3") }
+    assert(e2.getMessage.contains("unique"), e2.getMessage)
+    assert(props(s, "l", "x.k") == Seq("""{"k": 1}""", """{"k": 2}"""))
+  }
+
+  test("SET: an update that keeps its UNIQUE key succeeds") {
+    val s = fresh()
+    s.catalog.addConstraint("g", "l", "l_k", "unique", "k")
+    s.cypher("CREATE (:l {k: 1}), (:l {k: 2})")
+    // the key is written again unchanged: no collision with its own old row
+    s.cypher("MATCH (n:l) WHERE n.k = 1 SET n.k = 1, n.x = 3")
+    // keys change places with no duplicate among the new maps
+    s.cypher("MATCH (n:l) SET n.k = 3 - n.k")
+    assert(props(s, "l", "x.k") == Seq("""{"k": 1}""", """{"k": 2, "x": 3}"""))
   }
 
   test("MERGE routing: ON CREATE SET items read across a pre-bound and a created element in written order") {

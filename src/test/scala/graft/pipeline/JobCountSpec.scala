@@ -125,12 +125,25 @@ class JobCountSpec extends AnyFunSuite {
     assert((build, collect) == (42, 3))
   }
 
-  test("VLE *1..6 (emptiness-probed): job count pinned") {
+  test("kCore k = 2: job count pinned") {
+    val (build, collect) = jobsOf(GraphAnalytics.kCore(undirected, 2))
+    info(s"build $build, collect $collect")
+    assert((build, collect) == (8, 1))
+  }
+
+  test("Dedup.clusters (distributed): job count pinned") {
+    val (build, collect) = jobsOf(Dedup.clusters(
+      undirected.toDF("da", "db"), maxDriverPairs = 0L))
+    info(s"build $build, collect $collect")
+    assert((build, collect) == (30, 1))
+  }
+
+  test("VLE *1..6 (counted levels): job count pinned") {
     val s = paths
     val (build, collect) = jobsOf(s.cypher(
       "MATCH (a:v {n: 0})-[:e*1..6]->(b:v) RETURN b.n AS n"))
     info(s"build $build, collect $collect")
-    assert((build, collect) == (18, 5))
+    assert((build, collect) == (14, 3))
   }
 
   /** A fresh graph per write pin: vertex labels a and b (n = 0..3
@@ -175,6 +188,6 @@ class JobCountSpec extends AnyFunSuite {
         s"""MATCH p = dijkstra((a:v {n: 0})-[e:e]->(b:v {n: 8}), e.w$limit)
           |RETURN length(p) AS len""".stripMargin))
       info(s"build $build, collect $collect")
-      assert((build, collect) == (69, 3))
+      assert((build, collect) == (67, 3))
     }
 }

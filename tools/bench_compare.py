@@ -3,12 +3,63 @@
 ratio regressions, steady2/steady1 inflation, and the jvm section.
 
 Usage: bench_compare.py OLD.json NEW.json [drift_threshold=0.25]
+
+       bench_compare.py --templates PARENT-templates.json CHANGE-templates.json
+
+The second form compares two graphbench traced runs
+(graphbench/results/<workload>-seed<N>-templates.json): per template,
+builder.jobs, exec.jobs and builder.ms as parent -> change. Each
+per-template figure is a mean over the rounds that fit the run's window,
+and every round draws new parameters, so two runs compare only when
+their templates ran the same number of ops; a template whose ops differ
+is flagged. Take one round per side:
+
+  python3 graphbench/run.py --workload traverse --seed 1 --seconds 1 --trace 1
 """
 import json
 import sys
 
+TEMPLATE_METRICS = ("builder.jobs", "exec.jobs", "builder.ms")
+
+
+def compare_templates(parent_path, change_path):
+    parent = json.load(open(parent_path))
+    change = json.load(open(change_path))
+    for side in ("workload", "seed"):
+        if parent.get(side) != change.get(side):
+            print(f"WARNING: {side} differs: {parent.get(side)} vs {change.get(side)}")
+    pt, ct = parent["templates"], change["templates"]
+
+    def fmt(v):
+        return "-" if v is None else f"{v:g}" if v == int(v) else f"{v:.1f}"
+
+    head = "".join(f"  {m:>22s}" for m in TEMPLATE_METRICS)
+    print(f"{parent.get('workload', '?')} seed {parent.get('seed', '?')}: "
+          "parent -> change")
+    print(f"{'template':20s}{head}  ops")
+    differ = []
+    for name in sorted(set(pt) | set(ct)):
+        p, c = pt.get(name, {}), ct.get(name, {})
+        cells = "".join(
+            f"  {fmt(p.get(m)) + ' -> ' + fmt(c.get(m)):>22s}"
+            for m in TEMPLATE_METRICS)
+        ops = f"{p.get('ops', '-')} -> {c.get('ops', '-')}"
+        flag = ""
+        if p.get("ops") != c.get("ops"):
+            flag = "  OPS DIFFER: means over different rounds, not comparable"
+            differ.append(name)
+        print(f"{name:20s}{cells}  {ops}{flag}")
+    if differ:
+        print(f"\n{len(differ)} template(s) ran a different number of ops; "
+              "rerun both sides with --seconds 1")
+    return 1 if differ else 0
+
 
 def main():
+    if len(sys.argv) > 1 and sys.argv[1] == "--templates":
+        if len(sys.argv) != 4:
+            sys.exit(__doc__)
+        sys.exit(compare_templates(sys.argv[2], sys.argv[3]))
     old = json.load(open(sys.argv[1]))
     new = json.load(open(sys.argv[2]))
     thr = float(sys.argv[3]) if len(sys.argv) > 3 else 0.25
