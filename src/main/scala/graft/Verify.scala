@@ -4,14 +4,18 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The query-name filter of comma-separated name prefixes (none: all). */
+  private[graft] def only(prefixes: Option[String]): String => Boolean =
+    prefixes.fold((_: String) => true) { p =>
+      val ps = p.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
+      name => ps.exists(name.startsWith)
+    }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated name prefixes — run only the
     // matching queries (local iteration; the driver passes 2 args)
-    val only: String => Boolean =
-      if (args.length > 2) { val ps = args(2).split(",").toSeq
-        name => ps.exists(name.startsWith)
-      } else _ => true
+    val only = Verify.only(args.lift(2))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.min(Runtime.getRuntime.availableProcessors, 16).toString)
     val spark = api.GraftSession.configure(SparkSession.builder())

@@ -488,6 +488,10 @@ object WriteOps {
 
   /** SET / REMOVE / += (ExecSetGraph execCypherSet.c:141).
     * `cond` restricts affected rows (MERGE's matched or created rows).
+    * The whole statement is checked before any file changes: every
+    * variable's update is snapshotted first, then the constraints see
+    * the final map of each written element, then the labels are patched
+    * variable by variable.
     */
   def set(b: Builder, st: State, items: Seq[SetItem], cond: Column): State = {
     val frame = st.df.withColumn("__setord", setOrder(st.vars))
@@ -495,7 +499,7 @@ object WriteOps {
     val comp = b.compiler(State(frame, st.vars))
     val multiOk = multipleUpdate(b)
     var newDf = frame
-    setProps(comp, items).foreach { case (v, newProps) =>
+    val upds = setProps(comp, items).toSeq.map { case (v, newProps) =>
       val kind = st.kinds.getOrElse(v,
         throw new IllegalArgumentException(s"variable `$v` not defined"))
       require(kind == KV || kind == KE, s"SET target `$v` must be a graph element")
@@ -510,18 +514,6 @@ object WriteOps {
           count(lit(1)).as("__nupd")))
       if (!multiOk) warnRepeated(upd.ids)
       b.updatedProperties += upd.n
-      val k = if (kind == KV) 'v' else 'e'
-      // the new maps must pass their labels' constraints before any
-      // file of this variable's labels changes
-      checkConstraints(b, labelsOf(b, upd, k).map { case (labid, l) =>
-        (l, upd.ids.where(GraphId.labidOf(col("id")) === labid)
-          .select(col("id"), col("__np").as("properties")))
-      })
-      patchLabels(b, Seq(upd -> k)) {
-        (cur, u) => cur.join(u.select(col("id"), col("__np")), Seq("id"), "left")
-          .withColumn("properties", coalesce(col("__np"), col("properties")))
-          .drop("__np")
-      }
       // refresh EVERY in-flight element var by id (heap semantics:
       // aliases of the same element observe the update; PG rereads the
       // heap with a new CommandId between clauses)
@@ -541,6 +533,29 @@ object WriteOps {
                 props2.as("properties")))
           newDf = newDf.drop("__uid", "__unp")
         }
+      }
+      (upd, if (kind == KV) 'v' else 'e')
+    }
+    // the new maps must pass their labels' constraints before any file
+    // changes. Of two aliases of one element the later variable's row
+    // wins: it was computed over the earlier variable's refresh.
+    checkConstraints(b, {
+      val rows = upds.zipWithIndex.flatMap { case ((upd, k), i) =>
+        labelsOf(b, upd, k).map { case (labid, l) =>
+          (l, upd.ids.where(GraphId.labidOf(col("id")) === labid)
+            .select(col("id"), col("__np").as("properties"), lit(i).as("__vi")))
+        }
+      }
+      rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (l, dfs) =>
+        (l, dfs.map(_._2).reduce(_ unionAll _).groupBy("id")
+          .agg(max_by(col("properties"), col("__vi")).as("properties")))
+      }
+    })
+    upds.foreach { case (upd, k) =>
+      patchLabels(b, Seq(upd -> k)) {
+        (cur, u) => cur.join(u.select(col("id"), col("__np")), Seq("id"), "left")
+          .withColumn("properties", coalesce(col("__np"), col("properties")))
+          .drop("__np")
       }
     }
     State(b.dropShredCols(newDf.drop("__setord")), st.vars)

@@ -21,19 +21,18 @@ object GraphAnalytics {
     * default: fastest when the state fits, and evictable to disk when
     * it does not (measured: DISK_ONLY doubled p57's sf1 time, 8.7s →
     * 15.8s, by paying serialization on states that fit comfortably).
-    * Set SPARK_GRAFT_STATE_DISK=1 (env) or the `graft.state.disk`
-    * system property to force DISK_ONLY when a run's pair state must
-    * never compete with execution memory — measured at the 100x probe:
+    * Set the `graft.state.disk` system property to "1" to force
+    * DISK_ONLY when a run's pair state must never compete with
+    * execution memory — measured at the 100x probe:
     * MEMORY_AND_DISK checkpoint blocks pin the unified pool's
     * protected region and starve the per-round aggregation maps
     * ("unable to acquire ..., got 0") even at 80 GB, while DISK_ONLY
     * completes (each round streams the previous round's pairs once,
-    * the access pattern disk is good at). The bench's sf10 phase and
-    * `graft.Dev sf10` set the property around their probes.
+    * the access pattern disk is good at). `graft.Bench` sets it around
+    * its probe ladders for K >= 100.
     */
   private def forcedDisk: Boolean =
-    sys.props.get("graft.state.disk").contains("1") ||
-      sys.env.get("SPARK_GRAFT_STATE_DISK").contains("1")
+    sys.props.get("graft.state.disk").contains("1")
 
   /** Auto-selected pair-state level: DISK_ONLY once the projected pair
     * state would occupy more than a quarter of the unified pool —

@@ -29,6 +29,13 @@ object GraphQueries {
     sessions.getOrElseUpdate(sfDir, buildGraph(spark, sfDir))
   }
 
+  /** Forgets the graph built over `sfDir`; returns its catalog root for
+    * a caller that deletes its scratch data.
+    */
+  def release(sfDir: String): Option[String] = synchronized {
+    sessions.remove(sfDir).map(_.catalog.root)
+  }
+
   private def labid(s: CypherSession, label: String): Int =
     s.catalog.label(s.graphPath, label).get.labid
 

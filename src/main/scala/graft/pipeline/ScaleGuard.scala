@@ -60,7 +60,6 @@ object ScaleGuard {
 
   private def fallbackToTwin(spark: SparkSession): Boolean =
     spark.conf.getOption(FallbackKey)
-      .orElse(sys.props.get(FallbackKey))
       .exists(_.trim.equalsIgnoreCase("twin"))
 
   /** Run `exact`; if the pair-state guard trips AND the fallback conf
@@ -96,14 +95,14 @@ object ScaleGuard {
   def budgetBytes(spark: SparkSession): Long =
     spark.sparkContext.getExecutorMemoryStatus.values.map(_._1).sum
 
-  /** Resolved row threshold: the conf (session conf or system
-    * property), else 11 M rows per core (see the calibration note in
+  /** Resolved row threshold: the session conf (a `-Dspark.graft.*`
+    * flag given before the session starts arrives through SparkConf),
+    * else 11 M rows per core (see the calibration note in
     * the object doc — per-core state is the axis that separates the
     * measured-green first decade from the measured-fatal second).
     */
   def maxPairRows(spark: SparkSession): Long =
     spark.conf.getOption(ConfKey)
-      .orElse(sys.props.get(ConfKey))
       .map(_.trim.toLong)
       .getOrElse(
         (11L << 20) * math.max(1, spark.sparkContext.defaultParallelism))

@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Keys are found as whole quoted string literals on code lines (lines
   * starting a comment are skipped); system properties as the first
-  * argument of a `sys.props`/`System.getProperty` read.
+  * argument of a `sys.props`/`System.getProperty` read. Every
+  * environment or system-property read must name its key as a string
+  * literal, so no knob hides behind a constant or a computed key.
   */
 class KnobInventorySpec extends AnyFunSuite {
 
@@ -35,23 +37,10 @@ class KnobInventorySpec extends AnyFunSuite {
 
   private val envVars = Set(
     "SPARK_GRAFT_CPUS",
-    "SPARK_GRAFT_DEV_CONF",
-    "SPARK_GRAFT_DEV_RAW",
     "SPARK_GRAFT_REPLICA_TABLES",
     "SPARK_GRAFT_SCALE_CORPUS",
-    "SPARK_GRAFT_SF1",
-    "SPARK_GRAFT_SF10",
-    "SPARK_GRAFT_SF10_NOTE",
-    "SPARK_GRAFT_SF10_ONLY",
-    "SPARK_GRAFT_SF10_PROBES",
-    "SPARK_GRAFT_SF10_RUNS",
-    "SPARK_GRAFT_SF10_SEC",
-    "SPARK_GRAFT_SF10_SHUFFLE",
     "SPARK_GRAFT_SFK",
-    "SPARK_GRAFT_SF_DIR",
-    "SPARK_GRAFT_STATE_DISK",
-    "SPARK_GRAFT_TMPDIR",
-    "SPARK_GRAFT_WALL_BUDGET")
+    "SPARK_GRAFT_SF_DIR")
 
   private val sysProps = Set("graft.state.disk")
 
@@ -83,5 +72,20 @@ class KnobInventorySpec extends AnyFunSuite {
   test("graft.* system properties read in src/main") {
     assert(found("(?:sys\\.props\\.(?:get|getOrElse|contains)|sys\\.props|" +
       "System\\.getProperty)\\(\\s*\"(graft\\.[A-Za-z0-9_.]+)\"") == sysProps)
+  }
+
+  test("every environment and system-property read names its key as a string literal") {
+    // a read is `sys.env`/`sys.props` applied or queried with a key,
+    // or `System.getenv`/`System.getProperty`; anything else on those
+    // maps (a whole-map read, a computed key) is flagged
+    val read = ("(?:sys\\.(?:env|props)|System\\.get(?:env|Property|Properties))" +
+      "(?:\\.(?:getOrElse|get|contains|apply)\\b)?").r
+    val literal = "\\s*\\(\\s*\"".r
+    val hidden = codeLines.flatMap { l =>
+      read.findAllMatchIn(l)
+        .filterNot(m => literal.findPrefixOf(l.substring(m.end)).isDefined)
+        .map(_ => l.trim)
+    }
+    assert(hidden.isEmpty, hidden.mkString("\n"))
   }
 }

@@ -202,6 +202,35 @@ class WriteOpsRegressionSpec extends AnyFunSuite {
     assert(props(s, "l", "x.k") == Seq("""{"k": 1}""", """{"k": 2, "x": 3}"""))
   }
 
+  test("SET: a later variable's violation fails the statement before any variable is patched") {
+    val s = fresh()
+    s.cypher("CREATE (:m {k: 5})-[:t]->(:l {n: 1})")
+    s.catalog.addConstraint("g", "l", "l_chk", "check", "c IS NULL")
+    val e = intercept[IllegalStateException] {
+      s.cypher("MATCH (a:m {k: 5})-[:t]->(x:l) SET a.k = 6, x.c = 1")
+    }
+    assert(e.getMessage.contains("l_chk"), e.getMessage)
+    assert(props(s, "m", "x.k") == Seq("""{"k": 5}"""))
+    assert(props(s, "l", "x.n") == Seq("""{"n": 1}"""))
+  }
+
+  test("SET: two variables swapping a UNIQUE key succeed") {
+    val s = fresh()
+    s.catalog.addConstraint("g", "l", "l_k", "unique", "k")
+    s.cypher("CREATE (:l {k: 1, n: 1}), (:l {k: 2, n: 2})")
+    s.cypher("MATCH (a:l {k: 1}), (b:l {k: 2}) SET a.k = 2, b.k = 1")
+    assert(props(s, "l", "x.n") == Seq("""{"k": 2, "n": 1}""", """{"k": 1, "n": 2}"""))
+  }
+
+  test("SET: two aliases of one element on a UNIQUE label do not collide with themselves") {
+    val s = fresh()
+    s.catalog.addConstraint("g", "l", "l_k", "unique", "k")
+    s.cypher("CREATE (:l {k: 1}), (:l {k: 2})")
+    // b is a, so b's map carries the k a just set: one element, one key
+    s.cypher("MATCH (a:l {k: 1}), (b:l {k: 1}) SET a.k = 5, b.x = 1")
+    assert(props(s, "l", "x.k") == Seq("""{"k": 2}""", """{"k": 5, "x": 1}"""))
+  }
+
   test("MERGE routing: ON CREATE SET items read across a pre-bound and a created element in written order") {
     // the items apply in the order they are written, each reading the
     // elements as the earlier items left them: b.x reads the a.y just

@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
-"""Compare two bench_full.json files: per-query steady-min drift, sf1
-ratio regressions, steady2/steady1 inflation, and the jvm section.
+"""Compare two bench_full.json files: per-query steady-min drift, probe
+ladder ratios (read from the per-K boards each file names),
+steady2/steady1 inflation, and the jvm section.
 
 Usage: bench_compare.py OLD.json NEW.json [drift_threshold=0.25]
 
@@ -17,6 +18,7 @@ is flagged. Take one round per side:
   python3 graphbench/run.py --workload traverse --seed 1 --seconds 1 --trace 1
 """
 import json
+import os
 import sys
 
 TEMPLATE_METRICS = ("builder.jobs", "exec.jobs", "builder.ms")
@@ -53,6 +55,24 @@ def compare_templates(parent_path, change_path):
         print(f"\n{len(differ)} template(s) ran a different number of ops; "
               "rerun both sides with --seconds 1")
     return 1 if differ else 0
+
+
+def ladder_rows(full, path):
+    """Probe-ladder rows by K for a bench_full.json at `path`."""
+    base = os.path.dirname(os.path.abspath(path))
+    out = {}
+    for k, lad in full.get("ladders", {}).items():
+        board = os.path.join(base, lad["board"])
+        if os.path.exists(board):
+            for key, rows in json.load(open(board)).items():
+                if key.endswith(f"_probe_{k}x"):
+                    out[int(k)] = rows
+    if "sf1_probe_10x" in full:
+        out.setdefault(10, full["sf1_probe_10x"])
+    sf10 = os.path.join(base, "bench_sf10.json")
+    if "sf10_file" in full and os.path.exists(sf10):
+        out.setdefault(100, json.load(open(sf10)).get("sf10_probe_100x", {}))
+    return out
 
 
 def main():
@@ -99,34 +119,23 @@ def main():
         worst = max(infl)[0]
         print(f"  worst steady2/steady1: {worst:.2f}")
 
-    print("\n== sf1 ratios > 6x (bar is 10x) ==")
-    ns = new.get("sf1_probe_10x", {})
-    flags = [(v.get("ratio", 0), k, v["sec"]) for k, v in ns.items()
-             if isinstance(v, dict) and v.get("ratio", 0) > 6]
-    for r, k, s in sorted(flags, reverse=True):
-        bar = "BREACH" if r > 10 else "watch"
-        print(f"  {k:36s} sf1={s:6.2f}s  ratio {r:5.2f}x  [{bar}]")
-    if not flags:
-        print("  none")
-    print(f"  probes: {len(ns)}  (old: {len(old.get('sf1_probe_10x', {}))})")
-
-    # second-decade rows live in their own merged artifact (a plain
-    # bench run never drops them); fall back to an embedded section for
-    # pre-r10 files
-    s10 = new.get("sf10_probe_100x", {})
-    if not s10:
-        import os
-        p = os.path.join(os.path.dirname(os.path.abspath(sys.argv[2])),
-                         "bench_sf10.json")
-        if os.path.exists(p):
-            s10 = json.load(open(p)).get("sf10_probe_100x", {})
-    if s10:
-        print("\n== sf10 spot probes (100x; linear = ~100x ratio) ==")
-        for k, v in sorted(s10.items(), key=lambda kv: -kv[1].get("ratio", 0)):
-            runs = ",".join(f"{r:.1f}" for r in v.get("runs", []))
+    # probe-ladder rows live in per-K boards that bench_full.json names
+    # under "ladders"; pre-ladder files embed the 10x rows and point to
+    # bench_sf10.json for the 100x ones
+    old_ladders = ladder_rows(old, sys.argv[1])
+    for k, rows in sorted(ladder_rows(new, sys.argv[2]).items()):
+        print(f"\n== {k}x ladder: ratios > {0.6 * k:g}x (linear = ~{k}x) ==")
+        flags = [(v.get("ratio", 0), n, v) for n, v in rows.items()
+                 if isinstance(v, dict) and (v.get("ratio", 0) > 0.6 * k or v.get("err"))]
+        for r, n, v in sorted(flags, key=lambda f: -f[0]):
+            bar = "BREACH" if r > k else "watch"
+            runs = ",".join(f"{x:.1f}" for x in v.get("runs", []))
             err = f"  ERR {v['err']}" if v.get("err") else ""
-            print(f"  {k:36s} sf10={v['sec']:7.2f}s  ratio "
-                  f"{v.get('ratio', 0):6.1f}x  runs [{runs}]{err}")
+            print(f"  {n:36s} {v.get('sec', -1):7.2f}s  ratio {r:6.2f}x  "
+                  f"runs [{runs}]  [{bar}]{err}")
+        if not flags:
+            print("  none")
+        print(f"  probes: {len(rows)}  (old: {len(old_ladders.get(k, {}))})")
 
     out = new.get("steady2_outliers", {})
     if out:
@@ -145,6 +154,10 @@ def main():
         for field in ("sf1_error", "sf10_error"):
             if err_d.get(field):
                 print(f"\n  {err_src} {field}: {err_d[field]}")
+        for k, lad in err_d.get("ladders", {}).items():
+            for field in ("error", "failed", "dropped"):
+                if lad.get(field):
+                    print(f"\n  {err_src} {k}x ladder {field}: {lad[field]}")
 
 
 if __name__ == "__main__":
