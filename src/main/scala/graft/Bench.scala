@@ -401,6 +401,10 @@ object Bench {
       "probes" -> runs.size, "max_ratio" -> ratios.headOption.map(_._2),
       "top" -> obj(ratios.take(12).map { case (n, r) => short(n) -> r }: _*),
       "failed" -> obj(failed: _*),
+      // rows per protocol: a min-of-two estimator that fell to one
+      // sample (deadline) shows here without reading the board
+      "protocols" -> obj(rows.groupBy(_._2.path("protocol").asText).toSeq
+        .sortBy { case (p, rs) => (-rs.size, p) }.map { case (p, rs) => p -> rs.size }: _*),
       "dropped" -> (if (dropped.isEmpty) None else Some(dropped)),
       "error" -> error))
   }

@@ -594,7 +594,7 @@ final class CypherSession(
       s"jsonb_get(jsonb_norm(to_json(named_struct('v', $outerSql))), '\"v\"')"
     // Monotone single-inequality sublink: `EXISTS (∃ row: corr OP
     // outer)` ⟺ `extremum(corr) OP outer` — jsonb_lt/le/gt/ge ARE the
-    // total btree order (JsonbComparison over Jsonb.compare), so the
+    // total btree order (JsonbRT.cmp over Jsonb.compare), so the
     // min/max under the SAME order (min_by/max_by keyed on the
     // memcomparable jsonb_sort_key; SQL NULL operands satisfy no
     // comparison in either form) decides existence exactly. The

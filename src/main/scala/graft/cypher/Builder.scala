@@ -1508,7 +1508,7 @@ final class Builder(
   }
 
   /** ORDER BY with jsonb sort semantics: each jsonb key becomes one
-    * memcomparable binary column (JsonbSortKey) whose unsigned byte
+    * memcomparable binary column (jsonb_sort_key) whose unsigned byte
     * order equals jsonb btree order exactly — no custom physical
     * operator, and range partitioning works for distributed sorts.
     */
@@ -1537,7 +1537,7 @@ final class Builder(
       val cols: Seq[Column] = ce.kind match {
         // one memcomparable binary key = exact jsonb btree order,
         // including recursive count-first container comparison
-        // (JsonbSortKey) — range-partitionable, so distributed sorts
+        // (jsonb_sort_key) — range-partitionable, so distributed sorts
         // need no custom comparator
         case KJ => Seq(graft.expr.J.sortKey(ce.col))
         case _ => Seq(ce.col)

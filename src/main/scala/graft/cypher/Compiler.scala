@@ -624,9 +624,8 @@ final class Compiler(
           if (args.length > 3) ColumnBridge.expression(toBool(compile(args(3))))
           else Literal(false)
         val isMatch = pfn.startsWith("jsonb_path_match")
-        val base = ColumnBridge.column(graft.expr.ops.JsonbPathFunction(
-          if (isMatch) "match" else "exists", tz = pfn.endsWith("_tz"),
-          Seq(docE, pathE, varsE, silentE)))
+        val base = ColumnBridge.column(
+          graft.expr.JsonbFns(pfn).call(Seq(docE, pathE, varsE, silentE)))
         // sidecar guard: literal paths only (the shape must be known
         // at plan time to prove the conjunct exact). exists: lax
         // non-predicate `$.k ...`; match: lax top-level predicate

@@ -2,843 +2,345 @@ package graft.expr
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Custom Catalyst expressions for jsonb semantics (SURVEY §2.8, §4.3).
-  *
-  * Each expression is a thin codegen-capable shim over the static
-  * [[JsonbRT]] runtime: `doGenCode` emits one static call, so plans
+/** One jsonb function (SURVEY §2.8, §4.3): a [[JsonbRT]] method and how
+  * a call reaches it. A call evaluates as one `StaticInvoke` of the
+  * method, which interpreted eval and generated code share, so plans
   * containing these stay inside whole-stage codegen.
+  *
+  * @param name     the lookup key, and the SQL name when `sql` holds
+  * @param method   the JsonbRT method
+  * @param dataType the method's result type
+  * @param arity    accepted argument counts; a shorter call takes the
+  *                 missing trailing arguments from `pad`
+  * @param sql      registered as a Spark SQL function under `name`
+  * @param pretty   the prettyName auto-named columns and the analyzed
+  *                 plan show, when it differs from `name`
+  * @param strict   SQL NULL in any argument gives NULL without a call.
+  *                 A non-strict method receives the NULLs and applies
+  *                 its own rule; an argument of a primitive Java type
+  *                 (boolean, int, long) still propagates NULL
+  * @param nullable the method may return null
+  * @param args     the call's children to the method's arguments
+  *                 (hidden constants, variadic keys as one array)
+  * @param wrap     applied to the method's result (comparisons)
   */
-object ops {
-  val RT = "graft.expr.JsonbRT"
+final case class JsonbFn(name: String, method: String, dataType: DataType,
+    arity: Range = 1 to 1, pad: Seq[Expression] = Nil, sql: Boolean = true,
+    pretty: String = null, strict: Boolean = true, nullable: Boolean = true,
+    args: Seq[Expression] => Seq[Expression] = identity,
+    wrap: Expression => Expression = identity) {
 
-  /** jsonb x jsonb -> jsonb binary ops. */
-  case class JsonbBinary(op: String, left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = StringType
-    override def nullable: Boolean = true
-    override def prettyName: String = s"jsonb_$op"
-
-    @transient private lazy val fn: (UTF8String, UTF8String) => UTF8String =
-      op match {
-        case "add"    => JsonbRT.add
-        case "sub"    => JsonbRT.sub
-        case "mul"    => JsonbRT.mul
-        case "div"    => JsonbRT.div
-        case "mod"    => JsonbRT.mod
-        case "pow"    => JsonbRT.pow
-        case "concat" => JsonbRT.concat
-        case "get"    => JsonbRT.get
-        case "delete" => JsonbRT.deleteKey
-        case "delpath" => JsonbRT.deletePath
-        case "getpath" => JsonbRT.getPathJ
-        case "getpathtext" => JsonbRT.getPathText
-        case "objectkv" => JsonbRT.jsonbObject2
-      }
-
-    override def nullSafeEval(l: Any, r: Any): Any =
-      fn(l.asInstanceOf[UTF8String], r.asInstanceOf[UTF8String])
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val m = op match {
-        case "delete"  => "deleteKey"
-        case "delpath" => "deletePath"
-        case "getpath" => "getPathJ"
-        case "getpathtext" => "getPathText"
-        case "objectkv" => "jsonbObject2"
-        case o         => o
-      }
-      // result may be SQL NULL (e.g. `get` on a missing key) — a plain
-      // defineCodeGen would write a null UTF8String marked non-null
-      nullSafeCodeGen(ctx, ev, (l, r) =>
-        s"""${ev.value} = $RT.$m($l, $r);
-           |${ev.isNull} = ${ev.value} == null;
-           |""".stripMargin)
-    }
-
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
-  }
-
-  /** `jsonb - int`: array element delete by index (the reference's
-    * jsonb_delete_idx overload).
+  /** A call over `children`, padded; `caller` names the SQL function in
+    * the wrong-arity error.
     */
-  case class JsonbDeleteIdx(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = StringType
-    override def nullable: Boolean = true
-    override def prettyName: String = "jsonb_delete"
-    override def nullSafeEval(l: Any, r: Any): Any =
-      JsonbRT.deleteIdx(l.asInstanceOf[UTF8String],
-        r.asInstanceOf[Number].longValue)
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (l, r) =>
-        s"""${ev.value} = $RT.deleteIdx($l, (long) $r);
-           |${ev.isNull} = ${ev.value} == null;
-           |""".stripMargin)
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
+  def call(children: Seq[Expression], caller: String = name): Expression = {
+    JsonbFns.checkArity(caller, children, arity)
+    JsonbCall(this, children ++ pad.drop(children.length - arity.start))
   }
 
-  /** jsonb btree comparison returning SQL bool with 3VL nulls. */
-  case class JsonbComparison(op: String, left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = BooleanType
-    override def nullable: Boolean = true
-    override def prettyName: String = s"jsonb_$op"
+  def apply(cols: Column*): Column =
+    ColumnBridge.column(call(cols.map(ColumnBridge.expression)))
 
-    private def decide(c: Int): Boolean = op match {
-      case "eq" => c == 0
-      case "ne" => c != 0
-      case "lt" => c < 0
-      case "le" => c <= 0
-      case "gt" => c > 0
-      case "ge" => c >= 0
-    }
-
-    override def nullSafeEval(l: Any, r: Any): Any =
-      decide(JsonbRT.cmp(l.asInstanceOf[UTF8String], r.asInstanceOf[UTF8String]))
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cmpOp = op match {
-        case "eq" => "=="; case "ne" => "!="; case "lt" => "<"
-        case "le" => "<="; case "gt" => ">"; case "ge" => ">="
-      }
-      defineCodeGen(ctx, ev, (l, r) => s"($RT.cmp($l, $r) $cmpOp 0)")
-    }
-
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
-  }
-
-  /** jsonb @> containment / ? existence. */
-  case class JsonbPredicate(op: String, left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = BooleanType
-    override def nullable: Boolean = true
-    override def prettyName: String = s"jsonb_$op"
-
-    private def method: String = op match {
-      case "contains"  => "contains"
-      case "exists"    => "existsKey"
-      case "existsany" => "existsAny"
-      case "existsall" => "existsAll"
-    }
-
-    override def nullSafeEval(l: Any, r: Any): Any = {
-      val lu = l.asInstanceOf[UTF8String]; val ru = r.asInstanceOf[UTF8String]
-      op match {
-        case "contains"  => JsonbRT.contains(lu, ru)
-        case "exists"    => JsonbRT.existsKey(lu, ru)
-        case "existsany" => JsonbRT.existsAny(lu, ru)
-        case "existsall" => JsonbRT.existsAll(lu, ru)
-      }
-    }
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (l, r) => s"$RT.$method($l, $r)")
-
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
-  }
-
-  /** jsonb -> jsonb unary ops (also covers text<->jsonb casts whose
-    * output is a string column).
+  /** The static call. An untyped NULL argument takes the type of its
+    * position's default in `pad`, else jsonb text, so the method's
+    * parameter types match.
     */
-  case class JsonbUnary(op: String, child: Expression)
-      extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def nullable: Boolean = true
-    override def prettyName: String = s"jsonb_$op"
-
-    @transient private lazy val fn: UTF8String => UTF8String = op match {
-      case "uminus"    => JsonbRT.uminus
-      case "uplus"     => JsonbRT.uplus
-      case "astext"    => JsonbRT.asText
-      case "fromtext"  => JsonbRT.fromText
-      case "keys"      => JsonbRT.keys
-      case "head"      => JsonbRT.head
-      case "last"      => JsonbRT.last
-      case "tail"      => JsonbRT.tail
-      case "toboolean" => JsonbRT.cypherToBoolean
-      case "tostring"  => JsonbRT.cypherToString
-      case "arrdistinct" => JsonbRT.arrayDistinct
-      case "arrsum"    => JsonbRT.arraySum
-      case "arravg"    => JsonbRT.arrayAvg
-      case "arrmin"    => JsonbRT.arrayMin
-      case "arrmax"    => JsonbRT.arrayMax
-      case "strip_nulls" => JsonbRT.stripNullsJ
-      case "pretty"    => JsonbRT.prettyJ
-      case "typeof"    => JsonbRT.typeofJ
-      case "assert_elements_array" => JsonbRT.assertElementsArray
-      case "object1"   => JsonbRT.jsonbObject1
+  def invoke(children: Seq[Expression]): Expression = {
+    val typed = children.zipWithIndex.map {
+      case (c, i) if c.dataType == NullType =>
+        Cast(c, pad.lift(i - arity.start).fold[DataType](StringType)(_.dataType))
+      case (c, _) => c
     }
-
-    override def nullSafeEval(x: Any): Any = fn(x.asInstanceOf[UTF8String])
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val m = op match {
-        case "astext" => "asText"; case "fromtext" => "fromText"
-        case "toboolean" => "cypherToBoolean"; case "tostring" => "cypherToString"
-        case "arrdistinct" => "arrayDistinct"; case "arrsum" => "arraySum"
-        case "arravg" => "arrayAvg"; case "arrmin" => "arrayMin"
-        case "arrmax" => "arrayMax"
-        case "strip_nulls" => "stripNullsJ"; case "pretty" => "prettyJ"
-        case "typeof" => "typeofJ"
-        case "assert_elements_array" => "assertElementsArray"
-        case "object1" => "jsonbObject1"
-        case o => o
-      }
-      nullSafeCodeGen(ctx, ev, x =>
-        s"""${ev.value} = $RT.$m($x);
-           |${ev.isNull} = ${ev.value} == null;
-           |""".stripMargin)
-    }
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** jsonb -> primitive casts. */
-  case class JsonbCast(to: String, child: Expression) extends UnaryExpression {
-    override def dataType: DataType = to match {
-      case "bool"   => BooleanType
-      case "double" => DoubleType
-      case "long"   => LongType
-    }
-    override def nullable: Boolean = true
-    override def prettyName: String = s"jsonb_to_$to"
-
-    override def nullSafeEval(x: Any): Any = to match {
-      case "bool"   => JsonbRT.toBool(x.asInstanceOf[UTF8String])
-      case "double" => JsonbRT.asDouble(x.asInstanceOf[UTF8String])
-      case "long"   => JsonbRT.asLong(x.asInstanceOf[UTF8String])
-    }
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val m = to match {
-        case "bool" => "toBool"; case "double" => "asDouble"; case "long" => "asLong"
-      }
-      // boxed results: unwrap with a null check
-      val jt = to match {
-        case "bool" => "Boolean"; case "double" => "Double"; case "long" => "Long"
-      }
-      nullSafeCodeGen(ctx, ev, x => {
-        s"""java.lang.$jt tmp_${ev.value} = $RT.$m($x);
-           |if (tmp_${ev.value} == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} = tmp_${ev.value}.${to match {
-                case "bool" => "booleanValue"
-                case "double" => "doubleValue"
-                case "long" => "longValue"}}(); }
-           |""".stripMargin
-      })
-    }
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** jsonb type rank (sort-key component for jsonb btree ORDER BY). */
-  case class JsonbTypeRank(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = IntegerType
-    override def nullable: Boolean = true
-    override def prettyName: String = "jsonb_type_rank"
-    override def nullSafeEval(x: Any): Any =
-      JsonbRT.typeRank(x.asInstanceOf[UTF8String])
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, x => s"$RT.typeRank($x)")
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** jsonb length() -> long (string/array/object). */
-  case class JsonbLength(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = true
-    override def prettyName: String = "jsonb_length"
-
-    override def nullSafeEval(x: Any): Any = {
-      val r = JsonbRT.length(x.asInstanceOf[UTF8String])
-      if (r == null) null else r.longValue
-    }
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, x =>
-        s"""java.lang.Long tmp_${ev.value} = $RT.length($x);
-           |if (tmp_${ev.value} == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} = tmp_${ev.value}.longValue(); }
-           |""".stripMargin)
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** primitive -> jsonb number/bool render. */
-  case class JsonbFromPrim(from: String, child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def nullable: Boolean = true
-    override def prettyName: String = s"jsonb_from_$from"
-
-    override def nullSafeEval(x: Any): Any = from match {
-      case "long"   => JsonbRT.fromLong(x.asInstanceOf[Long])
-      case "double" => JsonbRT.fromDouble(x.asInstanceOf[Double])
-      case "bool"   => JsonbRT.fromBool(x.asInstanceOf[Boolean])
-    }
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val m = from match {
-        case "long" => "fromLong"; case "double" => "fromDouble"; case "bool" => "fromBool"
-      }
-      defineCodeGen(ctx, ev, x => s"$RT.$m($x)")
-    }
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** List slice l[a..b]; open bounds are SQL NULLs (so cannot use
-    * null-intolerant TernaryExpression defaults).
-    */
-  case class JsonbSlice(list: Expression, from: Expression, to: Expression)
-      extends Expression {
-    override def children: Seq[Expression] = Seq(list, from, to)
-    override def dataType: DataType = StringType
-    override def nullable: Boolean = true
-    override def prettyName: String = "jsonb_slice"
-    override lazy val deterministic: Boolean = true
-
-    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-      val l = list.eval(input)
-      if (l == null) return null
-      val f = from.eval(input)
-      val t = to.eval(input)
-      JsonbRT.slice(l.asInstanceOf[UTF8String],
-        f.asInstanceOf[UTF8String], t.asInstanceOf[UTF8String])
-    }
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val lg = list.genCode(ctx); val fg = from.genCode(ctx); val tg = to.genCode(ctx)
-      val code =
-        s"""${lg.code}
-           |boolean ${ev.isNull} = true;
-           |UTF8String ${ev.value} = null;
-           |if (!${lg.isNull}) {
-           |  ${fg.code}
-           |  ${tg.code}
-           |  ${ev.value} = $RT.slice(${lg.value},
-           |    ${fg.isNull} ? (UTF8String) null : ${fg.value},
-           |    ${tg.isNull} ? (UTF8String) null : ${tg.value});
-           |  ${ev.isNull} = ${ev.value} == null;
-           |}
-           |""".stripMargin
-      ev.copy(code = org.apache.spark.sql.catalyst.expressions.codegen.Block
-        .BlockHelper(new StringContext(code)).code())
-    }
-
-    override protected def withNewChildrenInternal(
-        newChildren: IndexedSeq[Expression]): Expression =
-      copy(list = newChildren(0), from = newChildren(1), to = newChildren(2))
-  }
-
-  /** SET n.k = v / REMOVE n.k — SQL-NULL value deletes the key. */
-  case class JsonbSetKey(obj: Expression, key: Expression, value: Expression)
-      extends Expression {
-    override def children: Seq[Expression] = Seq(obj, key, value)
-    override def dataType: DataType = StringType
-    override def nullable: Boolean = true
-    override def prettyName: String = "jsonb_set_key"
-    override lazy val deterministic: Boolean = true
-
-    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-      val o = obj.eval(input)
-      if (o == null) return null
-      val k = key.eval(input)
-      if (k == null) return o
-      JsonbRT.setKey(o.asInstanceOf[UTF8String], k.asInstanceOf[UTF8String],
-        value.eval(input).asInstanceOf[UTF8String])
-    }
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val og = obj.genCode(ctx); val kg = key.genCode(ctx); val vg = value.genCode(ctx)
-      val code =
-        s"""${og.code}
-           |boolean ${ev.isNull} = true;
-           |UTF8String ${ev.value} = null;
-           |if (!${og.isNull}) {
-           |  ${kg.code}
-           |  if (${kg.isNull}) { ${ev.value} = ${og.value}; ${ev.isNull} = false; }
-           |  else {
-           |    ${vg.code}
-           |    ${ev.value} = $RT.setKey(${og.value}, ${kg.value},
-           |      ${vg.isNull} ? (UTF8String) null : ${vg.value});
-           |    ${ev.isNull} = false;
-           |  }
-           |}
-           |""".stripMargin
-      ev.copy(code = org.apache.spark.sql.catalyst.expressions.codegen.Block
-        .BlockHelper(new StringContext(code)).code())
-    }
-
-    override protected def withNewChildrenInternal(
-        newChildren: IndexedSeq[Expression]): Expression =
-      copy(obj = newChildren(0), key = newChildren(1), value = newChildren(2))
-  }
-
-  /** SRF analogs returning explode-able arrays directly as ArrayData
-    * (no intermediate jsonb array round-trip): jsonb_each ({"key",
-    * "value"} objects), jsonb_object_keys (text keys),
-    * jsonb_array_elements_text (text elements, JSON null -> SQL NULL
-    * element). Reference: jsonfuncs.c each_worker_jsonb /
-    * jsonb_object_keys / elements_worker_jsonb.
-    */
-  case class JsonbSrfArray(op: String, child: Expression)
-      extends UnaryExpression {
-    override def dataType: DataType =
-      ArrayType(StringType, containsNull = op == "array_elements_text")
-    override def nullable: Boolean = true
-    override def prettyName: String = s"jsonb_$op"
-    private def method: String = op match {
-      case "each"                => "eachRows"
-      case "each_text"           => "eachTextRows"
-      case "object_keys"         => "objectKeysRows"
-      case "array_elements_text" => "arrayElementsText"
-    }
-    override def nullSafeEval(x: Any): Any = op match {
-      case "each"        => JsonbRT.eachRows(x.asInstanceOf[UTF8String])
-      case "each_text"   => JsonbRT.eachTextRows(x.asInstanceOf[UTF8String])
-      case "object_keys" => JsonbRT.objectKeysRows(x.asInstanceOf[UTF8String])
-      case "array_elements_text" =>
-        JsonbRT.arrayElementsText(x.asInstanceOf[UTF8String])
-    }
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, x =>
-        s"""${ev.value} = $RT.$method($x);
-           |${ev.isNull} = ${ev.value} == null;
-           |""".stripMargin)
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** jsonb_array_length (jsonfuncs.c; errors on non-arrays). */
-  case class JsonbArrayLength(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = IntegerType
-    override def nullable: Boolean = true
-    override def prettyName: String = "jsonb_array_length"
-    override def nullSafeEval(x: Any): Any =
-      JsonbRT.arrayLengthJ(x.asInstanceOf[UTF8String])
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, x => s"$RT.arrayLengthJ($x)")
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** jsonb_extract_path(_text): variadic key form of `#>`; STRICT on
-    * the document, a SQL NULL key yields NULL (the reference's strict
-    * call convention gives the same observable result).
-    */
-  case class JsonbExtractPath(text: Boolean, children: Seq[Expression])
-      extends Expression {
-    override def dataType: DataType = StringType
-    override def nullable: Boolean = true
-    override def prettyName: String =
-      if (text) "jsonb_extract_path_text" else "jsonb_extract_path"
-    override lazy val deterministic: Boolean = true
-
-    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-      val doc = children.head.eval(input)
-      if (doc == null) return null
-      val keys = children.tail.map(_.eval(input).asInstanceOf[UTF8String]).toArray
-      JsonbRT.extractPath(doc.asInstanceOf[UTF8String], keys, text)
-    }
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val dg = children.head.genCode(ctx)
-      val kgs = children.tail.map(_.genCode(ctx))
-      val arr = ctx.freshName("jpKeys")
-      val fill = kgs.zipWithIndex.map { case (kg, i) =>
-        s"""${kg.code}
-           |$arr[$i] = ${kg.isNull} ? null : ${kg.value};""".stripMargin
-      }.mkString("\n")
-      val code =
-        s"""${dg.code}
-           |boolean ${ev.isNull} = true;
-           |UTF8String ${ev.value} = null;
-           |if (!${dg.isNull}) {
-           |  UTF8String[] $arr = new UTF8String[${kgs.length}];
-           |  $fill
-           |  ${ev.value} = $RT.extractPath(${dg.value}, $arr, $text);
-           |  ${ev.isNull} = ${ev.value} == null;
-           |}
-           |""".stripMargin
-      ev.copy(code = org.apache.spark.sql.catalyst.expressions.codegen.Block
-        .BlockHelper(new StringContext(code)).code())
-    }
-
-    override protected def withNewChildrenInternal(
-        newChildren: IndexedSeq[Expression]): Expression =
-      copy(children = newChildren)
-  }
-
-  /** to_jsonb(anyelement) and the value half of jsonb_build_*: any
-    * Spark value -> jsonb text. STRICT (SQL NULL -> NULL). The child's
-    * DataType rides into codegen as a reference object.
-    */
-  case class ToJsonbValue(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def nullable: Boolean = true
-    override def prettyName: String = "to_jsonb"
-    override def nullSafeEval(x: Any): Any =
-      JsonbRT.toJsonbValue(x, child.dataType)
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val dtRef = ctx.addReferenceObj("toJsonbDt", child.dataType,
-        "org.apache.spark.sql.types.DataType")
-      nullSafeCodeGen(ctx, ev, x =>
-        s"""${ev.value} = $RT.toJsonbValue($x, $dtRef);
-           |${ev.isNull} = ${ev.value} == null;
-           |""".stripMargin)
-    }
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** The key half of jsonb_build_object: NOT null-safe on purpose —
-    * a SQL NULL key must raise the reference's error, not propagate.
-    */
-  case class JsonbKeyText(child: Expression, argPos: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def nullable: Boolean = false
-    override def prettyName: String = "jsonb_key_text"
-    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-      JsonbRT.keyText(child.eval(input), child.dataType, argPos)
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val dtRef = ctx.addReferenceObj("keyDt", child.dataType,
-        "org.apache.spark.sql.types.DataType")
-      val cg = child.genCode(ctx)
-      val code =
-        s"""${cg.code}
-           |UTF8String ${ev.value} = $RT.keyText(
-           |  ${cg.isNull} ? null : (Object) ${cg.value}, $dtRef, $argPos);
-           |""".stripMargin
-      ev.copy(code = org.apache.spark.sql.catalyst.expressions.codegen.Block
-        .BlockHelper(new StringContext(code)).code(),
-        isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-    }
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** jsonb_build_object / jsonb_build_array over pre-converted parts
-    * (keys via JsonbKeyText, values via ToJsonbValue — the
-    * registration layer wraps them). A SQL NULL value becomes jsonb
-    * null; the result itself is never NULL.
-    */
-  case class JsonbBuild(obj: Boolean, children: Seq[Expression])
-      extends Expression {
-    override def dataType: DataType = StringType
-    override def nullable: Boolean = false
-    override def prettyName: String =
-      if (obj) "jsonb_build_object" else "jsonb_build_array"
-    override lazy val deterministic: Boolean = children.forall(_.deterministic)
-    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-      val parts = new Array[UTF8String](children.length)
-      var i = 0
-      while (i < children.length) {
-        parts(i) = children(i).eval(input).asInstanceOf[UTF8String]
-        i += 1
-      }
-      JsonbRT.buildFromParts(obj, parts)
-    }
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cgs = children.map(_.genCode(ctx))
-      val arr = ctx.freshName("jbParts")
-      val fill = cgs.zipWithIndex.map { case (cg, i) =>
-        s"""${cg.code}
-           |$arr[$i] = ${cg.isNull} ? (UTF8String) null : ${cg.value};""".stripMargin
-      }.mkString("\n")
-      val code =
-        s"""UTF8String[] $arr = new UTF8String[${cgs.length}];
-           |$fill
-           |UTF8String ${ev.value} = $RT.buildFromParts($obj, $arr);
-           |""".stripMargin
-      ev.copy(code = org.apache.spark.sql.catalyst.expressions.codegen.Block
-        .BlockHelper(new StringContext(code)).code(),
-        isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-    }
-    override protected def withNewChildrenInternal(
-        newChildren: IndexedSeq[Expression]): Expression =
-      copy(children = newChildren)
-  }
-
-  /** jsonb_set / jsonb_insert / jsonb_set_lax (jsonfuncs.c setPath).
-    * Children are normalized to (target, path, new, flag[, treatment])
-    * by the registration layer. set/insert are strict (any SQL NULL
-    * argument -> NULL, like the reference's STRICT functions);
-    * set_lax lets the NEW VALUE be NULL — that is its whole point —
-    * and the treatment argument decides what a null value means.
-    */
-  case class JsonbMutateFunction(op: String, children: Seq[Expression])
-      extends Expression {
-    override def dataType: DataType = StringType
-    override def nullable: Boolean = true
-    override def prettyName: String = s"jsonb_$op"
-    override lazy val deterministic: Boolean = true
-
-    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-      val t = children(0).eval(input)
-      val path = children(1).eval(input)
-      val nv = children(2).eval(input)
-      val flag = children(3).eval(input)
-      if (t == null || path == null || flag == null) return null
-      val tu = t.asInstanceOf[UTF8String]
-      val pu = path.asInstanceOf[UTF8String]
-      val nu = nv.asInstanceOf[UTF8String]
-      val f = flag.asInstanceOf[Boolean]
-      op match {
-        case "set" =>
-          if (nu == null) null else JsonbRT.jsonbSet(tu, pu, nu, f)
-        case "insert" =>
-          if (nu == null) null else JsonbRT.jsonbInsert(tu, pu, nu, f)
-        case "set_lax" =>
-          val tr = children(4).eval(input)
-          JsonbRT.jsonbSetLax(tu, pu, nu, f,
-            if (tr == null) null else tr.asInstanceOf[UTF8String])
-      }
-    }
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val tg = children(0).genCode(ctx); val pg = children(1).genCode(ctx)
-      val ng = children(2).genCode(ctx); val fg = children(3).genCode(ctx)
-      val lax = op == "set_lax"
-      val trg = if (lax) children(4).genCode(ctx) else null
-      val call =
-        if (lax)
-          // the explicit casts matter: when an argument is a NULL
-          // literal its ExprCode value is the Java literal `null`, and
-          // an uncast `cond ? null : null` ternary types as Object —
-          // janino then finds no applicable method and the WHOLE
-          // projection silently falls back to interpreter mode
-          s"""$RT.jsonbSetLax(${tg.value}, ${pg.value},
-             |  ${ng.isNull} ? (UTF8String) null : ${ng.value}, ${fg.value},
-             |  ${trg.isNull} ? (UTF8String) null : ${trg.value})""".stripMargin
-        else
-          s"$RT.jsonb${if (op == "set") "Set" else "Insert"}(" +
-            s"${tg.value}, ${pg.value}, ${ng.value}, ${fg.value})"
-      val nullGuard =
-        if (lax) s"!${tg.isNull} && !${pg.isNull} && !${fg.isNull}"
-        else s"!${tg.isNull} && !${pg.isNull} && !${ng.isNull} && !${fg.isNull}"
-      val code =
-        s"""${tg.code}
-           |${pg.code}
-           |${ng.code}
-           |${fg.code}
-           |${if (lax) trg.code else ""}
-           |boolean ${ev.isNull} = true;
-           |UTF8String ${ev.value} = null;
-           |if ($nullGuard) {
-           |  ${ev.value} = $call;
-           |  ${ev.isNull} = ${ev.value} == null;
-           |}
-           |""".stripMargin
-      ev.copy(code = org.apache.spark.sql.catalyst.expressions.codegen.Block
-        .BlockHelper(new StringContext(code)).code())
-    }
-
-    override protected def withNewChildrenInternal(
-        newChildren: IndexedSeq[Expression]): Expression =
-      copy(children = newChildren)
-  }
-
-  /** SQL/JSON path functions (reference: jsonb_path_exists/match/
-    * query_array/query_first and the `_tz` variants, jsonpath_exec.c).
-    * Children are always (doc, path, vars, silent) — the registration
-    * layer pads optional arguments; `vars` may be SQL NULL (no
-    * variables), `silent` defaults false like the reference's SQL
-    * signatures. exists/match return boolean, the query forms jsonb
-    * text. SQL NULL on doc or path yields NULL.
-    */
-  case class JsonbPathFunction(op: String, tz: Boolean,
-      children: Seq[Expression]) extends Expression {
-    private def boolOut = op == "exists" || op == "match"
-    // query_rows is the SRF row form: one jsonb text per result item,
-    // ready for explode() (a result item is never a SQL NULL — JSON
-    // null renders as "null")
-    private def rowsOut = op == "query_rows"
-    override def dataType: DataType =
-      if (boolOut) BooleanType
-      else if (rowsOut) ArrayType(StringType, containsNull = false)
-      else StringType
-    override def nullable: Boolean = true
-    override def prettyName: String =
-      (if (rowsOut) "jsonb_path_query" else s"jsonb_path_$op") +
-        (if (tz) "_tz" else "")
-    override lazy val deterministic: Boolean = true
-
-    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-      val doc = children(0).eval(input)
-      val path = children(1).eval(input)
-      if (doc == null || path == null) return null
-      val vars = children(2).eval(input).asInstanceOf[UTF8String]
-      val silentAny = children(3).eval(input)
-      val silent = silentAny != null && silentAny.asInstanceOf[Boolean]
-      val d = doc.asInstanceOf[UTF8String]; val p = path.asInstanceOf[UTF8String]
-      op match {
-        case "exists"      => JsonbRT.jsonpathExists(d, p, vars, silent, tz)
-        case "match"       => JsonbRT.jsonpathMatch(d, p, vars, silent, tz)
-        case "query_array" => JsonbRT.jsonpathQueryArray(d, p, vars, silent, tz)
-        case "query_first" => JsonbRT.jsonpathQueryFirst(d, p, vars, silent, tz)
-        case "query_rows"  => JsonbRT.jsonpathQueryRows(d, p, vars, silent, tz)
-      }
-    }
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val dg = children(0).genCode(ctx); val pg = children(1).genCode(ctx)
-      val vg = children(2).genCode(ctx); val sg = children(3).genCode(ctx)
-      val m = op match {
-        case "exists"      => "jsonpathExists"
-        case "match"       => "jsonpathMatch"
-        case "query_array" => "jsonpathQueryArray"
-        case "query_first" => "jsonpathQueryFirst"
-        case "query_rows"  => "jsonpathQueryRows"
-      }
-      val vty =
-        if (boolOut) "boolean"
-        else if (rowsOut) "org.apache.spark.sql.catalyst.util.ArrayData"
-        else "UTF8String"
-      val (jty, dflt) =
-        if (boolOut) ("java.lang.Boolean", "false") else (vty, "null")
-      val tmp = ctx.freshName("jpRes")
-      val code =
-        s"""${dg.code}
-           |${pg.code}
-           |boolean ${ev.isNull} = true;
-           |$vty ${ev.value} = $dflt;
-           |if (!${dg.isNull} && !${pg.isNull}) {
-           |  ${vg.code}
-           |  ${sg.code}
-           |  $jty $tmp = $RT.$m(${dg.value}, ${pg.value},
-           |    ${vg.isNull} ? (UTF8String) null : ${vg.value},
-           |    ${sg.isNull} ? false : ${sg.value}, $tz);
-           |  ${ev.isNull} = $tmp == null;
-           |  if ($tmp != null) ${ev.value} = $tmp${if (boolOut) ".booleanValue()" else ""};
-           |}
-           |""".stripMargin
-      ev.copy(code = org.apache.spark.sql.catalyst.expressions.codegen.Block
-        .BlockHelper(new StringContext(code)).code())
-    }
-
-    override protected def withNewChildrenInternal(
-        newChildren: IndexedSeq[Expression]): Expression =
-      copy(children = newChildren)
+    wrap(StaticInvoke(JsonbRT.getClass, dataType, method, args(typed),
+      propagateNull = strict, returnNullable = nullable))
   }
 }
 
-/** Column-level API over the jsonb expressions. */
+/** A call of a [[JsonbFn]]: analyzed plans and column headers show the
+  * function's name; the optimizer replaces it by the static call.
+  */
+case class JsonbCall(fn: JsonbFn, children: Seq[Expression])
+    extends RuntimeReplaceable {
+  override lazy val replacement: Expression = fn.invoke(children)
+  override def prettyName: String = Option(fn.pretty).getOrElse(fn.name)
+  override protected def stringArgs: Iterator[Any] = children.iterator
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression = copy(children = newChildren)
+}
+
+/** The jsonb function table: one row per JsonbRT method. */
+object JsonbFns {
+  private val S = StringType
+  private val jsonbArray = ArrayType(StringType, containsNull = false)
+  private val zero = Literal(0)
+  private def cmp(name: String, op: Expression => Expression) =
+    JsonbFn(name, "cmp", IntegerType, 2 to 2, wrap = op)
+  private def typeOf(e: Expression) = Literal(e.dataType, ObjectType(classOf[DataType]))
+  private def array(es: Seq[Expression]) = CreateArray(es, useStringTypeWhenEmpty = true)
+  // jsonb_path_*(doc, path[, vars[, silent]]) and the `_tz` twins
+  // (jsonpath_exec.c): vars defaults to none, silent to false. SQL NULL
+  // on doc or path gives NULL (in the method); a NULL silent counts as
+  // false (coalesced here: a NULL boolean argument would propagate)
+  private def path(name: String, method: String, dt: DataType) =
+    Seq(false, true).map { tz =>
+      JsonbFn(name + (if (tz) "_tz" else ""), method, dt, 2 to 4,
+        pad = Seq(Literal(null, S), Literal(false)), strict = false,
+        args = a => Seq(a(0), a(1), a(2), Coalesce(Seq(a(3), Literal(false))), Literal(tz)))
+    }
+
+  val table: Seq[JsonbFn] = Seq(
+    // arithmetic and containers (cypher_ops.c)
+    JsonbFn("jsonb_add", "add", S, 2 to 2),
+    JsonbFn("jsonb_sub", "sub", S, 2 to 2),
+    JsonbFn("jsonb_mul", "mul", S, 2 to 2),
+    JsonbFn("jsonb_div", "div", S, 2 to 2),
+    JsonbFn("jsonb_mod", "mod", S, 2 to 2),
+    JsonbFn("jsonb_pow", "pow", S, 2 to 2),
+    JsonbFn("jsonb_uminus", "uminus", S, sql = false),
+    JsonbFn("jsonb_uplus", "uplus", S, sql = false),
+    JsonbFn("jsonb_concat", "concat", S, 2 to 2),
+    // btree order as SQL booleans; a NULL operand gives NULL (3VL)
+    cmp("jsonb_eq", EqualTo(_, zero)),
+    cmp("jsonb_ne", c => Not(EqualTo(c, zero))),
+    cmp("jsonb_lt", LessThan(_, zero)),
+    cmp("jsonb_le", LessThanOrEqual(_, zero)),
+    cmp("jsonb_gt", GreaterThan(_, zero)),
+    cmp("jsonb_ge", GreaterThanOrEqual(_, zero)),
+    JsonbFn("jsonb_typerank", "typeRank", IntegerType, pretty = "jsonb_type_rank"),
+    // memcomparable key: ORDER BY / GROUP BY jsonb values with PG
+    // jsonb ordering (type rank, full-precision numerics)
+    JsonbFn("jsonb_sort_key", "sortKey", BinaryType),
+    // @> and the ? family
+    JsonbFn("jsonb_contains", "contains", BooleanType, 2 to 2),
+    JsonbFn("jsonb_exists", "existsKey", BooleanType, 2 to 2),
+    JsonbFn("jsonb_exists_any", "existsAny", BooleanType, 2 to 2, pretty = "jsonb_existsany"),
+    JsonbFn("jsonb_exists_all", "existsAll", BooleanType, 2 to 2, pretty = "jsonb_existsall"),
+    // access: `->`, l[a..b], `#>` / `#>>` and the variadic
+    // jsonb_extract_path(_text) forms (jsonfuncs.c get_jsonb_path_all)
+    JsonbFn("jsonb_get", "get", S, 2 to 2),
+    JsonbFn("jsonb_slice", "slice", S, 3 to 3, strict = false),
+    JsonbFn("jsonb_get_path", "getPathJ", S, 2 to 2, pretty = "jsonb_getpath"),
+    JsonbFn("jsonb_get_path_text", "getPathText", S, 2 to 2, pretty = "jsonb_getpathtext"),
+    JsonbFn("jsonb_extract_path", "extractPath", S, 2 to 32, strict = false,
+      args = a => Seq(a.head, array(a.tail), Literal(false))),
+    JsonbFn("jsonb_extract_path_text", "extractPath", S, 2 to 32, strict = false,
+      args = a => Seq(a.head, array(a.tail), Literal(true))),
+    // writes: `-` by key or index (jsonb_delete's SQL form picks), `#-`,
+    // SET n.k, and the jsonfuncs.c setPath family
+    JsonbFn("jsonb_delete_key", "deleteKey", S, 2 to 2, sql = false, pretty = "jsonb_delete"),
+    JsonbFn("jsonb_delete_idx", "deleteIdx", S, 2 to 2, sql = false, pretty = "jsonb_delete"),
+    JsonbFn("jsonb_delete_path", "deletePath", S, 2 to 2, pretty = "jsonb_delpath"),
+    JsonbFn("jsonb_set_key", "setKey", S, 3 to 3, strict = false),
+    JsonbFn("jsonb_set", "jsonbSet", S, 3 to 4, pad = Seq(Literal(true))),
+    JsonbFn("jsonb_insert", "jsonbInsert", S, 3 to 4, pad = Seq(Literal(false))),
+    JsonbFn("jsonb_set_lax", "jsonbSetLax", S, 3 to 5, strict = false,
+      pad = Seq(Literal(true), Literal(UTF8String.fromString("use_json_null"), S))),
+    JsonbFn("jsonb_strip_nulls", "stripNullsJ", S),
+    // casts between jsonb and SQL values
+    JsonbFn("jsonb_astext", "asText", S),
+    JsonbFn("jsonb_fromtext", "fromText", S, sql = false),
+    JsonbFn("jsonb_to_bool", "toBool", BooleanType),
+    JsonbFn("jsonb_to_double", "asDouble", DoubleType),
+    JsonbFn("jsonb_to_long", "asLong", LongType),
+    JsonbFn("jsonb_from_long", "fromLong", S, sql = false),
+    JsonbFn("jsonb_from_double", "fromDouble", S, sql = false),
+    JsonbFn("jsonb_from_bool", "fromBool", S, sql = false),
+    // re-canonicalize JSON text (key sort, numeric canonical form) —
+    // the SQL-side door into jsonb space for native values:
+    // jsonb_get(jsonb_norm(to_json(named_struct('v', x))), '"v"')
+    JsonbFn("jsonb_norm", "normalize", S, pretty = "jsonb_normalize"),
+    // Cypher scalar and list functions (cypher_funcs.c)
+    JsonbFn("jsonb_length", "length", LongType),
+    JsonbFn("jsonb_keys", "keys", S),
+    JsonbFn("jsonb_head", "head", S, sql = false),
+    JsonbFn("jsonb_last", "last", S, sql = false),
+    JsonbFn("jsonb_tail", "tail", S, sql = false),
+    JsonbFn("jsonb_toboolean", "cypherToBoolean", S, sql = false),
+    JsonbFn("jsonb_tostring", "cypherToString", S, sql = false),
+    JsonbFn("jsonb_arrdistinct", "arrayDistinct", S, sql = false),
+    JsonbFn("jsonb_arrsum", "arraySum", S, sql = false),
+    JsonbFn("jsonb_arravg", "arrayAvg", S, sql = false),
+    JsonbFn("jsonb_arrmin", "arrayMin", S, sql = false),
+    JsonbFn("jsonb_arrmax", "arrayMax", S, sql = false),
+    // catalog and constructor functions (jsonfuncs.c; jsonb.sql:1376-1640)
+    JsonbFn("jsonb_pretty", "prettyJ", S),
+    JsonbFn("jsonb_typeof", "typeofJ", S),
+    JsonbFn("jsonb_object1", "jsonbObject1", S, sql = false),
+    JsonbFn("jsonb_objectkv", "jsonbObject2", S, 2 to 2, sql = false),
+    JsonbFn("to_jsonb", "toJsonbValue", S, args = a => Seq(a(0), typeOf(a(0)))),
+    JsonbFn("jsonb_key_text", "keyText", S, sql = false, args = a => Seq(a(0), typeOf(a(0)))),
+    JsonbFn("jsonb_build_array", "buildFromParts", S, 0 until Int.MaxValue, sql = false,
+      strict = false, nullable = false, args = a => Seq(Literal(false), array(a))),
+    JsonbFn("jsonb_build_object", "buildFromParts", S, 0 until Int.MaxValue, sql = false,
+      strict = false, nullable = false, args = a => Seq(Literal(true), array(a))),
+    // SRF analogs: the reference's set-returning functions surface as
+    // explode-able arrays (Spark has no SRF registration)
+    JsonbFn("jsonb_each", "eachRows", jsonbArray),
+    JsonbFn("jsonb_each_text", "eachTextRows", jsonbArray),
+    JsonbFn("jsonb_object_keys", "objectKeysRows", jsonbArray),
+    JsonbFn("jsonb_array_elements_text", "arrayElementsText", ArrayType(S, containsNull = true)),
+    JsonbFn("jsonb_assert_elements_array", "assertElementsArray", S, sql = false),
+    JsonbFn("jsonb_split_array", "splitArray", jsonbArray, sql = false),
+    JsonbFn("jsonb_array_length", "arrayLengthJ", IntegerType)) ++
+    // SQL/JSON path; jsonb_path_query is the SRF row form
+    path("jsonb_path_exists", "jsonpathExists", BooleanType) ++
+    path("jsonb_path_match", "jsonpathMatch", BooleanType) ++
+    path("jsonb_path_query_array", "jsonpathQueryArray", S) ++
+    path("jsonb_path_query_first", "jsonpathQueryFirst", S) ++
+    path("jsonb_path_query", "jsonpathQueryRows", jsonbArray)
+
+  private val byName: Map[String, JsonbFn] = table.map(f => f.name -> f).toMap
+  def apply(name: String): JsonbFn = byName(name)
+
+  def checkArity(caller: String, args: Seq[Expression], arity: Range): Unit =
+    if (!arity.contains(args.length))
+      throw new IllegalArgumentException(
+        s"$caller requires ${arity.start} to ${arity.last} arguments, got ${args.length}")
+
+  /** jsonb_build_object: keys render as text, values convert to jsonb. */
+  def buildObject(args: Seq[Expression]): Expression = {
+    if (args.length % 2 != 0)
+      throw new graft.jsonb.Jsonb.JsonbFnError("argument list must have even number of elements")
+    JsonbFns("jsonb_build_object").call(args.grouped(2).toSeq.flatMap(kv =>
+      Seq(JsonbFns("jsonb_key_text").call(kv.take(1)), JsonbFns("to_jsonb").call(kv.drop(1)))))
+  }
+
+  /** Every SQL function: the `sql` rows, then the SQL forms that pick
+    * or compose rows.
+    */
+  val functions: Seq[(String, Seq[Expression] => Expression)] =
+    table.filter(_.sql).map(f => f.name -> ((a: Seq[Expression]) => f.call(a))) ++ Seq(
+      // the reference's three overloads, by the second argument's type
+      // and the arity: (jsonb, text) key, (jsonb, int) array index,
+      // (jsonb, text...) keys
+      "jsonb_delete" -> { a =>
+        checkArity("jsonb_delete", a, 2 to 32)
+        a(1).dataType match {
+          case IntegerType | LongType | ShortType | ByteType =>
+            JsonbFns("jsonb_delete_idx").call(a, "jsonb_delete")
+          case _ =>
+            // every key must be text: fail at resolution, not with a
+            // runtime ClassCastException from a later argument
+            a.tail.find(_.dataType != S).foreach(k => throw new IllegalArgumentException(
+              s"jsonb_delete: variadic keys must be text (got ${k.dataType.simpleString})"))
+            a.tail.foldLeft(a.head)((acc, k) => JsonbFns("jsonb_delete_key").call(Seq(acc, k)))
+        }
+      },
+      // <@ is containment with the operands swapped
+      "jsonb_contained" -> (a => JsonbFns("jsonb_contains").call(a.reverse, "jsonb_contained")),
+      "jsonb_object" -> { a =>
+        checkArity("jsonb_object", a, 1 to 2)
+        JsonbFns(if (a.length == 1) "jsonb_object1" else "jsonb_objectkv").call(a)
+      },
+      "jsonb_build_array" -> (a =>
+        JsonbFns("jsonb_build_array").call(a.map(x => JsonbFns("to_jsonb").call(Seq(x))))),
+      "jsonb_build_object" -> buildObject,
+      // non-array inputs error with the reference's texts
+      "jsonb_array_elements" -> (a => JsonbFns("jsonb_split_array").call(Seq(
+        JsonbFns("jsonb_assert_elements_array").call(a, "jsonb_array_elements")))))
+}
+
+/** Column-level API over the jsonb functions. */
 object J {
-  import ops._
   private def e(c: Column): Expression = ColumnBridge.expression(c)
   private def col(x: Expression): Column = ColumnBridge.column(x)
+  private def str(s: String): Expression = Literal(UTF8String.fromString(s), StringType)
 
-  def lit(json: String): Column =
-    col(Literal(UTF8String.fromString(graft.jsonb.Jsonb.parse(json).render), StringType))
+  def lit(json: String): Column = col(str(graft.jsonb.Jsonb.parse(json).render))
 
   // SQL/JSON path over a jsonb column; path/vars are compile-time strings
-  private def pathCall(op: String, doc: Column, path: String,
-      vars: String): Column = {
-    val varsLit =
-      if (vars == null) Literal(null, StringType)
-      else Literal(UTF8String.fromString(graft.jsonb.Jsonb.parse(vars).render), StringType)
-    col(JsonbPathFunction(op, tz = false, Seq(e(doc),
-      Literal(UTF8String.fromString(path), StringType), varsLit,
+  private def pathCall(name: String, doc: Column, path: String, vars: String): Column =
+    col(JsonbFns(name).call(Seq(e(doc), str(path),
+      if (vars == null) Literal(null, StringType) else str(graft.jsonb.Jsonb.parse(vars).render),
       Literal(false))))
-  }
   def pathExists(doc: Column, path: String, vars: String = null): Column =
-    pathCall("exists", doc, path, vars)
+    pathCall("jsonb_path_exists", doc, path, vars)
   def pathMatch(doc: Column, path: String, vars: String = null): Column =
-    pathCall("match", doc, path, vars)
+    pathCall("jsonb_path_match", doc, path, vars)
   def pathQueryArray(doc: Column, path: String, vars: String = null): Column =
-    pathCall("query_array", doc, path, vars)
+    pathCall("jsonb_path_query_array", doc, path, vars)
   def pathQueryFirst(doc: Column, path: String, vars: String = null): Column =
-    pathCall("query_first", doc, path, vars)
+    pathCall("jsonb_path_query_first", doc, path, vars)
   /** jsonb_path_query's SRF row form: array of per-item jsonb text,
     * ready for explode().
     */
   def pathQueryRows(doc: Column, path: String, vars: String = null): Column =
-    pathCall("query_rows", doc, path, vars)
+    pathCall("jsonb_path_query", doc, path, vars)
   /** jsonb_each_text's SRF analog: array of {"key","value"} objects
     * with TEXT values (JSON null -> SQL NULL through ->>).
     */
-  def eachText(x: Column): Column = col(JsonbSrfArray("each_text", e(x)))
+  def eachText(x: Column): Column = JsonbFns("jsonb_each_text")(x)
   /** jsonb_build_object over (literal key, any-typed value) pairs. */
   def buildObject(pairs: (String, Column)*): Column =
-    col(JsonbBuild(obj = true, pairs.toSeq.flatMap { case (k, v) =>
-      Seq(
-        JsonbKeyText(Literal(UTF8String.fromString(k), StringType), 1),
-        ToJsonbValue(e(v)))
-    }))
+    col(JsonbFns.buildObject(pairs.flatMap { case (k, v) => Seq(str(k), e(v)) }))
 
-  def add(l: Column, r: Column): Column = col(JsonbBinary("add", e(l), e(r)))
-  def sub(l: Column, r: Column): Column = col(JsonbBinary("sub", e(l), e(r)))
-  def mul(l: Column, r: Column): Column = col(JsonbBinary("mul", e(l), e(r)))
-  def div(l: Column, r: Column): Column = col(JsonbBinary("div", e(l), e(r)))
-  def mod(l: Column, r: Column): Column = col(JsonbBinary("mod", e(l), e(r)))
-  def pow(l: Column, r: Column): Column = col(JsonbBinary("pow", e(l), e(r)))
-  def concat(l: Column, r: Column): Column = col(JsonbBinary("concat", e(l), e(r)))
-  def deleteKey(l: Column, r: Column): Column = col(JsonbBinary("delete", e(l), e(r)))
-  def uminus(x: Column): Column = col(JsonbUnary("uminus", e(x)))
-  def uplus(x: Column): Column = col(JsonbUnary("uplus", e(x)))
+  def add(l: Column, r: Column): Column = JsonbFns("jsonb_add")(l, r)
+  def sub(l: Column, r: Column): Column = JsonbFns("jsonb_sub")(l, r)
+  def mul(l: Column, r: Column): Column = JsonbFns("jsonb_mul")(l, r)
+  def div(l: Column, r: Column): Column = JsonbFns("jsonb_div")(l, r)
+  def mod(l: Column, r: Column): Column = JsonbFns("jsonb_mod")(l, r)
+  def pow(l: Column, r: Column): Column = JsonbFns("jsonb_pow")(l, r)
+  def concat(l: Column, r: Column): Column = JsonbFns("jsonb_concat")(l, r)
+  def deleteKey(l: Column, r: Column): Column = JsonbFns("jsonb_delete_key")(l, r)
+  def uminus(x: Column): Column = JsonbFns("jsonb_uminus")(x)
+  def uplus(x: Column): Column = JsonbFns("jsonb_uplus")(x)
 
-  def eq(l: Column, r: Column): Column = col(JsonbComparison("eq", e(l), e(r)))
-  def ne(l: Column, r: Column): Column = col(JsonbComparison("ne", e(l), e(r)))
-  def lt(l: Column, r: Column): Column = col(JsonbComparison("lt", e(l), e(r)))
-  def le(l: Column, r: Column): Column = col(JsonbComparison("le", e(l), e(r)))
-  def gt(l: Column, r: Column): Column = col(JsonbComparison("gt", e(l), e(r)))
-  def ge(l: Column, r: Column): Column = col(JsonbComparison("ge", e(l), e(r)))
+  def eq(l: Column, r: Column): Column = JsonbFns("jsonb_eq")(l, r)
+  def ne(l: Column, r: Column): Column = JsonbFns("jsonb_ne")(l, r)
+  def lt(l: Column, r: Column): Column = JsonbFns("jsonb_lt")(l, r)
+  def le(l: Column, r: Column): Column = JsonbFns("jsonb_le")(l, r)
+  def gt(l: Column, r: Column): Column = JsonbFns("jsonb_gt")(l, r)
+  def ge(l: Column, r: Column): Column = JsonbFns("jsonb_ge")(l, r)
 
-  def contains(l: Column, r: Column): Column = col(JsonbPredicate("contains", e(l), e(r)))
-  def existsKey(l: Column, r: Column): Column = col(JsonbPredicate("exists", e(l), e(r)))
+  def contains(l: Column, r: Column): Column = JsonbFns("jsonb_contains")(l, r)
+  def existsKey(l: Column, r: Column): Column = JsonbFns("jsonb_exists")(l, r)
 
   /** property access n.k — key given as a plain string. */
   def getKey(l: Column, key: String): Column =
-    col(JsonbBinary("get", e(l), Literal(UTF8String.fromString(
-      graft.jsonb.JStr(key).render), StringType)))
+    col(JsonbFns("jsonb_get").call(Seq(e(l), str(graft.jsonb.JStr(key).render))))
   /** dynamic access l[expr] (expr is a jsonb string/number). */
-  def getDyn(l: Column, k: Column): Column = col(JsonbBinary("get", e(l), e(k)))
-  def slice(l: Column, from: Column, to: Column): Column =
-    col(JsonbSlice(e(l), e(from), e(to)))
-  def setKey(o: Column, k: Column, v: Column): Column =
-    col(JsonbSetKey(e(o), e(k), e(v)))
+  def getDyn(l: Column, k: Column): Column = JsonbFns("jsonb_get")(l, k)
+  def slice(l: Column, from: Column, to: Column): Column = JsonbFns("jsonb_slice")(l, from, to)
+  /** SET n.k = v / REMOVE n.k — SQL-NULL value deletes the key. */
+  def setKey(o: Column, k: Column, v: Column): Column = JsonbFns("jsonb_set_key")(o, k, v)
 
-  def sortKey(x: Column): Column = col(JsonbSortKey(e(x)))
-  def asText(x: Column): Column = col(JsonbUnary("astext", e(x)))
-  def fromText(x: Column): Column = col(JsonbUnary("fromtext", e(x)))
-  def keysOf(x: Column): Column = col(JsonbUnary("keys", e(x)))
-  def head(x: Column): Column = col(JsonbUnary("head", e(x)))
-  def last(x: Column): Column = col(JsonbUnary("last", e(x)))
-  def tail(x: Column): Column = col(JsonbUnary("tail", e(x)))
-  def toBooleanFn(x: Column): Column = col(JsonbUnary("toboolean", e(x)))
-  def toStringFn(x: Column): Column = col(JsonbUnary("tostring", e(x)))
-  def arrDistinct(x: Column): Column = col(JsonbUnary("arrdistinct", e(x)))
-  def arrSum(x: Column): Column = col(JsonbUnary("arrsum", e(x)))
-  def arrAvg(x: Column): Column = col(JsonbUnary("arravg", e(x)))
-  def arrMin(x: Column): Column = col(JsonbUnary("arrmin", e(x)))
-  def arrMax(x: Column): Column = col(JsonbUnary("arrmax", e(x)))
+  def sortKey(x: Column): Column = JsonbFns("jsonb_sort_key")(x)
+  def asText(x: Column): Column = JsonbFns("jsonb_astext")(x)
+  def fromText(x: Column): Column = JsonbFns("jsonb_fromtext")(x)
+  def keysOf(x: Column): Column = JsonbFns("jsonb_keys")(x)
+  def head(x: Column): Column = JsonbFns("jsonb_head")(x)
+  def last(x: Column): Column = JsonbFns("jsonb_last")(x)
+  def tail(x: Column): Column = JsonbFns("jsonb_tail")(x)
+  def toBooleanFn(x: Column): Column = JsonbFns("jsonb_toboolean")(x)
+  def toStringFn(x: Column): Column = JsonbFns("jsonb_tostring")(x)
+  def arrDistinct(x: Column): Column = JsonbFns("jsonb_arrdistinct")(x)
+  def arrSum(x: Column): Column = JsonbFns("jsonb_arrsum")(x)
+  def arrAvg(x: Column): Column = JsonbFns("jsonb_arravg")(x)
+  def arrMin(x: Column): Column = JsonbFns("jsonb_arrmin")(x)
+  def arrMax(x: Column): Column = JsonbFns("jsonb_arrmax")(x)
 
-  def fromLong(x: Column): Column = col(JsonbFromPrim("long", e(x.cast("long"))))
-  def fromDouble(x: Column): Column = col(JsonbFromPrim("double", e(x.cast("double"))))
-  def fromBool(x: Column): Column = col(JsonbFromPrim("bool", e(x)))
+  def fromLong(x: Column): Column = JsonbFns("jsonb_from_long")(x.cast("long"))
+  def fromDouble(x: Column): Column = JsonbFns("jsonb_from_double")(x.cast("double"))
+  def fromBool(x: Column): Column = JsonbFns("jsonb_from_bool")(x)
 
-  def toBool(x: Column): Column = col(JsonbCast("bool", e(x)))
-  def toDouble(x: Column): Column = col(JsonbCast("double", e(x)))
-  def toLong(x: Column): Column = col(JsonbCast("long", e(x)))
-  def lengthOf(x: Column): Column = col(JsonbLength(e(x)))
-  def typeRank(x: Column): Column = col(JsonbTypeRank(e(x)))
+  def toBool(x: Column): Column = JsonbFns("jsonb_to_bool")(x)
+  def toDouble(x: Column): Column = JsonbFns("jsonb_to_double")(x)
+  def toLong(x: Column): Column = JsonbFns("jsonb_to_long")(x)
+  def lengthOf(x: Column): Column = JsonbFns("jsonb_length")(x)
+  def typeRank(x: Column): Column = JsonbFns("jsonb_typerank")(x)
+}
+
+/** Structural helpers used by the Cypher compiler: re-canonicalize a
+  * concatenated JSON text (key sort, duplicate removal), and split a
+  * jsonb array into its elements as array<string> for Spark
+  * higher-order functions (list comprehension without UDFs).
+  */
+object JsonbNormalize {
+  def normalize(c: Column): Column = JsonbFns("jsonb_norm")(c)
+  def splitArray(c: Column): Column = JsonbFns("jsonb_split_array")(c)
 }

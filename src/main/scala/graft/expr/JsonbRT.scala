@@ -1,15 +1,18 @@
 package graft.expr
 
 import graft.jsonb._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Static runtime for jsonb Catalyst expressions — called from both
-  * interpreted eval and generated code (one static call per op keeps
-  * the expressions inside whole-stage codegen).
+/** Static runtime for the jsonb functions of [[JsonbFns]]: each is one
+  * static call, from interpreted eval and generated code alike (a
+  * `StaticInvoke`, so the expressions stay inside whole-stage codegen).
   *
   * All inputs/outputs are canonical-JSON UTF8Strings; a Java `null`
   * is SQL NULL (distinct from jsonb `"null"` — reference:
   * parse_cypher_expr.c:17-19 "We use SQL NULL instead of 'null'::jsonb").
+  * A strict function never sees a null argument; the non-strict ones
+  * (their table rows say `strict = false`) state their null rule here.
   */
 object JsonbRT {
   /** Tiny per-thread memo: expression trees touch the same properties
@@ -73,10 +76,11 @@ object JsonbRT {
   }
 
   /** List slice `l[a..b]` with Cypher/Python-style negatives; null
-    * bounds mean open ends.
+    * bounds mean open ends, a null list gives null.
     */
   def slice(l: UTF8String, from: UTF8String, to: UTF8String): UTF8String =
-    v(l) match {
+    if (l == null) null
+    else v(l) match {
       case JArr(items) =>
         def bound(b: UTF8String, dflt: Int): Int =
           if (b == null) dflt
@@ -187,9 +191,11 @@ object JsonbRT {
   }
 
   /** Set/overwrite a top-level key (SET n.k = v); SQL-NULL value
-    * deletes the key (Cypher REMOVE / SET n.k = NULL semantics).
+    * deletes the key (Cypher REMOVE / SET n.k = NULL semantics). A null
+    * object gives null; a null key leaves the object as it is.
     */
   def setKey(l: UTF8String, k: UTF8String, value: UTF8String): UTF8String = {
+    if (l == null || k == null) return l
     val base = v(l) match {
       case JObj(fields) => fields
       case _            => Vector.empty[(String, JValue)]
@@ -314,8 +320,7 @@ object JsonbRT {
   }
 
   // jsonb mutation/catalog fns (jsonfuncs.c; tests jsonb.sql:1116-).
-  // Paths are PG text[] literals; null-argument strictness is handled
-  // at the expression layer.
+  // Paths are PG text[] literals.
 
   def jsonbSet(t: UTF8String, path: UTF8String, nv: UTF8String,
       create: Boolean): UTF8String =
@@ -326,10 +331,11 @@ object JsonbRT {
     out(Jsonb.insertPath(v(t), Jsonb.parseTextArray(path.toString), v(nv), after))
 
   /** jsonb_set_lax: `nv` may be SQL NULL; treatment decides what that
-    * means (use_json_null default).
+    * means (use_json_null default). A null target or path gives null.
     */
   def jsonbSetLax(t: UTF8String, path: UTF8String, nv: UTF8String,
       create: Boolean, treatment: UTF8String): UTF8String = {
+    if (t == null || path == null) return null
     // reference order (jsonfuncs.c jsonb_set_lax): an explicit SQL
     // NULL treatment always errors; a non-null new value then
     // delegates to jsonb_set WITHOUT validating the treatment string;
@@ -360,10 +366,10 @@ object JsonbRT {
     * array for the row form — Spark has no SRF registration surface).
     * Returns ArrayData directly: no intermediate array render+reparse.
     */
-  def eachRows(l: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData =
+  def eachRows(l: UTF8String): ArrayData =
     v(l) match {
       case JObj(fields) =>
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(
+        new GenericArrayData(
           fields.map { case (k, fv) =>
             UTF8String.fromString(
               Jsonb.mkObj(Seq("key" -> JStr(k), "value" -> fv)).render)
@@ -400,7 +406,13 @@ object JsonbRT {
     }
   }
 
-  /** jsonb_extract_path(_text): variadic key form of `#>`. */
+  /** jsonb_extract_path(_text): variadic key form of `#>`. A null
+    * document gives null; a null key matches nothing (the reference's
+    * strict call gives the same observable result).
+    */
+  def extractPath(l: UTF8String, keys: ArrayData, text: Boolean): UTF8String =
+    if (l == null) null
+    else extractPath(l, Array.tabulate(keys.numElements)(keys.getUTF8String), text)
   def extractPath(l: UTF8String, keys: Array[UTF8String],
       text: Boolean): UTF8String = {
     val path = keys.iterator.map(k =>
@@ -418,10 +430,10 @@ object JsonbRT {
     * JSON null so `->> 'value'` reads SQL NULL, containers/numbers
     * canonical). Reference: jsonfuncs.c each_worker_jsonb(as_text).
     */
-  def eachTextRows(l: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData =
+  def eachTextRows(l: UTF8String): ArrayData =
     v(l) match {
       case JObj(fields) =>
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(
+        new GenericArrayData(
           fields.map { case (k, fv) =>
             val tv = fv match {
               case JNull   => JNull
@@ -445,10 +457,10 @@ object JsonbRT {
   }
 
   /** jsonb_object_keys as an array of TEXT keys (SRF analog). */
-  def objectKeysRows(l: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData =
+  def objectKeysRows(l: UTF8String): ArrayData =
     v(l) match {
       case JObj(fields) =>
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(
+        new GenericArrayData(
           fields.map(f => UTF8String.fromString(f._1)).toArray[Any])
       case _: JArr =>
         throw new Jsonb.JsonbFnError(
@@ -461,10 +473,10 @@ object JsonbRT {
   /** jsonb_array_elements_text: array of TEXT elements (JSON null
     * becomes a SQL NULL element).
     */
-  def arrayElementsText(l: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData =
+  def arrayElementsText(l: UTF8String): ArrayData =
     v(l) match {
       case JArr(items) =>
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(
+        new GenericArrayData(
           items.map {
             case JNull   => null
             case JStr(s) => UTF8String.fromString(s)
@@ -527,7 +539,7 @@ object JsonbRT {
     * kept total here since parquet data can carry them).
     */
   def toJsonbValue(x: Any, dt: org.apache.spark.sql.types.DataType): UTF8String =
-    if (x == null) null else out(toJValue(x, dt))
+    out(toJValue(x, dt))
 
   private def toJValue(x: Any, dt: org.apache.spark.sql.types.DataType): JValue = {
     import org.apache.spark.sql.types._
@@ -589,13 +601,12 @@ object JsonbRT {
     }
   }
 
-  /** The key half of jsonb_build_object: scalars render as text, SQL
-    * NULL and container keys raise the reference's errors.
+  /** The key half of jsonb_build_object: scalars render as text,
+    * container keys raise the reference's error (a SQL NULL key stays
+    * NULL; `buildFromParts` knows its position).
     */
-  def keyText(x: Any, dt: org.apache.spark.sql.types.DataType,
-      argPos: Int): UTF8String = {
+  def keyText(x: Any, dt: org.apache.spark.sql.types.DataType): UTF8String = {
     import org.apache.spark.sql.types._
-    if (x == null) fnErr(s"argument $argPos: key must not be null")
     dt match {
       case StringType => x.asInstanceOf[UTF8String]
       case _: ArrayType | _: StructType | _: MapType =>
@@ -609,16 +620,19 @@ object JsonbRT {
 
   /** Assemble jsonb_build_object/array from pre-converted parts
     * (object: alternating key text / value jsonb; null value = jsonb
-    * null).
+    * null, null key = the reference's error naming its argument).
     */
-  def buildFromParts(obj: Boolean, parts: Array[UTF8String]): UTF8String =
+  def buildFromParts(obj: Boolean, parts: ArrayData): UTF8String = {
+    def value(i: Int): JValue =
+      if (parts.isNullAt(i)) JNull else Jsonb.parse(parts.getUTF8String(i).toString)
+    val n = parts.numElements
     if (obj)
-      out(Jsonb.mkObj(parts.grouped(2).map { g =>
-        g(0).toString -> (if (g(1) == null) JNull else Jsonb.parse(g(1).toString))
-      }.toSeq))
-    else
-      out(JArr(parts.toVector.map(p =>
-        if (p == null) JNull else Jsonb.parse(p.toString))))
+      out(Jsonb.mkObj((0 until n by 2).map { i =>
+        if (parts.isNullAt(i)) fnErr(s"argument ${i + 1}: key must not be null")
+        parts.getUTF8String(i).toString -> value(i + 1)
+      }))
+    else out(JArr((0 until n).toVector.map(value)))
+  }
 
   def stripNullsJ(l: UTF8String): UTF8String = out(Jsonb.stripNulls(v(l)))
   def prettyJ(l: UTF8String): UTF8String =
@@ -650,18 +664,22 @@ object JsonbRT {
 
   def jsonpathExists(doc: UTF8String, path: UTF8String, vars: UTF8String,
       silent: Boolean, tz: Boolean): java.lang.Boolean =
-    JsonPath.exists(v(doc), path.toString, varsOf(vars), silent, tz)
+    if (doc == null || path == null) null
+    else JsonPath.exists(v(doc), path.toString, varsOf(vars), silent, tz)
 
   def jsonpathMatch(doc: UTF8String, path: UTF8String, vars: UTF8String,
       silent: Boolean, tz: Boolean): java.lang.Boolean =
-    JsonPath.matches(v(doc), path.toString, varsOf(vars), silent, tz)
+    if (doc == null || path == null) null
+    else JsonPath.matches(v(doc), path.toString, varsOf(vars), silent, tz)
 
   def jsonpathQueryArray(doc: UTF8String, path: UTF8String, vars: UTF8String,
       silent: Boolean, tz: Boolean): UTF8String =
-    out(JsonPath.queryArray(v(doc), path.toString, varsOf(vars), silent, tz))
+    if (doc == null || path == null) null
+    else out(JsonPath.queryArray(v(doc), path.toString, varsOf(vars), silent, tz))
 
   def jsonpathQueryFirst(doc: UTF8String, path: UTF8String, vars: UTF8String,
       silent: Boolean, tz: Boolean): UTF8String = {
+    if (doc == null || path == null) return null
     val r = JsonPath.queryFirst(v(doc), path.toString, varsOf(vars), silent, tz)
     if (r == null) null else out(r)
   }
@@ -671,8 +689,24 @@ object JsonbRT {
     * jsonpath_exec.c streams into a tuplestore).
     */
   def jsonpathQueryRows(doc: UTF8String, path: UTF8String, vars: UTF8String,
-      silent: Boolean, tz: Boolean): org.apache.spark.sql.catalyst.util.ArrayData =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      silent: Boolean, tz: Boolean): ArrayData =
+    if (doc == null || path == null) null
+    else new GenericArrayData(
       JsonPath.queryStrings(v(doc), path.toString, varsOf(vars), silent, tz)
         .map(UTF8String.fromString).toArray[Any])
+
+  // structural helpers ------------------------------------------------
+  /** Re-canonicalize JSON text (key sort, duplicate removal). */
+  def normalize(s: UTF8String): UTF8String =
+    UTF8String.fromString(Jsonb.parse(s.toString).render)
+
+  /** A jsonb array's elements as jsonb texts; null for a non-array. */
+  def splitArray(s: UTF8String): ArrayData = Jsonb.parse(s.toString) match {
+    case JArr(items) =>
+      new GenericArrayData(items.map(i => UTF8String.fromString(i.render)).toArray[Any])
+    case _ => null
+  }
+
+  /** The memcomparable sort key of a jsonb value. */
+  def sortKey(s: UTF8String): Array[Byte] = JsonbSortKeyRT.sortKey(s)
 }

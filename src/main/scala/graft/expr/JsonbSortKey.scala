@@ -1,8 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{BinaryType, DataType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.jsonb._
@@ -103,16 +100,4 @@ object JsonbSortKeyRT {
       while (j < bytes.length) { out.write(~bytes(j) & 0xff); j += 1 }
     }
   }
-}
-
-case class JsonbSortKey(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "jsonb_sort_key"
-  override def nullSafeEval(x: Any): Any =
-    JsonbSortKeyRT.sortKey(x.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, x => s"graft.expr.JsonbSortKeyRT.sortKey($x)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

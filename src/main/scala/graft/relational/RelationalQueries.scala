@@ -495,7 +495,7 @@ object RelationalQueries {
     },
 
     // ---- jsonb expression surface (graft.expr custom Expressions) ---
-    // Property extraction via the custom JsonbBinary("get") expression
+    // Property extraction via the jsonb_get function (J.getKey)
     // (the same operator Cypher property access compiles to).
     "q31_jsonb_get" -> { (s, d) =>
       import graft.expr.J

@@ -55,6 +55,11 @@ class BenchLadderSpec extends AnyFunSuite {
       assert(r.path("protocol").asText.matches("min[2-4]-warm"), s"$n: $r")
     }
     assert(boardRows().keySet == Set(g, q))
+    // the summary counts the rows per protocol
+    val protocols = first.summary.get("protocols")
+    assert(protocols != null, first.summary.toString)
+    assert(protocols.properties.asScala.map(_.getValue.asInt).sum == 2, protocols.toString)
+    assert(protocols.fieldNames.asScala.forall(_.matches("min[2-4]-warm")), protocols.toString)
   }
 
   test("K = 2: the replica directory is gone after the ladder") {

@@ -254,6 +254,24 @@ class JsonbModeParitySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       plan.treeString)
   }
 
+  test("a call over a nondeterministic argument is nondeterministic") {
+    val r = "to_jsonb(rand())"
+    val calls = Seq(
+      s"jsonb_slice('[1, 2, 3]', $r, NULL)",
+      s"""jsonb_set_key('{}', '"a"', $r)""",
+      "jsonb_extract_path('{}', 'a', CAST(rand() AS STRING))",
+      s"jsonb_set('{}', '{a}', $r)",
+      s"jsonb_set_lax('{}', '{a}', $r)",
+      s"jsonb_path_exists($r, '$$')")
+    calls.foreach { call =>
+      val qe = spark.sql(s"SELECT $call").queryExecution
+      Seq(qe.analyzed, qe.optimizedPlan).foreach { plan =>
+        val projected = plan.collectFirst { case p: Project => p.projectList.head }.get
+        assert(!projected.deterministic, s"$call\n${plan.treeString}")
+      }
+    }
+  }
+
   test("an auto-named jsonb column keeps its header") {
     val df = spark.sql("""SELECT jsonb_get('{"k": [1, 2]}', '"k"')""")
     assert(df.columns.toSeq == Seq("""jsonb_get({"k": [1, 2]}, "k")"""))
