@@ -104,8 +104,6 @@ final class Builder(
     }.df
   }
 
-  def runSingle(sq: SingleQuery): DataFrame = runSingleState(sq).df
-
   /** EXPLAIN for write statements (the reference EXPLAINs ModifyGraph
     * plans through PG's front door): plan the statement's READ prefix
     * faithfully, describe each write clause — op kind, target labels,
@@ -978,28 +976,11 @@ final class Builder(
     StructField("id", LongType, false), StructField("start", LongType, false),
     StructField("end", LongType, false), StructField("properties", StringType, true)))
 
-  /** Scan for a node pattern: label subtree or all vertex labels. */
-  /** Label lookup with the reference's kind diagnostics
-    * (parse_graph.c: label kind checks on scan transform).
+  /** Scan for a node pattern: the label's [[GraphCatalog.labelSet]]
+    * (its subtree, or the label alone under ONLY), or every vertex label.
     */
-  private[cypher] def labelOfKind(l: String, kind: Char): Unit = {
-    val lm = catalog.label(graph, l).getOrElse(
-      throw new IllegalArgumentException(s"""label "$l" does not exist"""))
-    if (lm.kind != kind)
-      throw new IllegalArgumentException(
-        if (lm.kind == 'e') s"""label "$l" is edge label"""
-        else s"""label "$l" is vertex label""")
-  }
-
-  private[cypher] def vertexScan(label: Option[String], only: Boolean): DataFrame = {
-    val df = label match {
-      case Some(l) =>
-        labelOfKind(l, 'v')
-        if (only) catalog.scanOnly(graph, l) else catalog.scan(graph, l)
-      case None => catalog.scanAll(graph, 'v')
-    }
-    df
-  }
+  private[cypher] def vertexScan(label: Option[String], only: Boolean): DataFrame =
+    catalog.scan(graph, label.toSeq, 'v', only)
 
   private[cypher] def bindNode(st: State, n: NodePattern): (State, String) = {
     val name = n.variable.getOrElse(fresh("v"))
@@ -1048,33 +1029,24 @@ final class Builder(
     }
   }
 
-  /** Edge scan with normalized __s/__e join endpoints. Undirected
-    * patterns scan both orientations (genEdgeUnion parse_graph.c:178).
+  /** Edge scan with normalized __s/__e join endpoints: one scan of
+    * the types' [[GraphCatalog.labelSet]] (every edge label when none is
+    * given). Undirected patterns scan both orientations (genEdgeUnion
+    * parse_graph.c:178).
     */
   private[cypher] def edgeScan(types: Seq[String], direction: Int,
       only: Boolean = false): DataFrame = {
-    // ONLY (gram.y:18684): exact label tables, no inheritance subtree
-    types.foreach(labelOfKind(_, 'e'))
-    val base = types match {
-      case Nil => catalog.scanAll(graph, 'e')
-      case ts if only => ts.map(t => catalog.scanOnly(graph, t))
-        .reduce(_ unionAll _)
-      case ts  => ts.map(t => catalog.scan(graph, t)).reduce(_ unionAll _)
-    }
+    val base = catalog.scan(graph, types, 'e', only)
     val e = struct(col("id"), col("start"), col("end"), col("properties"))
     // pass shred sidecars through (dropped by downstream selects unless
     // bindRel claims them for the edge variable)
     val extras = base.columns.toSeq.filter(_.startsWith("__p")).map(c => col(Compiler.q(c)))
+    def oriented(s: String, t: String) =
+      base.select(e.as("__edge") +: col(s).as("__s") +: col(t).as("__e") +: extras: _*)
     direction match {
-      case 1  => base.select(e.as("__edge") +: col("start").as("__s") +:
-        col("end").as("__e") +: extras: _*)
-      case -1 => base.select(e.as("__edge") +: col("end").as("__s") +:
-        col("start").as("__e") +: extras: _*)
-      case 0  =>
-        base.select(e.as("__edge") +: col("start").as("__s") +:
-            col("end").as("__e") +: extras: _*)
-          .unionAll(base.select(e.as("__edge") +: col("end").as("__s") +:
-            col("start").as("__e") +: extras: _*))
+      case 1  => oriented("start", "end")
+      case -1 => oriented("end", "start")
+      case 0  => oriented("start", "end").unionAll(oriented("end", "start"))
     }
   }
 
@@ -1094,23 +1066,20 @@ final class Builder(
   private lazy val metaCounts: Map[(Int, Int, Int), Long] =
     try catalog.graphmetaCounts(graph) catch { case _: Throwable => Map.empty }
   private val labidsMemo =
-    scala.collection.mutable.Map.empty[(String, Boolean), Set[Int]]
-  private def labidsOf(l: String, only: Boolean): Set[Int] =
-    labidsMemo.getOrElseUpdate((l, only),
-      if (only) catalog.label(graph, l).map(_.labid).toSet
-      else catalog.subtree(graph, l).map(_.labid).toSet)
+    scala.collection.mutable.Map.empty[(Seq[String], Char, Boolean), Set[Int]]
+  private def labidsOf(names: Seq[String], kind: Char, only: Boolean): Set[Int] =
+    labidsMemo.getOrElseUpdate((names, kind, only),
+      catalog.labelSet(graph, names, kind, only).map(_.labid).toSet)
 
   /** Keep the rows whose bound vertex `name` carries label `l` (ONLY:
     * exactly `l`, else its subtree): the filter a re-bound vertex gets
-    * where a fresh bind would scan the label, with the scan's
-    * unknown-label and wrong-kind diagnostics.
+    * where a fresh bind would scan the label — the same label set, with
+    * the scan's unknown-label and wrong-kind diagnostics.
     */
   private[cypher] def inLabel(df: DataFrame, name: String, l: String,
-      only: Boolean): DataFrame = {
-    labelOfKind(l, 'v')
+      only: Boolean): DataFrame =
     df.where(GraphId.labidOf(col(Compiler.q(name)).getField("id"))
-      .isin(labidsOf(l, only).toSeq: _*))
-  }
+      .isin(labidsOf(Seq(l), 'v', only).toSeq: _*))
 
   private def graphmetaHopEstimate(rel: RelPattern, prevPat: Option[NodePattern],
       node: NodePattern): Option[(Long, Option[Set[Int]], Option[Set[Int]])] = {
@@ -1119,10 +1088,9 @@ final class Builder(
     val counts = metaCounts
     if (counts.isEmpty) return None
     def vIds(n: Option[NodePattern]): Option[Set[Int]] =
-      n.flatMap(pat => pat.label.map(l => labidsOf(l, pat.only)))
+      n.flatMap(pat => pat.label.map(l => labidsOf(Seq(l), 'v', pat.only)))
     val eIds: Option[Set[Int]] =
-      if (rel.types.isEmpty) None
-      else Some(rel.types.flatMap(t => labidsOf(t, rel.only)).toSet)
+      if (rel.types.isEmpty) None else Some(labidsOf(rel.types, 'e', rel.only))
     val prevIds = vIds(prevPat)
     val tgtIds = vIds(Some(node))
     def est1(sSet: Option[Set[Int]], tSet: Option[Set[Int]]): Long =
@@ -1550,12 +1518,8 @@ final class Builder(
   // =========================================================== helpers
 
   /** Stable per-row index for id assignment (two-pass, per-partition
-    * contiguous — the distributed-safe id allocator; SURVEY §7.3 item 4).
-    */
-  private[cypher] def withRowIndex(df: DataFrame, name: String): DataFrame =
-    withRowIndexCounted(df, name)._1
-
-  /** (indexed frame, row count). Pure DataFrame-space implementation:
+    * contiguous — the distributed-safe id allocator; SURVEY §7.3 item 4),
+    * returned with the row count. Pure DataFrame-space implementation:
     * monotonically_increasing_id packs (partitionId << 33 | row-in-
     * partition), so a contiguous 0..n-1 index is that local index plus
     * a per-partition offset from one narrow count-per-partition job —

@@ -86,8 +86,8 @@ object WriteOps {
     // and register its statement-level check and deferred append
     def element(name: String, label: String, kind: Kind, props: Option[Expr],
         ends: Seq[(String, Column)]): Unit = {
-      b.labelOfKind(label, if (kind == KV) 'v' else 'e')
-      val lm = b.catalog.label(b.graph, label).get
+      val lm = b.catalog.labelSet(b.graph, Seq(label), if (kind == KV) 'v' else 'e',
+        only = true).head
       val base = b.catalog.reserveIds(b.graph, label, math.max(n, 1L))
       val idCol = (lit(GraphId.pack(lm.labid, 0L)) + lit(base) + col("__cidx")).cast("long")
       val comp = b.compiler(State(df, vars))
@@ -189,12 +189,11 @@ object WriteOps {
     */
   private def checkConstraints(b: Builder,
       written: => Seq[(String, DataFrame)]): Unit = {
-    val all = b.catalog.constraints(b.graph)
+    val (all, ancestors) = b.catalog.constraintsAndAncestors(b.graph)
     if (all.isEmpty) return
     val elems = written
     val applicable = all.flatMap { c =>
-      val hit = elems.filter { case (l, _) =>
-        b.catalog.ancestors(b.graph, l).contains(c.label) }
+      val hit = elems.filter { case (l, _) => ancestors(l).contains(c.label) }
       if (hit.isEmpty) None
       else Some((c, hit.map(_._2).reduce(_ unionAll _)))
     }
@@ -307,7 +306,7 @@ object WriteOps {
       // two equi semi-joins (hash, broadcastable), NOT one OR-condition
       // join — an OR disjunction can't hash-join and would nested-loop
       // the whole edge set against the victim list
-      val allEdges = b.catalog.scanAll(b.graph, 'e')
+      val allEdges = b.catalog.scan(b.graph, Nil, 'e', only = false)
       val incident = allEdges.join(vIds, allEdges("start") === vIds("id"), "left_semi")
         .select(col("id"))
         .unionAll(

@@ -262,8 +262,6 @@ object J {
     pathCall("jsonb_path_exists", doc, path, vars)
   def pathMatch(doc: Column, path: String, vars: String = null): Column =
     pathCall("jsonb_path_match", doc, path, vars)
-  def pathQueryArray(doc: Column, path: String, vars: String = null): Column =
-    pathCall("jsonb_path_query_array", doc, path, vars)
   def pathQueryFirst(doc: Column, path: String, vars: String = null): Column =
     pathCall("jsonb_path_query_first", doc, path, vars)
   /** jsonb_path_query's SRF row form: array of per-item jsonb text,

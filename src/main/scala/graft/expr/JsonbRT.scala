@@ -412,18 +412,13 @@ object JsonbRT {
     */
   def extractPath(l: UTF8String, keys: ArrayData, text: Boolean): UTF8String =
     if (l == null) null
-    else extractPath(l, Array.tabulate(keys.numElements)(keys.getUTF8String), text)
-  def extractPath(l: UTF8String, keys: Array[UTF8String],
-      text: Boolean): UTF8String = {
-    val path = keys.iterator.map(k =>
-      if (k == null) None else Some(k.toString)).toVector
-    Jsonb.getPath(v(l), path) match {
+    else Jsonb.getPath(v(l), Vector.tabulate(keys.numElements)(i =>
+        Option(keys.getUTF8String(i)).map(_.toString))) match {
       case null  => null
       case JNull => if (text) null else out(JNull)
       case JStr(s) if text => UTF8String.fromString(s)
       case other => out(other)
     }
-  }
 
   /** jsonb_each_text as an array of {"key": k, "value": v} objects
     * where v is the TEXT rendering (strings unquoted, JSON null ->

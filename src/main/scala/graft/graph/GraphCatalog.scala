@@ -169,6 +169,9 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
     StructField("end", LongType, nullable = false),
     StructField("properties", StringType, nullable = true)))
 
+  private def baseSchema(kind: Char): StructType =
+    if (kind == 'v') vertexSchema else edgeSchema
+
   // ------------------------------------------------------ graph DDL
 
   private def graphDir(g: String): Path = Paths.get(root, g)
@@ -186,8 +189,7 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
       throw new IllegalStateException(s"graph \"$name\" already exists")
     }
     Files.createDirectories(graphDir(name))
-    writeMeta(name, GraphMeta(mutable.LinkedHashMap.empty, 1, 0,
-      owner = owner))
+    writeMeta(name, GraphMeta(mutable.LinkedHashMap.empty, 1, owner = owner))
   }
 
   def graphOwner(name: String): Option[String] = readMeta(name).owner
@@ -248,15 +250,13 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
     // or the next CREATE under the new name restarts at locid 1 and
     // reissues existing graphids (r12 review finding; DdlSpec pins it)
     m.sequences.remove(from).foreach(seq => m.sequences(to) = seq)
-    writeMeta(graph, m)
-    // constraints are keyed by label NAME in _constraints.json — follow
-    // the rename or they silently stop being enforced (checkConstraints
-    // matches via ancestors(label), which no longer contains the old
-    // name) and a future label reusing the old name would inherit them
-    val cs = constraints(graph)
-    if (cs.exists(_.label == from))
-      writeConstraints(graph,
-        cs.map(c => if (c.label == from) c.copy(label = to) else c))
+    // constraints are keyed by label NAME too — they follow the rename
+    // in the same commit, or they silently stop being enforced
+    // (checkConstraints matches via ancestors(label), which no longer
+    // contains the old name) and a future label reusing the old name
+    // would inherit them
+    writeMeta(graph, m.copy(constraints = m.constraints.map(c =>
+      if (c.label == from) c.copy(label = to) else c)))
     Files.move(labelDir(graph, from), labelDir(graph, to))
   } } }
   }
@@ -337,9 +337,9 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
       if (ifNotExists) return
       throw new IllegalStateException(s"""index "$nm" already exists""")
     }
-    // enforcement + validation FIRST, metadata LAST: a failure anywhere
-    // (constraint-name collision, existing duplicates) must not leave a
-    // registered index without its enforcement half
+    // validation FIRST, then the index and its enforcement half commit
+    // together: a failure anywhere (existing duplicates, a
+    // constraint-name collision) records neither
     val validatable =
       keys.length == 1 && ShredKeyRe.findFirstIn(keys.head).isDefined
     def dupScanFails(): Boolean = {
@@ -348,7 +348,7 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
       // enforced across it, so validation must see the same rows
       val k = graft.expr.J.sortKey(
         graft.expr.J.getKey(col("properties"), keys.head))
-      !scan(graph, label)
+      !scan(graph, Seq(label), lm.kind, only = false)
         .select(k.as("__k")).where(col("__k").isNotNull)
         .groupBy("__k").count().where(col("count") > 1)
         .isEmpty
@@ -369,69 +369,49 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
           "— uniqueness is enforced from the next write on")
     }
     // the enforcement half: a unique property index IS a unique
-    // constraint over the key tuple (propertyindex.sql piv4/piv5).
-    // Installed UNDER the label write lock below — two racing
-    // identical creates serialize there, so an IF NOT EXISTS loser
-    // re-checks the committed index name instead of tripping over the
-    // winner's just-installed constraint (r12 review)
+    // constraint over the key tuple (propertyindex.sql piv4/piv5),
+    // committed in the same meta write as the index
     val ucBody = if (keys.length == 1) keys.head
       else keys.mkString("[", ", ", "]")
     // The build runs under the LABEL WRITE lock: it drains in-flight
     // same-label appends (they hold the same exclusive lock while
     // their files land), so the validation scan sees every committed
-    // row, and
-    // the reindex swap (re-entrant on the same lock) can't race them.
+    // row, the reindex swap (re-entrant on the same lock) can't race
+    // them, and two racing identical creates serialize here — an IF
+    // NOT EXISTS loser re-checks the committed index name and no-ops.
     // The meta lock is held only for the actual meta commit — a
     // multi-minute duplicate scan must not stall reserveIds/DDL on
     // other labels or other drivers. Residual window (documented): a
-    // writer STATEMENT that read the constraint list before the
-    // constraint installed and appends after this lock releases is
-    // enforced from its next statement on — the reference closes that
-    // with a ShareLock held for the whole build, which would serialize
-    // all writes graph-wide.
+    // writer STATEMENT that read the constraint list before the commit
+    // (including one writing a subtree child, whose label lock this
+    // build does not hold) is enforced from its next statement on —
+    // the reference closes that with a ShareLock held for the whole
+    // build, which would serialize all writes graph-wide.
     withLabelWrite(graph, label) {
       // fresh re-check under the lock: the racing winner's commit is
       // visible here, so the loser takes the ifNotExists no-op path
-      // BEFORE installing a colliding constraint
       val already = readMeta(graph).labels.values
         .exists(_.indexes.exists(_.name == nm))
       if (already && !ifNotExists)
         throw new IllegalStateException(s"""index "$nm" already exists""")
-      var ucAdded = false
-      val committed =
-        if (already) false
-        else try {
-          if (unique) {
-            addConstraint(graph, label, s"${nm}_uc", "unique", ucBody)
-            ucAdded = true
+      val committed = !already && {
+        if (unique && validatable && dupScanFails()) dupError()
+        withMetaLock(graph) {
+          val fresh = readMeta(graph)
+          val flm = fresh.labels(label)
+          if (flm.indexes.exists(_.name == nm)) {
+            if (ifNotExists) false
+            else throw new IllegalStateException(
+              s"""index "$nm" already exists""")
+          } else {
+            fresh.labels(label) = flm.copy(indexes = flm.indexes :+
+              PropIndexMeta(nm, keys, unique))
+            writeMeta(graph, if (!unique) fresh else withConstraint(fresh,
+              ConstraintMeta(label, s"${nm}_uc", "unique", ucBody)))
+            true
           }
-          if (unique && validatable && dupScanFails()) dupError()
-          withMetaLock(graph) {
-            val fresh = readMeta(graph)
-            val flm = fresh.labels(label)
-            if (flm.indexes.exists(_.name == nm)) {
-              if (ifNotExists) false
-              else throw new IllegalStateException(
-                s"""index "$nm" already exists""")
-            } else {
-              fresh.labels(label) = flm.copy(indexes = flm.indexes :+
-                PropIndexMeta(nm, keys, unique))
-              writeMeta(graph, fresh)
-              true
-            }
-          }
-        } catch { case e: Throwable =>
-          // don't leak the enforcement half if the build lost a race —
-          // but only the constraint WE added (an addConstraint name
-          // collision must not drop the pre-existing owner's), and only
-          // before the commit: a post-commit reindex failure must keep
-          // index AND constraint together
-          if (ucAdded) try dropConstraint(graph, s"${nm}_uc")
-          catch { case _: Throwable => () }
-          throw e
         }
-      // on an ifNotExists race-skip the constraint stays: it carries
-      // the same name and semantics the racing winner installed
+      }
       if (committed) reindexLabel(graph, label)
     }
   }
@@ -452,10 +432,9 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
         val victim = lm.indexes.find(_.name == idxName).get
         m.labels(lm.name) = lm.copy(
           indexes = lm.indexes.filterNot(_.name == idxName))
-        writeMeta(graph, m)
-        if (victim.unique &&
-          constraints(graph).exists(_.name == s"${idxName}_uc"))
-          dropConstraint(graph, s"${idxName}_uc")
+        // the index and its enforcement half go in one commit
+        writeMeta(graph, if (!victim.unique) m else m.copy(constraints =
+          m.constraints.filterNot(_.name == s"${idxName}_uc")))
     }
   }
 
@@ -479,7 +458,7 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
     if (!hasParquet(dir)) return
     val keyOpt = lm.indexes.iterator.flatMap(_.keys.headOption)
       .find(k => ShredKeyRe.findFirstIn(k).isDefined && lm.shred.contains(k))
-    val base = if (lm.kind == 'v') vertexSchema else edgeSchema
+    val base = baseSchema(lm.kind)
     val cur = spark.read.schema(base).parquet(dir.toString)
     // keep the label's parallel layout: one range per current
     // NON-EMPTY file (append batches leave empty shuffle parts behind)
@@ -535,12 +514,9 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
     require(!m.labels.values.exists(_.parents.contains(name)),
       s"label \"$name\" has children")
     m.labels.remove(name)
-    writeMeta(graph, m)
-    // table-owned objects die with the table: the label's constraints
-    // (its indexes live inside LabelMeta and are already gone)
-    val cons = constraints(graph)
-    if (cons.exists(_.label == name))
-      writeConstraints(graph, cons.filterNot(_.label == name))
+    // table-owned objects die with the table, in the same commit: the
+    // label's constraints (its indexes live inside LabelMeta)
+    writeMeta(graph, m.copy(constraints = m.constraints.filterNot(_.label == name)))
     rmTree(labelDir(graph, name))
   } }
 
@@ -581,7 +557,7 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
       if (lm.parents.contains(parent))
         throw new IllegalStateException(
           s"""label "$parent" would be inherited from more than once""")
-      if (subtree(graph, name).exists(_.name == parent))
+      if (subtree(m, name).exists(_.name == parent))
         throw new IllegalStateException(
           s"""inheriting "$parent" would create an inheritance cycle""")
       m.labels(name) = lm.copy(parents = lm.parents :+ parent)
@@ -634,8 +610,7 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
   /** Transitive descendants (inheritance subtree), self included —
     * scanning a label scans its subtree (PG inheritance expansion).
     */
-  def subtree(graph: String, name: String): Seq[LabelMeta] = {
-    val m = readMeta(graph)
+  private def subtree(m: GraphMeta, name: String): Seq[LabelMeta] = {
     val out = mutable.LinkedHashSet[String]()
     def rec(n: String): Unit = if (out.add(n))
       m.labels.values.filter(_.parents.contains(n)).foreach(l => rec(l.name))
@@ -651,8 +626,10 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
     * cypher_func.sql's complex1 "l" therefore list level by level,
     * not depth-first.
     */
-  def ancestors(graph: String, name: String): Seq[String] = {
-    val m = readMeta(graph)
+  def ancestors(graph: String, name: String): Seq[String] =
+    ancestors(readMeta(graph), name)
+
+  private def ancestors(m: GraphMeta, name: String): Seq[String] = {
     val out = mutable.LinkedHashSet[String](name)
     val queue = mutable.Queue(name)
     while (queue.nonEmpty) {
@@ -776,7 +753,7 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
 
   /** Parquet read schema for a label: base + its shred sidecars. */
   private def labelSchema(lm: LabelMeta): StructType = {
-    val base = if (lm.kind == 'v') vertexSchema else edgeSchema
+    val base = baseSchema(lm.kind)
     if (lm.shredOff) return base
     lm.shred.toSeq.sortBy(_._1).foldLeft(base) { case (s, (k, t)) =>
       val s2 = s.add(StructField(pjCol(k), StringType, nullable = true))
@@ -808,20 +785,54 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
 
   // ------------------------------------------------------------- scans
 
-  /** Scan one label table (no inheritance expansion); includes the
-    * label's shred sidecar columns (files written before a key first
-    * appeared simply read as null = key absent).
+  /** The label tables a pattern denotes (the reference's label
+    * transform, parse_graph.c): every name must exist and be of `kind`,
+    * with the reference's scan diagnostics; each name expands to its
+    * inheritance subtree unless `only` (gram.y:18684); no names means
+    * every label of `kind`. Deduplicated by name, so overlapping
+    * subtrees (`[:road|lane]` with lane INHERITS road) contribute each
+    * table once. The one resolution behind every pattern scan and every
+    * labid filter, so the scan form and the filter form of a label
+    * denote the same rows.
     */
-  def scanOnly(graph: String, name: String): DataFrame = {
-    val lm = labelMeta(readMeta(graph), name)
-    scanOnly(graph, lm)
+  def labelSet(graph: String, names: Seq[String], kind: Char,
+      only: Boolean): Seq[LabelMeta] = {
+    val m = readMeta(graph)
+    names.foreach { l =>
+      val lm = m.labels.getOrElse(l,
+        throw new IllegalArgumentException(s"""label "$l" does not exist"""))
+      if (lm.kind != kind) throw new IllegalArgumentException(
+        s"""label "$l" is ${if (lm.kind == 'e') "edge" else "vertex"} label""")
+    }
+    if (names.isEmpty) m.labels.values.filter(_.kind == kind).toSeq
+    else names.flatMap(n => if (only) Seq(m.labels(n)) else subtree(m, n))
+      .distinctBy(_.name)
   }
 
-  // meta-carrying overload: alignedUnion already holds every member's
-  // LabelMeta — re-reading and re-parsing _graph.json once per member
-  // made an N-label inheritance scan pay N+1 metadata file parses on
-  // the planning hot path (r12 review)
-  private def scanOnly(graph: String, lm: LabelMeta): DataFrame = {
+  /** Scan the [[labelSet]] a pattern denotes as ONE name-aligned union
+    * (PG's Append over inheritance children): every member's rows carry
+    * the same columns, with typed nulls for the shred sidecars of keys a
+    * member never saw (= key absent). Empty labels are pruned at plan
+    * time (metadata partition-pruning analog).
+    */
+  def scan(graph: String, names: Seq[String], kind: Char,
+      only: Boolean): DataFrame = {
+    val ls = labelSet(graph, names, kind, only)
+    if (ls.isEmpty) emptyFrame(baseSchema(kind)) else alignedUnion(graph, ls)
+  }
+
+  /** One label with its subtree (`only`: the label's own table), of
+    * whatever kind the label is.
+    */
+  def scan(graph: String, name: String, only: Boolean = false): DataFrame =
+    scan(graph, Seq(name), labelMeta(readMeta(graph), name).kind, only)
+
+  def scanOnly(graph: String, name: String): DataFrame = scan(graph, name, only = true)
+
+  /** One label table with its shred sidecar columns (files written
+    * before a key first appeared simply read as null = key absent).
+    */
+  private def readLabel(graph: String, lm: LabelMeta): DataFrame = {
     val dir = labelDir(graph, lm.name)
     val schema = labelSchema(lm)
     if (hasParquet(dir)) spark.read.schema(schema).parquet(dir.toString)
@@ -836,17 +847,17 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
   private def emptyFrame(schema: StructType): DataFrame =
     spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 
-  /** Align a set of label scans to a common (base + shred) shape and
-    * union them (PG's Append over inheritance children). Members that
-    * never saw a key contribute typed nulls (= key absent).
+  /** Align a set of label scans to a common (base + shred) shape by
+    * column name and union them. Members that never saw a key
+    * contribute typed nulls (= key absent).
     */
   private def alignedUnion(graph: String, ms: Seq[LabelMeta]): DataFrame = {
     import org.apache.spark.sql.functions._
-    val base = if (ms.head.kind == 'v') vertexSchema else edgeSchema
+    val base = baseSchema(ms.head.kind)
     val shred = commonShred(ms)
     val shredFields = shred.toSeq.sortBy(_._1)
     ms.map { lm =>
-      val df = scanOnly(graph, lm)
+      val df = readLabel(graph, lm)
       val cols = base.fields.map(f => col(f.name)) ++ shredFields.flatMap {
         case (k, t) =>
           def c(n: String, dt: DataType) =
@@ -859,21 +870,6 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
       }
       df.select(cols: _*)
     }.reduce(_ unionAll _)
-  }
-
-  /** Scan a label and its inheritance subtree (default MATCH scan);
-    * plan-time union == PG's Append over inheritance children. Empty
-    * labels are pruned at plan time (metadata partition-pruning analog).
-    */
-  def scan(graph: String, name: String): DataFrame =
-    alignedUnion(graph, subtree(graph, name))
-
-  /** Scan every label of a kind ('v' for bare (n), 'e' for [r]). */
-  def scanAll(graph: String, kind: Char): DataFrame = {
-    val ls = readMeta(graph).labels.values.filter(_.kind == kind).toSeq
-    val schema = if (kind == 'v') vertexSchema else edgeSchema
-    if (ls.isEmpty) emptyFrame(schema)
-    else alignedUnion(graph, ls)
   }
 
   /** Recursive directory delete (shared by drop and the swap —
@@ -918,7 +914,7 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
       knownTypes: Option[Map[String, String]]): Unit =
       withLabelWrite(graph, label) {
     val lm = labelMeta(readMeta(graph), label)
-    val base = if (lm.kind == 'v') vertexSchema else edgeSchema
+    val base = baseSchema(lm.kind)
     val clean = df.select(base.fields.map(f => org.apache.spark.sql.functions.col(f.name)): _*)
     val (out, lm2) = shredBatch(lm, clean, knownTypes
       .map(t => scala.collection.immutable.TreeMap[String, String]() ++ t)
@@ -1077,7 +1073,7 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
       finally s.close()
     }
     val untouched = allFiles.filterNot(p => touchedSet.contains(p.toUri.toString))
-    val base = if (lm.kind == 'v') vertexSchema else edgeSchema
+    val base = baseSchema(lm.kind)
     val touchedDf = spark.read.schema(schema).parquet(touched: _*)
     // snapshot BEFORE deleting the source files (the patch plan reads
     // the files being replaced); rowsAfter rides the checkpoint
@@ -1126,7 +1122,7 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
     */
   private def labidTriples(graph: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    scanAll(graph, 'e')
+    scan(graph, Nil, 'e', only = false)
       .select(GraphId.labidOf(col("start")).as("start_labid"),
         GraphId.labidOf(col("id")).as("edge_labid"),
         GraphId.labidOf(col("end")).as("end_labid"))
@@ -1193,54 +1189,41 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
   /** Label constraints (reference: CreateConstraintCommand
     * graphcmds.c:550; tests cypher_ddl.sql:240-362). kind: "unique"
     * (property expression unique across the label subtree) or "check"
-    * (boolean Cypher expression over properties).
+    * (boolean Cypher expression over properties). They live in the
+    * graph's one metadata document, so each commits with the label
+    * DDL that owns it.
     */
   final case class ConstraintMeta(label: String, name: String, kind: String,
       expr: String)
 
-  private def constraintsPath(g: String): Path =
-    graphDir(g).resolve("_constraints.json")
-
   def addConstraint(graph: String, label: String, name: String, kind: String,
       expr: String): Unit = withMetaLock(graph) {
     require(Seq("unique", "check").contains(kind), s"bad constraint kind $kind")
-    require(this.label(graph, label).isDefined, s"label \"$label\" does not exist")
-    val cur = constraints(graph)
-    require(!cur.exists(_.name == name), s"constraint \"$name\" already exists")
-    writeConstraints(graph, cur :+ ConstraintMeta(label, name, kind, expr))
+    writeMeta(graph, withConstraint(readMeta(graph),
+      ConstraintMeta(label, name, kind, expr)))
+  }
+
+  private def withConstraint(m: GraphMeta, c: ConstraintMeta): GraphMeta = {
+    require(m.labels.contains(c.label), s"label \"${c.label}\" does not exist")
+    require(!m.constraints.exists(_.name == c.name),
+      s"constraint \"${c.name}\" already exists")
+    m.copy(constraints = m.constraints :+ c)
   }
 
   def dropConstraint(graph: String, name: String): Unit = withMetaLock(graph) {
-    writeConstraints(graph, constraints(graph).filterNot(_.name == name))
+    val m = readMeta(graph)
+    writeMeta(graph, m.copy(constraints = m.constraints.filterNot(_.name == name)))
   }
 
-  def constraints(graph: String): Seq[ConstraintMeta] = {
-    import graft.jsonb._
-    if (!Files.exists(constraintsPath(graph))) return Nil
-    Jsonb.parse(Files.readString(constraintsPath(graph))) match {
-      case JArr(items) => items.collect { case o: JObj =>
-        ConstraintMeta(
-          o.get("label").collect { case JStr(s) => s }.get,
-          o.get("name").collect { case JStr(s) => s }.get,
-          o.get("kind").collect { case JStr(s) => s }.get,
-          o.get("expr").collect { case JStr(s) => s }.get)
-      }
-      case _ => Nil
-    }
-  }
+  def constraints(graph: String): Seq[ConstraintMeta] = readMeta(graph).constraints
 
-  private def writeConstraints(g: String, cs: Seq[ConstraintMeta]): Unit = {
-    import graft.jsonb._
-    val doc = JArr(cs.toVector.map(c => Jsonb.mkObj(Seq(
-      "label" -> JStr(c.label), "name" -> JStr(c.name),
-      "kind" -> JStr(c.kind), "expr" -> JStr(c.expr)))))
-    // temp + atomic rename, like writeMeta: concurrent readers must
-    // never see a torn constraints file
-    val tmp = graphDir(g).resolve(
-      s"_constraints.json.tmp.${Thread.currentThread().getId}")
-    Files.writeString(tmp, doc.render)
-    Files.move(tmp, constraintsPath(g), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+  /** The constraints and every label's [[ancestors]] closure, from one
+    * meta read (the write-time check's view of the catalog).
+    */
+  def constraintsAndAncestors(graph: String)
+      : (Seq[ConstraintMeta], String => Seq[String]) = {
+    val m = readMeta(graph)
+    (m.constraints, ancestors(m, _))
   }
 
   // ----------------------------------------------------- meta (de)ser
@@ -1248,9 +1231,9 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
   private case class GraphMeta(
       labels: mutable.LinkedHashMap[String, LabelMeta],
       nextLabid: Int,
-      unused: Long,
       sequences: mutable.LinkedHashMap[String, Long] = mutable.LinkedHashMap.empty,
-      owner: Option[String] = None)
+      owner: Option[String] = None,
+      constraints: Vector[ConstraintMeta] = Vector.empty)
 
   private def writeMeta(g: String, m: GraphMeta): Unit = {
     import graft.jsonb._
@@ -1277,7 +1260,10 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
     val doc = Jsonb.mkObj(Seq(
       "labels" -> labelsJson,
       "nextLabid" -> JNum(java.math.BigDecimal.valueOf(m.nextLabid)),
-      "sequences" -> seqJson) ++
+      "sequences" -> seqJson,
+      "constraints" -> JArr(m.constraints.map(c => Jsonb.mkObj(Seq(
+        "label" -> JStr(c.label), "name" -> JStr(c.name),
+        "kind" -> JStr(c.kind), "expr" -> JStr(c.expr)))))) ++
       m.owner.map(o => "owner" -> (JStr(o): JValue)).toSeq)
     // write-temp + atomic rename: concurrent readers (parallel ingest
     // futures) must see the old or the new meta, never a torn file
@@ -1296,10 +1282,11 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
     if (!Files.exists(metaPath(g)))
       throw new IllegalStateException(s"graph \"$g\" does not exist")
     val doc = Jsonb.parse(Files.readString(metaPath(g))).asInstanceOf[JObj]
+    def str(o: JObj, k: String): String = o.get(k).collect { case JStr(s) => s }.get
     val labels = mutable.LinkedHashMap[String, LabelMeta]()
     doc.get("labels").foreach {
       case JArr(items) => items.foreach { case o: JObj =>
-        val name = o.get("name").collect { case JStr(s) => s }.get
+        val name = str(o, "name")
         labels(name) = LabelMeta(
           name,
           o.get("labid").collect { case JNum(n) => n.intValue }.get,
@@ -1312,7 +1299,7 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
           o.get("indexes").collect { case JArr(ixs) =>
             ixs.collect { case ix: JObj =>
               PropIndexMeta(
-                ix.get("name").collect { case JStr(s) => s }.get,
+                str(ix, "name"),
                 ix.get("keys").collect { case JArr(ks) =>
                   ks.collect { case JStr(s) => s } }.getOrElse(Vector.empty),
                 ix.get("unique").collect { case JBool(b) => b }
@@ -1332,9 +1319,14 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
       }
       case _ => ()
     }
+    val constraints = doc.get("constraints").collect { case JArr(items) =>
+      items.collect { case o: JObj =>
+        ConstraintMeta(str(o, "label"), str(o, "name"), str(o, "kind"), str(o, "expr"))
+      } }.getOrElse(Vector.empty)
     GraphMeta(labels,
       doc.get("nextLabid").collect { case JNum(n) => n.intValue }.getOrElse(1),
-      0, sequences,
-      owner = doc.get("owner").collect { case JStr(s) => s })
+      sequences,
+      owner = doc.get("owner").collect { case JStr(s) => s },
+      constraints = constraints)
   }
 }

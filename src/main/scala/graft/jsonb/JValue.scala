@@ -95,9 +95,6 @@ object Jsonb {
     v
   }
 
-  def parseOrNull(s: String): JValue =
-    if (s == null) null else parse(s)
-
   private final class Parser(s: String) {
     private var i = 0
     def atEnd: Boolean = i >= s.length

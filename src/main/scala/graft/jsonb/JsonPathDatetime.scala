@@ -272,15 +272,6 @@ object JsonPathDatetime {
 
   // -------------------------------------------------------------- comparison
 
-  private def kindName(t: java.time.temporal.Temporal): String = t match {
-    case _: LocalDate      => "date"
-    case _: LocalTime      => "time"
-    case _: OffsetTime     => "timetz"
-    case _: LocalDateTime  => "timestamp"
-    case _: OffsetDateTime => "timestamptz"
-    case _                 => "datetime"
-  }
-
   private def castError(from: String, to: String): Nothing =
     throw new DatetimeCastError(
       s"cannot convert value from $from to $to without time zone usage")
@@ -295,7 +286,6 @@ object JsonPathDatetime {
     val av = a.value; val bv = b.value
     def timeFamily(t: java.time.temporal.Temporal) =
       t.isInstanceOf[LocalTime] || t.isInstanceOf[OffsetTime]
-    def dateFamily(t: java.time.temporal.Temporal) = !timeFamily(t)
     if (timeFamily(av) != timeFamily(bv)) return -1 // cross-family: unknown
 
     val zone = sessionZone.get()

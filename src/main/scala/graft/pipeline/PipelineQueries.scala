@@ -883,14 +883,7 @@ object PipelineQueries {
       val nat = load(s, d, "nation")
         .select((col("n_nationkey") + 1000).as("u"),
           col("n_regionkey").as("v"))
-      val edges = sup.unionAll(nat)
-      // spark.graft.pairState.fallback=twin (default off) degrades a
-      // tripped guard to the fixed-count sampled twin (p118 shape)
-      // with a loud warning instead of a dead job
-      ScaleGuard.orTwin(s, "p57_closeness")(
-        GraphAnalytics.closeness(edges, maxDepth = 4).orderBy("id"))(
-        GraphAnalytics.closenessSampledK(edges, maxDepth = 4, k = 16)
-          .orderBy("id"))
+      GraphAnalytics.closeness(sup.unionAll(nat), maxDepth = 4).orderBy("id")
     },
 
     // Sampled closeness (Eppstein-Wang style): BFS from the id % 17
@@ -948,13 +941,7 @@ object PipelineQueries {
           cust("c_nationkey") === nat("n_nationkey"))
         .select((col("c_custkey") + 100000).as("u"),
           col("n_regionkey").as("v"))
-      val edges = cn.unionAll(cr)
-      // fallback=twin → sampled-source stress (p119 shape) on the same
-      // graph instead of a guard error (see p57)
-      ScaleGuard.orTwin(s, "p58_stress")(
-        GraphAnalytics.stressCentrality(edges, maxDepth = 4).orderBy("id"))(
-        GraphAnalytics.stressCentralitySampled(edges, maxDepth = 4, mod = 5)
-          .orderBy("id"))
+      GraphAnalytics.stressCentrality(cn.unionAll(cr), maxDepth = 4).orderBy("id")
     },
 
     // Sampled-pair stress centrality — the shipped scale twin the p58
@@ -1616,20 +1603,11 @@ object PipelineQueries {
           .agg(count(lit(1)).as("n_cust"))
           .orderBy(col("n_cust").desc, col("pa"), col("pb"))
           .limit(20)
-      // fallback=twin → the degree-capped wedge the guard names
-      // (middles capped to basket deg <= 28, p114's cap) instead of a
-      // guard error
-      ScaleGuard.orTwin(s, "p75_copurchase")({
-        ScaleGuard.guardWedges(cp, "c",
-          what = "the exact co-purchase self-join (p75 shape)",
-          twin = "the degree-capped wedge (p114 shape: filter middle " +
-            "vertices to deg <= cap before the join)")
-        wedge(cp)
-      })({
-        val capped = cp.groupBy("c").agg(count(lit(1)).as("dc"))
-          .where(col("dc") <= 28).select("c")
-        wedge(cp.join(capped, "c"))
-      })
+      ScaleGuard.guardWedges(cp, "c",
+        what = "the exact co-purchase self-join (p75 shape)",
+        twin = "the degree-capped wedge (p114 shape: filter middle " +
+          "vertices to deg <= cap before the join)")
+      wedge(cp)
     },
 
     "p76_markov_transitions" -> { (s, d) =>
@@ -1928,24 +1906,14 @@ object PipelineQueries {
             count(lit(1)).as("n_common"))
           .orderBy(col("aa").desc, col("ca"), col("cb"))
           .limit(25)
-      // fallback=twin → the p114 degree-capped form instead of a guard
-      // error (the cap is p114's, deg ∈ [2, 28])
-      ScaleGuard.orTwin(s, "p107_adamic_adar")({
-        ScaleGuard.check(s, deg
-          .agg(coalesce(sum(expr("dp * (dp - 1) DIV 2")), lit(0L)).as("_w"))
-          .first().getLong(0),
-          what = "the exact Adamic-Adar wedge join (p107 shape)",
-          twin = "the degree-capped form p114_aa_degree_capped (same " +
-            "query with middle deg capped)")
-        // same key as the self-join
-        aaRank(cp.join(deg.select("p", "term"), "p"), cp)
-      })({
-        // same single-keyed plan as p114 (r13): cap BEFORE any per-part
-        // array, map-side pair explosion — the twin must be the shape
-        // that survives the scale that tripped the guard, not a second
-        // copy of the wedge self-join
-        cappedAdamicAdar(cp)
-      })
+      ScaleGuard.check(s, deg
+        .agg(coalesce(sum(expr("dp * (dp - 1) DIV 2")), lit(0L)).as("_w"))
+        .first().getLong(0),
+        what = "the exact Adamic-Adar wedge join (p107 shape)",
+        twin = "the degree-capped form p114_aa_degree_capped (same " +
+          "query with middle deg capped)")
+      // same key as the self-join
+      aaRank(cp.join(deg.select("p", "term"), "p"), cp)
     },
 
     "p114_aa_degree_capped" -> { (s, d) =>

@@ -44,44 +44,6 @@ object ScaleGuard {
   /** Row cap for quadratic pair state; ≤ 0 disables the guard. */
   val ConfKey = "spark.graft.pairState.max"
 
-  /** Optional graceful degradation: `twin` routes a tripped guard to
-    * the query's shipped sampled/capped scale twin with a LOUD warning
-    * instead of an error — production pipelines often prefer an
-    * approximate answer to a dead job. Default (unset/anything else):
-    * the guard errors, naming the twin (unchanged r10 behavior).
-    */
-  val FallbackKey = "spark.graft.pairState.fallback"
-
-  /** Typed guard error so [[orTwin]] catches EXACTLY a tripped guard,
-    * never an unrelated IllegalStateException from the exact plan.
-    */
-  final class PairStateGuardException(msg: String)
-    extends IllegalStateException(msg)
-
-  private def fallbackToTwin(spark: SparkSession): Boolean =
-    spark.conf.getOption(FallbackKey)
-      .exists(_.trim.equalsIgnoreCase("twin"))
-
-  /** Run `exact`; if the pair-state guard trips AND the fallback conf
-    * is `twin`, log a loud warning and return `twin` (the caller's
-    * shipped approximate form) instead. With the conf unset the guard
-    * error propagates untouched.
-    */
-  def orTwin[T](spark: SparkSession, what: String)(exact: => T)(
-      twin: => T): T =
-    if (!fallbackToTwin(spark)) exact
-    else
-      try exact
-      catch {
-        case e: PairStateGuardException =>
-          System.err.println(
-            s"[graft] WARNING: pair-state guard tripped for $what; " +
-              s"$FallbackKey=twin routes to the sampled/capped scale " +
-              s"twin — the result is the TWIN's (approximate) answer, " +
-              s"not the exact form's. Guard said: ${e.getMessage}")
-          twin
-      }
-
   /** Serialized cost of one cached (long, long) pair-state row:
     * ~16 payload + block/row overhead, plus the same row transiting
     * the round's join and distinct/aggregation maps.
@@ -112,7 +74,7 @@ object ScaleGuard {
       twin: String): Unit = {
     val max = maxPairRows(spark)
     if (max > 0 && estRows > max)
-      throw new PairStateGuardException(
+      throw new IllegalStateException(
         s"pair-state guard: $what projects ~$estRows quadratic state " +
         s"rows, above $ConfKey = $max (default: 11M rows per core). " +
         "This state exhausts executor memory at scale (measured: the " +

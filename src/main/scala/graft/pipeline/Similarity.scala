@@ -94,19 +94,15 @@ object Similarity {
     }
   }
 
-  /** numPlanes-bit signature: sign of the projection on each plane.
-    * The plane matrix is evaluated ONCE on the driver (through the
-    * very same expressions, so signatures are bit-identical to the
-    * per-row HOF form) and embedded as array literals — each row then
-    * pays numPlanes codegen'd dot products instead of numPlanes*dim
-    * hash calls.
-    */
-  def lshSignature(v: Column, dim: Int, numPlanes: Int): Column =
-    lshSignatureAt(v, dim, numPlanes, offset = 0)
-
-  /** Signature from planes [offset, offset + numPlanes) of the global
-    * deterministic matrix — table t of a multi-table scheme passes
-    * offset = t * numPlanes; bit positions stay table-local.
+  /** numPlanes-bit signature: sign of the projection on each of the
+    * planes [offset, offset + numPlanes) of the global deterministic
+    * matrix — table t of a multi-table scheme passes
+    * offset = t * numPlanes; bit positions stay table-local. The plane
+    * matrix is evaluated ONCE on the driver (through the very same
+    * expressions, so signatures are bit-identical to the per-row HOF
+    * form) and embedded as array literals — each row then pays
+    * numPlanes codegen'd dot products instead of numPlanes*dim hash
+    * calls.
     */
   def lshSignatureAt(v: Column, dim: Int, numPlanes: Int,
       offset: Int): Column = {

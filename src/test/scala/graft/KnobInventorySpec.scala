@@ -28,7 +28,6 @@ class KnobInventorySpec extends AnyFunSuite {
     "spark.graft.keyedCorrelation",
     "spark.graft.maxDepth",
     "spark.graft.pairCountRewrite",
-    "spark.graft.pairState.fallback",
     "spark.graft.pairState.max",
     "spark.graft.quantileMaxBuckets",
     "spark.graft.skew.hubDegree",

@@ -163,8 +163,8 @@ class JsonbFnsSpec extends AnyFunSuite {
           case "get_path" => JsonbRT.getPathJ(u(doc), u(path.get))
           case "get_path_text" => JsonbRT.getPathText(u(doc), u(path.get))
           case "extract_path" | "extract_path_text" =>
-            val keys = Jsonb.parseTextArray(path.get)
-              .map(_.map(u).orNull).toArray
+            val keys = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+              Jsonb.parseTextArray(path.get).map(_.map(u).orNull))
             JsonbRT.extractPath(u(doc), keys, fn.endsWith("_text"))
           case "array_length" =>
             UTF8String.fromString(JsonbRT.arrayLengthJ(u(doc)).toString)

@@ -118,57 +118,6 @@ class ScaleGuardSpec extends AnyFunSuite {
     assert(1310000000L > cap32, "p75 sf10 trips")
   }
 
-  test("fallback=twin routes a tripped guard to the twin; default errors") {
-    withCap(1000) {
-      // default (conf unset): the guard error propagates untouched
-      intercept[IllegalStateException] {
-        ScaleGuard.orTwin(spark, "t")({
-          ScaleGuard.guardWedges(hubAdj, "p", "w", "twin-name"); 1
-        })(2)
-      }
-      spark.conf.set(ScaleGuard.FallbackKey, "twin")
-      try {
-        // guard trips -> the twin's result, with a loud warning
-        val r = ScaleGuard.orTwin(spark, "t")({
-          ScaleGuard.guardWedges(hubAdj, "p", "w", "twin-name"); 1
-        })(2)
-        assert(r == 2)
-        // a guard that does NOT trip returns the exact result
-        assert(withCap(5000)(ScaleGuard.orTwin(spark, "t")({
-          ScaleGuard.guardWedges(hubAdj, "p", "w", "twin-name"); 1
-        })(2)) == 1)
-        // a NON-guard failure in the exact plan still propagates —
-        // only PairStateGuardException degrades
-        intercept[ArithmeticException] {
-          ScaleGuard.orTwin[Int](spark, "t")(
-            throw new ArithmeticException("x"))(2)
-        }
-      } finally spark.conf.unset(ScaleGuard.FallbackKey)
-    }
-  }
-
-  test("fallback=twin end-to-end: guarded p75 degrades to the capped wedge") {
-    val d = "/root/testdata/sf0.001"
-    val exact = PipelineQueries.queries("p75_copurchase")(spark, d).collect()
-    spark.conf.set(ScaleGuard.FallbackKey, "twin")
-    try withCap(1) {
-      // cap 1 trips the wedge guard; the query returns the CAPPED
-      // twin's answer (a real result set, not an error)
-      val twin = PipelineQueries.queries("p75_copurchase")(spark, d)
-      assert(twin.collect().nonEmpty)
-    } finally spark.conf.unset(ScaleGuard.FallbackKey)
-    // and with the conf unset the same tripped cap still errors
-    val e = withCap(1) {
-      intercept[IllegalStateException] {
-        PipelineQueries.queries("p75_copurchase")(spark, d).collect()
-      }
-    }
-    assert(e.getMessage.contains("p114"), e.getMessage)
-    // exact path untouched when nothing trips
-    assert(PipelineQueries.queries("p75_copurchase")(spark, d)
-      .collect().map(_.toString).toSeq == exact.map(_.toString).toSeq)
-  }
-
   test("guardRound fast-path bound saturates instead of overflowing") {
     import spark.implicits._
     // frontierRows x maxDeg overflows Long: pre-fix the negative bound
