@@ -337,9 +337,10 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
       if (ifNotExists) return
       throw new IllegalStateException(s"""index "$nm" already exists""")
     }
-    // validation FIRST, then the index and its enforcement half commit
-    // together: a failure anywhere (existing duplicates, a
-    // constraint-name collision) records neither
+    // the index and its enforcement half commit together BEFORE the
+    // validation scan, so writers that start during the scan are
+    // checked; existing duplicates (or a failed scan) remove both
+    // together, and a constraint-name collision records neither
     val validatable =
       keys.length == 1 && ShredKeyRe.findFirstIn(keys.head).isDefined
     def dupScanFails(): Boolean = {
@@ -379,14 +380,14 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
     // row, the reindex swap (re-entrant on the same lock) can't race
     // them, and two racing identical creates serialize here — an IF
     // NOT EXISTS loser re-checks the committed index name and no-ops.
-    // The meta lock is held only for the actual meta commit — a
+    // The meta lock is held only for the actual meta commits — a
     // multi-minute duplicate scan must not stall reserveIds/DDL on
     // other labels or other drivers. Residual window (documented): a
-    // writer STATEMENT that read the constraint list before the commit
-    // (including one writing a subtree child, whose label lock this
-    // build does not hold) is enforced from its next statement on —
-    // the reference closes that with a ShareLock held for the whole
-    // build, which would serialize all writes graph-wide.
+    // writer STATEMENT that read the constraint list before the
+    // constraint committed and appends after this lock releases is
+    // enforced from its next statement on — the reference closes that
+    // with a ShareLock held for the whole build, which would serialize
+    // all writes graph-wide.
     withLabelWrite(graph, label) {
       // fresh re-check under the lock: the racing winner's commit is
       // visible here, so the loser takes the ifNotExists no-op path
@@ -394,24 +395,25 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
         .exists(_.indexes.exists(_.name == nm))
       if (already && !ifNotExists)
         throw new IllegalStateException(s"""index "$nm" already exists""")
-      val committed = !already && {
-        if (unique && validatable && dupScanFails()) dupError()
-        withMetaLock(graph) {
-          val fresh = readMeta(graph)
-          val flm = fresh.labels(label)
-          if (flm.indexes.exists(_.name == nm)) {
-            if (ifNotExists) false
-            else throw new IllegalStateException(
-              s"""index "$nm" already exists""")
-          } else {
-            fresh.labels(label) = flm.copy(indexes = flm.indexes :+
-              PropIndexMeta(nm, keys, unique))
-            writeMeta(graph, if (!unique) fresh else withConstraint(fresh,
-              ConstraintMeta(label, s"${nm}_uc", "unique", ucBody)))
-            true
-          }
+      val committed = !already && withMetaLock(graph) {
+        val fresh = readMeta(graph)
+        val flm = fresh.labels(label)
+        if (flm.indexes.exists(_.name == nm)) {
+          if (ifNotExists) false
+          else throw new IllegalStateException(
+            s"""index "$nm" already exists""")
+        } else {
+          fresh.labels(label) = flm.copy(indexes = flm.indexes :+
+            PropIndexMeta(nm, keys, unique))
+          writeMeta(graph, if (!unique) fresh else withConstraint(fresh,
+            ConstraintMeta(label, s"${nm}_uc", "unique", ucBody)))
+          true
         }
       }
+      if (committed && unique && validatable)
+        try { if (dupScanFails()) dupError() }
+        catch { case e: Throwable =>
+          dropPropertyIndex(graph, nm, ifExists = true); throw e }
       if (committed) reindexLabel(graph, label)
     }
   }
@@ -1319,7 +1321,13 @@ final class GraphCatalog(val spark: SparkSession, val root: String) {
       }
       case _ => ()
     }
-    val constraints = doc.get("constraints").collect { case JArr(items) =>
+    // a graph written before constraints moved into this document
+    // keeps them in _constraints.json (same array); the next meta
+    // write records them here
+    val legacy = graphDir(g).resolve("_constraints.json")
+    val constraints = doc.get("constraints").orElse(
+      if (Files.exists(legacy)) Some(Jsonb.parse(Files.readString(legacy)))
+      else None).collect { case JArr(items) =>
       items.collect { case o: JObj =>
         ConstraintMeta(str(o, "label"), str(o, "name"), str(o, "kind"), str(o, "expr"))
       } }.getOrElse(Vector.empty)

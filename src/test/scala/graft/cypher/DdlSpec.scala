@@ -215,6 +215,31 @@ class DdlSpec extends AnyFunSuite {
     assert(s.cypher("MATCH (n:u) RETURN n").count() == 2)
   }
 
+  test("constraints kept in a separate _constraints.json are still read and enforced") {
+    import graft.jsonb._
+    val root = Files.createTempDirectory("graft_ddl").toString
+    val s = new CypherSession(spark, new GraphCatalog(spark, root))
+    s.createGraph("lg")
+    s.createVLabel("u")
+    s.cypher("CREATE (:u {id: 1})")
+    // the layout of a graph written before constraints moved into
+    // _graph.json: no constraints key there, one array file beside it
+    val meta = java.nio.file.Paths.get(root, "lg", "_graph.json")
+    val doc = Jsonb.parse(Files.readString(meta)).asInstanceOf[JObj]
+    Files.writeString(meta,
+      JObj(doc.fields.filterNot(_._1 == "constraints")).render)
+    Files.writeString(meta.resolveSibling("_constraints.json"), JArr(Vector(
+      Jsonb.mkObj(Seq("label" -> JStr("u"), "name" -> JStr("u_id_unique"),
+        "kind" -> JStr("unique"), "expr" -> JStr("id"))))).render)
+    assert(s.catalog.constraints("lg").map(_.name) == Seq("u_id_unique"))
+    intercept[Exception] { s.cypher("CREATE (:u {id: 1})") }
+    // the next meta write records them in _graph.json itself
+    s.createVLabel("w")
+    Files.delete(meta.resolveSibling("_constraints.json"))
+    assert(s.catalog.constraints("lg").map(_.name) == Seq("u_id_unique"))
+    assert(s.cypher("MATCH (n:u) RETURN n").count() == 1)
+  }
+
   test("label and graph RENAME keep data, ids and inheritance (graphcmds RenameLabel/RenameGraph)") {
     val s = fresh()
     s.createGraph("rn")

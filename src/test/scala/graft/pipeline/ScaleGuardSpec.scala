@@ -118,6 +118,22 @@ class ScaleGuardSpec extends AnyFunSuite {
     assert(1310000000L > cap32, "p75 sf10 trips")
   }
 
+  test("guarded exact queries error naming their twin; untripped results unchanged") {
+    val d = "/root/testdata/sf0.001"
+    val twins = Seq("p57_closeness" -> "p117", "p58_stress" -> "p119",
+      "p75_copurchase" -> "p114", "p107_adamic_adar" -> "p114")
+    for ((q, twin) <- twins) {
+      def run() = PipelineQueries.queries(q)(spark, d).collect()
+        .map(_.toString).toSeq
+      val exact = run()
+      // cap 1 trips the guard: the query errors, it does not degrade
+      val e = withCap(1)(intercept[IllegalStateException](run()))
+      assert(e.getMessage.contains(twin), s"$q: ${e.getMessage}")
+      // a cap the state stays under leaves the exact answer untouched
+      assert(withCap(1L << 40)(run()) == exact, q)
+    }
+  }
+
   test("guardRound fast-path bound saturates instead of overflowing") {
     import spark.implicits._
     // frontierRows x maxDeg overflows Long: pre-fix the negative bound
